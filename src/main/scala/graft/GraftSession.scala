@@ -103,9 +103,6 @@ object GraftSession {
       // epoch-arithmetic kernels (unix_micros, casts to BIGINT) and the
       // DuckDB oracle agree on wall-clock values.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Spark 4.1 ships TimeType behind this flag; the reference's
-      // TIME surface (make_time, TIME casts) maps onto it directly
-      .config("spark.sql.timeType.enabled", "true")
       .config("spark.ui.enabled", "false")
 
   def get(): SparkSession = {
@@ -117,8 +114,10 @@ object GraftSession {
   /** The documented PERF entry point (r15, verdict): a tuned session
     * with the scale-adaptive scan/coalesce sizing applied for `dir` —
     * what Bench and the profilers use. Sessions built via
-    * [[get]]/[[builder]] keep Spark-default split sizing (correctness
-    * does not depend on it; Verify deliberately stays un-tuned).
+    * [[get]]/[[builder]] keep the builder's static split sizing (16m
+    * maxPartitionBytes, 1m openCostInBytes) whatever the input size
+    * (correctness does not depend on it; Verify deliberately stays
+    * un-tuned).
     */
   def getTuned(dir: String): SparkSession = {
     val s = get()

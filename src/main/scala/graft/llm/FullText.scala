@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Catalog
+
 /** Full-text keyword search with BM25 ranking — the reference's fts
   * extension surface (/root/reference/extension/fts/fts_indexing.cpp
   * builds term→doc postings; fts_main.cpp scores match_bm25), rebuilt
@@ -189,8 +191,8 @@ object FullText {
     val buckets = terms.toDF("t")
       .select(termBucket(col("t"), nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val stats = spark.read.parquet(s"$dir/stats")
-    val topk = spark.read.parquet(s"$dir/postings")
+    val stats = Catalog.parquet(spark, s"$dir/stats")
+    val topk = Catalog.parquet(spark, s"$dir/postings")
       .filter(col("bucket").isInCollection(buckets))
       .filter(col("term").isInCollection(terms))
       .crossJoin(broadcast(stats))
@@ -224,8 +226,8 @@ object FullText {
     val buckets = terms.toDF("t")
       .select(termBucket(col("t"), nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val stats = spark.read.parquet(s"$dir/stats")
-    spark.read.parquet(s"$dir/postings")
+    val stats = Catalog.parquet(spark, s"$dir/stats")
+    Catalog.parquet(spark, s"$dir/postings")
       .filter(col("bucket").isInCollection(buckets)) // partition-pruned read
       .filter(col("term").isInCollection(terms))
       .crossJoin(broadcast(stats))

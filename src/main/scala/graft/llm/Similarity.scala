@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Catalog
+
 /** Vector similarity search over an embedding column (Array[Float]).
   *
   * Baseline: brute-force cosine top-k — one scan, map-side partial
@@ -277,13 +279,13 @@ object Similarity {
                      idCol: String, vecCol: String,
                      k: Int, nprobe: Int): DataFrame = {
     val q = query.select(col(queryVecCol).as("__qv"))
-    val probed = spark.read.parquet(s"$dir/centroids")
+    val probed = Catalog.parquet(spark, s"$dir/centroids")
       .crossJoin(broadcast(q))
       .select(col("centroid_id"), cosine(col("cv"), col("__qv")).as("__pc"))
       .orderBy(col("__pc").desc, col("centroid_id"))
       .limit(nprobe)
       .select(col("centroid_id"))
-    spark.read.parquet(s"$dir/lists")
+    Catalog.parquet(spark, s"$dir/lists")
       .join(broadcast(probed), Seq("centroid_id"), "left_semi")
       .crossJoin(broadcast(q))
       .select(col(idCol), cosine(col(vecCol), col("__qv")).as("cos_sim"))

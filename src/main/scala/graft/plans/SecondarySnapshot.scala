@@ -58,8 +58,8 @@ case class SecondarySnapshotRule(session: SparkSession) extends Rule[LogicalPlan
         else {
           val roots = hfr.location.rootPaths.map(p => norm(p.toString))
           // WHOLE-ROOT reads only: a file-scoped read under the table
-          // root (Dml's pruned rewrite scan — spark.read.parquet(hit
-          // files)) already picked its files FROM the snapshot via the
+          // root (Dml's pruned rewrite scan — Catalog.parquet(spark,
+          // hitFiles)) already picked its files FROM the snapshot via the
           // re-pointed hit scan; re-pointing it to the full pin list
           // made every pruned rewrite read the whole table and
           // DUPLICATE the carried-through rows of non-hit files

@@ -181,7 +181,7 @@ object StatementSurface {
         .schema(target.schema)
         .csv(source)
       case "json" => reader.schema(target.schema).json(source)
-      case _ => reader.parquet(source)
+      case _ => graft.sources.Catalog.parquet(spark, source)
     }
     val aligned = raw.toDF(target.columns.toIndexedSeq: _*)
       .select(target.columns.map(c =>

@@ -63,7 +63,7 @@ object DmlQ {
       Dml.update(s, path,
         cond = col("o_orderpriority") === "1-URGENT",
         set = Map("o_totalprice" -> (col("o_totalprice") + 100.0)))
-      s.read.parquet(path)
+      Catalog.parquet(s, path)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), Exact.dsum(col("o_totalprice")).as("total"))
         .orderBy(col("o_orderstatus"))
@@ -77,7 +77,7 @@ object DmlQ {
          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       val path = seed(s, dir, "orders", "o_orderkey", "graft_del")
       Dml.delete(s, path, col("o_orderdate") < ts("1993-06-01"))
-      s.read.parquet(path)
+      Catalog.parquet(s, path)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).cast("bigint").as("key_sum"))
         .orderBy(col("o_orderstatus"))
@@ -113,7 +113,7 @@ object DmlQ {
               lit("NEWSEG").as("c_mktsegment")))
       Dml.merge(s, path, source, on = Seq("c_custkey"),
         set = Map("c_acctbal" -> source("c_acctbal")))
-      s.read.parquet(path)
+      Catalog.parquet(s, path)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"), Exact.dsum(col("c_acctbal")).as("bal"))
         .orderBy(col("c_mktsegment"))
@@ -157,7 +157,7 @@ object DmlQ {
         cond = col("o_orderpriority") === "5-LOW",
         set = Map("o_totalprice" -> (col("o_totalprice") + 1.0)))
       Dml.compact(s, path, targetBytes = 64L * 1024 * 1024)
-      s.read.parquet(path)
+      Catalog.parquet(s, path)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), Exact.dsum(col("o_totalprice")).as("total"))
         .orderBy(col("o_orderstatus"))

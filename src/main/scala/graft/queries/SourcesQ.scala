@@ -110,7 +110,7 @@ object SourcesQ {
       val path = tmp("graft_part")
       t(s, dir, "orders")
         .write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(path)
-      s.read.parquet(path)
+      Catalog.parquet(s, path)
         .filter(col("o_orderstatus") === "F") // partition-pruned scan
         .groupBy(col("o_orderstatus").as("st"))
         .agg(count(lit(1)).as("n"))

@@ -27,7 +27,7 @@ object Tpch {
     * scan's output partitioning, which is exactly what the bucketing
     * experiment isolates.
     */
-  private[queries] def q3Plan(tab: String => DataFrame): DataFrame =
+  private[graft] def q3Plan(tab: String => DataFrame): DataFrame =
     tab("customer").filter(col("c_mktsegment") === "MACHINERY")
       .select(col("c_custkey"))
       .join(tab("orders").filter(col("o_orderdate") < ts("1997-06-01"))

@@ -225,7 +225,7 @@ object DeltaLake {
     val paths = staged.map { case (f, _) => new Path(table, f).toString }
     val aggs = count(lit(1)).as("__n") +:
       statsCols.flatMap(c => Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
-    val rows = spark.read.parquet(paths: _*)
+    val rows = Catalog.parquet(spark, paths: _*)
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -463,7 +463,7 @@ object DeltaLake {
     val ckVersion = node.get("version").asLong
     val schema = DataType.fromJson(node.get("schemaString").asText).asInstanceOf[StructType]
     val ckDir = new Path(logPath(table), f"$ckVersion%020d.checkpoint.parquet")
-    val base = spark.read.parquet(ckDir.toString).collect().map(_.getString(0))
+    val base = Catalog.parquet(spark, ckDir.toString).collect().map(_.getString(0))
     val live = mutable.LinkedHashMap.empty[String, Boolean]
     base.foreach(p => live += p -> true)
     val last = latestVersion(spark, table)

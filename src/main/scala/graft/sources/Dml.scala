@@ -70,37 +70,8 @@ object Dml {
     * file count; used to size the hit-fraction guard and as the swap
     * list for full rewrites.
     */
-  private def tableFiles(spark: SparkSession, path: String): Seq[String] = {
-    val hfs = fs(spark, path)
-    val root = hfs.makeQualified(new Path(path))
-    val it = hfs.listFiles(root, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      // hidden segments anywhere BELOW the table root: the txn trash
-      // dir (.graft_trash) nests normal-named part files under a
-      // dot-dir. Segments ABOVE the root (a warehouse under a dot-dir
-      // home or _work CI checkout) must not count — Spark's readers
-      // only skip hidden names below the listing root, and counting
-      // ancestors would make reads see rows while DML lists zero files.
-      if (st.isFile && !hiddenBelow(root, st.getPath))
-        buf += st.getPath.toString
-    }
-    buf.toSeq
-  }
-
-  /** True iff any path segment strictly below `root` is hidden
-    * (starts with '_' or '.'), mirroring Spark's own listing filter.
-    */
-  private[sources] def hiddenBelow(root: Path, p: Path): Boolean = {
-    var cur = p
-    while (cur != null && cur != root) {
-      val n = cur.getName
-      if (n.startsWith("_") || n.startsWith(".")) return true
-      cur = cur.getParent
-    }
-    false
-  }
+  private def tableFiles(spark: SparkSession, path: String): Seq[String] =
+    Catalog.dataFiles(spark, path).map(_.getPath.toString)
 
   /** The rewrite scan + the files it will replace. Selective DML gets
     * the file-pruned path (scan only hit files); past the guard —
@@ -118,24 +89,19 @@ object Dml {
       math.min(math.max(1L, (all.size * HitFractionGuard).toLong), MaxHitFileList.toLong).toInt
     val hits = hitPaths.limit(threshold + 1).collect().map(_.getString(0)).toSeq
     if (hits.isEmpty) None
-    else if (hits.size > threshold) Some((spark.read.parquet(path), all))
-    else Some((spark.read.parquet(hits: _*), hits))
+    else if (hits.size > threshold) Some((Catalog.parquet(spark, path), all))
+    else Some((Catalog.parquet(spark, hits: _*), hits))
   }
 
   /** Files containing ≥1 row matching `cond` — predicate-pushed scan,
     * file paths only (never row data).
     */
   private def hitFilePaths(spark: SparkSession, path: String, cond: Column): DataFrame =
-    spark.read.parquet(path)
+    Catalog.parquet(spark, path)
       .filter(cond)
       .select(col("_metadata.file_path"))
       .distinct()
 
-  /** Append `df` as new part files, then delete `oldFiles`. Write
-    * happens BEFORE delete so a crash never loses a committed row —
-    * but see the object scaladoc for the honest crash window: between
-    * the two steps old AND rewritten rows are both visible.
-    */
   /** Cap on rows per written file for every DML write. The conflict
     * granularity of this copy-on-write layer is the FILE (Txn.touch
     * raises when two writers replace the same file — the reference's
@@ -151,6 +117,11 @@ object Dml {
     spark.conf.getOption("spark.graft.dml.maxFileRows")
       .map(_.toLong).getOrElse(DefaultMaxFileRows)
 
+  /** Append `df` as new part files, then delete `oldFiles`. Write
+    * happens BEFORE delete so a crash never loses a committed row —
+    * but see the object scaladoc for the honest crash window: between
+    * the two steps old AND rewritten rows are both visible.
+    */
   private def swap(spark: SparkSession, path: String,
                    df: DataFrame, oldFiles: Seq[String]): Unit = {
     // conflicts (a concurrent transaction wrote these files) raise
@@ -209,24 +180,6 @@ object Dml {
         DmlStats(files.size, obs.get("n").asInstanceOf[Long], 0)
     }
 
-  /** MERGE INTO <path> t USING <source> s ON t.<on> = s.<on>
-    *   WHEN MATCHED THEN UPDATE SET <set>   (source columns via `s`)
-    *   WHEN NOT MATCHED THEN INSERT (all target columns from source).
-    *
-    * `set` maps target column → expression over the joined row
-    * (reference source columns with their source names). Inserted
-    * rows take the source's values for the target's columns.
-    *
-    * Hit files are files holding ≥1 matched key, found with a
-    * broadcast-friendly semi join. A source key absent from every hit
-    * file is absent from the whole table (any file containing it
-    * would be a hit), so the not-matched side anti-joins the hit
-    * files only — the full table is scanned exactly once, for the
-    * file-level probe.
-    *
-    * `source` must be unique per key (classic MERGE cardinality rule;
-    * enforced here — the reference errors the same way).
-    */
   /** PRIMARY KEY uniqueness audit: every key value held by more than
     * one row, with its multiplicity. The reference enforces PK via an
     * ART index probe per insert
@@ -260,7 +213,7 @@ object Dml {
       // a freshly-created table has no data files — nothing to clash
       // with, and parquet can't infer a schema from an empty dir
       if (tableFiles(spark, path).nonEmpty) {
-        val existing = spark.read.parquet(path)
+        val existing = Catalog.parquet(spark, path)
           .select(pk.map(col).toIndexedSeq: _*)
         val clash = rows.select(pk.map(col).toIndexedSeq: _*)
           .join(existing, pk, "left_semi").limit(1).count()
@@ -291,33 +244,45 @@ object Dml {
     */
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024): DmlStats = {
-    val hfs = fs(spark, path)
-    val it = hfs.listFiles(new Path(path), true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val root = hfs.makeQualified(new Path(path))
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && !hiddenBelow(root, st.getPath)) {
-        // Hive-partitioned layouts are unsupported: reading leaf files
-        // without basePath would drop the partition columns and the
-        // swap would silently destroy them. Refuse rather than corrupt.
-        require(st.getPath.getParent == root,
-          s"compact: $path is partitioned (found ${st.getPath} under a " +
-            "subdirectory); compact supports flat tables only")
-        files += ((st.getPath.toString, st.getLen))
-      }
+    val root = fs(spark, path).makeQualified(new Path(path))
+    val files = Catalog.dataFiles(spark, path).map { st =>
+      // Hive-partitioned layouts are unsupported: reading leaf files
+      // without basePath would drop the partition columns and the
+      // swap would silently destroy them. Refuse rather than corrupt.
+      require(st.getPath.getParent == root,
+        s"compact: $path is partitioned (found ${st.getPath} under a " +
+          "subdirectory); compact supports flat tables only")
+      (st.getPath.toString, st.getLen)
     }
     val totalBytes = files.map(_._2).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     if (files.size <= nOut) return DmlStats(0, 0, 0)
     val obs = Observation()
-    val compacted = spark.read.parquet(files.map(_._1).toSeq: _*)
+    val compacted = Catalog.parquet(spark, files.map(_._1): _*)
       .observe(obs, count(lit(1)).as("n"))
       .repartition(nOut)
-    swap(spark, path, compacted, files.map(_._1).toSeq)
+    swap(spark, path, compacted, files.map(_._1))
     DmlStats(files.size.toLong, obs.get("n").asInstanceOf[Long], 0)
   }
 
+  /** MERGE INTO <path> t USING <source> s ON t.<on> = s.<on>
+    *   WHEN MATCHED THEN UPDATE SET <set>   (source columns via `s`)
+    *   WHEN NOT MATCHED THEN INSERT (all target columns from source).
+    *
+    * `set` maps target column → expression over the joined row
+    * (reference source columns with their source names). Inserted
+    * rows take the source's values for the target's columns.
+    *
+    * Hit files are files holding ≥1 matched key, found with a
+    * broadcast-friendly semi join. A source key absent from every hit
+    * file is absent from the whole table (any file containing it
+    * would be a hit), so the not-matched side anti-joins the hit
+    * files only — the full table is scanned exactly once, for the
+    * file-level probe.
+    *
+    * `source` must be unique per key (classic MERGE cardinality rule;
+    * enforced here — the reference errors the same way).
+    */
   def merge(spark: SparkSession, path: String, source: DataFrame,
             on: Seq[String], set: Map[String, Column],
             targetAlias: String = "t", sourceAlias: String = "excluded"): DmlStats = {
@@ -325,7 +290,7 @@ object Dml {
       .count().filter(col("count") > 1).limit(1).count()
     require(dupKeys == 0, "MERGE source has duplicate join keys")
 
-    val target = spark.read.parquet(path)
+    val target = Catalog.parquet(spark, path)
     // project the metadata column off the scan BEFORE the join — it is
     // a scan-level hidden column and does not survive resolution
     // through a join
@@ -345,7 +310,9 @@ object Dml {
         Txn.touch(spark, path)
         val inserts = source.select(targetCols.map(col).toIndexedSeq: _*)
           .observe(obsIns, count(lit(1)).as("n"))
-        inserts.write.mode(SaveMode.Append).parquet(path)
+        inserts.write.mode(SaveMode.Append)
+          .option("maxRecordsPerFile", maxFileRows(spark))
+          .parquet(path)
         Txn.wrote(spark, path)
         DmlStats(0, 0, obsIns.get("n").asInstanceOf[Long])
       case Some((hit, files)) =>

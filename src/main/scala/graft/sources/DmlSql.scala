@@ -332,7 +332,7 @@ object DmlSql {
     val dir = java.nio.file.Files.createTempDirectory("graft_returning").toString
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
     returningDirs.add(dir)
-    spark.read.parquet(dir)
+    Catalog.parquet(spark, dir)
   }
 
   /** RETURNING snapshot dirs, reaped at JVM exit so long sessions

@@ -60,7 +60,7 @@ object ExportDb {
       .sorted
     entries.map { p =>
       val name = Paths.get(p).getFileName.toString.stripSuffix(".parquet")
-      val df = spark.read.parquet(p)
+      val df = Catalog.parquet(spark, p)
       df.createOrReplaceTempView(name)
       name -> df
     }.toMap

@@ -24,8 +24,10 @@ import org.apache.hadoop.fs.http.HttpFileSystem
   *    that lets parquet read footer-first over HTTP.
   *
   * Register with `spark.hadoop.fs.http.impl=graft.sources.HttpFs`
-  * (same class for `fs.https.impl`) and `spark.read.parquet/csv/json
-  * ("http://host/file")` plans a normal distributed scan. For real
+  * (same class for `fs.https.impl`) and `Catalog.parquet(spark,
+  * "http://host/file")` (or `spark.read.csv/json`) plans a normal
+  * distributed scan; the parquet schema comes from one footer read on
+  * the driver, through the same ranged GETs. For real
   * object stores, s3a:// implements the same contract (seek = ranged
   * GET) via the hadoop-aws jars on the cluster classpath — not
   * shipped in this zero-egress image, so S3A is a documented posture

@@ -261,7 +261,7 @@ object Txn {
             if (files.nonEmpty) {
               val pin = Pin(id.table, path, files, active = true)
               pins(key(path)) = pin
-              spark.read.parquet(files: _*).createOrReplaceTempView(id.table)
+              Catalog.parquet(spark, files: _*).createOrReplaceTempView(id.table)
             }
           }
         } catch { case _: Exception => } // views/odd providers: not pinned
@@ -303,28 +303,14 @@ object Txn {
       from: String, to: String): Unit =
     pins.get(key(path)).filter(_.active).foreach { p =>
       p.files = p.files.map(f => if (norm(f) == norm(from)) to else f)
-      spark.read.parquet(p.files: _*).createOrReplaceTempView(p.name)
+      Catalog.parquet(spark, p.files: _*).createOrReplaceTempView(p.name)
     }
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def dataFiles(spark: SparkSession, path: String): Seq[String] = {
-    val hfs = fs(spark, path)
-    val root = hfs.makeQualified(new Path(path))
-    if (!hfs.exists(root)) return Nil
-    val it = hfs.listFiles(root, true)
-    val buf = mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      // hidden-ness is judged relative to the table root, matching
-      // Spark's listing filter — ancestors above the root (dot-dir
-      // homes, _work CI checkouts) must not hide the whole table
-      if (st.isFile && !Dml.hiddenBelow(root, st.getPath))
-        buf += st.getPath.toString
-    }
-    buf.toSeq
-  }
+  private def dataFiles(spark: SparkSession, path: String): Seq[String] =
+    Catalog.dataFiles(spark, path).map(_.getPath.toString)
 
   private val foreignTouched = mutable.LinkedHashSet.empty[String]
 

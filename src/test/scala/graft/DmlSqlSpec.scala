@@ -526,4 +526,39 @@ class DmlSqlSpec extends AnyFunSuite {
       spark.sql("USE default")
     }
   }
+
+  test("an upsert whose keys match nothing caps rows per written file") {
+    // every DML write splits at spark.graft.dml.maxFileRows, including
+    // MERGE's all-insert branch: one file per row at a cap of 1, even
+    // from a single-partition source
+    import spark.implicits._
+    def dataFiles(path: String): Set[String] =
+      new java.io.File(new java.net.URI(path).getPath).listFiles
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    spark.conf.set("spark.graft.dml.maxFileRows", "1")
+    inScratchDb {
+      try {
+        GraftSql.runScript(spark,
+          """CREATE OR REPLACE TABLE accounts (id INTEGER PRIMARY KEY, owner VARCHAR, bal DOUBLE, seg VARCHAR);
+            |INSERT INTO accounts VALUES (1, 'a', 1.0, 'A')""".stripMargin)
+        Seq((7, "x", 7.0, "B"), (8, "y", 8.0, "B"), (9, "z", 9.0, "C"))
+          .toDF("id", "owner", "bal", "seg").coalesce(1).createOrReplaceTempView("upsert_src")
+        val path = graft.sources.DmlSql.tablePath(spark, "accounts")
+        val before = dataFiles(path)
+        val res = GraftSql.sql(spark,
+          "INSERT INTO accounts SELECT * FROM upsert_src ON CONFLICT (id) DO UPDATE SET bal = excluded.bal")
+        assert(res.collect()(0).getLong(0) === 3L)
+        assert((dataFiles(path) -- before).size === 3)
+        assert(spark.table("accounts").count() === 4L)
+        val merged = graft.sources.Dml.merge(spark, path,
+          Seq((20, "m", 1.0, "D"), (21, "n", 2.0, "D")).toDF("id", "owner", "bal", "seg").coalesce(1),
+          Seq("id"), Map.empty)
+        assert(merged.rowsInserted === 2L)
+        assert(dataFiles(path).size === before.size + 5)
+      } finally {
+        spark.conf.unset("spark.graft.dml.maxFileRows")
+        spark.catalog.dropTempView("upsert_src")
+      }
+    }
+  }
 }
