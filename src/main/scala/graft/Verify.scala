@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,28 +15,24 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps → session-zone instants, matching the
-      // DuckDB oracle's wall-clock reading (see GraftSession)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // only the dumped entries' oracles are built; an oracle that cannot
+    // be built fails its entry like a failing query does
+    val oracleSql = SparkEntry.allDefs.map(d => d.name -> d).toMap.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, d) =>
+        def failed(e: Throwable): Unit =
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        try {
+          val oracle = d.oracle
+          try d.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable => failed(e) }
+          oracle.map(name -> _)
+        } catch { case e: Throwable => failed(e); None }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -50,8 +45,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+    val json = oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

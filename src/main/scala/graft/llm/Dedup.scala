@@ -13,55 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Join strategy for the LSH bucket joins and pair-attach joins.
-    *
-    * shuffle_hash, not merge: sort-merge SORTS both sides, and the
-    * payload rows here are KBs (signatures + gram arrays) — at sf10
-    * that is ~16 GB per side through the sorter, which spills and
-    * wrecks run-to-run stability. The hashed build side holds one
-    * partition's rows (≈ payload/`shuffle.partitions`), which fits
-    * executor memory by construction at any corpus size because the
-    * partition count scales with the cluster. A/B at sf10 (Probe
-    * d04join/d02join, pair stage + count): d04 merge 30.7–61.8 s →
-    * shuffle_hash 12.7–13.4 s; d02 merge 13.4–72.9 s → 13.5–13.9 s.
-    * Overridable for experiments via -Dgraft.lsh.joinHint=merge.
-    */
-  private[llm] def lshJoinHint: String =
-    sys.props.getOrElse("graft.lsh.joinHint", "shuffle_hash")
-
-  /** The sig⋈masked join in [[minhashPairs]]: unlike the grams case
-    * above, the payload is the 512-byte signature only, light enough
-    * that un-hinted planning (AQE broadcast of the masked side when
-    * small, shuffled-hash otherwise via the session preference) beats
-    * the forced shuffle: A/B d02 sf0.1 2.37→2.11 s, sf10 14.3→11.1 s.
-    * lshJaccardPairs keeps [[lshJoinHint]] — its rows carry the KB
-    * gram arrays and the same A/B REGRESSED there (11.5→13.8 s sf10).
-    */
-  private[llm] def sigJoin(
-      payload: DataFrame, masked: DataFrame, key: String): DataFrame =
-    sys.props.get("graft.lsh.sigJoinHint").filter(_.nonEmpty) match {
-      case Some(h) => payload.join(masked.hint(h), Seq(key))
-      case None    => payload.join(masked, Seq(key))
-    }
-
-  /** Hint for the PAIR-ATTACH joins (star-verified pairs, jaccard
-    * verify): pairs ⋈ payload keyed on one pair id. Unlike the bucket
-    * joins above, the pairs side here is typically FAR smaller than
-    * the corpus payload (near-dup edges ≪ docs), so the forced
-    * shuffle_hash robbed AQE of its broadcast upgrade — with no hint
-    * the tiny pair set broadcasts and the KB-wide payload side is
-    * never exchanged at all. A/B sf0.1: d07 2.76→1.79 s; sf10: 14.7→
-    * 13.1 s (no sort-merge regression — the session-level
-    * preferSortMergeJoin=false still steers oversized cases to
-    * shuffled-hash, and AQE re-plans from real sizes).
-    */
-  private[llm] def attachJoin(
-      pairs: DataFrame, payload: DataFrame, key: String): DataFrame =
-    sys.props.get("graft.lsh.attachHint") match {
-      case Some(h) if h.nonEmpty => pairs.join(payload.hint(h), Seq(key))
-      case _                     => pairs.join(payload, Seq(key))
-    }
-
   /** Shared bucket-key exchange for exploded band/block relations that
     * have SEVERAL consumers keyed on the bucket (cap/rep aggregate +
     * join probe [+ self-join side]) — guide §2.4. Without it each
@@ -70,12 +21,10 @@ object Dedup {
     * shared node was the corpus-text exchange BELOW them. Only applied
     * where every consumer needs the bucket partitioning anyway (star
     * variants, simhash) — minhashPairs/lshJaccardPairs documented why
-    * not. -Dgraft.lsh.sharedBucketEx=0 restores the recompute shape
-    * (A/B probes, before-plan dumps).
+    * not.
     */
-  private[llm] def sharedBucketEx(df: DataFrame, keys: Column*): DataFrame =
-    if (sys.props.get("graft.lsh.sharedBucketEx").contains("0")) df
-    else df.repartition(keys: _*)
+  private def sharedBucketEx(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(keys: _*)
 
   /** Shared PAYLOAD exchange (r15, guide §2.4): one explicit
     * `repartition(id)` directly ABOVE the text kernels so that every
@@ -89,56 +38,25 @@ object Dedup {
     * mask/cap machinery groups by id and the sig⋈mask join is keyed on
     * id, so an id exchange is REUSED by every consumer with zero new
     * exchanges on top — the bk variant added narrow exchanges per
-    * consumer. The exchanged rows are the (id, sig[, grams]) payload:
-    * linear in docs, exchanged once, and strictly cheaper than the 2
-    * kernel passes it replaces (kernel CPU is ~100× per byte of a
-    * relational projection — r14 ScanProf).
+    * consumer. The exchanged rows are the (id, sig) payload: linear in
+    * docs, exchanged once, and strictly cheaper than the 2 kernel
+    * passes it replaces (kernel CPU is ~100× per byte of a relational
+    * projection — r14 ScanProf).
     *
     * Exchange reuse requires all consumers' below-exchange subtrees to
     * canonicalize identically; where a consumer needs fewer columns,
     * [[graft.plans.WithReferences]] pins the full column set below the
     * exchange (column pruning was exactly what defeated reuse in the
-    * r14 d03/d04 plans). -Dgraft.lsh.payloadEx=0 restores the r14
-    * recompute shape (A/B probes, before-plan dumps).
+    * r14 d03/d04 plans).
     *
-    * PER-SITE POLICY (each side measured at sf0.1 AND sf10, r14
-    * discipline): the anchor is ON where the exchanged payload is the
-    * narrow signature (minhashPairs: 260 B/row — sf10 interleaved
-    * 13.8→12.5 s min) and OFF where it would carry the KB gram arrays
-    * (lshJaccardPairs, minhashStarVerifiedPairs: the ~2 GB sf10
-    * exchange measured WORSE than recomputing the kernels over
-    * OS-cached parquet — d04 20.0→34.2 s, d07 15.2→22.4 s min,
-    * interleaved). Same calculus as the r7/r14 persist experiments:
-    * moving KB-wide payload rows loses to recompute on this I/O
-    * posture.
+    * Used only where the exchanged payload is the narrow signature
+    * (minhashPairs, minhashStarPairs). The sites whose payload carries
+    * the KB gram arrays (lshJaccardPairs, minhashStarVerifiedPairs)
+    * recompute the kernels instead: the ~2 GB sf10 exchange measured
+    * worse (OPTIMIZATION_r15.md §1).
     */
-  private[llm] def sharedPayloadEx(df: DataFrame, default: Boolean = true): DataFrame =
-    (sys.props.get("graft.lsh.payloadEx") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _         => default
-    }) match {
-      case true  => df.repartition(col("id"))
-      case false => df
-    }
-
-  /** `value`, with extra column references pinned for pruning — see
-    * [[sharedPayloadEx]] and [[graft.plans.WithReferences]].
-    * -Dgraft.lsh.withRefs=0 restores plain `value` (the r14 plan
-    * shapes, where per-consumer pruning defeated exchange reuse);
-    * `default` carries the per-site policy where the pin itself is
-    * only wanted together with the site's shared exchange.
-    */
-  private def withRefs(default: Boolean, value: Column, refs: Column*): Column =
-    (sys.props.get("graft.lsh.withRefs") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _         => default
-    }) match {
-      case true => graft.plans.HashExpressions.columnOf(graft.plans.WithReferences(
-        (value +: refs).map(graft.plans.HashExpressions.exprOf)))
-      case false => value
-    }
+  private def sharedPayloadEx(df: DataFrame): DataFrame =
+    df.repartition(col("id"))
 
   /* Recompute-vs-materialize, measured twice so nobody retries the
    * losing side: the stop-band pass and the payload pass each re-run
@@ -166,13 +84,9 @@ object Dedup {
     */
   def representatives(df: DataFrame, idCol: String, textCol: String,
       byText: Boolean = true): DataFrame =
-    if (!(sys.props.get("graft.lsh.repsByText") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _         => byText
-    })) {
-      // r12–r14 shape, kept for A/B probes (-Dgraft.lsh.repsByText=0):
-      // winner ids via a narrow sha2-keyed HashAggregate, text
+    if (!byText) {
+      // r12–r14 shape, kept where the text-keyed shape measured worse
+      // (lshJaccardPairs): winner ids via a narrow sha2-keyed HashAggregate, text
       // re-attached by semi-join. Chosen in r12 over
       // groupBy(sha2)+first(text), whose string AGGREGATION BUFFER
       // silently compiled to a SortAggregate keyed on the 64-char hex
@@ -298,8 +212,10 @@ object Dedup {
     // re-joined the sig onto every candidate pair — shuffle
     // proportional to the PAIR count, quadratic in near-dup cluster
     // size (the same disease lshJaccardPairs documents for the gram
-    // arrays). Join strategy left to AQE (see sigJoin's A/B notes).
-    val capped = sigJoin(sig, masked, "id")
+    // arrays). No join hint: on the 512-byte signature AQE's choice
+    // (broadcast of the masked side when small) beat a forced
+    // shuffle_hash, sf10 14.3→11.1 s (OPTIMIZATION_r14.md §4).
+    val capped = sig.join(masked, Seq("id"))
       .select(col("id"), col("sig"), col("m"),
         explode(TextOps.lshBands(col("sig"), bands, r)).as("bk"))
       .filter(element_at(col("m"), col("bk.band") + 1) === col("bk.bh"))
@@ -368,29 +284,21 @@ object Dedup {
       minJaccard: Double = 0.0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // r15 MEASURED NEGATIVE (kept on the r14 recompute shape): both the
-    // shared payload anchor and the groupBy(text) representatives LOSE
-    // here at sf10 — the anchor exchange carries the KB gram arrays
-    // (~2 GB: interleaved 20.0→34.2 s min), and without the anchor the
-    // text-keyed reps aggregate re-runs once per consumer (interleaved
-    // 12.7→16.8 s min). The d02-style single-pass fix only pays when
-    // the anchored payload is narrow. Override knobs:
-    // -Dgraft.lsh.repsByText=1 / payloadEx=1 / withRefs=1.
+    // r14 recompute shape: no payload anchor and sha2 representatives.
+    // Both r15 single-pass pieces lost here at sf10 — the anchor
+    // exchange carries the KB gram arrays, and without it the
+    // text-keyed reps aggregate re-runs once per consumer
+    // (OPTIMIZATION_r15.md §1).
     val reps = representatives(df, idCol, textCol, byText = false)
     // one pass computes both per-doc arrays; ~2 KB payload per row
-    val payload = sharedPayloadEx(reps.select(
+    val payload = reps.select(
       col("id"),
       TextOps.minhashFromHashes(
         TextOps.charShingleHashes(col("__text"), shingleSize), numHashes).as("sig"),
-      TextOps.wordNgramHashes(col("__text"), gramN).as("grams")),
-      default = false)
-    // stop-band cap decided on narrow (id, bk) rows only; the grams pin
-    // (withRefs) only applies together with the anchor — pinning the
-    // gram arrays into this branch without a shared exchange would add
-    // a kernel pass instead of removing one
+      TextOps.wordNgramHashes(col("__text"), gramN).as("grams"))
+    // stop-band cap decided on narrow (id, bk) rows only
     val narrow = payload.select(col("id"),
-      explode(withRefs(false, TextOps.lshBands(col("sig"), bands, r),
-        col("grams"))).as("bk"))
+      explode(TextOps.lshBands(col("sig"), bands, r)).as("bk"))
     val okBuckets = narrow.groupBy(col("bk")).agg(count(lit(1)).as("__n"))
       .filter(col("__n") <= maxBucket)
       .select(col("bk"), lit(true).as("__ok"))
@@ -407,8 +315,10 @@ object Dedup {
           .as("mh")))).as("__ms"))
       .select(col("id"), transform(col("__ms"), s => s.getField("mh")).as("m"))
     // shuffle_hash with the NARROW masked side as build: sort-merge
-    // would sort the KB-wide payload side (measured +4–5 s at sf10)
-    val capped = payload.join(masked.hint(lshJoinHint), Seq("id"))
+    // sorts the KB-wide payload side through the sorter and spills
+    // (sf10 pair stage: merge 30.7–61.8 s, shuffle_hash 12.7–13.4 s);
+    // AQE's unhinted choice also lost here (OPTIMIZATION_r14.md §4)
+    val capped = payload.join(masked.hint("shuffle_hash"), Seq("id"))
       .select(col("id"), col("sig"), col("grams"), col("m"),
         explode(TextOps.lshBands(col("sig"), bands, r)).as("bk"))
       .filter(element_at(col("m"), col("bk.band") + 1) === col("bk.bh"))
@@ -469,9 +379,12 @@ object Dedup {
         graft.plans.ArrayAgreeCount(
           graft.plans.HashExpressions.exprOf(a),
           graft.plans.HashExpressions.exprOf(b)))
-    attachJoin(attachJoin(pairs,
-        sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a"),
-        sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
+    // pair-attach joins carry no hint: near-dup edges ≪ docs, so AQE
+    // broadcasts the pair side and the payload is never exchanged
+    // (a forced shuffle_hash measured slower — OPTIMIZATION_r14.md §4)
+    pairs
+      .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         (agree(col("sig_a"), col("sig_b")).cast("double") / numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
@@ -501,29 +414,24 @@ object Dedup {
       gramN: Int = 3, minJaccard: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // r15 per-site split decision (each side interleaved-measured at
-    // sf10): groupBy(text) representatives WIN here (21.7→14.6 s min
-    // — one scan + one exchange replace the two-scan semi-join prefix
-    // that all three consumers re-ran), but the shared payload anchor
-    // LOSES (15.2→22.4 s min with anchor+pin: the exchange carries the
-    // KB gram arrays, same calculus as lshJaccardPairs). So: byText
-    // on, anchor/pin off — the kernels stay recomputed per consumer,
-    // each pass now over the cheaper single-exchange prefix.
+    // r15 per-site split (each side measured at sf10,
+    // OPTIMIZATION_r15.md §1): groupBy(text) representatives win here,
+    // the shared payload anchor loses (its exchange would carry the KB
+    // gram arrays, as in lshJaccardPairs) — so the kernels stay
+    // recomputed per consumer over the cheaper single-exchange prefix.
     val reps = representatives(df, idCol, textCol)
     // one text pass computes both verify payloads
-    val payload = sharedPayloadEx(reps.select(
+    val payload = reps.select(
       col("id"),
       TextOps.minhashFromHashes(
         TextOps.charShingleHashes(col("__text"), shingleSize), numHashes).as("sig"),
-      TextOps.wordNgramHashes(col("__text"), gramN).as("grams")),
-      default = false)
+      TextOps.wordNgramHashes(col("__text"), gramN).as("grams"))
     // shared bk exchange: bucketRep + edge join probe run over ONE
     // banded pass instead of re-running the kernels per consumer
     // (guide §2.4; see minhashPairs). Column pruning keeps the heavy
     // grams array out of this exchange — only (id, bk) rows cross.
     val banded = sharedBucketEx(payload.select(
-      col("id"), explode(withRefs(false, TextOps.lshBands(col("sig"), bands, r),
-        col("grams"))).as("bk")),
+      col("id"), explode(TextOps.lshBands(col("sig"), bands, r)).as("bk")),
       col("bk"))
     val bucketRep = banded.groupBy(col("bk"))
       .agg(min(col("id")).as("rep"))
@@ -542,11 +450,12 @@ object Dedup {
         graft.plans.SortedIntersectCount(
           graft.plans.HashExpressions.exprOf(a),
           graft.plans.HashExpressions.exprOf(b)))
-    attachJoin(attachJoin(pairs,
-        payload.select(col("id").as("id_a"), col("sig").as("sig_a"),
-          col("grams").as("grams_a")), "id_a"),
-        payload.select(col("id").as("id_b"), col("sig").as("sig_b"),
-          col("grams").as("grams_b")), "id_b")
+    // unhinted pair-attach joins, as in minhashStarPairs
+    pairs
+      .join(payload.select(col("id").as("id_a"), col("sig").as("sig_a"),
+        col("grams").as("grams_a")), Seq("id_a"))
+      .join(payload.select(col("id").as("id_b"), col("sig").as("sig_b"),
+        col("grams").as("grams_b")), Seq("id_b"))
       // est gate first: the O(numHashes) int compare rejects before
       // any gram work, exactly like the bucket-local generator
       .filter((agree(col("sig_a"), col("sig_b")).cast("double") / numHashes)
@@ -565,113 +474,43 @@ object Dedup {
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 256): DataFrame = {
+    import graft.plans.HashExpressions.{columnOf, exprOf}
+    import graft.plans.WithReferences
     // same duplicate-cluster defense as minhashPairs: exact copies
     // collapse to a representative, oversized blocks are dropped
     val reps = representatives(df, idCol, textCol)
-    val fp0 = reps
+    val fp = reps
       .select(col("id"),
         TextOps.tokenHashes(TextOps.wordTokens(col("__text"))).as("hs"))
       .select(col("id"), TextOps.simhashBlocks(col("hs")).as("blocks"))
-    if (!sys.props.get("graft.lsh.simhashEmitOnce").contains("1")) {
-      // DEFAULT shape: every pair is generated at every shared
-      // surviving block (up to 4×) and deduplicated by a distinct. One
-      // (block_idx, block_val) exchange shared by the cap aggregate
-      // (withRefs pins id/blocks so its copy canonicalizes equal —
-      // r15 verdict item 4) and both self-join sides.
-      //
-      // The emit-once variant below (-Dgraft.lsh.simhashEmitOnce=1)
-      // was the r14 verdict's item-3 suggestion; it is proven
-      // OUTPUT-IDENTICAL (multiset equality incl. duplicate counts at
-      // sf0.001/0.01/0.1) and measured SLOWER at every scale
-      // (interleaved: sf0.1 0.76→1.03 s, sf10 3.23→4.09 s,
-      // sf30 32.7→35.2 s min): with only 4 blocks the duplication it
-      // removes tops out at 4× of a small pair set, while its masked
-      // arrays cost a corpus-wide collect_list aggregate + join. The
-      // quadratic term is the within-bucket pair ENUMERATION, which
-      // emit-once cannot touch — and the declared product (the full
-      // hamming≤3 pair list) is itself quadratic in near-dup cluster
-      // size, so that term is output-bound, not waste.
-      val exploded = sharedBucketEx(fp0.select(
-        col("id"), col("blocks"),
-        posexplode(col("blocks")).as(Seq("block_idx", "block_val"))),
-        col("block_idx"), col("block_val"))
-      val okBlocks = exploded.groupBy(col("block_idx"), col("block_val"))
-        .agg(count(withRefs(true, lit(1), col("id"), col("blocks"))).as("__n"))
-        .filter(col("__n") <= maxBucket)
-        .select(col("block_idx"), col("block_val"))
-      val capped = exploded.join(okBlocks, Seq("block_idx", "block_val"))
-      val a = capped.select(col("id").as("id_a"), col("blocks").as("blocks_a"),
-        col("block_idx"), col("block_val"))
-      val b = capped.select(col("id").as("id_b"), col("blocks").as("blocks_b"),
-        col("block_idx"), col("block_val"))
-      a.join(b, Seq("block_idx", "block_val"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          TextOps.simhashHamming(col("blocks_a"), col("blocks_b")).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct()
-    } else {
-      // EXPERIMENTAL (measured negative — see the note above; kept for
-      // the receipt and for re-evaluation on a cluster where the
-      // distinct's pair exchange crosses a real network):
-      // minhashPairs' masked emit-once pattern applied to simhash.
-      // Each doc gets a masked block array m (surviving blocks keep
-      // their value, capped ones get a per-(id, idx) sentinel), so
-      // firstEqualIndex(m_a, m_b) == block_idx emits each pair at
-      // exactly ONE shared surviving block — near-identical cluster
-      // members share all 4 blocks, so this cuts the self-join's
-      // emitted rows up to 4× exactly where clusters hurt, and the
-      // pair set is unique by construction: the trailing distinct
-      // (a full pair exchange) disappears.
-      //
-      // The payload anchor is the d02 calculus, not the d04 one: the
-      // anchored rows are (id, blocks 4×8 B) — 40 B/row, so one
-      // exchange above the kernels is far cheaper than the kernel
-      // passes it deduplicates (the gram-array case that measured
-      // negative carries ~2 KB/row).
-      val fp = sharedPayloadEx(fp0)
-      val narrow = fp.select(col("id"),
-        posexplode(col("blocks")).as(Seq("block_idx", "block_val")))
-      val okBlocks = narrow.groupBy(col("block_idx"), col("block_val"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBucket)
-        .select(col("block_idx"), col("block_val"), lit(true).as("__ok"))
-      // masked per-id block array, exactly minhashPairs' m: rides the
-      // anchor's id partitioning (okBlocks joins broadcast / narrow),
-      // so no new exchange
-      val masked = narrow.join(okBlocks, Seq("block_idx", "block_val"), "left")
-        .groupBy(col("id"))
-        .agg(sort_array(collect_list(struct(
-          col("block_idx").as("i"),
-          when(col("__ok"), col("block_val"))
-            .otherwise(xxhash64(col("id"), col("block_idx"), lit("__capped")))
-            .as("mh")))).as("__ms"))
-        .select(col("id"), transform(col("__ms"), s => s.getField("mh")).as("m"))
-      // surviving (id, blocks, m, idx, val) rows, exchanged ONCE on the
-      // block key and reused by both self-join sides
-      val capped = sharedBucketEx(fp.join(masked, Seq("id"))
-        .select(col("id"), col("blocks"), col("m"),
-          posexplode(col("blocks")).as(Seq("block_idx", "block_val")))
-        .filter(element_at(col("m"), col("block_idx") + 1) === col("block_val")),
-        col("block_idx"), col("block_val"))
-      val a = capped.select(col("id").as("id_a"), col("blocks").as("blocks_a"),
-        col("m").as("m_a"), col("block_idx"), col("block_val"))
-      val b = capped.select(col("id").as("id_b"), col("blocks").as("blocks_b"),
-        col("m").as("m_b"), col("block_idx"), col("block_val"))
-      def firstEq(x: Column, y: Column): Column =
-        graft.plans.HashExpressions.columnOf(graft.plans.FirstEqualIndex(
-          graft.plans.HashExpressions.exprOf(x),
-          graft.plans.HashExpressions.exprOf(y)))
-      a.join(b, Seq("block_idx", "block_val"))
-        .filter(col("id_a") < col("id_b"))
-        // emit-once: this bucket is the pair's first shared surviving
-        // block (m-equality at k ⟺ blocks equal AND block k survived —
-        // the per-id sentinel can't match across ids)
-        .filter(firstEq(col("m_a"), col("m_b")) === col("block_idx").cast("long"))
-        .select(col("id_a"), col("id_b"),
-          TextOps.simhashHamming(col("blocks_a"), col("blocks_b")).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-    }
+    // Every pair is generated at every shared surviving block (up to
+    // 4×) and deduplicated by a distinct. One (block_idx, block_val)
+    // exchange is shared by the cap aggregate and both self-join sides;
+    // the WithReferences pin keeps id/blocks in the cap aggregate's
+    // copy so it canonicalizes equal (r15 verdict item 4). An emit-once
+    // block selection was output-identical and slower at sf0.1, sf10
+    // and sf30 (OPTIMIZATION_r15.md): the quadratic term is the
+    // within-bucket pair enumeration, which is output-bound.
+    val exploded = sharedBucketEx(fp.select(
+      col("id"), col("blocks"),
+      posexplode(col("blocks")).as(Seq("block_idx", "block_val"))),
+      col("block_idx"), col("block_val"))
+    val pinnedOne = columnOf(WithReferences(Seq(lit(1), col("id"), col("blocks")).map(exprOf)))
+    val okBlocks = exploded.groupBy(col("block_idx"), col("block_val"))
+      .agg(count(pinnedOne).as("__n"))
+      .filter(col("__n") <= maxBucket)
+      .select(col("block_idx"), col("block_val"))
+    val capped = exploded.join(okBlocks, Seq("block_idx", "block_val"))
+    val a = capped.select(col("id").as("id_a"), col("blocks").as("blocks_a"),
+      col("block_idx"), col("block_val"))
+    val b = capped.select(col("id").as("id_b"), col("blocks").as("blocks_b"),
+      col("block_idx"), col("block_val"))
+    a.join(b, Seq("block_idx", "block_val"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        TextOps.simhashHamming(col("blocks_a"), col("blocks_b")).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
   }
 
   /** Exact word n-gram Jaccard verification of an (id_a, id_b)
@@ -688,9 +527,9 @@ object Dedup {
     val grams = df.select(
       col(idCol).as("id"),
       TextOps.wordNgramHashes(col(textCol), n).as("grams"))
-    // pair-attach joins via attachJoin (r14): no forced hint — the
-    // pair set is usually far smaller than the gram table, so AQE's
-    // broadcast upgrade applies; see attachJoin's scale notes.
+    // pair-attach joins carry no hint (see minhashStarPairs): the pair
+    // set is usually far smaller than the gram table, so AQE's
+    // broadcast upgrade applies.
     // intersection via fused merge scan over the (sorted distinct)
     // hash arrays — array_intersect builds a per-row hash set, which
     // at millions of pairs × KB-sized arrays is allocation-bound
@@ -699,9 +538,9 @@ object Dedup {
         graft.plans.SortedIntersectCount(
           graft.plans.HashExpressions.exprOf(a),
           graft.plans.HashExpressions.exprOf(b)))
-    attachJoin(attachJoin(pairs.select(col("id_a"), col("id_b")),
-        grams.select(col("id").as("id_a"), col("grams").as("grams_a")), "id_a"),
-        grams.select(col("id").as("id_b"), col("grams").as("grams_b")), "id_b")
+    pairs.select(col("id_a"), col("id_b"))
+      .join(grams.select(col("id").as("id_a"), col("grams").as("grams_a")), Seq("id_a"))
+      .join(grams.select(col("id").as("id_b"), col("grams").as("grams_b")), Seq("id_b"))
       .withColumn("inter", inter(col("grams_a"), col("grams_b")).cast("int"))
       .withColumn("uni", size(col("grams_a")) + size(col("grams_b")) - col("inter"))
       .select(col("id_a"), col("id_b"),
@@ -791,8 +630,6 @@ object Dedup {
           .select(col("id"), col("label"),
             least(col("label"), coalesce(col("nbr"), col("label"))).as("next")))
       changed = next.filter(col("next") < col("label")).count()
-      if (sys.props.contains("graft.cc.debug"))
-        println(s"[cc] round $i changed=$changed")
       labels = next.select(col("id"), col("next").as("label"))
       liveBlocks.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
       liveBlocks = nextBlocks

@@ -69,14 +69,7 @@ object Joins {
     *
     * For a deterministic payload make the right side unique per
     * (key, time) first (e.g. pre-aggregate with max_by) — same
-    * requirement DuckDB's ASOF has for a well-defined tie answer —
-    * OR pass `rightTieBreak`: a right-side column appended (ascending)
-    * to the window sort, so among right rows tied on (key, time) the
-    * backward directions attach the row with the GREATEST tie-break
-    * value and the forward directions the LEAST. That replaces a
-    * caller-side `GROUP BY key, time` + max_by pre-aggregation (one
-    * exchange + two hash aggregates over the build side) with a sort
-    * key the union's single exchange pays for anyway (guide §2.4).
+    * requirement DuckDB's ASOF has for a well-defined tie answer.
     *
     * `pruneBuild = false` skips the internal probe-key semi prune —
     * pass it when the caller already pruned the build side (e.g. below
@@ -97,26 +90,18 @@ object Joins {
       direction: String = ">=",
       leftOuter: Boolean = true,
       rightOuter: Boolean = false,
-      rightTieBreak: Option[Column] = None,
       pruneBuild: Boolean = true): DataFrame = {
     val leftCols = left.columns.toSeq
     val mType = org.apache.spark.sql.types.StructType(
       payload.map(p => right.schema(p)))
-    // the tie-break travels as its own sort column (type read off the
-    // right side's schema; left rows carry NULL, which groups all left
-    // rows together at a tied (key, time) without disturbing them)
-    val tbType = rightTieBreak.map(c =>
-      right.select(c.as("__tb")).schema.head.dataType)
-    val tbCols: Seq[Column] = tbType.toSeq.map(_ => col("__tb"))
-    val l0 = left
+    val l = left
       .withColumn("__k", leftKey)
       .withColumn("__t", leftTime.cast("timestamp"))
       .withColumn("__isl", lit(1))
       // null struct on left rows → skipped by last(ignoreNulls)
       .withColumn("__m", lit(null).cast(mType))
-    val l = tbType.fold(l0)(t => l0.withColumn("__tb", lit(null).cast(t)))
       .select(Seq(col("__k"), col("__t"), col("__isl"), col("__m")) ++
-        tbCols ++ leftCols.map(col): _*)
+        leftCols.map(col): _*)
     // Prune the build side to keys the probe actually holds BEFORE
     // anything sorts: right rows whose key never appears on the left
     // can't match, yet they'd flow through the union's partition sort
@@ -130,7 +115,7 @@ object Joins {
     // exactly the case it helps most.
     val probeKeys = l.select(col("__k")).distinct()
     val r0 = right.withColumn("__k", rightKey)
-    val r1 = (
+    val r = (
       // right-outer keeps unmatched right rows, so nothing may prune;
       // pruneBuild=false means the caller already pruned the build side
       if (rightOuter || !pruneBuild) r0
@@ -140,9 +125,7 @@ object Joins {
       // non-null struct on EVERY right row (fields may be null) → the
       // matched row is attached wholesale, never mixed across rows
       .withColumn("__m", struct(payload.map(col): _*))
-    val r = rightTieBreak.fold(r1)(c => r1.withColumn("__tb", c))
       .select(Seq(col("__k"), col("__t"), col("__isl"), col("__m")) ++
-        tbCols ++
         leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
     val u = l.unionByName(r)
     // All four reference inequalities (bind_joinref): `>=`/`>` match
@@ -156,11 +139,7 @@ object Joins {
     val tagOrder =
       if (backward == tieMatches) col("__isl").asc // right(0) first
       else col("__isl").desc                       // left(1) first
-    // tie-break last in the sort: orders right rows tied on (key, time)
-    // so last()/first() picks a deterministic one; left rows are all
-    // NULL there (nulls sort first under asc, one contiguous group)
-    val sortCols = Seq(col("__t"), tagOrder) ++ tbType.toSeq.map(_ => col("__tb").asc)
-    val w0 = Window.partitionBy(col("__k")).orderBy(sortCols: _*)
+    val w0 = Window.partitionBy(col("__k")).orderBy(col("__t"), tagOrder)
     val matched =
       if (backward)
         last(col("__m"), ignoreNulls = true)

@@ -415,21 +415,7 @@ object Imdb {
     }
   }
 
-  /** Fail-soft: a failure while parsing the vendored header must not
-    * poison this object's static init — an object-initializer throw
-    * becomes a permanent NoClassDefFoundError for every later toucher
-    * of SparkEntry.allDefs, cascading one bad init into unrelated
-    * suites. Degrade to an empty def list with a logged error instead.
-    */
-  val defs: Seq[QDef] =
-    try defsImpl
-    catch {
-      case e: Throwable =>
-        System.err.println(s"[graft] Imdb defs init failed (degrading to empty): $e")
-        Seq.empty
-    }
-
-  private def defsImpl: Seq[QDef] = Seq(
+  val defs: Seq[QDef] = Seq(
     QDef.sql("imdb_job_sweep", oracleSqlText) { (s, dir) =>
       Catalog.registerAll(s, dir)
       // register the views once, then run each query's fingerprint

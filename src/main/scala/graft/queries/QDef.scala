@@ -5,19 +5,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One coverage item: a Spark implementation + (when SQL-expressible)
   * the DuckDB oracle SQL that must hash-match it. Column aliases are
   * kept identical on both sides by construction.
+  *
+  * The oracle text is built on first use of `oracle`, never when the
+  * registry is assembled: some texts are read from files that may be
+  * absent, and that failure belongs to the entry that needs them, not
+  * to every caller that lists or runs the others.
   */
-final case class QDef(
-    name: String,
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String]) {
+final class QDef(
+    val name: String,
+    val fn: (SparkSession, String) => DataFrame,
+    oracleText: => Option[String]) {
+  lazy val oracle: Option[String] = oracleText
   def run(spark: SparkSession, sfDir: String): DataFrame = fn(spark, sfDir)
 }
 
 object QDef {
-  def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QDef =
-    QDef(name, fn, Some(oracle))
+  def sql(name: String, oracle: => String)(fn: (SparkSession, String) => DataFrame): QDef =
+    new QDef(name, fn, Some(oracle))
   def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QDef =
-    QDef(name, fn, None)
+    new QDef(name, fn, None)
 }
 
 /** The reference engine's names for Spark schema types — what

@@ -190,70 +190,35 @@ object RelationalB {
       // pre-aggregation — the semi join commutes with the groupBy
       // because the join key IS a grouping key, so the aggregate (and
       // its exchange) processes only custkeys the events side can
-      // match instead of every order. asofJoin's internal probe-key
-      // prune then finds nothing left to drop. AQE broadcasts the
-      // (narrow, distinct) key set, so the orders side is never
-      // exchanged for the prune itself. -Dgraft.q31.prune=0 restores
-      // the r14 shape (A/B probes).
-      val o0 = t(s, dir, "orders")
-      val pruned = !sys.props.get("graft.q31.prune").contains("0")
-      val o =
-        if (!pruned) o0
-        else o0.join(
-          e.select(col("user_id").as("o_custkey")).distinct(),
-          Seq("o_custkey"), "left_semi")
-      // the internal probe-key prune duplicates the external one above
-      // (same key set, idempotent semi join): skip it whenever the
-      // external prune ran — removes one distinct aggregate + broadcast
-      // + semi join from the plan at every scale. -Dgraft.q31.innerPrune=1
-      // restores the double-prune r15-early shape (A/B probes).
-      val innerPrune =
-        !pruned || sys.props.get("graft.q31.innerPrune").contains("1")
-      if (!sys.props.get("graft.q31.rawasof").contains("1")) {
-        // default: pre-aggregate orders to one row per (custkey,
-        // orderdate) for a deterministic payload, BELOW the window
-        val ou = o
-          .groupBy(col("o_custkey"), col("o_orderdate"))
-          .agg(max(col("o_orderkey")).as("last_ok"),
-            max_by(col("o_totalprice"), col("o_orderkey")).as("last_tp"))
-        Joins.asofJoin(e, ou,
-            col("user_id"), col("o_custkey"), col("ts"), col("o_orderdate"),
-            payload = Seq("o_orderdate", "last_ok", "last_tp"),
-            pruneBuild = innerPrune)
-          .select(col("event_id"), col("user_id"),
-            to_date(col("o_orderdate")).as("last_od"), col("last_ok"), col("last_tp"))
-      } else {
-        // MEASURED REJECTION, kept for the receipt (-Dgraft.q31.rawasof=1):
-        // encode the tie-break (max o_orderkey ⇒ its o_totalprice, = the
-        // MAX/ARG_MAX pre-agg) in the window's sort order and feed raw
-        // pruned orders straight into the asof union. Removes the
-        // pre-agg exchange + both hash aggregates — but at sf10 the
-        // pre-agg reduces only 1 506 000 → 1 502 900 rows (events are
-        // 10 M of the 11.5 M-row union sort), so the saved exchange is
-        // ~13 % of the sorted bytes while the tie-break adds a 4th sort
-        // column to EVERY union row: AbProf quiet-round mins 2.68→2.96 s
-        // (two 8-round sf10 sessions, consistent) — a ~10 % regression
-        // at scale. The sf0.1 interleaved min 1.13→0.78 s is one fewer
-        // AQE stage, i.e. local-mode scheduling, not the 100 TB story.
-        // Output proven multiset-identical at sf0.001/0.01/0.1/10
-        // (R15bEquiv; 3 100 tie groups exercised at sf10).
-        Joins.asofJoin(e, o,
-            col("user_id"), col("o_custkey"), col("ts"), col("o_orderdate"),
-            payload = Seq("o_orderdate", "o_orderkey", "o_totalprice"),
-            rightTieBreak = Some(col("o_orderkey")),
-            pruneBuild = innerPrune)
-          .select(col("event_id"), col("user_id"),
-            to_date(col("o_orderdate")).as("last_od"),
-            col("o_orderkey").as("last_ok"), col("o_totalprice").as("last_tp"))
-      }
+      // match instead of every order. AQE broadcasts the (narrow,
+      // distinct) key set, so the orders side is never exchanged for
+      // the prune itself, and asofJoin's own probe-key prune is skipped
+      // (pruneBuild = false) because it would find nothing left to drop.
+      val o = t(s, dir, "orders").join(
+        e.select(col("user_id").as("o_custkey")).distinct(),
+        Seq("o_custkey"), "left_semi")
+      // pre-aggregate orders to one row per (custkey, orderdate) for a
+      // deterministic payload, BELOW the window. Encoding the tie-break
+      // in the asof sort instead measured ~10 % slower at sf10
+      // (OPTIMIZATION_r15.md §2b); RewriteEquivSpec checks this shape
+      // against a plain join + row_number reference.
+      val ou = o
+        .groupBy(col("o_custkey"), col("o_orderdate"))
+        .agg(max(col("o_orderkey")).as("last_ok"),
+          max_by(col("o_totalprice"), col("o_orderkey")).as("last_tp"))
+      Joins.asofJoin(e, ou,
+          col("user_id"), col("o_custkey"), col("ts"), col("o_orderdate"),
+          payload = Seq("o_orderdate", "last_ok", "last_tp"),
+          pruneBuild = false)
+        .select(col("event_id"), col("user_id"),
+          to_date(col("o_orderdate")).as("last_od"), col("last_ok"), col("last_tp"))
       // no trailing display sort (r14): corpus-sized output, the
       // oracle gate sorts rows itself — dropped from BOTH texts
       // (r10/r13 discipline; A/B sf0.1 and sf10 before landing)
     },
 
     // R32: range (band) self-join on events: pairs within 1 hour.
-    // Scalable shape: equi-join on (user, hour-bucket) with the left
-    // side exploded to its two candidate buckets — never an O(n²)
+    // Scalable shape: one range-frame window per user — never an O(n²)
     // per-key nested loop.
     QDef.sql("q32_range_join",
       """SELECT e1.user_id, COUNT(*) AS n_pairs
@@ -262,51 +227,29 @@ object RelationalB {
         | AND e2.ts > e1.ts AND e2.ts <= e1.ts + INTERVAL 1 HOUR
         |GROUP BY e1.user_id""".stripMargin) { (s, dir) =>
       val ev = t(s, dir, "events")
-      if (sys.props.get("graft.q32.window").contains("0")) {
-        // r14 shape (A/B restore): banded equi-join — two scans, the
-        // left side exploded to its two candidate hour buckets
-        val e1 = ev.select(col("user_id"), col("ts").as("ts1"),
-            floor(col("ts").cast("long") / 3600).as("b1"))
-          .withColumn("b", explode(array(col("b1"), col("b1") + 1)))
-        val e2 = ev.select(col("user_id").as("u2"), col("ts").as("ts2"),
-          floor(col("ts").cast("long") / 3600).as("b2"))
-        e1.join(e2,
-            col("u2") === col("user_id") && col("b2") === col("b") &&
-              col("ts2") > col("ts1") &&
-              col("ts2") <= col("ts1") + expr("INTERVAL 1 HOUR"))
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_pairs"))
-          .orderBy(col("user_id"))
-      } else {
-        // r15 (guide §2.4): the per-user pair count is a RANGE-frame
-        // window — for each event, count events of the same user in
-        // (ts, ts+1h], then sum per user. ONE scan and ONE exchange
-        // replace the banded self-join's two scans, 2×-exploded left
-        // side, two join exchanges and per-partition hash builds; the
-        // per-user sum rides the window's hashpartitioning(user_id)
-        // with no further exchange. Exact semantics: at µs resolution
-        // `ts2 > ts1` = lower bound +1 µs, `<= ts1 + 1h` = +3.6e9 µs;
-        // the n_pairs > 0 filter reproduces the inner join's "user
-        // appears iff it has a pair", the null filters its null-key
-        // semantics. Proven multiset-identical to the join shape at
-        // sf0.01/0.1/10 (R15bEquiv q32 mode) and oracle-gated.
-        // -Dgraft.q32.window=0 restores the join shape (A/B probes).
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("us"))
-          .rangeBetween(1L, 3600L * 1000000)
-        val out = ev.filter(col("user_id").isNotNull && col("ts").isNotNull)
-          .select(col("user_id"), unix_micros(col("ts")).as("us"))
-          .withColumn("c", count(lit(1)).over(w))
-          .groupBy(col("user_id"))
-          .agg(sum(col("c")).as("n_pairs"))
-          .filter(col("n_pairs") > 0)
-        // no trailing display sort (dropped from BOTH texts — the
-        // oracle gate sorts rows itself; the output is one row per
-        // user, corpus-scaled). -Dgraft.q32.sort=1 restores (A/B).
-        if (sys.props.get("graft.q32.sort").contains("1"))
-          out.orderBy(col("user_id"))
-        else out
-      }
+      // r15 (guide §2.4): the per-user pair count is a RANGE-frame
+      // window — for each event, count events of the same user in
+      // (ts, ts+1h], then sum per user. ONE scan and ONE exchange
+      // replace the banded self-join's two scans, 2×-exploded left
+      // side, two join exchanges and per-partition hash builds; the
+      // per-user sum rides the window's hashpartitioning(user_id)
+      // with no further exchange. Exact semantics: at µs resolution
+      // `ts2 > ts1` = lower bound +1 µs, `<= ts1 + 1h` = +3.6e9 µs;
+      // the n_pairs > 0 filter reproduces the inner join's "user
+      // appears iff it has a pair", the null filters its null-key
+      // semantics. RewriteEquivSpec checks it against the inequality
+      // self-join; the banded join measured ~2× slower at sf10
+      // (OPTIMIZATION_r15.md §2d). No trailing display sort: the
+      // oracle gate sorts rows itself and the output is corpus-scaled.
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("us"))
+        .rangeBetween(1L, 3600L * 1000000)
+      ev.filter(col("user_id").isNotNull && col("ts").isNotNull)
+        .select(col("user_id"), unix_micros(col("ts")).as("us"))
+        .withColumn("c", count(lit(1)).over(w))
+        .groupBy(col("user_id"))
+        .agg(sum(col("c")).as("n_pairs"))
+        .filter(col("n_pairs") > 0)
     },
 
     // R33: cross join (bounded dims only — a guarded operator at scale).

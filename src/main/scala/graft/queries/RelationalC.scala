@@ -157,14 +157,11 @@ object RelationalC {
           | CAST(x % 2 = 0 AS BOOLEAN) AS even
           |FROM generate_series(1, 20) t(x)
           |ORDER BY x""".stripMargin
-      QDef(
-        "q47_generate_series",
-        (s, _) => s.sql(
-          """SELECT CAST(x AS BIGINT) AS x, CAST(x*x AS BIGINT) AS x2,
-            | CAST(x % 2 = 0 AS BOOLEAN) AS even
-            |FROM (SELECT explode(sequence(1, 20)) AS x)
-            |ORDER BY x""".stripMargin),
-        Some(q))
+      QDef.sql("q47_generate_series", q)((s, _) => s.sql(
+        """SELECT CAST(x AS BIGINT) AS x, CAST(x*x AS BIGINT) AS x2,
+          | CAST(x % 2 = 0 AS BOOLEAN) AS even
+          |FROM (SELECT explode(sequence(1, 20)) AS x)
+          |ORDER BY x""".stripMargin))
     },
 
     // F11: null-handling scalar functions.

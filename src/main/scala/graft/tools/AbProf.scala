@@ -3,18 +3,17 @@ package graft.tools
 /** r14: same-JVM A/B probe. The box's absolute speed swings ~1.5×
   * within a session (r13 lesson — and r14 measured d04 15→39 s on
   * IDENTICAL code across JVMs an hour apart), so cross-JVM pairs
-  * cannot resolve sub-30% effects. This tool alternates a boolean
-  * system property OFF/ON between iterations of the same entry inside
+  * cannot resolve sub-30% effects. This tool alternates a session SQL
+  * conf between two values across iterations of the same entry inside
   * ONE JVM — page cache, JIT state and heap shape are shared by both
   * sides, and the interleaving cancels slow drift.
   *
-  * Run: tools/run_main.sh graft.tools.AbProf <sfDir> <entry> <prop>[=offVal:onVal][,<prop>…] [rounds]
-  * e.g. ... AbProf /tmp/graftdata/sf10 d07_dedup_star_clusters graft.lsh.sharedBucketEx 3
-  *      ... AbProf /root/testdata/sf0.1 tpch_q18 \
+  * Run: tools/run_main.sh graft.tools.AbProf <sfDir> <entry> <conf>[=offVal:onVal][,<conf>…] [rounds]
+  * e.g. ... AbProf <sf0.1 dir> tpch_q18 \
   *            spark.sql.adaptive.coalescePartitions.minPartitionSize=1048576:262144 3
-  * A `spark.`-prefixed key toggles the SESSION SQL conf (A=offVal,
-  * B=onVal); anything else toggles a system property ("0"/"1").
-  * Several comma-separated specs toggle TOGETHER (one combined A/B).
+  * Each `spark.*` key is set to offVal on side A and onVal on side B
+  * (default "0"/"1"). Several comma-separated specs toggle
+  * TOGETHER (one combined A/B).
   */
 object AbProf {
   def main(args: Array[String]): Unit = {
@@ -30,12 +29,13 @@ object AbProf {
       case Array(k, vs) => val Array(a, b) = vs.split(':'); (k, a, b)
       case Array(k)     => (k, "0", "1")
     })
+    specs.foreach { case (k, _, _) =>
+      require(k.startsWith("spark."), s"not a session conf: $k") }
     val prop = specs.map(_._1).mkString(",")
     val fn = graft.SparkEntry.queries(name)
     def once(side: Boolean): Double = {
       specs.foreach { case (k, offVal, onVal) =>
-        val v = if (side) onVal else offVal
-        if (k.startsWith("spark.")) s.conf.set(k, v) else sys.props(k) = v
+        s.conf.set(k, if (side) onVal else offVal)
       }
       val t0 = System.nanoTime()
       fn(s, dir).write.format("noop").mode("overwrite").save()
@@ -52,8 +52,6 @@ object AbProf {
       b += once(true)
       println(f"[ab] round $i  A(off)=${a.last}%.3f  B(on)=${b.last}%.3f")
     }
-    specs.foreach { case (k, _, _) =>
-      if (!k.startsWith("spark.")) sys.props.remove(k) }
     def stats(x: Seq[Double]) = f"min=${x.min}%.3f median=${x.sorted.apply(x.size / 2)}%.3f"
     println(s"[ab] $name $prop  A(off): ${stats(a.toSeq)}  B(on): ${stats(b.toSeq)}")
     s.stop()

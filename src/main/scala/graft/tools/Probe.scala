@@ -117,35 +117,6 @@ object Probe {
           time(s"copart   r$i")(noop(q(false)))
         }
         spark.stop(); return
-      case "d04join" :: _ =>
-        // A/B the bucket-join strategy for lshJaccardPairs' pair stage
-        import graft.llm.Dedup
-        val docs = graft.sources.Catalog.table(spark, sfDir, "documents")
-        Seq("merge", "shuffle_hash").foreach { strat =>
-          sys.props.put("graft.lsh.joinHint", strat)
-          (1 to 2).foreach { i =>
-            val n = time(s"$strat r$i")(
-              Dedup.lshJaccardPairs(docs, "doc_id", "text",
-                numHashes = 64, bands = 16, shingleSize = 5,
-                estThreshold = 0.35, gramN = 3).count())
-            println(s"  pairs=$n")
-          }
-        }
-        spark.stop(); return
-      case "d02join" :: _ =>
-        import graft.llm.Dedup
-        val docs = graft.sources.Catalog.table(spark, sfDir, "documents")
-        Seq("merge", "shuffle_hash").foreach { strat =>
-          sys.props.put("graft.lsh.joinHint", strat)
-          (1 to 2).foreach { i =>
-            val n = time(s"$strat r$i")(
-              Dedup.minhashPairs(docs, "doc_id", "text",
-                numHashes = 64, bands = 16, shingleSize = 5,
-                threshold = 0.35).count())
-            println(s"  pairs=$n")
-          }
-        }
-        spark.stop(); return
       case "fncheck" :: file :: _ =>
         // coverage sweep: which reference core-function names resolve?
         // (GraftSession already injects SqlRegistry via extensions.)

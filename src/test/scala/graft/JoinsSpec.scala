@@ -68,49 +68,6 @@ class JoinsSpec extends AnyFunSuite {
       "matched row's NULL p1 must be preserved, not backfilled from an older row")
   }
 
-  test("asofJoin rightTieBreak = pre-agg max_by: greatest wins backward, least forward") {
-    // two right rows tied on (key, time): rightTieBreak must attach the
-    // max-tiebreak row for backward (>=) — identical to the caller-side
-    // GROUP BY (k, t) + max/max_by pre-aggregation it replaces — and
-    // the min-tiebreak row for forward (<=).
-    val left = Seq(
-      (1L, 10L, ts("2024-01-01 12:00:00")),
-      (2L, 20L, ts("2024-01-01 08:00:00"))
-    ).toDF("eid", "k", "t")
-    val right = Seq(
-      (10L, ts("2024-01-01 10:00:00"), 7L, "lo"),
-      (10L, ts("2024-01-01 10:00:00"), 9L, "hi"), // tied time, bigger key
-      (10L, ts("2024-01-01 10:00:00"), 8L, "mid"),
-      (20L, ts("2024-01-01 09:00:00"), 3L, "fwd_lo"),
-      (20L, ts("2024-01-01 09:00:00"), 5L, "fwd_hi")
-    ).toDF("k2", "rt", "ok", "pay")
-
-    val back = Joins.asofJoin(left, right,
-        col("k"), col("k2"), col("t"), col("rt"),
-        payload = Seq("ok", "pay"), rightTieBreak = Some(col("ok")))
-      .filter(col("eid") === 1).select("ok", "pay")
-      .as[(Long, String)].head()
-    assert(back == ((9L, "hi")),
-      "backward tie must attach the greatest tie-break row wholesale")
-
-    // equals the pre-agg formulation it replaces
-    val preAgg = right.groupBy(col("k2"), col("rt"))
-      .agg(max(col("ok")).as("ok"), max_by(col("pay"), col("ok")).as("pay"))
-    val viaAgg = Joins.asofJoin(left, preAgg,
-        col("k"), col("k2"), col("t"), col("rt"), payload = Seq("ok", "pay"))
-      .filter(col("eid") === 1).select("ok", "pay").as[(Long, String)].head()
-    assert(back == viaAgg)
-
-    val fwd = Joins.asofJoin(left, right,
-        col("k"), col("k2"), col("t"), col("rt"),
-        payload = Seq("ok", "pay"), direction = "<=",
-        rightTieBreak = Some(col("ok")))
-      .filter(col("eid") === 2).select("ok", "pay")
-      .as[(Long, String)].head()
-    assert(fwd == ((3L, "fwd_lo")),
-      "forward tie must attach the least tie-break row")
-  }
-
   test("asofJoin stays flat on a skewed hot key (no per-key pair space)") {
     // one hot key: 5k left × 2k right would be 10M pairs in the old
     // join+max plan; the union+window plan sorts 7k rows. If the pair

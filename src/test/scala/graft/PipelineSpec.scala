@@ -72,28 +72,6 @@ class PipelineSpec extends AnyFunSuite {
       pairs.toString)
   }
 
-  test("shared bucket exchange (r14) is plan-shape only: identical pairs with the knob off") {
-    // r14 routed the star/simhash exploded relations through one
-    // explicit bucket-key repartition (Dedup.sharedBucketEx) so the
-    // text kernels run once instead of once per consumer. The knob
-    // restores the recompute shape; outputs must be identical.
-    def simPairs() = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      .select("id_a", "id_b", "hamming")
-      .as[(Long, Long, Long)].collect().toSet
-    def starPairs() = Dedup.minhashStarVerifiedPairs(docs, "doc_id", "text",
-        numHashes = 64, bands = 16, shingleSize = 5,
-        estThreshold = 0.35, gramN = 3, minJaccard = 0.3)
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    val (simOn, starOn) = (simPairs(), starPairs())
-    sys.props("graft.lsh.sharedBucketEx") = "0"
-    try {
-      assert(simPairs() == simOn, "simhashPairs changed under the knob")
-      assert(starPairs() == starOn, "minhashStarVerifiedPairs changed under the knob")
-    } finally sys.props.remove("graft.lsh.sharedBucketEx")
-    assert(simOn.nonEmpty && starOn.nonEmpty)
-  }
-
   test("ngram jaccard is 1.0 for identical docs") {
     val j = Dedup.ngramJaccardPairs(
         docs.select(col("doc_id"), col("text"), lit("x").as("blk"))

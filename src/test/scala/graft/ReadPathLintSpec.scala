@@ -10,25 +10,42 @@ import org.scalatest.funsuite.AnyFunSuite
   * keeps DataFrame construction free of Spark jobs. A direct
   * `read.parquet(` anywhere else in the engine sources (the ad-hoc
   * `tools/` excepted) would bring the schema-inference job back.
+  *
+  * Plans are chosen in code, never by a JVM-global system property:
+  * such a switch makes every session in the JVM plan differently.
   */
 class ReadPathLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
   private val allowed = Set(root.resolve("sources/Catalog.scala"))
   private val directRead = """read\s*\.\s*parquet\s*\(""".r
+  private val graftProperty =
+    """sys\.props|System\s*\.\s*(get|set)Property\s*\(\s*"graft\.""".r
+
+  private def scalaSources: Seq[Path] = {
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val all = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq
+    assert(all.size > 100, s"only ${all.size} sources found under $root")
+    all
+  }
+
+  private def offenders(sources: Seq[Path], pattern: scala.util.matching.Regex) =
+    for {
+      p <- sources
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if pattern.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}: ${line.trim}"
 
   test("read.parquet( appears only in sources/Catalog.scala and tools/") {
-    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    val sources = Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala"))
+    val sources = scalaSources
       .filterNot(p => allowed(p) || p.startsWith(root.resolve("tools")))
-      .toSeq
-    assert(sources.size > 100, s"only ${sources.size} sources found under $root")
-    val offenders = for {
-      p: Path <- sources
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if directRead.findFirstIn(line).isDefined
-    } yield s"$p:${i + 1}: ${line.trim}"
-    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    val found = offenders(sources, directRead)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("no JVM system property chooses a plan: engine sources, tools/ included") {
+    val found = offenders(scalaSources, graftProperty)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
