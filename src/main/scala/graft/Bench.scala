@@ -71,19 +71,10 @@ object Bench {
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       var ok = true
-      // BENCH_COUNT=1: time count() instead of the noop sink — an
-      // A/B probe separating COMPUTE from RESULT EMISSION (count lets
-      // Catalyst prune unreferenced output columns, so the delta vs
-      // the noop run is the cost of materializing the result rows).
-      // Used for the d02/d04/d07 pair-emission floor measurement.
-      val countOnly = sys.env.get("BENCH_COUNT").contains("1")
       def once(): Double = {
         val t0 = System.nanoTime()
-        try {
-          val df = fn(spark, sfDir)
-          if (countOnly) df.count()
-          else df.write.format("noop").mode("overwrite").save()
-        } catch { case e: Throwable =>
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e"); ok = false }
         (System.nanoTime() - t0) / 1e9
       }

@@ -28,13 +28,8 @@ object GraftSession {
       // single-threaded driver hash build beats the distributed
       // sort-merge join only on a real cluster where the exchange
       // crosses a network, not on local[32]'s in-memory shuffle.
-      // Split scans finer than the 128 MB default: at bench scale the
-      // tables are a few MB per file and the default packs a whole
-      // table into 1–2 partitions — single-threaded scans on a 32-core
-      // box. 16 MB keeps every core busy; a 100 TB deployment would
-      // override back to 128m+ (fewer, bigger tasks).
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
+      // Scan split sizing is not fixed here: it derives from the input
+      // size, per directory, in adaptScanParallelism.
       // Prefer shuffled HASH join over sort-merge when a side's
       // per-partition build fits memory: measured at sf10, q3 4.4→2.5 s,
       // q5 10→5.0 s, q10 3.6→2.7 s (the sort of 60 M probe-side rows is
@@ -105,26 +100,6 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
 
-  def get(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** The documented PERF entry point (r15, verdict): a tuned session
-    * with the scale-adaptive scan/coalesce sizing applied for `dir` —
-    * what Bench and the profilers use. Sessions built via
-    * [[get]]/[[builder]] keep the builder's static split sizing (16m
-    * maxPartitionBytes, 1m openCostInBytes) whatever the input size
-    * (correctness does not depend on it; Verify deliberately stays
-    * un-tuned).
-    */
-  def getTuned(dir: String): SparkSession = {
-    val s = get()
-    adaptScanParallelism(s, dir)
-    s
-  }
-
   /** Scale-adaptive scan split sizing (r14, guide §2/§6): derive
     * spark.sql.files.maxPartitionBytes from the INPUT size instead of
     * a constant tuned for one scale. A fixed 16m split packs a whole
@@ -136,9 +111,9 @@ object GraftSession {
     * d04 2.86→2.31 s measured), sf10 → ~17m (the previously tuned
     * value — receipts stay comparable), sf100+ → 128m (Spark's
     * default: fewer, bigger tasks, §2.2). Runtime SQL conf, so the
-    * perf entry points (Bench/profilers) set it per input dir;
-    * Verify keeps the session default — correctness runs don't
-    * depend on split size.
+    * perf entry points (Bench, OptProf, the benchmark harness) set it
+    * per input dir; sessions that skip it (Verify, the specs) keep
+    * Spark's defaults — correctness runs don't depend on split size.
     */
   def adaptScanParallelism(s: SparkSession, dir: String): Unit = {
     def sizeOf(f: java.io.File): Long =
@@ -157,7 +132,7 @@ object GraftSession {
     // BYTES, but the dedup/text operators' per-byte CPU is ~100× a
     // relational projection's — at sf0.1 the whole corpus compresses
     // under 1 MB, so AQE coalesced the post-exchange shingle/minhash
-    // stages to ONE task (ScanProf: d04's kernel stage = 1 task,
+    // stages to ONE task (r14 stage profile: d04's kernel stage = 1 task,
     // 1.2 s CPU, 31 cores idle). split/8 keeps the floor ≥ 256k
     // (the measured sweet spot — 64k won d02/d04 but regressed
     // d07/p12), and the 4m CAP (r15, advice) stops the derived floor

@@ -41,7 +41,7 @@ object Dedup {
     * consumer. The exchanged rows are the (id, sig) payload: linear in
     * docs, exchanged once, and strictly cheaper than the 2 kernel
     * passes it replaces (kernel CPU is ~100× per byte of a relational
-    * projection — r14 ScanProf).
+    * projection — OPTIMIZATION_r14.md).
     *
     * Exchange reuse requires all consumers' below-exchange subtrees to
     * canonicalize identically; where a consumer needs fewer columns,
@@ -50,7 +50,7 @@ object Dedup {
     * r14 d03/d04 plans).
     *
     * Used only where the exchanged payload is the narrow signature
-    * (minhashPairs, minhashStarPairs). The sites whose payload carries
+    * (minhashPairs). The sites whose payload carries
     * the KB gram arrays (lshJaccardPairs, minhashStarVerifiedPairs)
     * recompute the kernels instead: the ~2 GB sf10 exchange measured
     * worse (OPTIMIZATION_r15.md §1).
@@ -342,58 +342,10 @@ object Dedup {
     * [[minhashPairs]] when the product is the PAIR LIST itself (pair
     * similarity analytics); use this + [[connectedComponents]] when
     * the product is cluster membership.
-    */
-  def minhashStarPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16,
-      shingleSize: Int = 5, threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val reps = representatives(df, idCol, textCol)
-    // payload exchange above the kernels: banded + both attach probes
-    // share ONE kernel pass (see sharedPayloadEx)
-    val sig = sharedPayloadEx(reps
-      .select(col("id"),
-        TextOps.charShingleHashes(col("__text"), shingleSize).as("hs"))
-      .select(col("id"), TextOps.minhashFromHashes(col("hs"), numHashes).as("sig")))
-    // one bk exchange shared by bucketRep and the edge join probe —
-    // without it the charShingle/minhash kernels run once per consumer
-    // (guide §2.4; see minhashPairs)
-    val banded = sharedBucketEx(sig.select(
-      col("id"), explode(TextOps.lshBands(col("sig"), bands, r)).as("bk")),
-      col("bk"))
-    // star edges are linear in bucket size, so NO stop-band cap here —
-    // a >4096-member boilerplate bucket is exactly the cluster this
-    // variant exists to collapse, and capping it would silently emit
-    // zero edges for the biggest clusters (the all-pairs variant caps
-    // because ITS cost is quadratic; this one's isn't)
-    val bucketRep = banded.groupBy(col("bk"))
-      .agg(min(col("id")).as("rep"))
-      .select(col("bk"), col("rep"))
-    val pairs = banded.join(bucketRep, Seq("bk"))
-      .filter(col("rep") < col("id"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-      .distinct()
-    def agree(a: Column, b: Column): Column =
-      graft.plans.HashExpressions.columnOf(
-        graft.plans.ArrayAgreeCount(
-          graft.plans.HashExpressions.exprOf(a),
-          graft.plans.HashExpressions.exprOf(b)))
-    // pair-attach joins carry no hint: near-dup edges ≪ docs, so AQE
-    // broadcasts the pair side and the payload is never exchanged
-    // (a forced shuffle_hash measured slower — OPTIMIZATION_r14.md §4)
-    pairs
-      .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (agree(col("sig_a"), col("sig_b")).cast("double") / numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
-
-  /** Star-edge candidates with the est-filter AND the exact gram
-    * verify fused into ONE pair of payload-attach joins — the
-    * cluster-dedup endgame ([[minhashStarPairs]] → [[jaccardVerify]]
-    * as separate passes recomputes the reps/shingle prefix twice more
+    *
+    * The est-filter AND the exact gram verify run fused into ONE pair
+    * of payload-attach joins (a star-pair pass followed by
+    * [[jaccardVerify]] recomputes the reps/shingle prefix twice more
     * and re-joins the pairs a second time; fused at sf10 this was the
     * remaining prefix cost of the d07 pipeline).
     *
@@ -433,6 +385,11 @@ object Dedup {
     val banded = sharedBucketEx(payload.select(
       col("id"), explode(TextOps.lshBands(col("sig"), bands, r)).as("bk")),
       col("bk"))
+    // star edges are linear in bucket size, so NO stop-band cap here —
+    // a >4096-member boilerplate bucket is exactly the cluster this
+    // variant exists to collapse, and capping it would silently emit
+    // zero edges for the biggest clusters (the all-pairs variant caps
+    // because ITS cost is quadratic; this one's isn't)
     val bucketRep = banded.groupBy(col("bk"))
       .agg(min(col("id")).as("rep"))
       .select(col("bk"), col("rep"))
@@ -450,7 +407,9 @@ object Dedup {
         graft.plans.SortedIntersectCount(
           graft.plans.HashExpressions.exprOf(a),
           graft.plans.HashExpressions.exprOf(b)))
-    // unhinted pair-attach joins, as in minhashStarPairs
+    // pair-attach joins carry no hint: near-dup edges ≪ docs, so AQE
+    // broadcasts the pair side and the payload is never exchanged
+    // (a forced shuffle_hash measured slower — OPTIMIZATION_r14.md §4)
     pairs
       .join(payload.select(col("id").as("id_a"), col("sig").as("sig_a"),
         col("grams").as("grams_a")), Seq("id_a"))
@@ -527,7 +486,7 @@ object Dedup {
     val grams = df.select(
       col(idCol).as("id"),
       TextOps.wordNgramHashes(col(textCol), n).as("grams"))
-    // pair-attach joins carry no hint (see minhashStarPairs): the pair
+    // pair-attach joins carry no hint (OPTIMIZATION_r14.md §4): the pair
     // set is usually far smaller than the gram table, so AQE's
     // broadcast upgrade applies.
     // intersection via fused merge scan over the (sorted distinct)

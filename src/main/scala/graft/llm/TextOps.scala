@@ -13,12 +13,6 @@ object TextOps {
   def wordTokens(text: Column): Column =
     filter(split(lower(text), "\\s+"), t => length(t) > 0)
 
-  /** Character k-shingles (k-grams) of a string. */
-  def charShingles(text: Column, k: Int): Column =
-    transform(
-      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => text.substr(i, lit(k)))
-
   /** Word n-gram shingles from a token array. */
   def wordShingles(tokens: Column, n: Int): Column =
     transform(
@@ -35,15 +29,6 @@ object TextOps {
     val rnd = new scala.util.Random(seed)
     Seq.fill(n)(1L + math.abs(rnd.nextLong()) % (MersenneP - 1))
   }
-
-  /** Hash each distinct shingle ONCE (strings are expensive); the
-    * per-permutation values derive from that base hash with two long
-    * ops. Materialize this column first (`withColumn`), then feed it
-    * to [[minhashFromHashes]] — inlining it would make Catalyst
-    * re-evaluate the string hashing once per permutation.
-    */
-  def shingleHashes(shingles: Column): Column =
-    transform(array_distinct(shingles), sh => pmod(xxhash64(sh), lit(MersenneP)))
 
   /** Fused shingle+hash+dedup of byte k-grams straight from the text
     * column — one allocation-free rolling-hash pass per row (see
@@ -65,10 +50,6 @@ object TextOps {
     graft.plans.HashExpressions.columnOf(
       graft.plans.MinHashSignature(graft.plans.HashExpressions.exprOf(hashes), as, bs))
   }
-
-  /** Convenience composition (prefer the two-step form in pipelines). */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    minhashFromHashes(shingleHashes(shingles), numHashes)
 
   /** LSH band keys from a minhash signature: (bandIndex, bandHash)
     * structs. Docs sharing any band key are near-dup candidates.

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.broadcast
 
 /** GroupJoin — the fork's fused GROUP BY + JOIN operator
   * (/root/reference/src/execution/operator/join/physical_group_join.cpp,
@@ -11,27 +10,24 @@ import org.apache.spark.sql.functions.broadcast
   * Spark-first realization: aggregate FIRST, then join the (much
   * smaller) aggregate to the other side. This is the same cardinality
   * win the fused operator gets — the join sees |groups| rows instead of
-  * |fact| rows — and when the aggregate output is dim-sized, the join
-  * becomes a broadcast, eliminating the second shuffle entirely.
-  * Catalyst keeps partial (map-side) aggregation before the one
-  * shuffle on the group key.
+  * |fact| rows. Catalyst keeps partial (map-side) aggregation before
+  * the one shuffle on the group key.
   */
 object GroupJoin {
 
   /** groupBy(keys).agg(aggs) on `fact`, then join `other` on `cond`.
-    * If `broadcastAgg` the aggregated side is broadcast — right ONLY
-    * when groups are genuinely dim-sized (thousands). When the group
-    * count scales with the fact table (per-customer rollups: one group
-    * per customer), broadcast ships the whole aggregate to every task
-    * and the single-threaded build dominates; pass false and the join
-    * reuses the aggregation's own hash partitioning, paying just the
-    * other side's exchange (A/B at sf10: 1.6 s vs 2.0–7.2 s).
+    * The aggregate is never forced to broadcast: when the group count
+    * scales with the fact table (per-customer rollups: one group per
+    * customer, 1.5 M at sf10), broadcast ships the whole aggregate to
+    * every task and the single-threaded build dominates. The join
+    * reuses the aggregation's own hash partitioning instead, paying
+    * just the other side's exchange (A/B at sf10: 1.6–2.6 s vs
+    * 2.0–7.2 s broadcast, commit 12471b6); AQE still broadcasts a
+    * genuinely small aggregate from its runtime size.
     */
   def apply(fact: DataFrame, keys: Seq[Column], aggs: Seq[Column],
-            other: DataFrame, cond: Column, joinType: String = "inner",
-            broadcastAgg: Boolean = true): DataFrame = {
+            other: DataFrame, cond: Column, joinType: String = "inner"): DataFrame = {
     val grouped = fact.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-    val aggSide = if (broadcastAgg) broadcast(grouped) else grouped
-    other.join(aggSide, cond, joinType)
+    other.join(grouped, cond, joinType)
   }
 }

@@ -21,7 +21,7 @@ import graft.plans.HashExpressions
   * mapper, not one row per event), sorts the few-hundred-element
   * buffer at eval, and counts gaps > `gapMicros`. Same result, no
   * global sort, no window exec: measured 2.07 s → ~1.3 s on 15 M
-  * events / 100 k users (sf10, Probe st02agg — same A/B quoted in
+  * events / 100 k users (sf10, commit d7f6a27 — same A/B quoted in
   * queries/StreamingQ.scala).
   *
   * Scale posture: buffer size is the per-GROUP event count — the same

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{AGGREGATE, JOIN}
 
 /** GroupJoin fusion as a Catalyst optimizer rule — the Spark-first
   * re-expression of the reference fork's GROUPJOIN operator + planner
@@ -20,23 +21,20 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * the same cardinality win the fused C++ operator gets, and at scale
   * the aggregate output usually broadcasts, deleting a shuffle.
   *
-  * Correct when the dim join key is unique (each group matches ≤ 1 dim
-  * row). Spark has no unique-key constraints to prove that, so — like
-  * the reference, which force-selects its plan behind a setting — the
-  * rule is opt-in via `spark.graft.groupJoin.enabled`.
+  * Correct only when the dim join key is unique (each group matches ≤ 1
+  * dim row). Spark has no unique-key constraints, so the rule fires
+  * only where uniqueness is structural: the dim side (possibly under an
+  * attribute-only Project) is an Aggregate grouped by exactly the join
+  * key. `Distinct` and `dropDuplicates` are such Aggregates by the time
+  * this rule runs. Over a raw table or a UNION ALL the rule never fires.
   */
 object GroupJoinRule extends Rule[LogicalPlan] {
-  val ConfKey = "spark.graft.groupJoin.enabled"
-
-  private def enabled: Boolean =
-    conf.getConfString(ConfKey, "false").toBoolean
 
   private def isAgg(e: Expression): Boolean =
     e.exists(_.isInstanceOf[AggregateExpression])
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithPruning(_.containsAllPatterns(AGGREGATE, JOIN)) {
       // direct shape, and the common shape with a pruning Project in
       // between (column pruning runs before user-provided rules)
       case Aggregate(groupExprs, aggExprs,
@@ -52,7 +50,6 @@ object GroupJoinRule extends Rule[LogicalPlan] {
             fusable(groupExprs, aggExprs, left, right, a, b) =>
         fuse(groupExprs, aggExprs, aggHint, left, right, a, b, hint)
     }
-  }
 
   private def fuse(
       groupExprs: Seq[Expression], aggExprs: Seq[NamedExpression],
@@ -75,8 +72,19 @@ object GroupJoinRule extends Rule[LogicalPlan] {
       Join(pushed, right, Inner, Some(EqualTo(a, b)), hint))
   }
 
+  /** The dim side yields at most one row per `key`: an Aggregate
+    * grouped by exactly `key`, seen through attribute-only Projects.
+    */
+  private def uniqueOn(dim: LogicalPlan, key: AttributeReference): Boolean = dim match {
+    case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
+      uniqueOn(child, key)
+    case Aggregate(Seq(g: AttributeReference), _, _, _) => g.semanticEquals(key)
+    case _ => false
+  }
+
   /** All group keys and aggregate inputs from the left (fact) side,
-    * and the left join key is one of the group keys.
+    * the left join key is one of the group keys, and the right (dim)
+    * side is unique on its join key.
     */
   private def fusable(
       groupExprs: Seq[Expression], aggExprs: Seq[NamedExpression],
@@ -87,6 +95,7 @@ object GroupJoinRule extends Rule[LogicalPlan] {
       else if (left.outputSet.contains(b) && right.outputSet.contains(a)) Some(b)
       else None
     leftKey.exists { lk =>
+      uniqueOn(right, if (lk eq a) b else a) &&
       groupExprs.forall {
         case ar: AttributeReference => left.outputSet.contains(ar)
         case _ => false

@@ -398,23 +398,6 @@ object Imdb {
     s"WITH $viewsSql\nSELECT * FROM (\n${rows.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
   }
 
-  /** Diagnostic (tools/Probe imdbnulls): per-query, does it produce
-    * any non-NULL output value at this sf? A JOB query is a single
-    * row of MINs, so all-NULL means the join pipeline ran but no
-    * tuple survived the filters — the domain-alignment signal.
-    */
-  def nullReport(s: org.apache.spark.sql.SparkSession, dir: String): Seq[(String, Boolean)] = {
-    Catalog.registerAll(s, dir)
-    viewDefs.foreach { case (n, b) =>
-      GraftSql.sql(s, b).createOrReplaceTempView(n)
-    }
-    queries.map { case (qid, q) =>
-      val rows = GraftSql.sql(s, q).collect()
-      val nonNull = rows.exists(r => (0 until r.length).exists(i => !r.isNullAt(i)))
-      (qid, nonNull)
-    }
-  }
-
   val defs: Seq[QDef] = Seq(
     QDef.sql("imdb_job_sweep", oracleSqlText) { (s, dir) =>
       Catalog.registerAll(s, dir)

@@ -144,7 +144,8 @@ object RelationalA {
 
     // R7: GroupJoin fusion (reference physical_group_join.cpp): the
     // per-customer aggregate is computed first (|customers| rows, one
-    // shuffle) and then broadcast-joined to the customer dim.
+    // shuffle) and then joined to the customer dim on its own hash
+    // partitioning.
     QDef.sql("q07_groupjoin",
       """SELECT c_custkey, c_name, order_count, total_spent
         |FROM customer JOIN (
@@ -158,13 +159,7 @@ object RelationalA {
         keys = Seq(col("o_custkey")),
         aggs = Seq(count(lit(1)).as("order_count"), dsum(col("o_totalprice")).as("total_spent")),
         other = t(s, dir, "customer"),
-        cond = col("c_custkey") === col("o_custkey"),
-        // per-customer groups scale WITH the fact table (1.5 M at
-        // sf10) — broadcast would ship them to every task and stalls
-        // on the build (A/B: 2.0–7.2 s vs 1.6–2.6 s co-partitioned,
-        // Probe q07ab). The agg output is already hash-partitioned on
-        // the key, so the join adds only the dim-side exchange.
-        broadcastAgg = false)
+        cond = col("c_custkey") === col("o_custkey"))
         .select(col("c_custkey"), col("c_name"), col("order_count"), col("total_spent"))
         // the trailing ORDER BY is KEPT deliberately (r13 A/B): the
         // sort-free variant measured 6.6-8.0 s vs 2.3-2.7 s WITH the

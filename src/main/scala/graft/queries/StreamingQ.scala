@@ -56,7 +56,7 @@ object StreamingQ {
       // serialize/merge of every buffer. Same single exchange, rows
       // hash once into ~3k buffers per reducer. Measured at sf10:
       // 2.07 s (window-lag) → 1.6 s (partial+final agg) → 0.87 s
-      // (complete-mode agg, Probe st02c). Needs a raised
+      // (complete-mode agg, commit e16e785). Needs a raised
       // objectHashAggregate fallback threshold or the 3k
       // keys/partition re-introduce a sort-based fallback — raised on
       // a FORKED session (isolated SQL conf, shared context/cache) so
@@ -66,6 +66,12 @@ object StreamingQ {
       // The window-lag formulation lives on in SessionizeSpec, which
       // proves window == aggregate == stateful-streaming.
       val s2 = s.newSession()
+      // a fork starts from the SparkConf, not from this session's
+      // runtime confs: carry over the scan sizing that
+      // GraftSession.adaptScanParallelism set here
+      Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes",
+          "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        .foreach(k => s.conf.getOption(k).foreach(s2.conf.set(k, _)))
       s2.conf.set(
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "4194304")

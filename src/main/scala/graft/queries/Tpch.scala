@@ -51,22 +51,9 @@ object Tpch {
       .orderBy(col("revenue").desc, col("l_orderkey"))
       .limit(10)
 
-  /** Q5 (r12 reshape). The two FACT relations join each other FIRST,
-    * on the bucket key alone:
-    *   lineitem(euro-sup) ⋈ orders(date slice) ON orderkey
-    * — on the bucketed tables this is an EXCHANGE-FREE sorted-merge
-    * join (one sorted file per bucket ⇒ no sort, and NO per-task hash
-    * build: the r11 receipts pinned the correlated run2 burst on 32
-    * concurrent co-side map builds, which this plan simply doesn't
-    * have). The joined rows pre-aggregate to (o_custkey, s_nationkey)
-    * partial sums — shrinking the one remaining fact exchange from
-    * ~3.6M joined rows to ~1M aggregated rows at sf10 — and only then
-    * meet customer (a dimension slice, pinned build side) with the
-    * nation match as the residual. The old shape shuffled orders on
-    * custkey AND the customer⋈orders result on orderkey: two
-    * fact-scale exchanges plus the burst-prone hash build.
-    */
-  /** Q5 variant folding the dimension PREP into the fact scans: the
+  /** Q5. The two fact relations join each other first, on orderkey
+    * (an exchange-free sorted-merge join on the bucketed tables), and
+    * the dimension PREP folds into the fact scans: the
     * euro nation keys (≤25 rows — region⋈nation is driver-bounded at
     * any scale) collect once and ride into the supplier/customer
     * filters as literal IN-lists, so the plan launches no broadcast
@@ -79,9 +66,10 @@ object Tpch {
                               bucketed: Boolean = false): DataFrame = {
     // region⋈nation is driver-bounded at any scale (≤5 and ≤25 rows),
     // so do the join IN THE DRIVER: two single-stage collects instead
-    // of a broadcast-exchange build + join job chain. OptProf (r14)
-    // counted 17 driver actions for q5 — each a scheduling round —
-    // and this subtree was 3 of them plus a broadcast build.
+    // of a broadcast-exchange build + join job chain. The r14 job
+    // profile counted 17 driver actions for q5 — each a scheduling
+    // round — and this subtree was 3 of them plus a broadcast build
+    // (OPTIMIZATION_r14.md).
     // keys normalized to Long before the Set membership test (r14
     // advice): raw Row values under Set[Any] require exact runtime-type
     // equality, so an int32/int64 divergence between r_regionkey and
@@ -131,53 +119,6 @@ object Tpch {
       .groupBy(col("s_nationkey"))
       .agg(sumFromUnits(col("__rev1")).as("revenue"))
       .select(nameExpr.as("n_name"), col("revenue"))
-  }
-
-  private[graft] def q5Plan(tab: String => DataFrame,
-                              bucketed: Boolean = false): DataFrame = {
-    val euroNations = tab("nation")
-      .join(broadcast(tab("region").filter(col("r_name") === "EUROPE")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey"), col("n_name"))
-    val euroSup = tab("supplier")
-      .join(broadcast(euroNations), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("s_nationkey"))
-    val li = tab("lineitem")
-      .join(broadcast(euroSup), col("l_suppkey") === col("s_suppkey"))
-      .select(col("l_orderkey"), col("s_nationkey"),
-        revenueUnits(col("l_extendedprice"), col("l_discount")).as("__rev"))
-    val ord = tab("orders")
-      .filter(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1998-01-01"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    // bucketed: merge join rides the sorted bucket layout (zero
-    // exchange, zero sort, zero build). flat: hash join with the
-    // date-filtered orders slice as the pinned build side — the only
-    // 100×-safe choice (the li side never fits)
-    val lo =
-      if (bucketed) li.join(ord.hint("merge"), col("l_orderkey") === col("o_orderkey"))
-      else li.join(ord.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
-    // partial per-(custkey, supplier-nation) sums BEFORE the custkey
-    // exchange: exact int64 unit sums, finalized after the last join
-    val perCust = lo
-      .groupBy(col("o_custkey"), col("s_nationkey"))
-      .agg(sum(col("__rev")).as("__rev1"))
-    val cust = tab("customer")
-      .join(broadcast(euroNations.select(col("n_nationkey").as("__en"))),
-        col("c_nationkey") === col("__en"), "left_semi")
-      .select(col("c_custkey"), col("c_nationkey"))
-    // BOTH conjuncts spelled as equi keys: the join then requires
-    // clustering on (custkey, nationkey) — exactly the aggregate's
-    // output partitioning, so the fact side flows into this join with
-    // NO further exchange (spelled as a residual, Catalyst would
-    // demand custkey-only clustering and re-shuffle the aggregate)
-    perCust.join(cust.hint("shuffle_hash"),
-        col("o_custkey") === col("c_custkey")
-          && col("s_nationkey") === col("c_nationkey"))
-      .groupBy(col("s_nationkey"))
-      .agg(sumFromUnits(col("__rev1")).as("revenue"))
-      .join(broadcast(euroNations), col("s_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
   }
 
   private[queries] def q10Plan(tab: String => DataFrame): DataFrame = {

@@ -14,14 +14,7 @@ object CbFpProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val only = args.tail.map(_.toInt).toSet
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[16]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[16]", 16).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.sources.Catalog.registerAll(spark, sfDir)
     GraftSql.sql(spark, ClickBench43.hitsViewSql).createOrReplaceTempView("hits")

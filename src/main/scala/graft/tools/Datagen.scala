@@ -108,9 +108,10 @@ object Datagen {
     // file count preserves the SOURCE's bytes-per-file (r15): the old
     // max(1, factor/5) rule wrote sf30 (factor 3) documents as ONE
     // 84 MB-compressed file with ONE row group, which serialized every
-    // dedup kernel scan to a single task (ScanProf: d03's sf30 scan
-    // stage = 28.5 s wall ≈ sumRun, 88% of the query) — the r14 sf30
-    // "exponents" measured that storage floor, not the operators.
+    // dedup kernel scan to a single task (OPTIMIZATION_r15.md: d03's
+    // sf30 scan stage = 28.5 s wall ≈ sumRun, 88% of the query) — the
+    // r14 sf30 "exponents" measured that storage floor, not the
+    // operators.
     // Row groups are the scan-parallelism floor (guide §6), so output
     // files must multiply with the data.
     def srcFiles(name: String): Int =

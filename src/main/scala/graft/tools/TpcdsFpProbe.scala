@@ -15,13 +15,7 @@ import graft.queries.{TpcdsFull, TpcdsGen}
 object TpcdsFpProbe {
   def main(args: Array[String]): Unit = {
     val only = args.map(_.toInt).toSet
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[16]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[16]", 16).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.writeString(Paths.get("/tmp/tpcds_prelude.sql"), TpcdsGen.oraclePrelude)
     TpcdsGen.register(spark)

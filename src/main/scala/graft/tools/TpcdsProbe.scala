@@ -11,13 +11,7 @@ import java.nio.file.{Files, Paths}
 object TpcdsProbe {
   def main(args: Array[String]): Unit = {
     val only = args.map(_.toInt).toSet
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.writeString(Paths.get("/tmp/tpcds_prelude.sql"),
       graft.queries.TpcdsGen.oraclePrelude)

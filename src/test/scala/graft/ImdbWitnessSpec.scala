@@ -6,7 +6,7 @@ import graft.queries.{Imdb, ImdbWitness}
 
 /** ImdbWitness — the JOB domain-alignment solver. The heavy gate is
   * the imdb_job_sweep oracle row (value fingerprints vs DuckDB, and
-  * `Probe imdbnulls` measured 113/113 non-NULL at sf0.01); this spec
+  * commit 6f9bd7e measured 113/113 non-NULL at sf0.01); this spec
   * pins the pure construction: solve coverage, join-class key
   * sharing, and satisfying-value selection.
   */

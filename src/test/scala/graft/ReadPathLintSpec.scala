@@ -13,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Plans are chosen in code, never by a JVM-global system property:
   * such a switch makes every session in the JVM plan differently.
+  *
+  * Every runnable tool is documented in the verify skill, so one-off
+  * tools cannot pile up unseen.
   */
 class ReadPathLintSpec extends AnyFunSuite {
 
@@ -47,5 +50,18 @@ class ReadPathLintSpec extends AnyFunSuite {
   test("no JVM system property chooses a plan: engine sources, tools/ included") {
     val found = offenders(scalaSources, graftProperty)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("every object with a main under tools/ is named in the verify skill") {
+    val skill = new String(Files.readAllBytes(Paths.get(".claude/skills/verify/SKILL.md")))
+    val mains = for {
+      p <- scalaSources if p.startsWith(root.resolve("tools"))
+      src = new String(Files.readAllBytes(p))
+      m <- """def\s+main\s*\(""".r.findAllMatchIn(src)
+      obj <- """\bobject\s+(\w+)""".r.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+    } yield obj.group(1)
+    assert(mains.size >= 5, s"only ${mains.size} tool mains found")
+    val undocumented = mains.distinct.filterNot(n => s"\\b$n\\b".r.findFirstIn(skill).isDefined)
+    assert(undocumented.isEmpty, undocumented.mkString("not in SKILL.md: ", ", ", ""))
   }
 }
