@@ -25,7 +25,27 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
+    *
+    * The key set, `size` and `contains` read no file: they come from
+    * each entry's `QDef.hasOracle`. Looking up or iterating an entry
+    * builds only that entry's text, so a missing reference file throws,
+    * with its path, only for the entry that reads it.
     */
   def oracleSql: Map[String, String] =
-    allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap
+    new OracleTexts(allDefs.filter(_.hasOracle).map(d => d.name -> d).toMap)
+
+  private final class OracleTexts(byName: Map[String, QDef])
+      extends scala.collection.immutable.AbstractMap[String, String] {
+    def get(key: String): Option[String] = byName.get(key).flatMap(_.oracle)
+    def iterator: Iterator[(String, String)] =
+      byName.iterator.map { case (name, d) => name -> d.oracle.get }
+    override def keySet: Set[String] = byName.keySet
+    override def keysIterator: Iterator[String] = byName.keysIterator
+    override def contains(key: String): Boolean = byName.contains(key)
+    override def size: Int = byName.size
+    override def knownSize: Int = byName.size
+    def removed(key: String): Map[String, String] = new OracleTexts(byName.removed(key))
+    def updated[V1 >: String](key: String, value: V1): Map[String, V1] =
+      Map.from(this).updated(key, value)
+  }
 }

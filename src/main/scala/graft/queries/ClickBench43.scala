@@ -36,11 +36,11 @@ object ClickBench43 {
 
   private val queriesDir = "/root/reference/benchmark/clickbench/queries"
 
-  lazy val texts: Seq[String] =
-    (1 to 43).map { i =>
-      val p = java.nio.file.Paths.get(f"$queriesDir/q$i%02d.sql")
-      new String(java.nio.file.Files.readAllBytes(p)).trim.stripSuffix(";")
-    }
+  private val files: Seq[String] = (1 to 43).map(i => f"$queriesDir/q$i%02d.sql")
+
+  lazy val texts: Seq[String] = files.map { f =>
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))).trim.stripSuffix(";")
+  }
 
   /** One deterministic, engine-portable hits projection over events. */
   val hitsViewSql: String =
@@ -186,7 +186,7 @@ object ClickBench43 {
   }
 
   val defs: Seq[QDef] = Seq(
-    QDef.sql("cb_full43_sweep", oracleText) { (s, dir) =>
+    QDef.sql("cb_full43_sweep", oracleText, files) { (s, dir) =>
       Catalog.registerAll(s, dir)
       GraftSql.sql(s, hitsViewSql).createOrReplaceTempView("hits")
       val rows = texts.zipWithIndex.map { case (q, i) =>

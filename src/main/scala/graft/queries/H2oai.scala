@@ -27,12 +27,16 @@ object H2oai {
 
   private val base = "/root/reference/benchmark/h2oai"
 
-  private def texts(family: String, n: Int): Seq[String] =
-    (1 to n).map { i =>
-      val p = java.nio.file.Paths.get(f"$base/$family/queries/q$i%02d.sql")
-      new String(java.nio.file.Files.readAllBytes(p)).trim
-        .stripPrefix("CREATE TEMP TABLE ans AS").trim.stripSuffix(";")
-    }
+  private def files(family: String, n: Int): Seq[String] =
+    (1 to n).map(i => f"$base/$family/queries/q$i%02d.sql")
+
+  private val groupFiles = files("group", 10)
+  private val joinFiles = files("join", 5)
+
+  private def texts(files: Seq[String]): Seq[String] = files.map { f =>
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))).trim
+      .stripPrefix("CREATE TEMP TABLE ans AS").trim.stripSuffix(";")
+  }
 
   private val groupView =
     """x_group AS (
@@ -95,19 +99,19 @@ object H2oai {
   }
 
   private lazy val groupSweep = sweep(groupView,
-    texts("group", 10).zip(Seq(
+    texts(groupFiles).zip(Seq(
       "v1", "v1", "v3", "v3", "v3", "sd_v3", "range_v1_v2",
       "largest2_v3", "r2", "v3")))
 
   private lazy val joinSweep = sweep(joinViews,
-    texts("join", 5).map((_, "v2")))
+    texts(joinFiles).map((_, "v2")))
 
   val defs: Seq[QDef] = Seq(
-    QDef.sql("h2o_group_sweep", groupSweep) { (s, dir) =>
+    QDef.sql("h2o_group_sweep", groupSweep, groupFiles) { (s, dir) =>
       Catalog.registerAll(s, dir)
       GraftSql.sql(s, groupSweep)
     },
-    QDef.sql("h2o_join_sweep", joinSweep) { (s, dir) =>
+    QDef.sql("h2o_join_sweep", joinSweep, joinFiles) { (s, dir) =>
       Catalog.registerAll(s, dir)
       GraftSql.sql(s, joinSweep)
     }

@@ -28,7 +28,7 @@ import graft.sources.Catalog
   */
 object Imdb {
 
-  private val hppPath =
+  private[graft] val hppPath =
     "/root/reference/third_party/imdb/include/imdb_constants.hpp"
 
   /** (qid, text) parsed out of the C string array. */
@@ -399,7 +399,7 @@ object Imdb {
   }
 
   val defs: Seq[QDef] = Seq(
-    QDef.sql("imdb_job_sweep", oracleSqlText) { (s, dir) =>
+    QDef.sql("imdb_job_sweep", oracleSqlText, Seq(hppPath)) { (s, dir) =>
       Catalog.registerAll(s, dir)
       // register the views once, then run each query's fingerprint
       // separately — 113 multi-join branches in ONE Spark statement

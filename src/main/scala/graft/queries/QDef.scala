@@ -6,24 +6,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the DuckDB oracle SQL that must hash-match it. Column aliases are
   * kept identical on both sides by construction.
   *
-  * The oracle text is built on first use of `oracle`, never when the
-  * registry is assembled: some texts are read from files that may be
-  * absent, and that failure belongs to the entry that needs them, not
-  * to every caller that lists or runs the others.
+  * Whether an entry has an oracle is fixed when it is built
+  * (`QDef.sql` gives it one, `QDef.rowsOnly` does not) and reads no
+  * file. The oracle text itself is built on first use of `oracle`,
+  * never when the registry is assembled: some texts are read from
+  * files that may be absent, and that failure belongs to the entry
+  * that needs them, not to every caller that lists or runs the others.
+  *
+  * `externalFiles` declares the files outside the repository and the
+  * sf dir that the entry (its run or its oracle text) reads; it is
+  * empty for all but the entries built from the reference tree.
   */
 final class QDef(
     val name: String,
     val fn: (SparkSession, String) => DataFrame,
-    oracleText: => Option[String]) {
-  lazy val oracle: Option[String] = oracleText
+    val hasOracle: Boolean,
+    oracleText: => String,
+    val externalFiles: Seq[String]) {
+  lazy val oracle: Option[String] = if (hasOracle) Some(oracleText) else None
   def run(spark: SparkSession, sfDir: String): DataFrame = fn(spark, sfDir)
 }
 
 object QDef {
-  def sql(name: String, oracle: => String)(fn: (SparkSession, String) => DataFrame): QDef =
-    new QDef(name, fn, Some(oracle))
+  def sql(name: String, oracle: => String, externalFiles: Seq[String] = Nil)(
+      fn: (SparkSession, String) => DataFrame): QDef =
+    new QDef(name, fn, hasOracle = true, oracle, externalFiles)
   def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QDef =
-    new QDef(name, fn, None)
+    new QDef(name, fn, hasOracle = false, "", Nil)
 }
 
 /** The reference engine's names for Spark schema types — what

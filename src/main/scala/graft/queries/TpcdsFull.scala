@@ -44,11 +44,11 @@ object TpcdsFull {
 
   private val queriesDir = "/root/reference/extension/tpcds/dsdgen/queries"
 
-  lazy val texts: Seq[String] =
-    (1 to 99).map { i =>
-      val p = java.nio.file.Paths.get(f"$queriesDir/$i%02d.sql")
-      new String(java.nio.file.Files.readAllBytes(p)).trim.stripSuffix(";")
-    }
+  private val files: Seq[String] = (1 to 99).map(i => f"$queriesDir/$i%02d.sql")
+
+  lazy val texts: Seq[String] = files.map { f =>
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))).trim.stripSuffix(";")
+  }
 
   /** Per-query, per-position fractional-ness of the DuckDB-side
     * output schema ('f' = DECIMAL/DOUBLE/FLOAT — normalize through
@@ -151,7 +151,7 @@ object TpcdsFull {
   }
 
   val defs: Seq[QDef] = Seq(
-    QDef.sql("tpcds_full99_sweep", oracleText) { (s, _) =>
+    QDef.sql("tpcds_full99_sweep", oracleText, files) { (s, _) =>
       TpcdsGen.register(s)
       val rows = texts.indices.map { i =>
         if (isCountOnly(i))

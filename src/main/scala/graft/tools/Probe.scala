@@ -3,7 +3,9 @@ package graft.tools
 /** Front-door sweeps: `tools/run_main.sh graft.tools.Probe <sfDir> <mode>`.
   *   - `fncheck <namefile>`: which reference core-function names resolve
   *   - `trans <entry>…`: the DuckDB-dialect translation of entries' oracle SQL
-  *   - `dialectcheck`: translate, parse and run every oracle SQL text
+  *   - `dialectcheck`: translate, parse and run every oracle SQL text; a
+  *     text that cannot be read prints `TEXT-FAIL <entry>: <path>` and
+  *     counts as unreadable
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -39,30 +41,41 @@ object Probe {
         // each without crashing, and the translation should parse
         // (and mostly run) on Spark given the registered name surface
         graft.sources.Catalog.registerAll(spark, sfDir)
-        var nTrans = 0; var nParse = 0; var nRun = 0
-        val total = graft.SparkEntry.oracleSql.size
-        graft.SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (name, sql) =>
-          val t = try Some(graft.plans.DuckDialect.translate(sql)) catch {
+        val oracles = graft.SparkEntry.oracleSql
+        var nText = 0; var nTrans = 0; var nParse = 0; var nRun = 0
+        // each text is read inside its entry's own try: an unreadable
+        // text (a missing reference file) fails that entry only
+        oracles.keySet.toSeq.sorted.foreach { name =>
+          val text = try Some(oracles(name)) catch {
             case e: Throwable =>
-              println(s"[probe] TRANSLATE-FAIL $name: ${e.getMessage.linesIterator.next()}")
+              println(s"[probe] TEXT-FAIL $name: ${e.getMessage}")
               None
           }
-          t.foreach { out =>
-            nTrans += 1
-            try {
-              val df = graft.GraftSql.sql(spark, sql)
-              nParse += 1
-              df.limit(1).collect()
-              nRun += 1
-            } catch {
+          text.foreach { sql =>
+            nText += 1
+            val t = try Some(graft.plans.DuckDialect.translate(sql)) catch {
               case e: Throwable =>
-                val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-                  .trim.linesIterator.take(2).mkString(" / ")
-                println(s"[probe] RUN-FAIL $name: $msg")
+                println(s"[probe] TRANSLATE-FAIL $name: ${e.getMessage.linesIterator.next()}")
+                None
+            }
+            t.foreach { _ =>
+              nTrans += 1
+              try {
+                val df = graft.GraftSql.sql(spark, sql)
+                nParse += 1
+                df.limit(1).collect()
+                nRun += 1
+              } catch {
+                case e: Throwable =>
+                  val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+                    .trim.linesIterator.take(2).mkString(" / ")
+                  println(s"[probe] RUN-FAIL $name: $msg")
+              }
             }
           }
         }
-        println(s"[probe] dialect sweep: $total oracle texts, $nTrans translate, $nParse parse, $nRun run")
+        println(s"[probe] dialect sweep: ${oracles.size} oracle texts, ${oracles.size - nText} unreadable, " +
+          s"$nTrans translate, $nParse parse, $nRun run")
       case other =>
         System.err.println(s"[probe] unknown mode: ${other.mkString(" ")} (fncheck <file> | trans <entry>… | dialectcheck)")
     }

@@ -284,13 +284,12 @@ class DuckDialectSpec extends AnyFunSuite {
   }
 
   test("the whole oracle corpus translates without error") {
+    assumeFiles(SparkEntry.allDefs.filter(_.hasOracle).flatMap(_.externalFiles))
     // every oracleSql text in the repo is a real DuckDB query; the
     // front door must never crash on one (unknown constructs pass
     // through). Execution parity is measured by `Probe dialectcheck`
-    // (246 of 261 also RUN verbatim; the rest are the documented
-    // statement-level gaps: ASOF JOIN, dynamic PIVOT, COLUMNS(),
-    // star REPLACE, UNION BY NAME, window EXCLUDE/DISTINCT,
-    // nested generators, recursive unnest, TIME type).
+    // (at sf0.01 all 301 texts it can read also RUN verbatim; the
+    // five reference-backed texts are unreadable without the tree).
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       val out = DuckDialect.translate(sql)
       assert(out.nonEmpty, s"$name translated to empty text")

@@ -13,6 +13,7 @@ import graft.queries.{Imdb, ImdbWitness}
 class ImdbWitnessSpec extends AnyFunSuite {
 
   test("solver admits witness rows for at least 100 of the 113 queries") {
+    TestSession.assumeFiles(Seq(Imdb.hppPath))
     val solved = Imdb.queries.zipWithIndex.count { case ((_, q), qi) =>
       ImdbWitness.witnessRows(q, qi).isDefined
     }
@@ -46,6 +47,7 @@ class ImdbWitnessSpec extends AnyFunSuite {
   }
 
   test("every witness table appears in the synthesized schema with full columns") {
+    TestSession.assumeFiles(Seq(Imdb.hppPath))
     ImdbWitness.rowsByTable.foreach { case (table, rows) =>
       val schema = Imdb.tableSchema.getOrElse(table,
         fail(s"witness table $table not in tableSchema"))
