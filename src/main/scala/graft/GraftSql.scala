@@ -274,11 +274,15 @@ object GraftSql {
       // ANALYZE [table] (reference analyze ≡ recompute optimizer
       // stats): maps to Spark's COMPUTE STATISTICS where the target
       // is a catalog table; temp views / bare form are a no-op (the
-      // reference's stats are storage-attached — nothing to persist)
+      // reference's stats are storage-attached — nothing to persist).
+      // A missing table raises.
       case AnalyzeRe(table) =>
         if (table != null && table.trim.nonEmpty)
           try spark.sql(s"ANALYZE TABLE ${table.trim} COMPUTE STATISTICS")
-          catch { case _: Exception => }
+          catch {
+            case e: org.apache.spark.sql.AnalysisException
+                if e.getCondition == "EXPECT_PERMANENT_VIEW_NOT_TEMP" =>
+          }
         return S.emptyDf(spark)
       // CREATE/DROP SEQUENCE (sequence_catalog_entry.cpp) — session
       // counters behind nextval()/currval() (plans/Sequences)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Holistic aggregates the reference ships natively and Spark lacks,
-  * registered under the reference's SQL names (plans/SqlRegistry2):
+  * registered under the reference's SQL names (plans/FunctionTable):
   *
   *  - histogram(x)          — reference aggregate/nested/histogram.cpp
   *  - entropy(x)            — aggregate/distributive/entropy.cpp

@@ -1867,7 +1867,7 @@ object DuckDialect {
              "JSON_EXTRACT_PATH_TEXT" if peekOp("(") =>
           // literal paths with negative indices route through the
           // [-N]/[#-N] chain; everything else keeps the registered
-          // name (DuckNames → get_json_object)
+          // name (FunctionTable → get_json_object)
           expectOp("(")
           val args = ArrayBuffer.empty[String]
           while (more && !peekOp(")")) {
@@ -2042,9 +2042,7 @@ object DuckDialect {
                 if (peekOp(",")) next()
               }
               expectOp(")")
-              chain =
-                if (schemaQualified) s"$m(${args.mkString(", ")})"
-                else s"$m($chain${if (args.nonEmpty) ", " + args.mkString(", ") else ""})"
+              chain = chainCall(m, if (schemaQualified) args.toSeq else chain +: args.toSeq)
             } else {
               next()
               next() match {
@@ -2071,6 +2069,24 @@ object DuckDialect {
       }
     }
 
+    /** A call whose DuckDB meaning differs from the Spark built-in of
+      * the same name, spelled in Spark terms: the reference's 2-arg
+      * regexp_extract/_all return the FULL match (group 0; Spark's
+      * default group is 1) and its dayname/monthname spell full names
+      * (Spark's abbreviate: Mon, Jan).
+      */
+    private def duckMeaning(name: String, args: Seq[String]): Option[String] =
+      (name.toLowerCase, args) match {
+        case ("regexp_extract" | "regexp_extract_all", Seq(s, re)) => Some(s"$name($s, $re, 0)")
+        case ("dayname", Seq(d)) => Some(s"date_format(CAST($d AS TIMESTAMP), 'EEEE')")
+        case ("monthname", Seq(d)) => Some(s"date_format(CAST($d AS TIMESTAMP), 'MMMM')")
+        case _ => None
+      }
+
+    /** `f(args)` after the dot-chaining sugar `x.f(args)`. */
+    private def chainCall(name: String, args: Seq[String]): String =
+      duckMeaning(name, args).getOrElse(s"$name(${args.mkString(", ")})")
+
     private def call(fname0: String): String = {
       // Set-returning functions: unnest ≡ explode in BOTH positions
       // (Spark's explode is a generator in SELECT and a table
@@ -2091,7 +2107,7 @@ object DuckDialect {
       // date_diff('part', a, b): Spark's parser intercepts the name
       // and rejects quoted units BEFORE function resolution, so the
       // registry can't shim the original spelling — rewrite to the
-      // duck_date_diff alias (DuckNames), which implements the
+      // duck_date_diff alias (FunctionTable), which implements the
       // reference's T-SQL period-CROSSING counting (date_diff.cpp).
       if ((low == "date_diff" || low == "datediff") && peekOp("(")
           && peekAt(1).exists(_.isInstanceOf[TStr])) {
@@ -2187,25 +2203,24 @@ object DuckDialect {
       // here from MAP literals) → Spark's map_from_arrays
       if (low == "map" && parts.count(_ == ",") == 1)
         out = s"map_from_arrays(${renderArgs(parts.toSeq)})"
-      // unnest(x, recursive := true): one structural level collapses
-      // per flatten — the reference's recursive flag for
-      // list-of-list inputs (transform of unnest's named parameter)
+      val args0 = parts.filterNot(_ == ",")
       // regexp_extract(s, re, ['a','b']) — the reference's NAMED
       // capture-group form returns a struct of the groups
       // (regex_capture.test); Spark's third arg is an index, so emit
       // named_struct of per-index extracts
-      if (low == "regexp_extract") {
-        val args0 = parts.filterNot(_ == ",")
-        if (args0.length == 3 && args0(2).trim.startsWith("array(")) {
-          val names = "'([^']*)'".r.findAllMatchIn(args0(2)).map(_.group(1)).toSeq
-          if (names.nonEmpty) {
-            val fields = names.zipWithIndex.map { case (nm, i) =>
-              s"'$nm', regexp_extract(${args0(0)}, ${args0(1)}, ${i + 1})"
-            }
-            out = s"named_struct(${fields.mkString(", ")})"
+      if (low == "regexp_extract" && args0.length == 3 && args0(2).trim.startsWith("array(")) {
+        val names = "'([^']*)'".r.findAllMatchIn(args0(2)).map(_.group(1)).toSeq
+        if (names.nonEmpty) {
+          val fields = names.zipWithIndex.map { case (nm, i) =>
+            s"'$nm', regexp_extract(${args0(0)}, ${args0(1)}, ${i + 1})"
           }
+          out = s"named_struct(${fields.mkString(", ")})"
         }
       }
+      duckMeaning(fname, args0.toSeq).foreach(out = _)
+      // unnest(x, recursive := true): one structural level collapses
+      // per flatten — the reference's recursive flag for
+      // list-of-list inputs (transform of unnest's named parameter)
       if (low == "unnest" &&
           parts.exists(_.toLowerCase.startsWith("recursive =>"))) {
         val pos = parts.filterNot(p => p == "," ||
@@ -2894,7 +2909,7 @@ object DuckDialect {
                 if (peekOp(",")) next()
               }
               expectOp(")")
-              base = s"$m($base${if (args.nonEmpty) ", " + args.mkString(", ") else ""})"
+              base = chainCall(m, base +: args.toSeq)
             } else next() match {
               case TWord(x) => base = s"$base.$x"
               case TQuoted(x) => base = s"$base.${quoteIdent(x)}"

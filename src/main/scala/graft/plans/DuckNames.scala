@@ -1,353 +1,14 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The last tranche of reference core-function names: operator
-  * spellings, named-argument constructors, and session introspection
-  * (/root/reference/src/core_functions/&#42;&#42;/functions.json). Together
-  * with the DuckDialect front door this closes the name surface —
-  * the operator names are callable directly (Spark's parser accepts
-  * backquoted routine names: \`**\`(2, 3)) and reachable through
-  * their infix spellings via GraftSql.
-  *
-  * Deliberately NOT registered: `^` (Spark's registry already binds
-  * it to XOR; overriding would silently change Spark-dialect
-  * arithmetic, so the DuckDB meaning — power — is carried by the
-  * dialect translation only), and enum_&#42; / setseed / stats /
-  * vector_type / timetz_byte_comparable, which have no meaning off
-  * the reference's runtime (no ENUM type, no per-query RNG state to
-  * reseed, no vector executor) — documented N/A, no silent claim.
-  *
-  * Introspection semantics map to the Spark session: current_setting
-  * reads SQLConf, current_schemas/in_search_path read the session
-  * catalog's current namespace, current_query returns the text the
-  * GraftSql front door recorded, txid_current is a session-monotonic
-  * id (the engine's transactions are per-query; see sources/Dml).
-  * All bind-time constant — zero runtime cost, like the reference's
-  * bind-data constants.
-  */
-object DuckNames {
-
-  private def info(name: String) =
-    new ExpressionInfo(classOf[UnresolvedFunction].getCanonicalName, name)
-
-  private def register(e: SparkSessionExtensions, name: String)(
-      builder: Seq[Expression] => Expression): Unit =
-    e.injectFunction((FunctionIdentifier(name), info(name), builder))
-
-  private def uf(name: String, args: Seq[Expression]): Expression =
-    UnresolvedFunction(Seq(name), args, isDistinct = false)
-
-  private val txid = new AtomicLong(1000L)
-
-  private def constString(name: String, ex: Expression): String = {
-    require(ex.foldable, s"$name expects a constant string argument")
-    val v = ex.eval(null)
-    require(v != null, s"$name: constant argument is null")
-    v.toString
-  }
-
-  /** T-SQL period-crossing date_diff (reference
-    * src/core_functions/scalar/date/date_diff.cpp:31–140): year =
-    * year(end)−year(start); month = (12y+m−1) delta; quarter = that
-    * div 3; decade/century/millennium = year div 10/100/1000 delta;
-    * week = day-distance div 7 — "not Monday crossings, just
-    * distance" (:93); day = epoch-day delta of the DATE part; sub-day
-    * units = truncating epoch-micros division per value then
-    * subtract (matches the C `/`, which truncates toward zero).
-    * All arithmetic is on the session-naive clock, like the
-    * reference's TIMESTAMP. Result is BIGINT.
-    */
-  def dateDiffExpr(unitRaw: String, start: Expression, end: Expression): Expression = {
-    def asLong(x: Expression) = Cast(x, LongType)
-    def dpart(x: Expression) = Cast(x, DateType)
-    def idiv(x: Expression, d: Long) = IntegralDivide(asLong(x), Literal(d))
-    def yr(x: Expression) = uf("year", Seq(dpart(x)))
-    // zero-based month index: year*12 + month - 1
-    def ymIdx(x: Expression) =
-      Subtract(Add(Multiply(asLong(yr(x)), Literal(12L)), asLong(uf("month", Seq(dpart(x))))), Literal(1L))
-    def um(x: Expression) = uf("unix_micros", Seq(Cast(x, TimestampType)))
-    def delta(f: Expression => Expression) = Subtract(asLong(f(end)), asLong(f(start)))
-    val days = DateDiff(dpart(end), dpart(start))
-    val out: Expression = normUnit(unitRaw) match {
-      case "year"        => delta(yr)
-      case "isoyear"     => delta(x => uf("date_part", Seq(Literal("yearofweek"), dpart(x))))
-      case "month"       => delta(ymIdx)
-      case "quarter"     => delta(x => idiv(ymIdx(x), 3L))
-      case "decade"      => delta(x => idiv(yr(x), 10L))
-      case "century"     => delta(x => idiv(yr(x), 100L))
-      case "millennium"  => delta(x => idiv(yr(x), 1000L))
-      case "week"        => idiv(days, 7L)
-      case "day"         => asLong(days)
-      case "hour"        => delta(x => idiv(um(x), 3600000000L))
-      case "minute"      => delta(x => idiv(um(x), 60000000L))
-      case "second"      => delta(x => idiv(um(x), 1000000L))
-      case "millisecond" => delta(x => idiv(um(x), 1000L))
-      case "microsecond" => delta(um)
-      case other => throw new IllegalArgumentException(
-        s"date_diff: unrecognized unit '$other'")
-    }
-    Cast(out, LongType)
-  }
-
-  /** Reference unit-name aliases (common/enums/date_part_specifier). */
-  private def normUnit(u0: String): String = u0.toLowerCase match {
-    case "y" | "yr" | "yrs" | "year" | "years"                    => "year"
-    case "isoyear"                                                => "isoyear"
-    case "mon" | "mons" | "month" | "months"                      => "month"
-    case "q" | "quarter" | "quarters"                             => "quarter"
-    case "dec" | "decs" | "decade" | "decades"                    => "decade"
-    case "c" | "cent" | "centuries" | "century"                   => "century"
-    case "mil" | "mils" | "millenium" | "millennium" | "millennia" => "millennium"
-    case "w" | "week" | "weeks" | "wk" | "wks" | "weekofyear"     => "week"
-    case "d" | "day" | "days" | "dayofmonth"                      => "day"
-    case "h" | "hr" | "hrs" | "hour" | "hours"                    => "hour"
-    case "min" | "mins" | "minute" | "minutes"                    => "minute"
-    case "s" | "sec" | "secs" | "second" | "seconds"              => "second"
-    case "ms" | "msec" | "msecs" | "millisecond" | "milliseconds" => "millisecond"
-    case "us" | "usec" | "usecs" | "microsecond" | "microseconds" => "microsecond"
-    case other                                                    => other
-  }
-
-  def registerAll(e: SparkSessionExtensions): Unit = {
-    // ---- operator spellings (fncheck closure + backquoted calls) ----
-    register(e, "**")(args => uf("power", args))
-    register(e, "//")(args => DuckDiv(args(0), args(1)))
-    register(e, "@")(args => uf("abs", args))
-    register(e, "!__postfix")(args => uf("factorial", args))
-    register(e, "^@")(args => uf("starts_with", args))
-    register(e, "<->")(args => uf("list_distance", args))
-    register(e, "<=>")(args => uf("list_cosine_distance", args))
-    register(e, "&&")(args => uf("list_has_any", args))
-    register(e, "@>")(args => uf("list_has_all", args))
-    register(e, "<@")(args => uf("list_has_all", args.reverse))
-
-    // full-match regex (the reference's `~` operator; Spark RLIKE is
-    // a partial match, so anchor with a non-capturing group)
-    // finalize: kept for NAME closure only — the dialect front door
-    // rewrites FINALIZE(state) structurally (r11 EXPORT_STATE struct
-    // states, DuckDialect); a bare Spark-dialect call is the identity
-    register(e, "finalize")(args => args.head)
-
-    // sequence functions (nextval.cpp) — session registry in Sequences
-    register(e, "nextval")(args => SequenceVal(args(0), isNext = true))
-    register(e, "currval")(args => SequenceVal(args(0), isNext = false))
-
-    register(e, "regexp_full_match") { args =>
-      RLike(args(0), uf("concat", Seq(Literal("^(?:"), args(1), Literal(")$"))))
-    }
-
-    // duck_slice arities: 3 = legacy `(x, lo, hi)` with literal-NULL
-    // bounds meaning "empty" (old spliced-view texts); 5 = explicit
-    // empty flags; 6 = with a step argument (the `[a:b:c]` spelling)
-    register(e, "duck_slice") { args =>
-      def nullLit(x: Expression): Boolean = x match {
-        case Literal(null, _) => true
-        case _ => false
-      }
-      def boolLit(x: Expression): Boolean =
-        x.eval(null).asInstanceOf[Boolean]
-      args.length match {
-        case 3 => DuckSlice(args(0), args(1), args(2), None,
-          nullLit(args(1)), nullLit(args(2)))
-        case 5 => DuckSlice(args(0), args(1), args(2), None,
-          boolLit(args(3)), boolLit(args(4)))
-        case 6 => DuckSlice(args(0), args(1), args(2), Some(args(3)),
-          boolLit(args(4)), boolLit(args(5)))
-        case other => throw new IllegalArgumentException(
-          s"duck_slice: unsupported arity $other")
-      }
-    }
-    for (n <- Seq("list_extract", "list_element", "array_extract"))
-      register(e, n)(args => ListExtract(args(0), args(1)))
-
-    // list-aggregate shorthands and regex names the dialect sweep
-    // found in real reference query texts (semantics via the already
-    // registered list_aggregate / RLike trees)
-    register(e, "list_sum")(args => uf("list_aggregate", Seq(args.head, Literal("sum"))))
-    register(e, "list_count")(args => uf("list_aggregate", Seq(args.head, Literal("count"))))
-    register(e, "regexp_matches") { args =>
-      // partial match (the reference's regexp_matches ≡ RLIKE); an
-      // optional constant options arg maps the common 'i' flag
-      val pat = if (args.length >= 3) {
-        val opts = constString("regexp_matches", args(2))
-        if (opts.contains("i")) uf("concat", Seq(Literal("(?i)"), args(1))) else args(1)
-      } else args(1)
-      RLike(args(0), pat)
-    }
-    register(e, "generate_subscripts") { args =>
-      // generate_subscripts(list, 1): one row per 1-based index —
-      // explode of the index sequence (empty list → no rows)
-      uf("explode", Seq(uf("sequence", Seq(Literal(1), uf("size", Seq(args.head))))))
-    }
-    register(e, "json_merge_patch")(args => JsonMergePatch(args(0), args(1)))
-    register(e, "json_keys")(args => uf("json_object_keys", args))
-    // json_extract_string ≡ get_json_object ($-paths); row_to_json ≡
-    // to_json over a struct; string/list renames the sweep surfaced
-    register(e, "json_extract_string")(args => uf("get_json_object", args))
-    register(e, "row_to_json")(args => uf("to_json", args))
-    register(e, "ends_with")(args => uf("endswith", args))
-    register(e, "list_reverse")(args => uf("reverse", args))
-    // list_position: 1-based index, NULL when absent (Spark's
-    // array_position spells absence as 0)
-    for (n <- Seq("list_position", "list_indexof"))
-      register(e, n)(args =>
-        uf("nullif", Seq(uf("array_position", args), Literal(0L))))
-    // 2-arg regexp_extract: the reference returns the FULL match
-    // (group 0); Spark's default group is 1
-    register(e, "regexp_extract") { args =>
-      if (args.length == 2) RegExpExtract(args(0), args(1), Literal(0))
-      else RegExpExtract(args(0), args(1), args(2))
-    }
-    register(e, "list_max")(args => uf("array_max", args))
-    register(e, "list_min")(args => uf("array_min", args))
-    register(e, "list_contains")(args => uf("array_contains", args))
-    register(e, "list_zip")(args => uf("arrays_zip", args))
-    // list_prepend(element, list) — the reference's argument order
-    register(e, "list_prepend")(args =>
-      uf("concat", Seq(uf("array", Seq(args(0))), args(1))))
-    register(e, "list_append")(args =>
-      uf("concat", Seq(args(0), uf("array", Seq(args(1))))))
-
-    // Arity/default divergences from Spark built-ins (override is
-    // safe: the Spark arities error today, so no behavior changes):
-    // the reference's 2-arg regexp_extract_all extracts the FULL
-    // match (group 0); Spark's defaults to group 1. 1-arg encode/
-    // decode are UTF-8 string↔blob casts in the reference.
-    register(e, "regexp_extract_all") { args =>
-      if (args.length == 2) RegExpExtractAll(args(0), args(1), Literal(0))
-      else RegExpExtractAll(args(0), args(1), args(2))
-    }
-    register(e, "encode") { args =>
-      if (args.length == 1) Encode(args.head, Literal("UTF-8")) else Encode(args(0), args(1))
-    }
-    register(e, "decode") { args =>
-      if (args.length == 1) new Decode(Seq(args.head, Literal("UTF-8"))) else new Decode(args)
-    }
-    // the reference's 3-arg date_diff('part', start, end) is T-SQL
-    // period-CROSSING counting (date_diff.cpp:16 cites the T-SQL
-    // doc), NOT elapsed complete units: date_diff('year',
-    // DATE '2024-12-31', DATE '2025-01-01') = 1. Each unit counts
-    // partition-boundary crossings — see dateDiffExpr. 2-arg
-    // datediff keeps Spark's day-difference semantics.
-    for (n <- Seq("date_diff", "datediff")) register(e, n) { args =>
-      if (args.length == 3)
-        dateDiffExpr(constString(n, args(0)), args(1), args(2))
-      else DateDiff(args(0), args(1))
-    }
-    // Spark's parser intercepts date_diff/datediff with a quoted
-    // unit before resolution, so the dialect rewrites that spelling
-    // to this alias (DuckDialect call())
-    register(e, "duck_date_diff") { args =>
-      dateDiffExpr(constString("duck_date_diff", args(0)), args(1), args(2))
-    }
-    // 4th regexp_replace arg is an options STRING in the reference
-    // ('g' = global, Spark's default; 'i' = case-insensitive) — not
-    // Spark's numeric start position. Without 'g' the reference
-    // replaces only the FIRST match (RE2::Replace vs GlobalReplace)
-    // — honored via RegExpReplaceFirst. Documented divergence: the
-    // 3-arg form KEEPS Spark's replace-all semantics (the reference
-    // replaces only the first match without 'g') — flipping it would
-    // silently change every existing DataFrame-API caller, the worse
-    // trade; write 'g' explicitly for portable text.
-    register(e, "regexp_replace") { args =>
-      if (args.length == 4 && args(3).foldable &&
-          args(3).dataType == StringType) {
-        val opts = constString("regexp_replace", args(3))
-        val pat = if (opts.contains("i"))
-          UnresolvedFunction(Seq("concat"), Seq(Literal("(?i)"), args(1)), isDistinct = false)
-        else args(1)
-        if (opts.contains("g")) RegExpReplace(args(0), pat, args(2))
-        else RegExpReplaceFirst(args(0), pat, args(2))
-      } else if (args.length == 3) RegExpReplace(args(0), args(1), args(2))
-      else RegExpReplace(args(0), args(1), args(2), args(3))
-    }
-
-    // DuckDB's len is polymorphic: characters for strings (same as
-    // Spark's built-in, so existing queries are untouched), element
-    // count for lists (BIGINT, like the reference). Registered over
-    // the built-in to widen it — string results are bit-identical.
-    register(e, "len")(args => LenPoly(args.head))
-    // numeric→integer cast rounding parity (DuckDialect wraps integer
-    // cast targets in these; see DuckRint). _try: unparsable strings
-    // yield NULL (TRY_CAST); plain: they error (CAST, both engines)
-    register(e, "graft_glob")(args => GlobMatch(args(0), args(1)))
-    register(e, "graft_json_path")(args => JsonPathNorm(args.head))
-    register(e, "graft_rint")(args => DuckRint(args.head))
-    register(e, "graft_rint_try")(args => DuckRint(args.head, strict = false))
-
-    // ---- named-argument constructors, positional form -------------
-    // (the `k := v` spelling is rewritten to these by DuckDialect)
-    register(e, "struct_pack")(args => CreateNamedStruct(args))
-    register(e, "struct_insert") { args =>
-      require(args.length >= 3 && (args.length - 1) % 2 == 0,
-        "struct_insert expects (struct, 'name', value, ...)")
-      args.drop(1).grouped(2).foldLeft(args.head) { case (acc, Seq(k, v)) =>
-        UpdateFields(acc, constString("struct_insert", k), v)
-      }
-    }
-    register(e, "union_value") { args =>
-      require(args.length == 2, "union_value expects ('tag', value)")
-      val tag = constString("union_value", args(0))
-      CreateNamedStruct(Seq(
-        Literal("tag"), Literal(tag), Literal(tag), args(1)))
-    }
-
-    // ---- session introspection ------------------------------------
-    register(e, "current_setting") { args =>
-      val key = constString("current_setting", args(0))
-      Literal(SQLConf.get.getConfString(key, ""))
-    }
-    register(e, "current_query") { _ =>
-      Literal(SQLConf.get.getConfString("spark.graft.current_query", ""))
-    }
-    register(e, "txid_current")(_ => Literal(txid.incrementAndGet()))
-    register(e, "current_schemas") { args =>
-      require(args.head.foldable, "current_schemas expects a constant boolean")
-      val incl = args.head.eval(null) == true
-      val db = SparkSession.active.catalog.currentDatabase
-      val schemas = if (incl) Seq(db, "global_temp") else Seq(db)
-      CreateArray(schemas.map(Literal(_)))
-    }
-    register(e, "in_search_path") { args =>
-      val db = constString("in_search_path", args(0))
-      val schema = constString("in_search_path", args(1))
-      val cat = SparkSession.active
-      val hit = db == cat.catalog.currentCatalog &&
-        (schema == cat.catalog.currentDatabase || schema == "global_temp")
-      Literal(hit)
-    }
-    register(e, "alias") { args =>
-      args.head match {
-        case a: UnresolvedAttribute => Literal(a.nameParts.last)
-        case a: Attribute => Literal(a.name)
-        case l: Literal => Literal(l.sql.stripPrefix("L")) // render value text
-        case other => Literal(other.sql)
-      }
-    }
-    register(e, "can_cast_implicitly")(args =>
-      CanCastImplicitly(args(0), args(1)))
-    register(e, "create_sort_key")(args => CreateSortKey(args))
-    // no TIME type in Spark 4.1 (parses, unsupported in Cast):
-    // render the reference's TIMETZ as its VARCHAR form, UTC offset
-    register(e, "get_current_time") { _ =>
-      uf("concat", Seq(
-        uf("date_format", Seq(uf("now", Nil), Literal("HH:mm:ss.SSSSSS"))),
-        Literal("+00")))
-    }
-  }
-}
+/* Expressions behind the dialect's operator spellings, slices,
+ * subscripts and cast rounding; FunctionTable injects them under the
+ * reference's names. */
 
 /** First-match-only regexp replacement — the reference's 4-arg
   * regexp_replace WITHOUT 'g' in the options string binds
@@ -681,11 +342,6 @@ case class ListExtract(input: Expression, index: Expression)
     copy(input = l, index = r)
 }
 
-/** DuckDB's polymorphic len (string → characters, like Spark's
-  * built-in length; list → element count as BIGINT, like the
-  * reference; binary → bytes). Registered over the string-only
-  * built-in so dialect queries like len(list_filter(...)) resolve.
-  */
 /** The reference's numeric→integer CAST rounds; Spark's truncates.
   * This expression applies the reference's per-type rounding rule so
   * `CAST(graft_rint(x) AS INT)` (what the dialect emits for integer
@@ -828,6 +484,11 @@ object JsonPathNorm {
   }
 }
 
+/** DuckDB's polymorphic len (string → characters, like Spark's
+  * built-in length; list → element count as BIGINT, like the
+  * reference; binary → bytes). Registered over the string-only
+  * built-in so dialect queries like len(list_filter(...)) resolve.
+  */
 case class LenPoly(input: Expression) extends UnaryExpression {
   override def child: Expression = input
   override def dataType: DataType = input.dataType match {

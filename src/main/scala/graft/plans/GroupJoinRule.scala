@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -108,25 +107,5 @@ object GroupJoinRule extends Rule[LogicalPlan] {
         case other => !isAgg(other) && other.references.subsetOf(left.outputSet)
       }
     }
-  }
-}
-
-/** Engine extensions entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => GroupJoinRule)
-    e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    // secondary-transaction reader snapshots (sources/Txn): post-hoc
-    // so relations are already resolved to their file sources
-    e.injectPostHocResolutionRule(s => SecondarySnapshotRule(s))
-    SqlRegistry.registerAll(e)
-    SqlRegistry2.registerAll(e)
-    RefAliases.registerAll(e)
-    DuckNames.registerAll(e)
-    HugeintReg.install(e)
-    VarintReg.install(e)
   }
 }

@@ -2,10 +2,7 @@ package graft.plans
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -278,26 +275,4 @@ case class HugeintUnOp(child: Expression, op: String, signed: Boolean)
     }
   override protected def withNewChildInternal(c: Expression): HugeintUnOp =
     copy(child = c)
-}
-
-object HugeintReg {
-  private def info(name: String) =
-    new ExpressionInfo(classOf[UnresolvedFunction].getCanonicalName, name)
-
-  private def reg(e: SparkSessionExtensions, name: String)(
-      builder: Seq[Expression] => Expression): Unit =
-    e.injectFunction((FunctionIdentifier(name), info(name), builder))
-
-  def install(e: SparkSessionExtensions): Unit = {
-    for ((prefix, signed) <- Seq(("hugeint", true), ("uhugeint", false))) {
-      reg(e, prefix)(a => HugeintParse(a.head, signed))
-      reg(e, s"${prefix}_lift")(a => HugeintLift(a.head, signed))
-      reg(e, s"${prefix}_str")(a => HugeintRender(a.head, signed))
-      for (op <- Seq("add", "sub", "mul", "div", "mod", "shl", "shr",
-          "and", "or", "xor"))
-        reg(e, s"${prefix}_$op")(a => HugeintBinOp(a(0), a(1), op, signed))
-      for (op <- Seq("neg", "abs", "dbl", "long"))
-        reg(e, s"${prefix}_$op")(a => HugeintUnOp(a.head, op, signed))
-    }
-  }
 }

@@ -790,7 +790,7 @@ object SqlPasses {
     * actually found (every join's ON directly following its right
     * side is the normal left-assoc grammar — untouched).
     */
-  private[graft] def nestedJoinPass(sql: String): String = try {
+  private[graft] def nestedJoinPass(sql: String): String = {
     import graft.sources.DmlSql.topIndexOf
     val fromIdx = topIndexOf(sql, "FROM")
     if (fromIdx < 0) return sql
@@ -809,7 +809,9 @@ object SqlPasses {
       val ch = seg.charAt(i)
       if (ch.isWhitespace) i += 1
       else if (ch == '(') {
-        val close = matchParen(seg, i)
+        // a paren left open inside the segment (a quoted name or a
+        // comment holding one) is not a join tree this pass can read
+        val close = try matchParen(seg, i) catch { case _: IllegalArgumentException => return sql }
         toks += seg.substring(i, close + 1); i = close + 1
       } else if (ch == '\'') {
         var j = i + 1
@@ -892,5 +894,5 @@ object SqlPasses {
     if (!deferred) sql
     else sql.substring(0, fromIdx) + "FROM " + items.mkString(", ") +
       " " + rest.substring(segEnd)
-  } catch { case _: Exception => sql }
+  }
 }

@@ -2,10 +2,7 @@ package graft.plans
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -148,19 +145,4 @@ case class VarintToDouble(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.plans.VarintKernel.toDouble($c)")
   override protected def withNewChildInternal(c: Expression): VarintToDouble =
     copy(child = c)
-}
-
-object VarintReg {
-  private def info(name: String) =
-    new ExpressionInfo(classOf[UnresolvedFunction].getCanonicalName, name)
-
-  private def reg(e: SparkSessionExtensions, name: String)(
-      builder: Seq[Expression] => Expression): Unit =
-    e.injectFunction((FunctionIdentifier(name), info(name), builder))
-
-  def install(e: SparkSessionExtensions): Unit = {
-    reg(e, "varint")(a => VarintLift(a.head))
-    reg(e, "varint_str")(a => VarintRender(a.head))
-    reg(e, "varint_dbl")(a => VarintToDouble(a.head))
-  }
 }

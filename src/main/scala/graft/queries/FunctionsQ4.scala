@@ -212,7 +212,7 @@ object FunctionsQ4 {
     // F43: the registered SQL surface — ONE query text, run VERBATIM
     // by both engines. The custom expressions ride Spark's
     // FunctionRegistry under their reference names
-    // (plans/SqlRegistry.scala via GraftExtensions), so a reference
+    // (plans/FunctionTable.scala via GraftExtensions), so a reference
     // user's SQL needs zero translation. This entry is the proof: the
     // string below is both the oracle AND the Spark plan.
     {
@@ -238,9 +238,11 @@ object FunctionsQ4 {
     },
 
     // F44: verbatim date-part SQL — the registry's date family
-    // (dayname/monthname/isodow/isoyear/century/decade/epoch_ms as
-    // expression trees over Spark's own date primitives); one query
-    // text for both engines, same proof shape as F43.
+    // (isodow/isoyear/century/decade/epoch_ms as expression trees over
+    // Spark's own date primitives); one query text for both engines.
+    // It runs through the dialect front door: dayname/monthname are
+    // Spark built-ins with abbreviated names, and the dialect carries
+    // the reference's full-name meaning.
     {
       val q =
         """SELECT o_orderkey,
@@ -254,7 +256,7 @@ object FunctionsQ4 {
           |FROM orders ORDER BY o_orderkey""".stripMargin
       QDef.sql("f44_sql_dates", q) { (s, dir) =>
         Catalog.registerAll(s, dir)
-        s.sql(q)
+        graft.GraftSql.sql(s, q)
       }
     }
   )

@@ -214,7 +214,7 @@ object FunctionsQ6 {
     // F56: verbatim list-function SQL — the f49 family registered
     // under the reference's names as expression trees (list_unique,
     // list_intersect, list_sort, array_to_string, array_slice,
-    // list_aggregate, list_where, yearweek; SqlRegistry lambda-built
+    // list_aggregate, list_where, yearweek; FunctionTable lambda-built
     // HOFs). One query text, both engines — the f43 proof shape.
     {
       val q =

@@ -304,7 +304,7 @@ object FunctionsQ7 {
     // F68: the F60–F65 fringe through the SQL front door — ONE query
     // text, run VERBATIM by both engines (the f43 proof shape). The
     // custom expressions ride Spark's FunctionRegistry under their
-    // reference names (plans/SqlRegistry.scala): left/right_grapheme,
+    // reference names (plans/FunctionTable.scala): left/right_grapheme,
     // nextafter, md5_number(+lower), gamma/lgamma (grid-snapped —
     // libm), and the even/signbit/isfinite/isinf trees.
     {
@@ -472,7 +472,7 @@ object FunctionsQ7 {
 
     // F71: the ALIAS surface, proven the same way f43 proves the
     // custom expressions — ONE query text, run VERBATIM by both
-    // engines (plans/RefAliases registers the reference names in
+    // engines (plans/FunctionTable registers the reference names in
     // Spark's FunctionRegistry). Scalar side: hashing, search,
     // distance, hex render, path parsing, split→transform→aggregate
     // list pipelines, argsort, %-code strftime, python-style format,

@@ -6,7 +6,7 @@ import graft.sources.Catalog
 
 /** F73/F74: the round's name-closure tranche through the SQL front
   * door — holistic aggregates (entropy, mad, quantile/quantile_disc,
-  * bitstring_agg; operators/HolisticAggs.scala + plans/SqlRegistry2)
+  * bitstring_agg; operators/HolisticAggs.scala + plans/FunctionTable)
   * and the scalar stragglers (era, julian, age, datesub,
   * timezone_hour, parse_dirname/parse_path, unbin, bitstring/
   * get_bit/set_bit) — ONE query text runs verbatim on BOTH engines

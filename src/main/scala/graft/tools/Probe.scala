@@ -16,7 +16,7 @@ object Probe {
     args.drop(1).toList match {
       case "fncheck" :: file :: _ =>
         // coverage sweep: which reference core-function names resolve?
-        // (GraftSession already injects SqlRegistry via extensions.)
+        // (GraftSession injects plans/FunctionTable via extensions.)
         // catalog.functionExists PARSES the name, so operator names
         // like `**` never resolve through it — use the session
         // FunctionRegistry directly, which is what the analyzer hits.

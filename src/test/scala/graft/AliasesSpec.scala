@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Name-level alias surface (plans/RefAliases): every check value
+/** Name-level alias surface (plans/FunctionTable): every check value
   * below was pinned by running the same expression in DuckDB first —
   * the alias must reproduce the reference's output, not just parse.
   */

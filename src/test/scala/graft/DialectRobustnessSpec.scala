@@ -216,9 +216,14 @@ class DialectRobustnessSpec extends AnyFunSuite {
     assert(one("SELECT list(v ORDER BY k NULLS LAST) FROM onagg") === Seq(10, 30, 20))
     assert(one("SELECT first(v ORDER BY g ASC, k DESC) FROM onagg") === 30)
     assert(one("SELECT first(v ORDER BY k DESC NULLS FIRST) FROM onagg") === 20)
-    // ANALYZE routes (stats recompute / no-op)
+    // ANALYZE routes (stats recompute / no-op on a temp view); a
+    // missing table raises
     GraftSql.sql(spark, "ANALYZE")
-    GraftSql.sql(spark, "ANALYZE no_such_table") // soft no-op
+    GraftSql.sql(spark, "ANALYZE onagg")
+    val missing = intercept[org.apache.spark.sql.AnalysisException] {
+      GraftSql.sql(spark, "ANALYZE no_such_table")
+    }
+    assert(missing.getCondition === "TABLE_OR_VIEW_NOT_FOUND")
   }
 
   test("IN over list and map collections") {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.DuckDialect
 
 /** The DuckDB-dialect front door (plans/DuckDialect + plans/
-  * DuckNames): every execution check value below was pinned by
+  * FunctionTable): every execution check value below was pinned by
   * running the same text in DuckDB first, so the translation must
   * reproduce the reference's answers, not just parse.
   *

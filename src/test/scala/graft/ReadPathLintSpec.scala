@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Plans are chosen in code, never by a JVM-global system property:
   * such a switch makes every session in the JVM plan differently.
   *
+  * SQL functions enter a session through one table and one loop
+  * (plans/FunctionTable), so a second registration path cannot regrow.
+  *
   * Every runnable tool is documented in the verify skill, so one-off
   * tools cannot pile up unseen.
   */
@@ -50,6 +53,11 @@ class ReadPathLintSpec extends AnyFunSuite {
   test("no JVM system property chooses a plan: engine sources, tools/ included") {
     val found = offenders(scalaSources, graftProperty)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("injectFunction( appears in exactly one file: plans/FunctionTable.scala") {
+    val files = offenders(scalaSources, """injectFunction\s*\(""".r).map(_.takeWhile(_ != ':')).distinct
+    assert(files === Seq(root.resolve("plans/FunctionTable.scala").toString))
   }
 
   test("every object with a main under tools/ is named in the verify skill") {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Second-tranche reference names (plans/SqlRegistry2 +
+/** Second-tranche reference names (plans/FunctionTable +
   * operators/HolisticAggs): every pinned value below was produced by
   * the same expression in DuckDB first (v1.0.0 locally where the
   * function exists; the binned-histogram family post-dates that
