@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.plans.DuckDialect
+import graft.plans.{DuckDialect, SqlText}
 import graft.plans.{StatementSurface => S}
 
 /** The DuckDB-dialect front door: run the reference engine's query
   * text verbatim. `sql` translates the dialect-specific spellings
   * (plans/DuckDialect) and hands the result to Catalyst; the original
   * text is recorded in the session so `current_query()` answers like
-  * the reference's.
+  * the reference's. Every statement pass here reads the text through
+  * plans/SqlText, the one lexical rule: keywords, parens and commas
+  * inside literals, quoted names and comments are never code.
   */
 object GraftSql {
   def translate(text: String): String = DuckDialect.translate(text)
@@ -34,37 +36,27 @@ object GraftSql {
   private def limitPercentSplit(text0: String)
       : Option[(String, String, Option[String])] = {
     val text = text0.trim.stripSuffix(";")
-    val m = "(?is)\\bLIMIT\\s+".r.findAllMatchIn(text).toSeq.lastOption
-      .getOrElse(return None)
-    // top-level only
-    var depth = 0
-    var q = false
-    var i = 0
-    while (i < m.start) {
-      val c = text.charAt(i)
-      if (c == '\'') q = !q
-      else if (!q && c == '(') depth += 1
-      else if (!q && c == ')') depth -= 1
-      i += 1
-    }
-    if (depth != 0 || q) return None
-    var j = m.end
-    val pct =
-      if (j < text.length && text.charAt(j) == '(') {
-        val cl = graft.plans.SqlPasses.matchParen(text, j)
-        val s = text.substring(j, cl + 1); j = cl + 1; s
-      } else {
+    // the last top-level LIMIT
+    var at = SqlText.topIndexOf(text, "LIMIT")
+    if (at < 0) return None
+    var later = SqlText.topIndexOf(text, "LIMIT", at + 5)
+    while (later >= 0) { at = later; later = SqlText.topIndexOf(text, "LIMIT", at + 5) }
+    var j = at + 5
+    while (j < text.length && text.charAt(j).isWhitespace) j += 1
+    val pctEnd =
+      if (j < text.length && text.charAt(j) == '(') SqlText.matchParen(text, j) + 1
+      else {
         val num = "^(\\d+(?:\\.\\d+)?)".r.findFirstIn(text.substring(j))
         val call = "^([A-Za-z_]\\w*\\s*\\()".r.findFirstMatchIn(text.substring(j))
         (num, call) match {
-          case (Some(n), _) => j += n.length; n
-          case (_, Some(c)) =>
-            val open = j + c.group(1).length - 1
-            val cl = graft.plans.SqlPasses.matchParen(text, open)
-            val s = text.substring(j, cl + 1); j = cl + 1; s
+          case (Some(n), _) => j + n.length
+          case (_, Some(c)) => SqlText.matchParen(text, j + c.group(1).length - 1) + 1
           case _ => return None
         }
       }
+    if (pctEnd <= j) return None
+    val pct = text.substring(j, pctEnd)
+    j = pctEnd
     val afterPct = text.substring(j)
     val pm = "(?is)^\\s*(%|PERCENT)\\s*".r.findFirstMatchIn(afterPct)
       .getOrElse(return None)
@@ -75,7 +67,7 @@ object GraftSql {
         case Some(om) => Some(om.group(1).trim)
         case None => return None // something else trails — not this form
       }
-    Some((text.substring(0, m.start), pct, off))
+    Some((text.substring(0, at), pct, off))
   }
   private val Explain = """(?is)^\s*EXPLAIN(\s+ANALYZE)?\s+(.*)$""".r
   private val CheckpointRe = """(?is)^\s*(?:FORCE\s+)?CHECKPOINT\s*;?\s*$""".r
@@ -103,38 +95,19 @@ object GraftSql {
   /** The reference's lexer maps invisible unicode spaces to plain
     * spaces BEFORE parsing (test/sql/parser/invisible_spaces.test:
     * U+2000–U+200B, U+202F, U+3000, U+205F, U+FEFF, U+00A0) — inside
-    * string literals they are data and must survive. */
-  private def mapInvisibleSpaces(s: String): String =
-    if (!s.exists(isInvisibleSpace)) s
-    else {
-      val out = new StringBuilder(s.length)
-      var inStr = false
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\'') { inStr = !inStr; out += c }
-        else if (!inStr && isInvisibleSpace(c)) out += ' '
-        else out += c
-        i += 1
-      }
-      out.toString
-    }
-  private def isInvisibleSpace(c: Char): Boolean =
-    (c >= '\u2000' && c <= '\u200B') || c == '\u202F' ||
-      c == '\u3000' || c == '\u205F' || c == '\uFEFF' || c == '\u00A0'
+    * literals and quoted names they are data and must survive. */
+  private val InvisibleSpace = "[\u2000-\u200B\u202F\u3000\u205F\uFEFF\u00A0]".r
 
   def sql(spark: SparkSession, text00: String): DataFrame = {
-    val text0 = mapInvisibleSpaces(text00)
+    // comments go first: the statement layer's verb patterns would
+    // read a trailing `-- note` as part of the statement
+    val text0 = SqlText.stripComments(SqlText.replaceInCode(text00, InvisibleSpace)(_ => " "))
     spark.conf.set("spark.graft.current_query", text00)
     // an empty / whitespace-only / comment-only statement is a no-op
     // (the reference's `statement ok` on a lone invisible space)
-    if (text0.linesIterator.map(_.trim).forall(
-        l => l.isEmpty || l.startsWith("--")))
-      return spark.emptyDataFrame
+    if (text0.trim.isEmpty) return spark.emptyDataFrame
     // CREATE MACRO registers; every other statement gets macro calls
     // textually inlined first (the reference binder does the same)
-    graft.plans.DuckDialect.nativeTime =
-      spark.conf.getOption("spark.sql.timeType.enabled").contains("true")
     if (graft.plans.MacroReg.isCreate(text0)) {
       graft.plans.MacroReg.register(text0)
       return spark.emptyDataFrame
@@ -248,7 +221,7 @@ object GraftSql {
       case graft.plans.Variables.ShowVarRe() =>
         return graft.plans.Variables.listDf(spark)
       case S.SetRe(key, value) =>
-        spark.conf.set(S.confKey(key), S.stripQuotes(value))
+        spark.conf.set(S.confKey(key), SqlText.decode(value).getOrElse(value.trim))
         return S.emptyDf(spark)
       case S.ResetRe(key) =>
         spark.conf.unset(S.confKey(key)); return S.emptyDf(spark)
@@ -256,7 +229,7 @@ object GraftSql {
         return S.pragmaReport(spark, name, arg).getOrElse(
           throw new IllegalArgumentException(s"PRAGMA $name: not supported"))
       case S.PragmaAssign(name, value) =>
-        spark.conf.set(S.confKey(name), S.stripQuotes(value))
+        spark.conf.set(S.confKey(name), SqlText.decode(value).getOrElse(value.trim))
         return S.emptyDf(spark)
       case S.PragmaBare(name) =>
         return S.pragmaReport(spark, name, "").getOrElse {
@@ -575,16 +548,15 @@ object GraftSql {
         val schema = spark.table(table).schema
         val cols: Seq[org.apache.spark.sql.types.StructField] =
           Option(colList) match {
-            case Some(cl) => graft.sources.DmlSql.topSplit(cl, ',')
+            case Some(cl) => SqlText.splitTop(cl, ',')
               .map(c => schema(schema.fieldIndex(
                 c.trim.stripPrefix("`").stripSuffix("`"))))
             case None => schema.fields.toSeq
           }
-        val rows = graft.sources.DmlSql.topSplit(rowsText, ',').map { row0 =>
+        val rows = SqlText.splitTop(rowsText, ',').map { row0 =>
           val row = row0.trim
           if (!row.startsWith("(") || !row.endsWith(")")) return None
-          val vals = graft.sources.DmlSql.topSplit(
-            row.stripPrefix("(").stripSuffix(")"), ',')
+          val vals = SqlText.splitTop(row.stripPrefix("(").stripSuffix(")"), ',')
           if (vals.length != cols.length) return None
           vals.zip(cols).map { case (v, f) =>
             if (v.trim.equalsIgnoreCase("DEFAULT")) v
@@ -609,7 +581,8 @@ object GraftSql {
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     var going = true
     while (going && i < sql.length && sql.charAt(i) == '(') {
-      val close = graft.plans.SqlPasses.matchParen(sql, i)
+      val close = SqlText.matchParen(sql, i)
+      if (close < 0) return None
       rows += ((i, close))
       var k = close + 1
       while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
@@ -621,20 +594,18 @@ object GraftSql {
     }
     if (rows.length < 2) return None
     val NumLit = """^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$""".r
-    val StrLit = """^'([^']|'')*'$""".r
-    val cells = rows.map { case (o, c) =>
-      graft.sources.DmlSql.topSplit(sql.substring(o + 1, c), ',').map(_.trim)
-    }
+    def isStr(v: String) = SqlText.decode(v).isDefined
+    val cells = rows.map { case (o, c) => SqlText.splitTop(sql.substring(o + 1, c), ',') }
     val width = cells.map(_.length).max
     val mixedCols = (0 until width).filter { ci =>
       val col = cells.flatMap(_.lift(ci))
       col.exists(v => NumLit.findFirstIn(v).isDefined) &&
-        col.exists(v => StrLit.findFirstIn(v).isDefined)
+        col.exists(isStr)
     }.toSet
     if (mixedCols.isEmpty) return None
     val newRows = cells.map { row =>
       row.zipWithIndex.map { case (v, ci) =>
-        if (mixedCols(ci) && StrLit.findFirstIn(v).isDefined)
+        if (mixedCols(ci) && isStr(v))
           s"CAST($v AS DOUBLE)"
         else v
       }.mkString("(", ", ", ")")
@@ -658,10 +629,8 @@ object GraftSql {
   // through the statement layer and splices the result as a relation
   private val SubStmtRe = "(?i)\\(\\s*(DESCRIBE|SUMMARIZE|SHOW)\\b".r
   private def subStatementPass(spark: SparkSession, text: String): Option[String] =
-    SubStmtRe.findAllMatchIn(text)
-      .find(m => !graft.plans.SqlPasses.inQuote(text, m.start))
-      .map { m =>
-      val close = graft.plans.SqlPasses.matchParen(text, m.start)
+    SqlText.findInCode(text, SubStmtRe).map { m =>
+      val close = SqlText.matchParen(text, m.start)
       val inner = text.substring(m.start + 1, close).trim
       val df = sql(spark, inner)
       val view = s"__sub_${asofViewId.incrementAndGet()}"
@@ -677,27 +646,19 @@ object GraftSql {
     */
   private def unionByNamePass(spark: SparkSession, text: String): Option[String] = {
     val Re = "(?i)\\bUNION\\s+(ALL\\s+)?BY\\s+NAME\\b".r
-    Re.findFirstMatchIn(text).map { m =>
+    SqlText.findInCode(text, Re).map { m =>
       val all = m.group(1) != null
       // enclosing scope: the '(' whose depth the match sits inside
-      var depth = 0
-      var open = -1
-      var i = m.start - 1
-      while (i >= 0 && open < 0) {
-        val c = text.charAt(i)
-        if (c == ')') depth += 1
-        else if (c == '(') { if (depth == 0) open = i else depth -= 1 }
-        i -= 1
-      }
-      val close = if (open >= 0) graft.plans.SqlPasses.matchParen(text, open) else text.length
+      val open = SqlText.openParen(text, m.start)
+      val close = if (open >= 0) SqlText.matchParen(text, open) else text.length
       val scopeStart = if (open >= 0) open + 1 else 0
       val left0 = text.substring(scopeStart, m.start)
       // The scope may carry a statement prefix (CREATE TABLE t AS …,
       // INSERT INTO t …, EXPLAIN …): only the SELECT/WITH query text
       // belongs to the left arm — everything before it must stay in
       // the spliced statement, not be executed as part of the arm.
-      val selIdx = graft.sources.DmlSql.topIndexOf(left0, "SELECT")
-      val withIdx = graft.sources.DmlSql.topIndexOf(left0, "WITH")
+      val selIdx = SqlText.topIndexOf(left0, "SELECT")
+      val withIdx = SqlText.topIndexOf(left0, "WITH")
       val qStart = (selIdx, withIdx) match {
         case (-1, -1) => return None
         case (-1, w) => w
@@ -712,7 +673,7 @@ object GraftSql {
       // cut the arm at the first top-level tail clause and re-apply
       // the tail to the spliced view.
       val tailStart = Seq("ORDER BY", "LIMIT", "OFFSET")
-        .map(graft.sources.DmlSql.topIndexOf(right0, _))
+        .map(SqlText.topIndexOf(right0, _))
         .filter(_ >= 0) match {
           case Nil => right0.length
           case idxs => idxs.min
@@ -736,37 +697,72 @@ object GraftSql {
     * its columns (lazy — no execution), then project explicitly with
     * the replaced expressions substituted in place.
     */
-  private val NaturalSemiAnti =
-    """(?i)(\bFROM\s+|,\s*|\(\s*)([\w.`"]+)\s+NATURAL\s+(SEMI|ANTI)\s+JOIN\s+([\w.`"]+)""".r
+  /** The relations around a join verb at `[kw, kwEnd)`: the left one
+    * runs from the last FROM, `,` or `(` before the verb at its depth;
+    * the right one is a paren group or a name, then an alias unless the
+    * next word is a clause keyword. (leftStart, left, right relation,
+    * right alias, end of the right side).
+    */
+  private def joinOperands(sql: String, kw: Int, kwEnd: Int)
+      : Option[(Int, String, String, Option[String], Int)] = {
+    val starts = scala.collection.mutable.Map.empty[Int, Int]
+    var depth = 0
+    SqlText.findCode(sql) { (i, d) =>
+      depth = d
+      if (i < kw) sql.charAt(i) match {
+        case '(' => starts(d + 1) = i + 1
+        case ',' => starts(d) = i + 1
+        case _ => if (SqlText.wordAt(sql, i, "FROM")) starts(d) = i + 4
+      }
+      i >= kw
+    }
+    val leftStart = starts.getOrElse(depth, return None)
+    var j = kwEnd
+    while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
+    val relEnd =
+      if (j < sql.length && sql.charAt(j) == '(') SqlText.matchParen(sql, j) + 1
+      else {
+        var k = j
+        while (k < sql.length && (SqlText.isWordChar(sql.charAt(k)) ||
+            sql.charAt(k) == '.' || SqlText.spanEnd(sql, k) > k))
+          k = SqlText.spanEnd(sql, k).max(k + 1)
+        k
+      }
+    if (relEnd <= j) return None
+    val TailKw = Set("WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET", "HAVING",
+      "UNION", "EXCEPT", "INTERSECT", "QUALIFY", "WINDOW", "JOIN", "LEFT",
+      "RIGHT", "FULL", "INNER", "CROSS", "POSITIONAL", "NATURAL", "ON", "USING")
+    val alias = "(?is)^\\s+(?:AS\\s+)?([A-Za-z_]\\w*)".r
+      .findFirstMatchIn(sql.substring(relEnd)).filterNot(m => TailKw(m.group(1).toUpperCase))
+    Some((leftStart, sql.substring(leftStart, kw).trim, sql.substring(j, relEnd),
+      alias.map(_.group(1)), relEnd + alias.map(_.end).getOrElse(0)))
+  }
+
+  private val NaturalSemiAnti = "(?i)\\bNATURAL\\s+(SEMI|ANTI)\\s+JOIN\\b".r
 
   /** `A NATURAL SEMI|ANTI JOIN B` → `A LEFT SEMI|ANTI JOIN B USING
-    * (common)` with the common columns probed from the catalog.
-    * Anchored so the rewrite only fires when the ENTIRE left operand
-    * of the NATURAL join is the captured named relation (directly
-    * after FROM, a comma, or an opening paren) — in
-    * `a NATURAL JOIN b NATURAL SEMI JOIN c` the reference derives
-    * USING from the whole (a⋈b) schema, which a single-name capture
-    * would silently get wrong, so that shape passes through and fails
-    * loudly in Spark's parser instead. Matches inside string literals
-    * are skipped (quote-parity check). */
+    * (common)` with the common columns probed through the front door.
+    * Fires only when the left operand is one relation (a name or a
+    * subquery, with its alias) — in `a NATURAL JOIN b NATURAL SEMI
+    * JOIN c` the reference derives USING from the whole (a⋈b) schema,
+    * so that shape passes through and fails loudly in Spark's parser
+    * instead. */
   private def naturalSemiAntiPass(spark: SparkSession, sql0: String): String = {
-    if (!"(?i)NATURAL\\s+(SEMI|ANTI)\\s+JOIN".r.findFirstIn(sql0).isDefined) return sql0
-    NaturalSemiAnti.replaceAllIn(sql0, m => {
-      val inLiteral = sql0.substring(0, m.start).count(_ == '\'') % 2 == 1
-      val rep =
-        if (inLiteral) m.matched
-        else try {
-          val lt = m.group(2).replace("\"", "")
-          val rt = m.group(4).replace("\"", "")
-          val l = spark.table(lt).columns
-          val r = spark.table(rt).columns.map(_.toLowerCase).toSet
-          val common = l.filter(c => r.contains(c.toLowerCase))
-          if (common.isEmpty) m.matched
-          else s"${m.group(1)}${m.group(2)} LEFT ${m.group(3).toUpperCase} JOIN ${m.group(4)} " +
-            s"USING (${common.map(c => s"`$c`").mkString(", ")})"
-        } catch { case _: Exception => m.matched }
-      java.util.regex.Matcher.quoteReplacement(rep)
-    })
+    for (m <- NaturalSemiAnti.findAllMatchIn(sql0) if SqlText.inCode(sql0, m.start))
+      joinOperands(sql0, m.start, m.end) match {
+        case Some((ls, left, rel, alias, re)) if SqlText.topIndexOf(left, "JOIN") < 0 =>
+          val right = rel + alias.map(" " + _).getOrElse("")
+          val common = try {
+            val l = sql(spark, s"SELECT * FROM $left").columns
+            val r = sql(spark, s"SELECT * FROM $right").columns.map(_.toLowerCase).toSet
+            l.filter(c => r.contains(c.toLowerCase))
+          } catch { case _: Exception => Array.empty[String] }
+          if (common.nonEmpty)
+            return sql0.substring(0, ls) + s" $left LEFT ${m.group(1).toUpperCase} JOIN $right " +
+              s"USING (${common.map(c => s"`$c`").mkString(", ")})" + sql0.substring(re)
+        case _ =>
+      }
+    sql0
   }
 
   /** `A POSITIONAL JOIN B` (reference positional join; the operator
@@ -779,59 +775,16 @@ object GraftSql {
     * relations' columns so the helper __pos never leaks.
     */
   private def positionalJoinPass(spark: SparkSession, sql0: String): String = {
-    val kwIdx = graft.sources.DmlSql.topIndexOf(sql0, "POSITIONAL")
+    val kwIdx = SqlText.topIndexOf(sql0, "POSITIONAL JOIN")
     if (kwIdx < 0) return sql0
-    val afterKw = sql0.substring(kwIdx + "POSITIONAL".length)
-    if (!afterKw.matches("(?is)^\\s+JOIN\\b.*")) return sql0
-    val joinEnd = kwIdx + "POSITIONAL".length +
-      "(?is)^\\s+JOIN".r.findFirstIn(afterKw).get.length
-    // left side: from the last top-level FROM (or comma) before the verb
-    val fromIdx = {
-      var best = -1
-      var i = 0
-      var depth = 0
-      while (i < kwIdx - 3) {
-        val c = sql0.charAt(i)
-        if (c == '\'') { i += 1; while (i < kwIdx && sql0.charAt(i) != '\'') i += 1 }
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && sql0.regionMatches(true, i, "FROM", 0, 4) &&
-            (i == 0 || !sql0.charAt(i - 1).isLetterOrDigit) &&
-            (i + 4 >= sql0.length || !sql0.charAt(i + 4).isLetterOrDigit))
-          best = i + 4
-        i += 1
-      }
-      best
-    }
-    if (fromIdx < 0) return sql0
-    val leftRaw = sql0.substring(fromIdx, kwIdx).trim
-    // right side: relation (paren group or name) + optional alias
-    var j = joinEnd
-    while (j < sql0.length && sql0.charAt(j).isWhitespace) j += 1
-    val (rightRel, afterRel) =
-      if (j < sql0.length && sql0.charAt(j) == '(') {
-        val close = graft.plans.SqlPasses.matchParen(sql0, j)
-        (sql0.substring(j, close + 1), close + 1)
-      } else {
-        var k = j
-        while (k < sql0.length && (sql0.charAt(k).isLetterOrDigit ||
-          "._`\"".indexOf(sql0.charAt(k)) >= 0)) k += 1
-        (sql0.substring(j, k), k)
-      }
-    val TailKw = Set("WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET", "HAVING",
-      "UNION", "EXCEPT", "INTERSECT", "QUALIFY", "WINDOW", "JOIN", "LEFT",
-      "RIGHT", "FULL", "INNER", "CROSS", "POSITIONAL", "ON", "USING")
-    val aliasM = "(?is)^\\s+(?:AS\\s+)?([A-Za-z_]\\w*)".r.findFirstMatchIn(
-      sql0.substring(afterRel))
-    val (rightAlias, rightEnd) = aliasM match {
-      case Some(m) if !TailKw(m.group(1).toUpperCase) =>
-        (m.group(1), afterRel + m.end)
-      case _ => ("__pjr", afterRel)
-    }
+    val joinEnd = kwIdx + "(?is)^POSITIONAL\\s+JOIN".r.findFirstIn(sql0.substring(kwIdx)).get.length
+    val (fromIdx, leftRaw, rRel0, alias, rightEnd) =
+      joinOperands(sql0, kwIdx, joinEnd).getOrElse(return sql0)
+    val rAl = alias.getOrElse("__pjr")
     def split(rel: String): (String, String) = {
       val t = rel.trim
       if (t.startsWith("(")) {
-        val close = graft.plans.SqlPasses.matchParen(t, 0)
+        val close = SqlText.matchParen(t, 0)
         val al = t.substring(close + 1).trim.replaceAll("(?i)^AS\\s+", "")
         (t.substring(0, close + 1), if (al.nonEmpty) al else "__pjl")
       } else {
@@ -842,7 +795,6 @@ object GraftSql {
       }
     }
     val (lRel, lAl) = split(leftRaw)
-    val (rRel0, rAl) = (rightRel, rightAlias)
     def wrap(rel: String, al: String): String =
       s"(SELECT *, row_number() OVER (ORDER BY monotonically_increasing_id()) " +
         s"AS __pos FROM $rel __pj_$al) $al"
@@ -863,7 +815,7 @@ object GraftSql {
     // the statement isn't aggregating / a set op), sort by the
     // coalesced position — ORDER BY may reference non-projected FROM
     // columns, so __pos still never leaks into the output (r13 advice).
-    import graft.sources.DmlSql.topIndexOf
+    import SqlText.topIndexOf
     val selectHead = sql0.substring(0, fromIdx)
     // an agg-function spelling followed by OVER is a WINDOW call, not
     // an aggregation — the row set stays 1:1 with the zip, so those
@@ -871,10 +823,8 @@ object GraftSql {
     val aggregating =
       "(?i)\\b(count|sum|min|max|avg)\\s*\\(".r.findAllMatchIn(selectHead)
         .exists { m =>
-          try {
-            val close = graft.plans.SqlPasses.matchParen(selectHead, m.end - 1)
-            !selectHead.substring(close + 1).trim.toUpperCase.startsWith("OVER")
-          } catch { case _: IllegalArgumentException => true }
+          val close = SqlText.matchParen(selectHead, m.end - 1)
+          close < 0 || !selectHead.substring(close + 1).trim.toUpperCase.startsWith("OVER")
         }
     // SELECT DISTINCT: __pos is outside the distinct projection, so
     // an injected ORDER BY __pos would be an AnalysisException — skip
@@ -904,7 +854,7 @@ object GraftSql {
     val BareRe = "(?i)SELECT\\s+\\*\\s*(EXCEPT\\s*\\([^)]*\\)\\s*)?REPLACE\\s+(?!\\()".r
     val sql1 = BareRe.findFirstMatchIn(sql0) match {
       case Some(b) =>
-        val fromIdx = graft.sources.DmlSql.topIndexOf(sql0.substring(b.end), "FROM")
+        val fromIdx = SqlText.topIndexOf(sql0.substring(b.end), "FROM")
         if (fromIdx < 0) sql0
         else sql0.substring(0, b.end) + "(" +
           sql0.substring(b.end, b.end + fromIdx).trim + ") " +
@@ -913,7 +863,7 @@ object GraftSql {
     }
     val Re = "(?i)SELECT\\s+\\*\\s*(EXCEPT\\s*\\([^)]*\\)\\s*)?REPLACE\\s*\\(".r
     val m = Re.findFirstMatchIn(sql1).getOrElse(return sql0)
-    import graft.plans.SqlPasses.matchParen
+    import SqlText.matchParen
     val repOpen = sql1.lastIndexOf('(', m.end - 1)
     val repClose = matchParen(sql1, repOpen)
     var listText = sql1.substring(repOpen + 1, repClose)
@@ -921,21 +871,21 @@ object GraftSql {
     // the translator parenthesizes a paren-free REPLACE's expr, giving
     // `REPLACE (expr) AS name … FROM`: when the paren group carries no
     // top-level AS and AS follows the close, the real list runs to FROM
-    if (graft.sources.DmlSql.topIndexOf(listText, "AS") < 0 &&
+    if (SqlText.topIndexOf(listText, "AS") < 0 &&
         sql1.substring(repClose + 1).trim.toUpperCase.startsWith("AS")) {
       val tail = sql1.substring(repClose + 1)
-      val fromIdx = graft.sources.DmlSql.topIndexOf(tail, "FROM")
+      val fromIdx = SqlText.topIndexOf(tail, "FROM")
       if (fromIdx >= 0) {
         listText = sql1.substring(repOpen, repClose + 1) + tail.substring(0, fromIdx)
         afterList = repClose + 1 + fromIdx
       }
     }
-    val repList = graft.sources.DmlSql.topSplit(listText, ',')
+    val repList = SqlText.splitTop(listText, ',')
     val rest = sql1.substring(afterList)
     val exceptPart = Option(m.group(1)).getOrElse("")
     val probeCols = spark.sql(s"SELECT * $exceptPart $rest").columns.toSeq
     val repMap = repList.map { item =>
-      val asIdx = graft.sources.DmlSql.topIndexOf(item, "AS")
+      val asIdx = SqlText.topIndexOf(item, "AS")
       require(asIdx > 0, s"REPLACE: expected `expr AS name`, got: $item")
       val name = item.substring(asIdx + 2).trim.stripPrefix("`").stripSuffix("`")
       name.toLowerCase -> item.substring(0, asIdx).trim
@@ -961,7 +911,7 @@ object GraftSql {
       "(?i)([A-Za-z_]\\w*)\\s*\\(\\s*COLUMNS\\s*\\(\\s*(\\*|'[^']*')\\s*\\)\\s*\\)".r
     val UnpackRe =
       "(?i)([A-Za-z_]\\w*)\\s*\\(\\s*\\*\\s*COLUMNS\\s*\\(\\s*(\\*|'[^']*')\\s*\\)\\s*\\)".r
-    val fromIdx = graft.sources.DmlSql.topIndexOf(sql0, "FROM")
+    val fromIdx = SqlText.topIndexOf(sql0, "FROM")
     if (fromIdx < 0 ||
       (MapRe.findFirstIn(sql0).isEmpty && UnpackRe.findFirstIn(sql0).isEmpty))
       return sql0
@@ -1024,49 +974,12 @@ object GraftSql {
   def runScript(spark: SparkSession, script: String): Seq[DataFrame] =
     splitStatements(script).map(sql(spark, _))
 
-  /** `;`-splitting that respects '…'/"…" literals and --/block
-    * comments (comments are dropped so a trailing `-- note` never
-    * hides the next statement).
+  /** `;`-splitting outside literals, quoted names and comments
+    * (comments are dropped so a trailing `-- note` never hides the
+    * next statement).
     */
-  def splitStatements(script: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    val n = script.length
-    def flush(): Unit = {
-      val s = cur.toString.trim
-      if (s.nonEmpty) out += s
-      cur.clear()
-    }
-    while (i < n) {
-      val c = script.charAt(i)
-      if (c == '-' && i + 1 < n && script.charAt(i + 1) == '-') {
-        while (i < n && script.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && script.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < n && !(script.charAt(i) == '*' && script.charAt(i + 1) == '/')) i += 1
-        i += 2
-      } else if (c == '\'' || c == '"') {
-        val q = c
-        cur.append(c); i += 1
-        var open = true
-        while (i < n && open) {
-          val ch = script.charAt(i)
-          cur.append(ch); i += 1
-          if (ch == q) {
-            if (i < n && script.charAt(i) == q) { cur.append(q); i += 1 } // '' doubling
-            else open = false
-          }
-        }
-      } else if (c == ';') {
-        flush(); i += 1
-      } else {
-        cur.append(c); i += 1
-      }
-    }
-    flush()
-    out.result()
-  }
+  def splitStatements(script: String): Seq[String] =
+    SqlText.splitTop(SqlText.stripComments(script), ';')
 
   /** EXPLAIN → Spark's formatted plan; EXPLAIN ANALYZE → execute,
     * then render the final (AQE-resolved) physical tree with each

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.DmlSql.{topIndexOf, topSplit}
+import SqlText.{splitTop, topIndexOf}
 
 /** `ASOF [LEFT] JOIN` statement syntax through the front door — the
   * reference's spelling (parser/transform/tableref/transform_join.cpp:54
@@ -61,7 +61,7 @@ object AsofSql {
         i += 2
         while (i < text.length && text.charAt(i).isWhitespace) i += 1
         if (i >= text.length || text.charAt(i) != '(') return false
-        val close = SqlPasses.matchParen(text, i)
+        val close = SqlText.matchParen(text, i)
         if (matches(text.substring(i + 1, close))) found = true
         i = close + 1
         while (i < text.length && text.charAt(i).isWhitespace) i += 1
@@ -90,7 +90,7 @@ object AsofSql {
         i += 2
         while (i < text.length && text.charAt(i).isWhitespace) i += 1
         require(text.charAt(i) == '(', "WITH: expected (query)")
-        val close = SqlPasses.matchParen(text, i)
+        val close = SqlText.matchParen(text, i)
         graft.GraftSql.sql(spark, text.substring(i + 1, close))
           .createOrReplaceTempView(name)
         i = close + 1
@@ -232,7 +232,7 @@ object AsofSql {
       // materialize through the front door as a temp view. Bare
       // VALUES bodies get the reference's col0… column names (Spark
       // numbers them col1…).
-      val close = SqlPasses.matchParen(t, 0)
+      val close = SqlText.matchParen(t, 0)
       var df = graft.GraftSql.sql(spark, t.substring(1, close))
       if (t.substring(1, close).trim.toUpperCase.startsWith("VALUES") &&
           df.columns.forall(_.matches("col\\d+")))
@@ -247,7 +247,7 @@ object AsofSql {
         .filter(_.nonEmpty)
       if (alias.nonEmpty && aliasRaw.contains("(")) {
         val open = aliasRaw.indexOf('(')
-        val cls = SqlPasses.matchParen(aliasRaw, open)
+        val cls = SqlText.matchParen(aliasRaw, open)
         val cols = aliasRaw.substring(open + 1, cls).split(",").map(_.trim)
           .map(_.stripPrefix("\"").stripSuffix("\""))
         if (cols.length == df.columns.length)
@@ -283,22 +283,10 @@ object AsofSql {
 
   /** Find the one top-level comparison operator in a conjunct. */
   private def comparison(s: String): (String, String, String) = {
-    var depth = 0
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1; while (i < n && s.charAt(i) != '\'') i += 1; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && (c == '<' || c == '>' || c == '=')) {
-        val op =
-          if (i + 1 < n && s.charAt(i + 1) == '=') s.substring(i, i + 2)
-          else c.toString
-        return (s.substring(0, i), op, s.substring(i + op.length))
-      } else i += 1
-    }
-    throw new IllegalArgumentException(s"ASOF JOIN: no comparison in `$s`")
+    val i = SqlText.findCode(s)((i, d) => d == 0 && "<>=".indexOf(s.charAt(i)) >= 0)
+    if (i < 0) throw new IllegalArgumentException(s"ASOF JOIN: no comparison in `$s`")
+    val op = s.substring(i, if (s.startsWith("=", i + 1)) i + 2 else i + 1)
+    (s.substring(0, i), op, s.substring(i + op.length))
   }
 
   private def flip(op: String): String = op match {
@@ -333,8 +321,7 @@ object AsofSql {
 
   /** Some(rewritten) when the text carries an ASOF…USING join. */
   def usingPass(text: String): Option[String] = {
-    val m = UsingRe.findFirstMatchIn(text).getOrElse(return None)
-    if (SqlPasses.inQuote(text, m.start)) return None
+    val m = SqlText.findInCode(text, UsingRe).getOrElse(return None)
     val left = if (m.group(1) != null) "LEFT " else ""
     val rel = m.group(2)
     val alias = m.group(3)

@@ -48,16 +48,17 @@ import scala.collection.mutable.ArrayBuffer
   * Out of scope (documented, not silently wrong): QUALIFY /
   * DISTINCT ON / SAMPLE clauses (covered behaviorally by q29/q46/
   * q34), JSON `->` arrows (clash with Spark lambda syntax; f10 maps
-  * the accessors), `= ANY(...)` comparisons, dollar-quoted strings,
-  * ENUM types. Unknown constructs pass through token-for-token, so
-  * plain ANSI SQL survives translation byte-comparable modulo
-  * whitespace.
+  * the accessors), `= ANY(...)` comparisons, ENUM types. Unknown
+  * constructs pass through token-for-token, so plain ANSI SQL
+  * survives translation byte-comparable modulo whitespace.
   *
   * This is a token-level translating parser (lexer + Pratt
   * expression parser + statement glue loop), not a grammar fork:
   * ~one screen of precedence table instead of a vendored parser, and
   * unknown SQL passes through untouched. Catalyst still does all the
-  * real parsing/analysis on the emitted text.
+  * real parsing/analysis on the emitted text. The lexer takes every
+  * literal, quoted-name and comment end from SqlText, the one lexical
+  * rule that the text passes around `translate` share.
   */
 object DuckDialect {
 
@@ -96,52 +97,19 @@ object DuckDialect {
     def peek(k: Int) = if (i + k < n) sql.charAt(i + k) else '\u0000'
     while (i < n) {
       val c = sql.charAt(i)
+      val end = SqlText.spanEnd(sql, i)
       if (c.isWhitespace) i += 1
-      else if (c == '-' && peek(1) == '-') { // line comment
-        while (i < n && sql.charAt(i) != '\n') i += 1
-      } else if (c == '/' && peek(1) == '*') { // block comment (nested ok)
-        var depth = 1; i += 2
-        while (i < n && depth > 0) {
-          if (sql.charAt(i) == '/' && peek(1) == '*') { depth += 1; i += 2 }
-          else if (sql.charAt(i) == '*' && peek(1) == '/') { depth -= 1; i += 2 }
-          else i += 1
+      else if (end > i) { // literal, quoted name or comment: SqlText's rule
+        val span = sql.substring(i, end)
+        c match {
+          case '-' | '/' => // comment
+          case '"' | '`' => out += TQuoted(SqlText.unquote(span).getOrElse(span.drop(1)))
+          case '$' => // $tag$…$tag$ reads as the literal of its body
+            val tag = span.substring(0, span.indexOf('$', 1) + 1)
+            out += TStr(SqlText.encode(span.stripPrefix(tag).stripSuffix(tag)))
+          case _ => out += TStr(span)
         }
-      } else if (c == '\'') { // string literal, '' doubling
-        val start = i; i += 1
-        var done = false
-        while (i < n && !done) {
-          if (sql.charAt(i) == '\'') {
-            if (peek(1) == '\'') i += 2 else { i += 1; done = true }
-          } else i += 1
-        }
-        out += TStr(sql.substring(start, i))
-      } else if (c == '$' && {
-        // dollar-quoted string $tag$…$tag$ (reference postgres-style
-        // lexing; tag is an optional identifier)
-        var j = i + 1
-        while (j < n && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-        // a tag starts with a letter (or is empty) — `$1` is a
-        // positional parameter, not a quote delimiter
-        j < n && sql.charAt(j) == '$' && (j == i + 1 || !sql.charAt(i + 1).isDigit)
-      }) {
-        var j = i + 1
-        while (j < n && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-        val delim = sql.substring(i, j + 1) // $tag$
-        val bodyStart = j + 1
-        val end = sql.indexOf(delim, bodyStart)
-        val bodyEnd = if (end < 0) n else end
-        val body = sql.substring(bodyStart, bodyEnd)
-        out += TStr("'" + body.replace("'", "''") + "'")
-        i = if (end < 0) n else bodyEnd + delim.length
-      } else if (c == '"') { // quoted identifier, "" doubling
-        val sb = new StringBuilder; i += 1
-        var done = false
-        while (i < n && !done) {
-          if (sql.charAt(i) == '"') {
-            if (peek(1) == '"') { sb.append('"'); i += 2 } else { i += 1; done = true }
-          } else { sb.append(sql.charAt(i)); i += 1 }
-        }
-        out += TQuoted(sb.toString)
+        i = end
       } else if (c.isDigit || (c == '.' && peek(1).isDigit)) {
         val start = i
         if (c == '0' && (peek(1) == 'x' || peek(1) == 'X')) {
@@ -228,7 +196,7 @@ object DuckDialect {
 
   private val LAMBDA_PREC = 5 // `x -> body`: body absorbs everything
 
-  private final class P(toks: IndexedSeq[Tok]) {
+  private final class P(toks: IndexedSeq[Tok], nativeTime: Boolean) {
     var i = 0
     /** Last depth-0 glue keyword emitted (uppercase) — lets call()
       * distinguish table-function position (FROM/JOIN/LATERAL) from
@@ -401,7 +369,7 @@ object DuckDialect {
             // string-literal alias (`AS 'hello world'`) — legal in the
             // reference, an identifier in Spark
             next(); val __astr = next().text
-            out += "AS " + quoteIdent(__astr.substring(1, __astr.length - 1).replace("''", "'")) + strColList()
+            out += "AS " + quoteIdent(SqlText.unquote(__astr).getOrElse(__astr)) + strColList()
           case TWord(w) if lastGlue == "FROM" && !GLUE(w.toUpperCase) &&
               out.nonEmpty && out.last.matches("[A-Za-z_][\\w.]*") &&
               !GLUE(out.last.toUpperCase) && strAliasListAhead =>
@@ -482,7 +450,7 @@ object DuckDialect {
             // string-literal alias (`AS 'hello world'`) — legal in the
             // reference, an identifier in Spark
             next(); val __astr = next().text
-            out += "AS " + quoteIdent(__astr.substring(1, __astr.length - 1).replace("''", "'")) + strColList()
+            out += "AS " + quoteIdent(SqlText.unquote(__astr).getOrElse(__astr)) + strColList()
           case TWord(w) if GLUE(w.toUpperCase) && !(w.equalsIgnoreCase("ROW") && peekAt(1).contains(TOp("("))) && !peekAt(1).contains(TOp(".")) =>
             next(); lastGlue = w.toUpperCase; out += w
             val __up = w.toUpperCase
@@ -793,7 +761,7 @@ object DuckDialect {
             // string-literal alias (`AS 'hello world'`) — legal in the
             // reference, an identifier in Spark
             next(); val __astr = next().text
-            fromPart += "AS " + quoteIdent(__astr.substring(1, __astr.length - 1).replace("''", "'")) + strColList()
+            fromPart += "AS " + quoteIdent(SqlText.unquote(__astr).getOrElse(__astr)) + strColList()
           case TWord(w) if GLUE(w.toUpperCase) && !(w.equalsIgnoreCase("ROW") && peekAt(1).contains(TOp("("))) && !peekAt(1).contains(TOp(".")) =>
             next(); lastGlue = w.toUpperCase; fromPart += w
           case TOp(",") | TOp(";") => fromPart += next().text
@@ -890,11 +858,11 @@ object DuckDialect {
       // loop WITHOUT the FROM-first statement heuristic, which would
       // otherwise re-wrap the FROM segment in a fresh SELECT *)
       val selEnd = if (fromAt >= 0) fromAt else qualifyAt
-      val selPart = new P(toks.slice(i, selEnd)).clause()
+      val selPart = new P(toks.slice(i, selEnd), nativeTime).clause()
       val fromPart =
-        if (fromAt >= 0) new P(toks.slice(fromAt, qualifyAt)).clause() else ""
-      val pred = new P(toks.slice(qualifyAt + 1, tailAt)).expr(0)
-      val tail = if (tailAt < end) new P(toks.slice(tailAt, end)).clause() else ""
+        if (fromAt >= 0) new P(toks.slice(fromAt, qualifyAt), nativeTime).clause() else ""
+      val pred = new P(toks.slice(qualifyAt + 1, tailAt), nativeTime).expr(0)
+      val tail = if (tailAt < end) new P(toks.slice(tailAt, end), nativeTime).clause() else ""
       i = end
       require(!selPart.toUpperCase.startsWith("SELECT DISTINCT"),
         "duck-dialect: QUALIFY with DISTINCT is not supported")
@@ -981,7 +949,7 @@ object DuckDialect {
             // string-literal alias (`AS 'hello world'`) — legal in the
             // reference, an identifier in Spark
             next(); val __astr = next().text
-            fromPart += "AS " + quoteIdent(__astr.substring(1, __astr.length - 1).replace("''", "'")) + strColList()
+            fromPart += "AS " + quoteIdent(SqlText.unquote(__astr).getOrElse(__astr)) + strColList()
           case TWord(w) if GLUE(w.toUpperCase) && !(w.equalsIgnoreCase("ROW") && peekAt(1).contains(TOp("("))) && !peekAt(1).contains(TOp(".")) =>
             next(); lastGlue = w.toUpperCase; fromPart += w
           case TOp(",") =>
@@ -1025,34 +993,17 @@ object DuckDialect {
     private val HugeTag =
       "^(u?hugeint)(_(add|sub|mul|div|mod|neg|abs|shl|shr|and|or|xor|lift))?\\(".r
 
-    /** Closing-paren index matching the `(` at `open`, quote-aware
-      * (string literals AND quoted identifiers — a paren inside
-      * `"a(b"` or `` `a(b` `` must not count, mirroring the lexer);
-      * -1 if unbalanced. */
-    private def matchingClose(s: String, open: Int): Int = {
-      var depth = 0; var i = open; var q = '\u0000'
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (q != '\u0000') { if (c == q) q = '\u0000' }
-        else if (c == '\'' || c == '"' || c == '`') q = c
-        else if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i }
-        i += 1
-      }
-      -1
-    }
-
     /** True only when the kernel call spans the WHOLE expression
       * (after stripping fully-enclosing parens) — a comparison over
       * lifted operands like `(hugeint_lift(a) < hugeint_lift(b))`
       * is BOOLEAN, not INT128, and must not re-lift. */
     private def isHuge(s0: String): Boolean = {
       var s = s0.trim
-      while (s.startsWith("(") && matchingClose(s, 0) == s.length - 1)
+      while (s.startsWith("(") && SqlText.matchParen(s, 0) == s.length - 1)
         s = s.substring(1, s.length - 1).trim
       HugeTag.findFirstIn(s).isDefined && {
         val open = s.indexOf('(')
-        open >= 0 && matchingClose(s, open) == s.length - 1
+        open >= 0 && SqlText.matchParen(s, open) == s.length - 1
       }
     }
 
@@ -1168,11 +1119,11 @@ object DuckDialect {
     private val VarintTag = "^varint\\(".r
     private def isVarint(s0: String): Boolean = {
       var s = s0.trim
-      while (s.startsWith("(") && matchingClose(s, 0) == s.length - 1)
+      while (s.startsWith("(") && SqlText.matchParen(s, 0) == s.length - 1)
         s = s.substring(1, s.length - 1).trim
       VarintTag.findFirstIn(s).isDefined && {
         val open = s.indexOf('(')
-        open >= 0 && matchingClose(s, open) == s.length - 1
+        open >= 0 && SqlText.matchParen(s, open) == s.length - 1
       }
     }
 
@@ -1529,12 +1480,10 @@ object DuckDialect {
     }
 
     private def globEmit(left: String, r: String, negate: Boolean): String = {
-      val raw =
-        if (r.length >= 2 && r.head == '\'' && r.last == '\'' &&
-            !r.substring(1, r.length - 1).contains("'"))
-          // undo emitStr's backslash doubling to recover the raw bytes
-          Some(r.substring(1, r.length - 1).replace("\\\\", "\\"))
-        else None
+      // a literal without quotes inside; undo emitStr's backslash
+      // doubling to recover the raw bytes
+      val raw = SqlText.decode(r).filterNot(_.contains("'"))
+        .map(_.replace("\\\\", "\\"))
       raw.flatMap(globRegex) match {
         case Some(re) =>
           val cond = s"($left RLIKE '${emitStr(re)}')"
@@ -1569,7 +1518,7 @@ object DuckDialect {
       val m = "^(?is)\\s*(count|sum|avg|min|max)\\s*\\(".r
         .findFirstMatchIn(base)
       val open = base.indexOf('(')
-      val close = if (open >= 0) matchingClose(base, open) else -1
+      val close = if (open >= 0) SqlText.matchParen(base, open) else -1
       require(open >= 0 && close == base.trim.length - 1,
         s"EXPORT_STATE: expected a single aggregate call, got: ${base.take(60)}")
       val arg = base.substring(open + 1, close).trim
@@ -1712,7 +1661,7 @@ object DuckDialect {
           peek match {
             case TStr(v) =>
               next()
-              cols += quoteIdent(v.substring(1, v.length - 1).replace("''", "'"))
+              cols += quoteIdent(SqlText.unquote(v).getOrElse(v))
             case TOp(",") => next()
             case _ => cols += next().text
           }
@@ -2356,7 +2305,7 @@ object DuckDialect {
           val csIdx = out.indexOf("collect_set(")
           if (csIdx >= 0 && !out.toLowerCase.startsWith(low + "(")) {
             val open = csIdx + "collect_set".length
-            val close = matchingClose(out, open)
+            val close = SqlText.matchParen(out, open)
             val arg = out.substring(open + 1, close)
             out = out.substring(0, open + 1) +
               s"CASE WHEN $filterPred THEN ($arg) END" + out.substring(close)
@@ -3071,7 +3020,7 @@ object DuckDialect {
                 val d = DuckDialect.aliasDepth.get()
                 require(d < 16, s"duck-dialect: type alias cycle at $other")
                 DuckDialect.aliasDepth.set(d + 1)
-                try new P(lex(raw)).parseType()
+                try new P(lex(raw), nativeTime).parseType()
                 finally DuckDialect.aliasDepth.set(d)
               case None => other
             })
@@ -3100,12 +3049,6 @@ object DuckDialect {
   private val DropModRe =
     """(?is)^(\s*DROP\s+(?:TABLE|VIEW|SEQUENCE|TYPE|INDEX|MACRO|FUNCTION)\s+.*?)\s+(?:CASCADE|RESTRICT)(\s*;?\s*)$""".r
 
-  /** Translate one DuckDB-dialect statement into Spark SQL. */
-  /** Map dialect TIME to Spark 4.1's native TimeType when the active
-    * session enables it (spark.sql.timeType.enabled) — set by GraftSql
-    * per statement; STRING fallback otherwise (the r4 ladder). */
-  @volatile var nativeTime: Boolean = false
-
   // the reference accepts OFFSET before LIMIT in either order;
   // Spark's grammar requires LIMIT … OFFSET
   private val OffsetLimitRe =
@@ -3118,34 +3061,6 @@ object DuckDialect {
   private val MainSchemaFnRe =
     """(?i)(?<![\w."'`])main\s*\.\s*([A-Za-z_]\w*)\s*\(""".r
 
-  /** Apply a text transform to the spans OUTSIDE single-quoted string
-    * literals only ('' escapes respected) — raw-regex statement passes
-    * must never rewrite keyword look-alikes inside string data. */
-  private def mapOutsideQuotes(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var segStart = 0
-    val n = sql.length
-    while (i < n) {
-      if (sql.charAt(i) == '\'') {
-        out.append(f(sql.substring(segStart, i)))
-        var j = i + 1
-        var closed = false
-        while (j < n && !closed) {
-          if (sql.charAt(j) == '\'') {
-            if (j + 1 < n && sql.charAt(j + 1) == '\'') j += 2
-            else closed = true
-          } else j += 1
-        }
-        val end = if (closed) j + 1 else n
-        out.append(sql.substring(i, end))
-        i = end
-        segStart = end
-      } else i += 1
-    }
-    out.append(f(sql.substring(segStart)))
-    out.toString
-  }
   private val BareOverRe =
     ("""(?i)\b(row_number\s*\(\s*\)|rank\s*\(\s*\)|dense_rank\s*\(\s*\)|""" +
       """percent_rank\s*\(\s*\)|cume_dist\s*\(\s*\)|ntile\s*\([^()]*\))""" +
@@ -3155,31 +3070,38 @@ object DuckDialect {
   private val InsertParenValuesRe =
     """(?is)^(\s*INSERT\s+(?:OR\s+\w+\s+)?INTO\s+[\w."`]+)\s*\(\s*(VALUES\b.*)\)\s*;?\s*$""".r
 
+  /** Translate one DuckDB-dialect statement into Spark SQL. Dialect
+    * TIME maps to Spark 4.1's native TimeType when the active session
+    * enables it (spark.sql.timeType.enabled), to STRING otherwise. The
+    * keyword rewrites below run on code only (SqlText): an `OFFSET …
+    * LIMIT` or `main.f(` inside a literal is data.
+    */
   def translate(sql0: String): String = {
+    val nativeTime = org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.sql.timeType.enabled", "false").toBoolean
     val sql1 = sql0 match {
       case DropModRe(head, tail) => head + tail
       case other => other
     }
-    val sql2 = OffsetLimitRe.replaceAllIn(sql1, m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
+    val sql2 = SqlText.replaceInCode(sql1, OffsetLimitRe)(m =>
+      s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
     // `INSERT INTO t BY POSITION …` — positional is the default;
     // `INSERT INTO t (VALUES …)` — Spark reads the paren as a column
     // list, so route the VALUES through a subquery
-    val sql2b0 = QualifiedTvfRe.replaceAllIn(sql2, m => s"${m.group(1)} ${m.group(2)}(")
+    val sql2b0 = SqlText.replaceInCode(sql2, QualifiedTvfRe)(m =>
+      s"${m.group(1)} ${m.group(2)}(")
     // `main.<fn>(…)` — the reference's default-schema qualifier on
     // ANY function call (bug_10283 corpus: main.struct_pack,
     // main.list_value): strip it so the special-cased builtins
-    // (struct_pack, …) hit their handlers (r13). Applied OUTSIDE
-    // string literals only — `SELECT 'call main.foo(1)'` is data, not
-    // a qualifier (r13 advice).
-    val sql2b = mapOutsideQuotes(sql2b0)(seg =>
-      MainSchemaFnRe.replaceAllIn(seg, m => s"${m.group(1)}("))
-    val sql3 = InsertByPosRe.replaceAllIn(sql2b, m => m.group(1))
+    // (struct_pack, …) hit their handlers (r13)
+    val sql2b = SqlText.replaceInCode(sql2b0, MainSchemaFnRe)(m => s"${m.group(1)}(")
+    val sql3 = SqlText.replaceInCode(sql2b, InsertByPosRe)(_.group(1))
     val sql = sql3 match {
       case InsertParenValuesRe(head, values) =>
         s"$head SELECT * FROM ($values)"
       case other => other
     }
-    val p = new P(lex(sql))
+    val p = new P(lex(sql), nativeTime)
     val out0 = p.statement()
     // early-return statement paths (DDL, DISTINCT ON, QUALIFY) leave
     // a trailing ';' unconsumed — every statement form accepts it
@@ -3192,13 +3114,12 @@ object DuckDialect {
     // OVER ()`, lateral_qualify corpus): the reference orders
     // arbitrarily; Spark requires an ORDER BY — a constant literal
     // order is the same contract (partition order decides)
-    val out0b = mapOutsideQuotes(out0)(seg =>
-      BareOverRe.replaceAllIn(seg, m => s"${m.group(1)} OVER (ORDER BY 1)"))
-    // positional split on quote-aware top-level keyword scans — a raw
-    // regex would also match keywords inside string literals (r13
-    // advice, same surface as MainSchemaFnRe)
-    val gi = graft.sources.DmlSql.topIndexOf(out0b, "GROUP BY")
-    val ti = graft.sources.DmlSql.topIndexOf(out0b, "TABLESAMPLE")
+    val out0b = SqlText.replaceInCode(out0, BareOverRe)(m =>
+      s"${m.group(1)} OVER (ORDER BY 1)")
+    // positional split on top-level keyword scans — a raw regex would
+    // also match keywords inside string literals
+    val gi = SqlText.topIndexOf(out0b, "GROUP BY")
+    val ti = SqlText.topIndexOf(out0b, "TABLESAMPLE")
     val out =
       if (gi >= 0 && ti > gi &&
           out0b.substring(ti).matches(

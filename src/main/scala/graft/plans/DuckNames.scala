@@ -367,6 +367,8 @@ case class DuckRint(input: Expression, strict: Boolean = true) extends UnaryExpr
     case StringType => DecimalType(38, 0)
     case other => other
   }
+  // the try form yields NULL for an unparsable string, null input or not
+  override def nullable: Boolean = input.nullable || (!strict && input.dataType == StringType)
   override def nullSafeEval(in: Any): Any = input.dataType match {
     case DoubleType => Math.rint(in.asInstanceOf[Double])
     case FloatType => Math.rint(in.asInstanceOf[Float].toDouble).toFloat
@@ -406,13 +408,13 @@ case class DuckRint(input: Expression, strict: Boolean = true) extends UnaryExpr
       case _: DecimalType | StringType =>
         val self = ctx.addReferenceObj("duckRint", this, classOf[DuckRint].getName)
         nullSafeCodeGen(ctx, ev, c => {
-          val out =
-            if (dataType == DoubleType) "((java.lang.Double) __r).doubleValue()"
-            else s"(${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.boxedType(dataType)}) __r"
-          s"""Object __r = $self.nullSafeEval($c);
-             |if (__r == null) { ${ev.isNull} = true; } else {
-             |  ${ev.value} = $out;
-             |}""".stripMargin
+          // a fresh local: two calls can share one generated function
+          val r = ctx.freshName("rint")
+          val eval = s"Object $r = $self.nullSafeEval($c);\n"
+          val set = s"${ev.value} = (Decimal) $r;"
+          // a non-nullable result has no isNull variable to assign
+          if (!nullable) eval + set
+          else eval + s"if ($r == null) { ${ev.isNull} = true; } else { $set }"
         })
       case _ => defineCodeGen(ctx, ev, c => c) // integral & friends: identity
     }

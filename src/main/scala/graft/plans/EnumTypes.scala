@@ -96,12 +96,10 @@ object EnumTypes {
       registerAlias(name, "VARCHAR")
       return
     }
-    val vals = graft.sources.DmlSql.topSplit(valuesClause, ',').map(_.trim)
-      .map { v =>
-        require(v.length >= 2 && v.head == '\'' && v.last == '\'',
-          s"CREATE TYPE … AS ENUM: expected string literal, got $v")
-        v.substring(1, v.length - 1).replace("''", "'")
-      }
+    val vals = SqlText.splitTop(valuesClause, ',').map { v =>
+      SqlText.decode(v).getOrElse(throw new IllegalArgumentException(
+        s"CREATE TYPE … AS ENUM: expected string literal, got $v"))
+    }
     require(vals.nonEmpty, "CREATE TYPE … AS ENUM: empty value list")
     types.put(bareName(name).toLowerCase, vals.toIndexedSeq)
   }
@@ -115,7 +113,7 @@ object EnumTypes {
   def get(name: String): Option[IndexedSeq[String]] =
     Option(types.get(name.toLowerCase))
 
-  private def q(v: String): String = "'" + v.replace("'", "''") + "'"
+  private def q(v: String): String = SqlText.encode(v)
 
   private def arrayLit(vals: Seq[String]): String =
     vals.map(q).mkString("array(", ", ", ")")
@@ -166,31 +164,6 @@ object EnumTypes {
     out
   }
 
-  // ---- scanning helpers (quote-aware) ----
-
-  private def inString(s: String, pos: Int): Boolean = {
-    var i = 0
-    var in = false
-    while (i < pos) {
-      if (s.charAt(i) == '\'') in = !in
-      i += 1
-    }
-    in
-  }
-
-  private def matchingClose(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1; while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
   /** The registered type a cast inside `arg` names, if any. */
   private def typeIn(arg: String): Option[(String, IndexedSeq[String])] = {
     val lower = arg.toLowerCase
@@ -220,10 +193,10 @@ object EnumTypes {
       changed = false
       val lower = text.toLowerCase
       val fnRe = """\b(enum_first|enum_last|enum_range_boundary|enum_range|enum_code)\s*\(""".r
-      fnRe.findFirstMatchIn(lower) match {
-        case Some(m) if !inString(text, m.start) =>
+      SqlText.findInCode(lower, fnRe) match {
+        case Some(m) =>
           val open = text.indexOf('(', m.start + m.group(1).length)
-          val close = matchingClose(text, open)
+          val close = SqlText.matchParen(text, open)
           require(close > open, s"unbalanced ${m.group(1)} call")
           val argStr = text.substring(open + 1, close)
           val fn = m.group(1)
@@ -238,7 +211,7 @@ object EnumTypes {
                 case _ => arrayLit(vals)
               }
             case "enum_range_boundary" =>
-              val args = graft.sources.DmlSql.topSplit(argStr, ',').map(_.trim)
+              val args = SqlText.splitTop(argStr, ',')
               require(args.length == 2, "enum_range_boundary takes 2 arguments")
               val (t, vals) = args.flatMap(a => typeIn(a)).headOption.getOrElse(
                 throw new IllegalArgumentException(
@@ -246,7 +219,8 @@ object EnumTypes {
               def boundIdx(a: String, dflt: Int): Int =
                 if (a.equalsIgnoreCase("NULL")) dflt
                 else {
-                  val v = innerOf(a, t).stripPrefix("'").stripSuffix("'")
+                  val inner = innerOf(a, t)
+                  val v = SqlText.decode(inner).getOrElse(inner)
                   val i = vals.indexOf(v)
                   require(i >= 0,
                     s"enum_range_boundary: '$v' is not a member of $t " +
@@ -282,26 +256,13 @@ object EnumTypes {
         case None => return text
         case Some(m) =>
           val start = searchFrom + m.end
-          if (inString(text, searchFrom + m.start)) { searchFrom += m.end }
+          if (!SqlText.inCode(text, searchFrom + m.start)) { searchFrom += m.end }
           else {
             // clause ends at depth<0, or LIMIT/OFFSET at depth 0
-            var i = start
-            var depth = 0
-            var end = text.length
-            var done = false
-            while (i < text.length && !done) {
-              val c = text.charAt(i)
-              if (c == '\'') { i += 1; while (i < text.length && text.charAt(i) != '\'') i += 1 }
-              else if (c == '(') depth += 1
-              else if (c == ')') { if (depth == 0) { end = i; done = true }; depth -= 1 }
-              else if (depth == 0 &&
-                  (text.regionMatches(true, i, "LIMIT", 0, 5) ||
-                   text.regionMatches(true, i, "OFFSET", 0, 6)) &&
-                  (i == 0 || !text.charAt(i - 1).isLetterOrDigit)) {
-                end = i; done = true
-              }
-              i += 1
-            }
+            val stop = SqlText.findCode(text, start)((i, d) => d == 0 &&
+              (text.charAt(i) == ')' || SqlText.wordAt(text, i, "LIMIT") ||
+                SqlText.wordAt(text, i, "OFFSET")))
+            val end = if (stop < 0) text.length else stop
             val clause = text.substring(start, end)
             val rewritten = rewriteCasts(clause, inOrderBy = true)
             text = text.substring(0, start) + rewritten + text.substring(end)
@@ -329,10 +290,10 @@ object EnumTypes {
           var found = false
           val it = castRe.findAllMatchIn(lower).toSeq
           it.find { m =>
-            if (inString(text, m.start)) false
+            if (!SqlText.inCode(text, m.start)) false
             else {
               val open = text.indexOf('(', m.start + m.group(1).length)
-              val close = matchingClose(text, open)
+              val close = SqlText.matchParen(text, open)
               if (close < 0) false
               else {
                 val body = text.substring(open + 1, close)
@@ -358,8 +319,8 @@ object EnumTypes {
         changed = true
         while (changed) {
           changed = false
-          colonRe.findFirstMatchIn(text) match {
-            case Some(m) if !inString(text, m.start) =>
+          SqlText.findInCode(text, colonRe) match {
+            case Some(m) =>
               val (opStart, operand) = operandBefore(text, m.start)
               val rep =
                 if (inOrderBy) codeCase(operand, t, vals)
@@ -381,24 +342,13 @@ object EnumTypes {
     var i = castPos - 1
     while (i >= 0 && text.charAt(i).isWhitespace) i -= 1
     require(i >= 0, "cast with no operand")
+    val span = SqlText.spanStart(text, i)
     text.charAt(i) match {
+      case _ if span >= 0 => (span, text.substring(span, i + 1)) // literal
       case ')' =>
-        var depth = 0
-        var j = i
-        var open = -1
-        while (j >= 0 && open < 0) {
-          val c = text.charAt(j)
-          if (c == ')') depth += 1
-          else if (c == '(') { depth -= 1; if (depth == 0) open = j }
-          j -= 1
-        }
+        val open = SqlText.openParen(text, i)
         require(open >= 0, "unbalanced parens before ::")
         (open, text.substring(open, i + 1))
-      case '\'' =>
-        var j = i - 1
-        while (j >= 0 && text.charAt(j) != '\'') j -= 1
-        require(j >= 0, "unterminated string before ::")
-        (j, text.substring(j, i + 1))
       case _ =>
         var j = i
         while (j >= 0 && (text.charAt(j).isLetterOrDigit ||

@@ -545,7 +545,7 @@ object FunctionTable {
     val out = new StringBuilder
     val lit = new StringBuilder
     def flush(): Unit = {
-      if (lit.nonEmpty) { out.append('\'').append(lit.toString.replace("'", "''")).append('\''); lit.clear() }
+      if (lit.nonEmpty) { out.append(SqlText.encode(lit.toString)); lit.clear() }
     }
     var i = 0
     while (i < fmt.length) {

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.sources.DmlSql.topSplit
+import SqlText.splitTop
 
 /** CREATE MACRO through the front door (reference
   * src/parser/parsed_data/create_macro_info.cpp): DuckDB macros are
@@ -48,7 +48,7 @@ object MacroReg {
   private def parseParams(name: String, raw: String): Seq[(String, Option[String])] = {
     // `p` or `p := default` per parameter; duplicate names error like
     // the reference ("Duplicate macro parameter name")
-    val ps = topSplit(raw, ',').map(_.trim).filter(_.nonEmpty).map { p =>
+    val ps = splitTop(raw, ',').map { p =>
       val i = p.indexOf(":=")
       if (i >= 0) (p.substring(0, i).trim, Some(p.substring(i + 2).trim))
       else (p, None)
@@ -77,7 +77,7 @@ object MacroReg {
       while (rest.nonEmpty) {
         require(rest.startsWith("("),
           s"CREATE MACRO: expected (params) AS body, got: $rest")
-        val close = SqlPasses.matchParen(rest, 0)
+        val close = SqlText.matchParen(rest, 0)
         val params = parseParams(bare, rest.substring(1, close))
         var tail = rest.substring(close + 1).trim
         require(tail.toUpperCase.startsWith("AS"),
@@ -86,21 +86,10 @@ object MacroReg {
         // the body runs to the next TOP-LEVEL `, (` signature start.
         // ONLY a comma followed by `(` separates signatures — `AS
         // TABLE select a,b from t` bodies carry bare top-level commas
-        var depth = 0
-        var i = 0
-        var cut = -1
-        while (i < tail.length && cut < 0) {
-          val c = tail.charAt(i)
-          if (c == '\'') { i += 1; while (i < tail.length && tail.charAt(i) != '\'') i += 1 }
-          else if (c == '(' || c == '[') depth += 1
-          else if (c == ')' || c == ']') depth -= 1
-          else if (c == ',' && depth == 0) {
-            var j = i + 1
-            while (j < tail.length && tail.charAt(j).isWhitespace) j += 1
-            if (j < tail.length && tail.charAt(j) == '(') cut = i
-          }
-          i += 1
-        }
+        val cut = SqlText.findCode(tail)((i, d) => d == 0 && tail.charAt(i) == ',' && {
+          val k = tail.indexWhere(!_.isWhitespace, i + 1)
+          k >= 0 && tail.charAt(k) == '('
+        })
         val (body, next) =
           if (cut < 0) (tail, "")
           else (tail.substring(0, cut), tail.substring(cut + 1).trim)
@@ -218,8 +207,8 @@ object MacroReg {
             case Some(mm) =>
               val start = from + mm.start
               val open = sql.indexOf('(', start)
-              val close = SqlPasses.matchParen(sql, open)
-              val args = topSplit(sql.substring(open + 1, close), ',')
+              val close = SqlText.matchParen(sql, open)
+              val args = splitTop(sql.substring(open + 1, close), ',')
               var expanded: String = null
               sigs.foreach { sig =>
                 if (expanded == null) bind(name, sig, args) match {

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.DmlSql.{topIndexOf, topSplit}
+import SqlText.{splitTop, topIndexOf}
 
 /** The reference's statement-form PIVOT / UNPIVOT
   * (src/parser/transform/statement/transform_pivot_stmt.cpp +
@@ -71,7 +71,7 @@ object PivotStmt {
       }
     }
     for (m <- KwRe.findAllMatchIn(text)
-           if !SqlPasses.inQuote(text, m.start)) {
+           if SqlText.inCode(text, m.start)) {
       val before = text.substring(0, m.start)
       val trimmed = before.reverse.dropWhile(_.isWhitespace)
       val after = text.substring(m.end).dropWhile(_.isWhitespace)
@@ -117,7 +117,7 @@ object PivotStmt {
       // optional column-alias list
       var colAliases = ""
       if (i < t.length && t.charAt(i) == '(') {
-        val close = SqlPasses.matchParen(t, i)
+        val close = SqlText.matchParen(t, i)
         colAliases = t.substring(i + 1, close)
         i = close + 1
         while (i < t.length && t.charAt(i).isWhitespace) i += 1
@@ -138,7 +138,7 @@ object PivotStmt {
         while (i < t.length && t.charAt(i).isWhitespace) i += 1
       }
       if (i >= t.length || t.charAt(i) != '(') return None
-      val close = SqlPasses.matchParen(t, i)
+      val close = SqlText.matchParen(t, i)
       val body0 = t.substring(i + 1, close)
       val body =
         if (colAliases.trim.isEmpty) body0
@@ -156,19 +156,8 @@ object PivotStmt {
   /** The statement region: from after the keyword to the ')' closing
     * the enclosing scope (exclusive) or end of text. */
   private def regionEnd(text: String, from: Int): Int = {
-    var depth = 0
-    var i = from
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (c == '\'' || c == '"') {
-        val q = c; i += 1
-        while (i < text.length && text.charAt(i) != q) i += 1
-      } else if (c == '(') depth += 1
-      else if (c == ')') { if (depth == 0) return i else depth -= 1 }
-      else if (c == ';' && depth == 0) return i
-      i += 1
-    }
-    text.length
+    val end = SqlText.findCode(text, from)((i, d) => d == 0 && ");".indexOf(text.charAt(i)) >= 0)
+    if (end < 0) text.length else end
   }
 
   /** source relation after the keyword: `(query)` or a [quoted] name;
@@ -177,12 +166,13 @@ object PivotStmt {
     var i = from
     while (i < text.length && text.charAt(i).isWhitespace) i += 1
     if (i < text.length && text.charAt(i) == '(') {
-      val close = SqlPasses.matchParen(text, i)
+      val close = SqlText.matchParen(text, i)
       (text.substring(i + 1, close), close + 1)
     } else if (i < text.length && text.charAt(i) == '"') {
-      val end = text.indexOf('"', i + 1)
-      require(end > 0, "PIVOT: unterminated quoted source name")
-      (s"SELECT * FROM `${text.substring(i + 1, end)}`", end + 1)
+      val end = SqlText.spanEnd(text, i)
+      val name = SqlText.unquote(text.substring(i, end)).getOrElse(
+        throw new IllegalArgumentException("PIVOT: unterminated quoted source name"))
+      (s"SELECT * FROM `$name`", end)
     } else {
       val start = i
       while (i < text.length && (text.charAt(i).isLetterOrDigit ||
@@ -241,7 +231,7 @@ object PivotStmt {
       } else (entry.trim, None)
     val components =
       if (exprText.startsWith("(") && exprText.endsWith(")"))
-        topSplit(exprText.stripPrefix("(").stripSuffix(")"), ',')
+        splitTop(exprText.stripPrefix("(").stripSuffix(")"), ',')
       else Seq(exprText)
     OnEntry(components, inList)
   }
@@ -255,7 +245,7 @@ object PivotStmt {
       runSql(spark, body).collect().toSeq
         .map(r => if (r.get(0) == null) "NULL" else r.get(0).toString)
     case Some(body) =>
-      val exprs = topSplit(body, ',').map(fragment)
+      val exprs = splitTop(body, ',').map(fragment)
       spark.sql(s"SELECT ${exprs.mkString(", ")}").collect()(0)
         .toSeq.map(v => if (v == null) "NULL" else v.toString)
     case None =>
@@ -292,9 +282,9 @@ object PivotStmt {
     val groupText =
       if (groupIdx < 0) "" else spec.substring(groupIdx + 8).trim
 
-    val entries = topSplit(onText, ',').map(parseOnEntry)
+    val entries = splitTop(onText, ',').map(parseOnEntry)
     // USING list: `agg [AS alias]`, trailing comma tolerated
-    val aggs: Seq[(String, Option[String])] = topSplit(usingText, ',').map { a =>
+    val aggs: Seq[(String, Option[String])] = splitTop(usingText, ',').map { a =>
       val asIdx = topIndexOf(a, "AS")
       if (asIdx >= 0)
         (a.substring(0, asIdx).trim,
@@ -308,7 +298,7 @@ object PivotStmt {
       .filter(_.matches("[A-Za-z_][A-Za-z0-9_]*"))
     val grouped: Seq[String] =
       if (groupText.nonEmpty)
-        topSplit(groupText, ',').map(_.stripPrefix("\"").stripSuffix("\""))
+        splitTop(groupText, ',').map(_.stripPrefix("\"").stripSuffix("\""))
       else if (entries.isEmpty) Nil
       else {
         val consumed = aggs.map(_._1.toLowerCase)
@@ -379,10 +369,10 @@ object PivotStmt {
       if (onText.startsWith("*")) {
         val ex = "(?is)\\*\\s*EXCLUDE\\s*\\(([^)]*)\\)".r
           .findFirstMatchIn(onText)
-          .map(m => topSplit(m.group(1), ',').map(schemaCase).toSet)
+          .map(m => splitTop(m.group(1), ',').map(schemaCase).toSet)
           .getOrElse(Set.empty)
         src.columns.toSeq.filterNot(ex).map(c => (Seq(c), c))
-      } else topSplit(onText, ',').flatMap { entry0 =>
+      } else splitTop(onText, ',').flatMap { entry0 =>
         val asIdx = topIndexOf(entry0, "AS")
         val (entry, alias) =
           if (asIdx >= 0)
@@ -395,7 +385,7 @@ object PivotStmt {
             src.columns.toSeq.filter(c => p.matcher(c).find())
               .map(c => Seq(c) -> alias.getOrElse(c))
           case t if t.startsWith("(") && t.endsWith(")") =>
-            val cs = topSplit(t.stripPrefix("(").stripSuffix(")"), ',')
+            val cs = splitTop(t.stripPrefix("(").stripSuffix(")"), ',')
               .map(schemaCase)
             Seq(cs -> alias.getOrElse(cs.mkString("_")))
           case c =>
@@ -413,7 +403,7 @@ object PivotStmt {
       .map(_.group(1).stripPrefix("\"").stripSuffix("\"")).getOrElse("name")
     val valueCols: Seq[String] = {
       val vIdx = "(?i)\\bVALUES?\\b".r.findFirstMatchIn(intoPart)
-      vIdx.map(m => topSplit(intoPart.substring(m.end), ',')
+      vIdx.map(m => splitTop(intoPart.substring(m.end), ',')
           .map(_.stripPrefix("\"").stripSuffix("\"")))
         .getOrElse(if (k == 1) Seq("value") else (1 to k).map(i => s"value_$i"))
     }

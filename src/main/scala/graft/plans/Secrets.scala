@@ -48,12 +48,12 @@ object Secrets {
 
   def create(spark: SparkSession, orReplace: Boolean, persistent: Boolean,
              ifNotExists: Boolean, name0: Option[String], body: String): Unit = {
-    val kv = graft.sources.DmlSql.topSplit(body, ',').flatMap { p =>
+    val kv = SqlText.splitTop(body, ',').flatMap { p =>
       val t = p.trim
       val sp = t.indexWhere(_.isWhitespace)
+      lazy val v = t.substring(sp + 1).trim
       if (sp < 0) None
-      else Some(t.substring(0, sp).toUpperCase ->
-        StatementSurface.stripQuotes(t.substring(sp + 1)))
+      else Some(t.substring(0, sp).toUpperCase -> SqlText.decode(v).getOrElse(v))
     }.toMap
     val typ = kv.getOrElse("TYPE",
       throw new IllegalArgumentException("CREATE SECRET: TYPE is required")).toLowerCase

@@ -1,57 +1,17 @@
 package graft.plans
 
-import scala.collection.mutable.ArrayBuffer
-
-import graft.sources.DmlSql.topIndexOf
+import SqlText.{inCode, matchParen, splitTop, topIndexOf, wordAt}
 
 /** Text-level rewrite passes run AFTER DuckDialect.translate — each
   * turns a reference idiom Spark's parser/analyzer rejects into
   * plan-equivalent Spark SQL. Pure text→text; schema-aware rewrites
-  * live in GraftSql.
+  * live in GraftSql. Every scan asks SqlText, the one lexical rule,
+  * what is code: a keyword, paren or comma inside a literal, a quoted
+  * name or a comment is never rewritten.
   */
 object SqlPasses {
 
   // ---------------------------------------------------------- helpers
-
-  private[graft] def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1; while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens")
-  }
-
-  /** True when `pos` sits inside a single-quoted literal — statement
-    * rewrites must never fire on keyword look-alikes inside strings
-    * (e.g. SELECT '(describe t)').
-    */
-  private[graft] def inQuote(s: String, pos: Int): Boolean = {
-    var i = 0
-    var in = false
-    while (i < pos) {
-      if (s.charAt(i) == '\'') in = !in
-      i += 1
-    }
-    in
-  }
-
-  private def depthAt(s: String, pos: Int): Int = {
-    var depth = 0
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1; while (i < pos && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      i += 1
-    }
-    depth
-  }
 
   private def findAll(s: String, re: scala.util.matching.Regex): Seq[scala.util.matching.Regex.Match] =
     re.findAllMatchIn(s).toSeq
@@ -71,7 +31,7 @@ object SqlPasses {
     var sql = sql0
     var n = 0
     val CastExplode = "(?i)CAST\\s*\\(\\s*explode\\s*\\(".r
-    var m = CastExplode.findFirstMatchIn(sql)
+    var m = SqlText.findInCode(sql, CastExplode)
     while (m.isDefined && n < 8) {
       n += 1
       val castStart = m.get.start
@@ -89,17 +49,10 @@ object SqlPasses {
       if (hasSubs) sql = subsRe.replaceAllIn(sql, s"($gp + 1)")
       // insert the LATERAL VIEW after the first table ref of the FROM
       // clause at the same depth as the rewritten expression
-      val d = depthAt(sql, castStart)
       val lv =
         if (hasSubs) s" LATERAL VIEW posexplode($arg) __g$n AS $gp, $gv "
         else s" LATERAL VIEW explode($arg) __g$n AS $gv "
-      val fromIdx = {
-        var idx = -1
-        val FromRe = "(?i)\\bFROM\\b".r
-        for (fm <- findAll(sql, FromRe) if idx < 0)
-          if (fm.start > castStart && depthAt(sql, fm.start) == d) idx = fm.start
-        idx
-      }
+      val fromIdx = topIndexOf(sql, "FROM", castStart)
       if (fromIdx < 0) {
         // FROM-less SELECT carrying a nested generator (the
         // reference's `SELECT CAST(UNNEST(xs) AS T)` constant form,
@@ -107,32 +60,14 @@ object SqlPasses {
         // FROM for the lateral view at the end of the select's
         // clause region (before a same-depth clause keyword / the
         // enclosing subquery's `)` / end of statement)
-        val kws = Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
+        val kws = Seq("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
           "QUALIFY", "UNION", "EXCEPT", "INTERSECT", "WINDOW", "OFFSET")
-        var ins = sql.length
-        var i2 = castStart
-        var depth = d
-        var q = false
-        var going = true
-        while (going && i2 < sql.length) {
-          val c = sql.charAt(i2)
-          if (c == '\'') q = !q
-          else if (!q && c == '(') depth += 1
-          else if (!q && c == ')') {
-            depth -= 1
-            if (depth < d) { ins = i2; going = false }
-          } else if (!q && c == ';' && depth == d) { ins = i2; going = false }
-          else if (!q && depth == d && c.isLetter &&
-              (i2 == 0 || !sql.charAt(i2 - 1).isLetterOrDigit)) {
-            val w = sql.substring(i2).takeWhile(_.isLetterOrDigit).toUpperCase
-            if (kws(w)) { ins = i2; going = false }
-            else i2 += w.length - 1
-          }
-          if (going) i2 += 1
-        }
+        val stop = SqlText.findCode(sql, castStart)((i, d) => d == 0 &&
+          (");".indexOf(sql.charAt(i)) >= 0 || kws.exists(wordAt(sql, i, _))))
+        val ins = if (stop < 0) sql.length else stop
         sql = sql.substring(0, ins) + s" FROM (SELECT 1) AS __gone$n " +
           lv + " " + sql.substring(ins)
-        m = CastExplode.findFirstMatchIn(sql)
+        m = SqlText.findInCode(sql, CastExplode)
       } else {
       // end of the first table ref: consume the ref itself (bare name,
       // table-function call like explode(sequence(..)), or subquery),
@@ -173,7 +108,7 @@ object SqlPasses {
         }
       } else j = save
       sql = sql.substring(0, j) + lv + sql.substring(j)
-      m = CastExplode.findFirstMatchIn(sql)
+      m = SqlText.findInCode(sql, CastExplode)
       }
     }
     sql
@@ -211,7 +146,7 @@ object SqlPasses {
     var changed = true
     while (changed) {
       changed = false
-      for (wm <- WindowRe.findFirstMatchIn(sql) if !changed) {
+      for (wm <- SqlText.findInCode(sql, WindowRe) if !changed) {
         // parse name AS (body) [, name AS (body)]*
         var i = wm.end
         val start = wm.start
@@ -250,7 +185,7 @@ object SqlPasses {
       val OverRef = "(?i)\\bOVER\\s*".r
       val sb = new StringBuilder
       var last = 0
-      for (om <- findAll(sql, OverRef)) {
+      for (om <- findAll(sql, OverRef) if inCode(sql, om.start)) {
         val j = om.end
         if (j < sql.length && sql.charAt(j) == '(') {
           val close = matchParen(sql, j)
@@ -279,11 +214,11 @@ object SqlPasses {
 
     // 3. rewrite EXCLUDE frames
     var guard = 0
-    var ex = ExcludeRe.findFirstMatchIn(sql).map(_.start).getOrElse(-1)
+    var ex = SqlText.findInCode(sql, ExcludeRe).map(_.start).getOrElse(-1)
     while (ex >= 0 && guard < 32) {
       guard += 1
       sql = rewriteOneExclude(sql, ex)
-      ex = ExcludeRe.findFirstMatchIn(sql).map(_.start).getOrElse(-1)
+      ex = SqlText.findInCode(sql, ExcludeRe).map(_.start).getOrElse(-1)
     }
     sql
   }
@@ -315,15 +250,7 @@ object SqlPasses {
       } else w = 2
     }
     require(e >= 0 && sql.charAt(e) == ')', s"$what: no call before OVER")
-    var d2 = 0
-    var cOpen = -1
-    var k = e
-    while (k >= 0 && cOpen < 0) {
-      val c = sql.charAt(k)
-      if (c == ')') d2 += 1
-      else if (c == '(') { d2 -= 1; if (d2 == 0) cOpen = k }
-      k -= 1
-    }
+    val cOpen = SqlText.openParen(sql, e)
     var fnStart = cOpen - 1
     while (fnStart >= 0 && sql.charAt(fnStart).isWhitespace) fnStart -= 1
     val fnEnd = fnStart + 1
@@ -336,15 +263,7 @@ object SqlPasses {
       var e2 = fnStart - 1
       while (e2 >= 0 && sql.charAt(e2).isWhitespace) e2 -= 1
       require(e2 >= 0 && sql.charAt(e2) == ')', s"$what: FILTER without a call")
-      var d3 = 0
-      var cOpen2 = -1
-      var k2 = e2
-      while (k2 >= 0 && cOpen2 < 0) {
-        val c = sql.charAt(k2)
-        if (c == ')') d3 += 1
-        else if (c == '(') { d3 -= 1; if (d3 == 0) cOpen2 = k2 }
-        k2 -= 1
-      }
+      val cOpen2 = SqlText.openParen(sql, e2)
       var fnStart2 = cOpen2 - 1
       while (fnStart2 >= 0 && sql.charAt(fnStart2).isWhitespace) fnStart2 -= 1
       val fnEnd2 = fnStart2 + 1
@@ -360,31 +279,13 @@ object SqlPasses {
     (fnStart, fn, arg, ignoreNulls)
   }
 
-  /** Top-level comma split (parens + quotes respected). */
-  private[graft] def splitTopComma(s: String): Seq[String] = {
-    val out = ArrayBuffer.empty[String]
-    var depth = 0
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1; while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(last, i); last = i + 1 }
-      i += 1
-    }
-    out += s.substring(last)
-    out.toSeq
-  }
-
   /** ORDER BY key expressions of a window partition+order prefix,
     * directions stripped — row identity for the EXCLUDE fallback.
     */
   private def orderKeysOf(po: String): Seq[String] = {
     val idx = topIndexOf(po, "ORDER BY")
     if (idx < 0) Seq.empty
-    else splitTopComma(po.substring(idx + "ORDER BY".length)).map { k0 =>
+    else splitTop(po.substring(idx + "ORDER BY".length), ',').map { k0 =>
       var k = k0.trim
       k = k.replaceAll("(?i)\\s+NULLS\\s+(FIRST|LAST)$", "")
       k = k.replaceAll("(?i)\\s+(ASC|DESC)$", "")
@@ -395,7 +296,7 @@ object SqlPasses {
   /** FN name + argument text → (kernel fn, value expr, quantile arg). */
   private def kernelFnOf(fn: String, arg: String,
       ignoreNulls: Boolean = false): (String, String, Option[String]) = {
-    val parts = splitTopComma(arg)
+    val parts = splitTop(arg, ',')
     def vq: (String, Option[String]) = {
       require(parts.length == 2, s"window EXCLUDE: $fn expects (value, q), got ($arg)")
       (parts(0).trim, Some(parts(1).trim))
@@ -640,39 +541,20 @@ object SqlPasses {
   def emptyGroupingPass(sql0: String): String = {
     if (!sql0.contains("()")) return sql0
     val GroupBy = "(?i)\\bGROUP\\s+BY\\b".r
-    val ends = Set("HAVING", "ORDER", "LIMIT", "OFFSET", "QUALIFY",
+    val ends = Seq("HAVING", "ORDER", "LIMIT", "OFFSET", "QUALIFY",
       "WINDOW", "UNION", "EXCEPT", "INTERSECT")
     var sql = sql0
     // right-to-left so replacements don't shift earlier offsets
     GroupBy.findAllMatchIn(sql0).toSeq.reverse.foreach { m =>
-      if (!inQuote(sql0, m.start)) {
-        // scan the item list: top-level commas split; stop at a clause
-        // keyword at depth 0, a closing paren of the enclosing
-        // subquery, or end of statement
-        val items = ArrayBuffer.empty[String]
-        var i = m.end
-        var depth = 0
-        var itemStart = m.end
-        var stop = -1
-        while (i < sql.length && stop < 0) {
-          val c = sql.charAt(i)
-          if (c == '\'') { i += 1; while (i < sql.length && sql.charAt(i) != '\'') i += 1 }
-          else if (c == '(') depth += 1
-          else if (c == ')') { depth -= 1; if (depth < 0) stop = i }
-          else if (c == ',' && depth == 0) { items += sql.substring(itemStart, i); itemStart = i + 1 }
-          else if (c == ';' && depth == 0) stop = i
-          else if (depth == 0 && c.isLetter) {
-            val w = sql.substring(i).takeWhile(ch => ch.isLetterOrDigit || ch == '_')
-            if (ends(w.toUpperCase) &&
-                (i == 0 || !sql.charAt(i - 1).isLetterOrDigit)) stop = i
-            else i += w.length - 1
-          }
-          if (stop < 0) i += 1
-        }
+      if (inCode(sql0, m.start)) {
+        // the item list ends at a clause keyword or `;` at its depth,
+        // at the enclosing subquery's `)`, or at the end of statement
+        val stop = SqlText.findCode(sql, m.end)((i, d) => d == 0 &&
+          (");".indexOf(sql.charAt(i)) >= 0 || ends.exists(wordAt(sql, i, _))))
         val end = if (stop < 0) sql.length else stop
-        items += sql.substring(itemStart, end)
-        if (items.exists(_.trim == "()")) {
-          val kept = items.map(_.trim).filter(x => x.nonEmpty && x != "()")
+        val items = splitTop(sql.substring(m.end, end), ',')
+        if (items.contains("()")) {
+          val kept = items.filter(_ != "()")
           val clause =
             if (kept.isEmpty) "GROUP BY GROUPING SETS (()) "
             else s"GROUP BY ${kept.mkString(", ")} "
@@ -713,7 +595,7 @@ object SqlPasses {
   private def findExprBoundOver(sql: String): Option[Int] = {
     val OverRe = "(?i)\\bOVER\\s*\\(".r
     for (om <- findAll(sql, OverRe)) {
-      if (!inQuote(sql, om.start)) {
+      if (inCode(sql, om.start)) {
         val open = om.end - 1
         val spec = sql.substring(open + 1, matchParen(sql, open))
         val rowsIdx = topIndexOf(spec, "ROWS")
@@ -791,7 +673,6 @@ object SqlPasses {
     * side is the normal left-assoc grammar — untouched).
     */
   private[graft] def nestedJoinPass(sql: String): String = {
-    import graft.sources.DmlSql.topIndexOf
     val fromIdx = topIndexOf(sql, "FROM")
     if (fromIdx < 0) return sql
     val rest = sql.substring(fromIdx + 4)
@@ -799,30 +680,25 @@ object SqlPasses {
         "ORDER", "LIMIT", "OFFSET", "UNION", "EXCEPT", "INTERSECT")
       .map(k => topIndexOf(rest, k)).filter(_ >= 0)
       .reduceOption(_ min _).getOrElse(rest.length)
-    val seg = rest.substring(0, segEnd)
+    val seg = SqlText.stripComments(rest.substring(0, segEnd))
 
-    // tokenize: paren groups atomic (quote-aware), quoted literals
-    // atomic, commas their own token, words split on whitespace
+    // tokenize: paren groups atomic, commas their own token, words
+    // split on whitespace (a literal or quoted name stays in its word)
     val toks = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < seg.length) {
       val ch = seg.charAt(i)
       if (ch.isWhitespace) i += 1
       else if (ch == '(') {
-        // a paren left open inside the segment (a quoted name or a
-        // comment holding one) is not a join tree this pass can read
-        val close = try matchParen(seg, i) catch { case _: IllegalArgumentException => return sql }
+        val close = matchParen(seg, i)
+        if (close < 0) return sql
         toks += seg.substring(i, close + 1); i = close + 1
-      } else if (ch == '\'') {
-        var j = i + 1
-        while (j < seg.length && seg.charAt(j) != '\'') j += 1
-        toks += seg.substring(i, (j + 1).min(seg.length)); i = j + 1
       } else if (ch == ',') { toks += ","; i += 1 }
       else {
         var j = i
         while (j < seg.length && !seg.charAt(j).isWhitespace &&
-            seg.charAt(j) != '(' && seg.charAt(j) != ',' &&
-            seg.charAt(j) != '\'') j += 1
+            seg.charAt(j) != '(' && seg.charAt(j) != ',')
+          j = SqlText.spanEnd(seg, j).max(j + 1)
         toks += seg.substring(i, j); i = j
       }
     }

@@ -55,46 +55,18 @@ object StatementSurface {
     val text = Option(prepared.get(name.toLowerCase)).getOrElse(
       throw new IllegalArgumentException(s"EXECUTE: no prepared statement '$name'"))
     val args = argsRaw.map(a =>
-      graft.sources.DmlSql.topSplit(a, ',')).getOrElse(Nil)
-    // $n placeholders: single left-to-right scan, longest number wins
+      SqlText.splitTop(a, ',')).getOrElse(Nil)
+    // $n placeholders: one left-to-right scan, longest number wins
     // (sequential String.replace of "$1" would corrupt "$10" into
-    // arg1 followed by '0'), and string-literal spans are skipped —
-    // same discipline as the '?' branch below.
-    var out = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < text.length) {
-        val c = text.charAt(i)
-        if (c == '\'') {
-          sb += c; i += 1
-          while (i < text.length && text.charAt(i) != '\'') { sb += text.charAt(i); i += 1 }
-          if (i < text.length) { sb += '\''; i += 1 }
-        } else if (c == '$' && i + 1 < text.length && text.charAt(i + 1).isDigit) {
-          var j = i + 1
-          while (j < text.length && text.charAt(j).isDigit) j += 1
-          val idx = text.substring(i + 1, j).toInt
-          if (idx >= 1 && idx <= args.length) { sb ++= args(idx - 1); i = j }
-          else { sb += c; i += 1 }
-        } else { sb += c; i += 1 }
-      }
-      sb.toString
-    }
-    // positional `?` placeholders, outside string literals
+    // arg1 followed by '0'); literals are skipped, as for `?` below
+    var out = SqlText.replaceInCode(text, "\\$(\\d+)".r)(m =>
+      m.group(1).toIntOption.filter(k => k >= 1 && k <= args.length)
+        .map(k => args(k - 1)).getOrElse(m.matched))
+    // positional `?` placeholders
     if (args.nonEmpty && out.contains("?")) {
-      val sb = new StringBuilder
-      var i = 0
       var n = 0
-      while (i < out.length) {
-        val c = out.charAt(i)
-        if (c == '\'') {
-          sb += c; i += 1
-          while (i < out.length && out.charAt(i) != '\'') { sb += out.charAt(i); i += 1 }
-          if (i < out.length) { sb += '\''; i += 1 }
-        } else if (c == '?' && n < args.length) {
-          sb ++= args(n); n += 1; i += 1
-        } else { sb += c; i += 1 }
-      }
-      out = sb.toString
+      out = SqlText.replaceInCode(out, "\\?".r)(m =>
+        if (n < args.length) { n += 1; args(n - 1) } else m.matched)
     }
     out
   }
@@ -107,12 +79,6 @@ object StatementSurface {
     spark.createDataFrame(
       java.util.Arrays.asList(Row(n)),
       StructType(Seq(StructField("Count", LongType, nullable = false))))
-
-  def stripQuotes(v: String): String = {
-    val t = v.trim
-    if (t.length >= 2 && t.head == '\'' && t.last == '\'') t.substring(1, t.length - 1)
-    else t
-  }
 
   /** DuckDB setting names with a real Spark analog; everything else
     * stores under its own name (current_setting() reads it back from

@@ -38,9 +38,9 @@ object TableFns {
   def pass(spark: SparkSession, text: String): Option[String] = {
     val Re = "(?i)\\b(FROM|JOIN)\\s+(query_table|query|repeat_row|repeat)\\s*\\(".r
     Re.findAllMatchIn(text).foreach { m =>
-      if (!SqlPasses.inQuote(text, m.start)) {
+      if (SqlText.inCode(text, m.start)) {
         val open = text.indexOf('(', m.start(2))
-        val close = SqlPasses.matchParen(text, open)
+        val close = SqlText.matchParen(text, open)
         val args = text.substring(open + 1, close)
         val fn = m.group(2).toLowerCase
         val repl = fn match {
@@ -56,28 +56,12 @@ object TableFns {
     None
   }
 
-  /** Decode a single-quoted SQL literal ('' escapes) or None. */
-  private def stringLit(arg0: String): Option[String] = {
-    val arg = arg0.trim
-    if (arg.length >= 2 && arg.head == '\'' && arg.last == '\'' &&
-        // interior quotes must all pair up ('' escapes)
-        arg.substring(1, arg.length - 1).replace("''", "").indexOf('\'') < 0)
-      Some(arg.substring(1, arg.length - 1).replace("''", "'"))
-    else None
-  }
-
   private def rewriteQuery(args: String): String = {
-    val inner0 = stringLit(args).getOrElse(throw new IllegalArgumentException(
+    val inner0 = SqlText.decode(args).getOrElse(throw new IllegalArgumentException(
       "Parser Error: Expected a single SELECT statement — query() takes " +
       "one constant VARCHAR argument"))
-    // strip line comments and trailing semicolons, reject multi-statement
-    val noComments = inner0.split('\n')
-      .map(l => {
-        val i = l.indexOf("--")
-        if (i >= 0 && !SqlPasses.inQuote(l, i)) l.substring(0, i) else l
-      }).mkString("\n")
-    val stmts = graft.sources.DmlSql.topSplit(noComments, ';')
-      .map(_.trim).filter(_.nonEmpty)
+    // strip comments and trailing semicolons, reject multi-statement
+    val stmts = SqlText.splitTop(SqlText.stripComments(inner0), ';')
     if (stmts.length != 1) throw new IllegalArgumentException(
       "Parser Error: Expected a single SELECT statement")
     val stmt = stmts.head
@@ -101,7 +85,7 @@ object TableFns {
       val next = arg.replaceAll("(?is)::\\s*VARCHAR\\s*$", "").trim
       val unparen =
         if (next.startsWith("(") && next.endsWith(")") &&
-            SqlPasses.matchParen(next, 0) == next.length - 1)
+            SqlText.matchParen(next, 0) == next.length - 1)
           next.substring(1, next.length - 1).trim
         else next
       peeled = unparen != arg
@@ -110,7 +94,7 @@ object TableFns {
     if (arg.isEmpty || arg.equalsIgnoreCase("NULL"))
       throw new IllegalArgumentException(
         "Binder Error: query_table: Cannot use NULL or empty table name")
-    val name = stringLit(arg).getOrElse {
+    val name = SqlText.decode(arg).getOrElse {
       if (arg.length >= 2 && arg.head == '"' && arg.last == '"')
         arg.substring(1, arg.length - 1).replace("\"\"", "\"")
       else arg
@@ -123,7 +107,7 @@ object TableFns {
 
   private def rewriteQueryTable(
       spark: SparkSession, args0: String): String = {
-    val parts = graft.sources.DmlSql.topSplit(args0, ',').map(_.trim)
+    val parts = SqlText.splitTop(args0, ',')
       .filter(_.nonEmpty)
     if (parts.isEmpty) throw new IllegalArgumentException(
       "Binder Error: No function matches 'query_table()'")
@@ -138,9 +122,7 @@ object TableFns {
     val arg = listPart.head
     val names: Seq[String] =
       if (arg.startsWith("[") && arg.endsWith("]"))
-        graft.sources.DmlSql
-          .topSplit(arg.substring(1, arg.length - 1), ',')
-          .map(_.trim).filter(_.nonEmpty).map(tableName)
+        SqlText.splitTop(arg.substring(1, arg.length - 1), ',').map(tableName)
       else Seq(tableName(arg))
     if (names.isEmpty) throw new IllegalArgumentException(
       "Binder Error: query_table: empty table list")
@@ -181,7 +163,7 @@ object TableFns {
   }
 
   private def rewriteRepeat(args0: String): String = {
-    val parts = graft.sources.DmlSql.topSplit(args0, ',').map(_.trim)
+    val parts = SqlText.splitTop(args0, ',')
     if (parts.length != 2) throw new IllegalArgumentException(
       "Binder Error: repeat table function takes (value, count)")
     val (v, n) = (parts(0), parts(1))
@@ -191,12 +173,12 @@ object TableFns {
       "Binder Error: Repeat second parameter cannot be be less than 0")
     // output column named by the value's text, like RepeatBind's
     // Value::ToString (literal strings drop their quotes)
-    val colName = stringLit(v).getOrElse(v).replace("\"", "\"\"")
+    val colName = SqlText.decode(v).getOrElse(v).replace("\"", "\"\"")
     s"""(SELECT $v AS "$colName" FROM range($n))"""
   }
 
   private def rewriteRepeatRow(args0: String): String = {
-    val parts = graft.sources.DmlSql.topSplit(args0, ',').map(_.trim)
+    val parts = SqlText.splitTop(args0, ',')
       .filter(_.nonEmpty)
     val NumRows = "(?is)^num_rows\\s*(?::?=|=>)\\s*(.+)$".r
     val (rows, cols) = parts.partition(NumRows.findFirstIn(_).isDefined)

@@ -80,43 +80,27 @@ object Variables {
     if (!lower.contains("getvariable") && !lower.contains("duckdb_variables") &&
         !lower.contains("duckdb_secrets"))
       return text
-    val sb = new StringBuilder
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'') { // string literal ('' doubling) — copy verbatim
-        sb += c; i += 1
-        while (i < n && text.charAt(i) != '\'') { sb += text.charAt(i); i += 1 }
-        if (i < n) { sb += '\''; i += 1 }
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < n && (text.charAt(i).isLetterOrDigit || text.charAt(i) == '_')) i += 1
-        val word = text.substring(start, i)
-        var j = i
-        while (j < n && text.charAt(j).isWhitespace) j += 1
-        if (word.equalsIgnoreCase("getvariable") && j < n && text.charAt(j) == '(') {
-          val close = SqlPasses.matchParen(text, j)
-          val arg = text.substring(j + 1, close).trim
-          require(arg.length >= 2 && arg.head == '\'' && arg.last == '\'',
-            s"getvariable: expected a string literal, got: $arg")
-          val name = arg.substring(1, arg.length - 1).replace("''", "'")
-          sb ++= Option(vars.get(name.toLowerCase)).map(_.literal).getOrElse("NULL")
-          i = close + 1
-        } else if (word.equalsIgnoreCase("duckdb_variables") && j < n && text.charAt(j) == '(') {
-          val close = SqlPasses.matchParen(text, j)
+    SqlText.mapWords(text) { (start, end) =>
+      var j = end
+      while (j < text.length && text.charAt(j).isWhitespace) j += 1
+      val word = text.substring(start, end).toLowerCase
+      lazy val close = SqlText.matchParen(text, j)
+      if (j == text.length || text.charAt(j) != '(') None
+      else word match {
+        case "getvariable" =>
+          val arg = text.substring(j + 1, close)
+          val name = SqlText.decode(arg).getOrElse(throw new IllegalArgumentException(
+            s"getvariable: expected a string literal, got: ${arg.trim}"))
+          Some(Option(vars.get(name.toLowerCase)).map(_.literal).getOrElse("NULL") -> (close + 1))
+        case "duckdb_variables" =>
           listDf(spark).createOrReplaceTempView("__duckdb_variables")
-          sb ++= "__duckdb_variables"
-          i = close + 1
-        } else if (word.equalsIgnoreCase("duckdb_secrets") && j < n && text.charAt(j) == '(') {
-          val close = SqlPasses.matchParen(text, j)
+          Some("__duckdb_variables" -> (close + 1))
+        case "duckdb_secrets" =>
           Secrets.listDf(spark).createOrReplaceTempView("__duckdb_secrets")
-          sb ++= "__duckdb_secrets"
-          i = close + 1
-        } else sb ++= word
-      } else { sb += c; i += 1 }
+          Some("__duckdb_secrets" -> (close + 1))
+        case _ => None
+      }
     }
-    sb.toString
   }
 
   // ------------------------------------------------- literal rendering
@@ -126,7 +110,7 @@ object Variables {
     import org.apache.spark.sql.types._
     if (v == null) return s"CAST(NULL AS ${dt.sql})"
     (v, dt) match {
-      case (s: String, _) => "'" + s.replace("'", "''") + "'"
+      case (s: String, _) => SqlText.encode(s)
       case (d: java.sql.Date, _) => s"DATE '$d'"
       case (d: java.time.LocalDate, _) => s"DATE '$d'"
       case (t: java.sql.Timestamp, _) => s"TIMESTAMP '$t'"

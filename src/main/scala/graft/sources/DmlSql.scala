@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.plans.{DuckDialect, TableMeta}
+import graft.plans.{DuckDialect, SqlText, TableMeta}
+import graft.plans.SqlText.{matchParen, splitTop, topIndexOf}
 
 /** Mutation statements through the dialect front door — the
   * reference's UPDATE / DELETE / INSERT … ON CONFLICT surface
@@ -103,7 +104,7 @@ object DmlSql {
     val (setPart, wherePart) =
       if (whereIdx >= 0) (rest.substring(0, whereIdx), Some(rest.substring(whereIdx + 5)))
       else (rest, None)
-    val sets = topSplit(setPart, ',').map(parseAssign)
+    val sets = splitTop(setPart, ',').map(parseAssign)
     val cond = wherePart.map(w => expr(frag(w))).getOrElse(lit(true))
     val path = tablePath(spark, table)
     // generated columns recompute from the POST-update base values:
@@ -116,7 +117,8 @@ object DmlSql {
       require(!setTexts.contains(g.name.toLowerCase),
         s"UPDATE: cannot SET generated column ${g.name}")
     }
-    val genSets = gens.map(g => g.name -> substituteRefs(g.expr, setTexts))
+    val genSets = gens.map(g => g.name ->
+      mapBareRefs(g.expr)(w => setTexts.get(w.toLowerCase).map(t => s"($t)")))
     val setMap = sets.map { case (c, e) => c -> expr(frag(e)) }.toMap ++
       genSets.map { case (c, e) => c -> expr(e) }.toMap
     val ret = returning.map { _ =>
@@ -281,7 +283,7 @@ object DmlSql {
           val setPart = cp.drop("DO UPDATE SET".length)
           require(topIndexOf(setPart, "WHERE") < 0,
             "ON CONFLICT ... DO UPDATE ... WHERE is not supported")
-          (keys, "update", topSplit(setPart, ',').map(parseAssign))
+          (keys, "update", splitTop(setPart, ',').map(parseAssign))
         } else throw new IllegalArgumentException(
           s"ON CONFLICT: expected DO NOTHING or DO UPDATE SET, got: $cp")
     }
@@ -300,8 +302,12 @@ object DmlSql {
       case "update" =>
         require(genNames.isEmpty,
           "ON CONFLICT DO UPDATE on a table with generated columns is not supported")
+        // unqualified names in DO UPDATE SET read the existing row: the
+        // merge join has both sides in scope, so qualify them with the
+        // target alias (`excluded.…` passes through)
+        val lower = targetCols.map(_.toLowerCase).toSet
         val set = assigns.map { case (c, e) =>
-          c -> expr(qualifyBare(frag(e), targetCols, keys, "t"))
+          c -> expr(mapBareRefs(frag(e))(w => Option.when(lower(w.toLowerCase))(s"t.$w")))
         }.toMap
         Dml.merge(spark, path, source, keys, set, targetAlias = "t")
     }
@@ -363,78 +369,24 @@ object DmlSql {
     out
   }
 
-  /** Replace bare references to the given columns with their
-    * replacement text (parenthesized), skipping string literals,
-    * qualified names and call positions — used to recompute generated
-    * columns from post-update base values.
+  /** Rebuilds `e` with each bare column reference (not qualified, not
+    * a qualifier, not a call; literals skipped) replaced by `f(name)`
+    * where that is defined — used to recompute generated columns from
+    * post-update base values and to qualify DO UPDATE SET names.
     */
-  private[graft] def substituteRefs(e: String, repl: Map[String, String]): String = {
-    if (repl.isEmpty) return e
-    val sb = new StringBuilder
-    var i = 0
-    val n = e.length
-    while (i < n) {
-      val c = e.charAt(i)
-      if (c == '\'') {
-        sb += c; i += 1
-        while (i < n && e.charAt(i) != '\'') { sb += e.charAt(i); i += 1 }
-        if (i < n) { sb += '\''; i += 1 }
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < n && (e.charAt(i).isLetterOrDigit || e.charAt(i) == '_')) i += 1
-        val word = e.substring(start, i)
-        val prevDot = start > 0 && e.charAt(start - 1) == '.'
-        var j = i
-        while (j < n && e.charAt(j).isWhitespace) j += 1
-        val isCall = j < n && e.charAt(j) == '('
-        val isQualifier = j < n && e.charAt(j) == '.'
-        if (!prevDot && !isCall && !isQualifier && repl.contains(word.toLowerCase))
-          sb.append('(').append(repl(word.toLowerCase)).append(')')
-        else sb.append(word)
-      } else { sb += c; i += 1 }
+  private def mapBareRefs(e: String)(f: String => Option[String]): String =
+    SqlText.mapWords(e) { (start, end) =>
+      var j = end
+      while (j < e.length && e.charAt(j).isWhitespace) j += 1
+      val bare = (start == 0 || e.charAt(start - 1) != '.') &&
+        (j == e.length || (e.charAt(j) != '(' && e.charAt(j) != '.'))
+      if (bare) f(e.substring(start, end)).map(_ -> end) else None
     }
-    sb.toString
-  }
 
   /** Translate an expression fragment through the full dialect. */
   private def frag(e: String): String = {
     val out = DuckDialect.translate("SELECT " + e.trim)
     out.stripPrefix("SELECT").trim
-  }
-
-  /** Qualify BARE references to target-table columns with the target
-    * alias — the reference resolves unqualified names in DO UPDATE
-    * SET against the existing row, and the merge join has both sides'
-    * columns in scope, so an unqualified name would be ambiguous.
-    * `excluded.…`-qualified names pass through.
-    */
-  private[graft] def qualifyBare(e: String, targetCols: Seq[String],
-                                   keys: Seq[String], alias: String): String = {
-    val lower = targetCols.map(_.toLowerCase).toSet
-    val sb = new StringBuilder
-    var i = 0
-    val n = e.length
-    while (i < n) {
-      val c = e.charAt(i)
-      if (c == '\'') { // string literal — copy through verbatim
-        sb += c; i += 1
-        while (i < n && e.charAt(i) != '\'') { sb += e.charAt(i); i += 1 }
-        if (i < n) { sb += '\''; i += 1 }
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < n && (e.charAt(i).isLetterOrDigit || e.charAt(i) == '_')) i += 1
-        val word = e.substring(start, i)
-        val prevDot = start > 0 && e.charAt(start - 1) == '.'
-        var j = i
-        while (j < n && e.charAt(j).isWhitespace) j += 1
-        val isCall = j < n && e.charAt(j) == '('
-        val isQualifier = j < n && e.charAt(j) == '.'
-        if (!prevDot && !isCall && !isQualifier && lower(word.toLowerCase))
-          sb.append(alias).append('.').append(word)
-        else sb.append(word)
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
   }
 
   /** Resolve a catalog table's storage path. Temp views have no
@@ -472,80 +424,4 @@ object DmlSql {
     spark.createDataFrame(
       java.util.Arrays.asList(Row(n)),
       StructType(Seq(StructField("Count", LongType, nullable = false))))
-
-  /** Index of a top-level keyword (outside quotes and parens),
-    * case-insensitive, at word boundaries. Multi-word keywords match
-    * across any whitespace run.
-    */
-  private[graft] def topIndexOf(s: String, kw: String): Int = {
-    val words = kw.split(' ')
-    var i = 0
-    var depth = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '\'' || c == '"') {
-        val q = c; i += 1
-        while (i < n && s.charAt(i) != q) i += 1
-        i += 1
-      } else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && c.isLetter) {
-        val start = i
-        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-        if (s.substring(start, i).equalsIgnoreCase(words(0)) &&
-            (start == 0 || !s.charAt(start - 1).isLetterOrDigit)) {
-          // match the remaining words of a multi-word keyword
-          var j = i
-          var w = 1
-          var ok = true
-          while (ok && w < words.length) {
-            while (j < n && s.charAt(j).isWhitespace) j += 1
-            val ws = j
-            while (j < n && (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')) j += 1
-            if (!s.substring(ws, j).equalsIgnoreCase(words(w))) ok = false
-            w += 1
-          }
-          if (ok) return start
-        }
-      } else i += 1
-    }
-    -1
-  }
-
-  /** Split on a top-level separator (outside quotes and parens). */
-  private[graft] def topSplit(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    var depth = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '\'' || c == '"') {
-        val q = c; cur += c; i += 1
-        while (i < n && s.charAt(i) != q) { cur += s.charAt(i); i += 1 }
-        if (i < n) { cur += q; i += 1 }
-      } else if (c == '(' || c == '[') { depth += 1; cur += c; i += 1 }
-      else if (c == ')' || c == ']') { depth -= 1; cur += c; i += 1 }
-      else if (c == sep && depth == 0) { out += cur.toString; cur.clear(); i += 1 }
-      else { cur += c; i += 1 }
-    }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Index of the `)` matching the `(` at `open`. */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1; while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens in: $s")
-  }
 }

@@ -2,6 +2,8 @@ package graft.tools
 
 import scala.collection.mutable
 
+import graft.plans.SqlText
+
 /** Robustness sweep over the reference's OWN sqllogictest corpus
   * (every .test file under /root/reference/test/sql — read-only spec
   * input): every
@@ -68,11 +70,10 @@ object RefTestSweep {
               !text.contains("${") && !text.contains("__BUILD_DIRECTORY__"))
             // a block can hold several ';'-separated statements — the
             // real front door splits them in runScript; grade each
-            graft.sources.DmlSql.topSplit(text, ';')
-              .map(_.trim).filter(_.nonEmpty)
+            SqlText.splitTop(text, ';')
               // skip sqllogictest parameter placeholders (bare '?')
-              .filterNot(s => """(^|[\s(,=<>+\-*/|])\?([\s(),;=<>+\-*/|]|$)""".r
-                .findFirstIn(stripStringLiterals(s)).isDefined)
+              .filterNot(s => Placeholder.findAllMatchIn(s)
+                .exists(m => SqlText.inCode(s, m.start + m.group(1).length)))
               .foreach(s => out += ((f.getPath, s)))
         }
         i += 1
@@ -80,15 +81,13 @@ object RefTestSweep {
       out
     }
 
-  private def stripStringLiterals(s: String): String =
-    s.replaceAll("'[^']*'", "''")
+  private val Placeholder = """(^|[\s(,=<>+\-*/|])\?([\s(),;=<>+\-*/|]|$)""".r
 
   def main(args: Array[String]): Unit = {
     val filter = args.headOption.getOrElse("")
     val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val parser = spark.sessionState.sqlParser
-    graft.plans.DuckDialect.nativeTime = true // GraftSession enables TimeType
 
     // Verbs GraftSql routes at the STATEMENT layer — in real
     // execution these never reach Spark's parser, so grading their
@@ -143,7 +142,7 @@ object RefTestSweep {
       def statementFormPivot: Boolean =
         // FROM-first included: pivot_6390's `FROM (PIVOT t ON … GROUP
         // BY …) JOIN (PIVOT …)` executes through PivotStmt (verified
-        // end-to-end via Scratch, r10) — the parenthesized verb always
+        // end-to-end through GraftSql, r10) — the parenthesized verb always
         // carries the `PIVOT <rel> ON` shape the scan below requires
         ("(?is)^\\s*(WITH|SELECT|FROM|CREATE\\s+TABLE|" +
           "CREATE\\s+(OR\\s+REPLACE\\s+)?(TEMP(ORARY)?\\s+)?VIEW)\\b")
@@ -151,27 +150,17 @@ object RefTestSweep {
           // depth-0 scan for a statement-form PIVOT/UNPIVOT verb
           // (GraftSql routes these through plans/PivotStmt even when a
           // WITH clause precedes the verb)
-          var depth = 0
-          var i = 0
-          var found = false
           val lower = sql.toLowerCase
-          while (i < lower.length && !found) {
-            val c = lower.charAt(i)
-            if (c == '\'') { i += 1; while (i < lower.length && lower.charAt(i) != '\'') i += 1 }
-            else if (c == '(') depth += 1
-            else if (c == ')') depth -= 1
-            else if ((lower.startsWith("pivot", i) || lower.startsWith("unpivot", i)) &&
-                (i == 0 || !lower.charAt(i - 1).isLetterOrDigit) &&
-                // statement-form verb (`PIVOT <rel> ON …`) — routed by
-                // PivotStmt's keyword scan at ANY depth; a FROM-suffix
-                // `rel PIVOT (…)` group is translate's job instead
-                (depth == 0 ||
-                  "^(un)?pivot\\s+[\\w.\\\"]+\\s+on\\b".r
-                    .findFirstIn(lower.substring(i)).isDefined))
-              found = true
-            i += 1
-          }
-          found
+          SqlText.findCode(lower) { (i, depth) =>
+            (lower.startsWith("pivot", i) || lower.startsWith("unpivot", i)) &&
+              (i == 0 || !lower.charAt(i - 1).isLetterOrDigit) &&
+              // statement-form verb (`PIVOT <rel> ON …`) — routed by
+              // PivotStmt's keyword scan at ANY depth; a FROM-suffix
+              // `rel PIVOT (…)` group is translate's job instead
+              (depth == 0 ||
+                "^(un)?pivot\\s+[\\w.\\\"]+\\s+on\\b".r
+                  .findFirstIn(lower.substring(i)).isDefined)
+          } >= 0
         }
       val layerRouted = routedVerb.pattern.matcher(sql).matches() ||
         (try graft.plans.MacroReg.isCreate(sql) catch { case _: Exception => false }) ||

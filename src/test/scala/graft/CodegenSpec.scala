@@ -160,4 +160,19 @@ class CodegenSpec extends AnyFunSuite {
     assert(r.getString(0) == "aei")
     assert(r.getString(1) == "é")
   }
+
+  test("graft_rint over a non-null decimal and graft_rint_try over strings, codegen-only") {
+    noFallback {
+      // a Generate over graft_rint of a non-nullable decimal (d08's shape)
+      assert(spark.sql("SELECT explode(sequence(1, CAST(graft_rint(greatest(" +
+        "CAST(id AS DECIMAL(10,2)), 1)) AS BIGINT))) FROM range(3)")
+        .collect().map(_.getLong(0)).toSeq === Seq(1L, 1L, 1L, 2L))
+      assert(spark.sql("SELECT graft_rint_try(CAST(id AS STRING)) FROM range(3)")
+        .collect().map(_.getDecimal(0).intValue).toSeq === Seq(0, 1, 2))
+      // the try form yields NULL from a non-null unparsable string
+      assert(spark.sql("SELECT graft_rint_try(substr(concat('abc', CAST(id AS STRING)), 1, 3)) " +
+        "FROM range(1)").head().isNullAt(0))
+      assert(spark.sql("SELECT graft_rint_try('abc')").head().isNullAt(0))
+    }
+  }
 }

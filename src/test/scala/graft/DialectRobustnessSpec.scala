@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.DuckDialect
+import graft.plans.{DuckDialect, SqlText}
 
 /** Front-door robustness items surfaced by sweeping the reference's
   * own sqllogictest corpus through the translator
@@ -231,5 +231,65 @@ class DialectRobustnessSpec extends AnyFunSuite {
       .collect()(0).toSeq === Seq(true, false))
     assert(GraftSql.sql(spark, "SELECT 'a' IN MAP {'a': 1} AS t").collect()(0).get(0) === true)
     assert(GraftSql.sql(spark, "SELECT 2 NOT IN [1, 2, 3] AS f").collect()(0).get(0) === false)
+  }
+
+  test("literals, quoted names and comments never hide or fake code (DuckDB 1.0.0 answers)") {
+    def rows(q: String): Seq[Seq[String]] =
+      GraftSql.sql(spark, q).collect().toSeq.map(_.toSeq.map(String.valueOf))
+    val cases = Seq(
+      """SELECT x AS "it's" FROM range(10) t(x) LIMIT 20 PERCENT""" -> Seq(Seq("0"), Seq("1")),
+      "SELECT x FROM range(10) t(x) -- don't\nLIMIT 20 PERCENT" -> Seq(Seq("0"), Seq("1")),
+      """SELECT x AS "a(b" FROM range(3) t(x) LIMIT 50 PERCENT""" -> Seq(Seq("0")),
+      """SELECT "a'b".x FROM (SELECT 1 AS x) "a'b" NATURAL SEMI JOIN (SELECT 1 AS x) r""" ->
+        Seq(Seq("1")),
+      """SELECT x AS "it's", row_number() OVER () AS r FROM range(3) t(x)""" ->
+        Seq(Seq("0", "1"), Seq("1", "2"), Seq("2", "3")),
+      // keyword rewrites must leave string data byte-for-byte
+      "SELECT 'skip OFFSET 5 LIMIT 3 rows' AS s" -> Seq(Seq("skip OFFSET 5 LIMIT 3 rows")),
+      "SELECT 'FROM db.range(3)' AS s" -> Seq(Seq("FROM db.range(3)")),
+      "SELECT 'WINDOW w AS (x)' AS s" -> Seq(Seq("WINDOW w AS (x)")),
+      // statement passes must not fire on keywords inside a literal
+      "SELECT 'x UNION ALL BY NAME y' AS s" -> Seq(Seq("x UNION ALL BY NAME y")),
+      "SELECT 'a EXCLUDE CURRENT ROW' AS s" -> Seq(Seq("a EXCLUDE CURRENT ROW")),
+      "SELECT 'CAST(explode(x) AS INT)' AS s" -> Seq(Seq("CAST(explode(x) AS INT)")))
+    cases.foreach { case (q, want) => assert(rows(q) === want, q) }
+  }
+
+  test("a trailing comment never reaches the statement layer (DuckDB 1.0.0 accepts each)") {
+    GraftSql.sql(spark, "CREATE OR REPLACE TEMP VIEW cmt_t AS SELECT 1 AS a")
+    assert(GraftSql.sql(spark, "DESCRIBE cmt_t -- note").collect().map(_.getString(0)).toSeq === Seq("a"))
+    GraftSql.sql(spark, "BEGIN TRANSACTION -- note")
+    GraftSql.sql(spark, "COMMIT /* note */")
+    GraftSql.sql(spark, "SET cmt_setting = 'it''s' -- note")
+    assert(spark.conf.get("cmt_setting") === "it's")
+    spark.conf.unset("cmt_setting")
+    spark.catalog.dropTempView("cmt_t")
+  }
+
+  test("SqlText: where each kind of span ends, and what it hides") {
+    val ends = Seq(
+      "'it''s' x" -> 7, "\"a\"\"b\" x" -> 6, "`a``b` x" -> 6, "'open" -> 5,
+      "$$it's$$ x" -> 8, "$t$a$$b$t$ x" -> 10, "/* a /* b */ c */ x" -> 17, "-- c\nx" -> 4,
+      "$1 x" -> 0, "x" -> 0)
+    ends.foreach { case (s, end) => assert(SqlText.spanEnd(s, 0) === end, s) }
+    assert(SqlText.spanEnd("a$b$ x", 1) === 1, "a $ inside a word opens nothing")
+    // a paren, a comma and a keyword inside each kind of span
+    Seq("'" -> "'", "\"" -> "\"", "`" -> "`", "$$" -> "$$", "$q$" -> "$q$", "/*" -> "*/",
+        "--" -> "\n").foreach { case (open, close) =>
+      val s = s"f(${open}x) , FROM$close, (y)) FROM t"
+      val end = SqlText.matchParen(s, 1)
+      assert(end === s.indexOf("))") + 1, s)
+      assert(SqlText.splitTop(s.substring(2, end), ',').length === 2, s)
+      assert(SqlText.topIndexOf(s, "FROM") === s.lastIndexOf("FROM"), s)
+      assert(!SqlText.inCode(s, s.indexOf("FROM")) && SqlText.inCode(s, s.lastIndexOf("FROM")), s)
+    }
+    assert(SqlText.matchParen("f('x)", 1) === -1, "an unterminated literal runs to the end")
+    assert(SqlText.decode(" 'it''s' ") === Some("it's"))
+    assert(Seq("'a'b'", "'open", "'a''", "x").forall(SqlText.decode(_).isEmpty))
+    assert(SqlText.encode("it's") === "'it''s'")
+    assert(SqlText.stripComments("a /* b */c -- d\ne '--'") === "a  c \ne '--'")
+    assert(SqlText.mapWords("x + 'x' + \"x\" + x1 -- x")((_, end) => Some("y" -> end)) ===
+      "y + 'x' + \"x\" + y -- x")
+    assert(SqlText.replaceInCode("a 'a' `a` a", "a".r)(_ => "b") === "b 'a' `a` b")
   }
 }

@@ -19,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Every runnable tool is documented in the verify skill, so one-off
   * tools cannot pile up unseen.
+  *
+  * Where a literal, a quoted name or a comment ends is decided in one
+  * place, plans/SqlText: a quote char literal anywhere else is a second
+  * lexical rule that disagrees with it.
   */
 class ReadPathLintSpec extends AnyFunSuite {
 
@@ -71,5 +75,13 @@ class ReadPathLintSpec extends AnyFunSuite {
     assert(mains.size >= 5, s"only ${mains.size} tool mains found")
     val undocumented = mains.distinct.filterNot(n => s"\\b$n\\b".r.findFirstIn(skill).isDefined)
     assert(undocumented.isEmpty, undocumented.mkString("not in SKILL.md: ", ", ", ""))
+  }
+
+  test("the quote char literal appears only in plans/SqlText.scala (and the witness tokenizer)") {
+    // queries/ImdbWitness tokenizes the literal VALUES of the reference's
+    // JOB texts to solve for witness rows; it never rewrites SQL text
+    val quoteOk = Set(root.resolve("plans/SqlText.scala"), root.resolve("queries/ImdbWitness.scala"))
+    val found = offenders(scalaSources.filterNot(quoteOk), """'\\''""".r)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

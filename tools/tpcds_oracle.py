@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """DuckDB side of the TPC-DS 99 probe: runs each official query text
 over the synthesized schema (prelude CTEs from /tmp/tpcds_prelude.sql,
-written by graft.tools.TpcdsProbe) and prints `qNN count` or the error.
+written by graft.tools.TpcdsFpProbe) and prints `qNN count` or the error.
 
 Usage: python3 tools/tpcds_oracle.py [qnums...]
 """
