@@ -107,6 +107,7 @@ object DuckDialect {
           case '$' => // $tag$…$tag$ reads as the literal of its body
             val tag = span.substring(0, span.indexOf('$', 1) + 1)
             out += TStr(SqlText.encode(span.stripPrefix(tag).stripSuffix(tag)))
+          case 'E' | 'e' => out += TStr(SqlText.decode(span).map(SqlText.encode).getOrElse(span.tail))
           case _ => out += TStr(span)
         }
         i = end

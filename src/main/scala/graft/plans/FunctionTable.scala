@@ -132,8 +132,13 @@ object FunctionTable {
     // byte length (ClickBench q28/q29 spell STRLEN)
     rename("strlen", "octet_length"),
     // DuckDB's len is polymorphic: characters for strings (Spark's
-    // built-in, bit-identical), element count for lists
-    fn("len")(1)(a => LenPoly(a(0))),
+    // built-in, bit-identical), element count for lists; other scalars
+    // count the characters of their string form, as Spark's length does
+    fn("len")(1)(a => LenPoly(a(0) match {
+      case e if e.resolved && (e.dataType.isInstanceOf[NumericType] || Set[DataType](BooleanType,
+          DateType, TimestampType, TimestampNTZType, NullType)(e.dataType)) => Cast(e, StringType)
+      case e => e
+    })),
     // literal-delimiter split: Spark's split() takes a REGEX, the
     // reference's string_split takes a literal — quote it at bind time
     fn("string_split", "str_split", "string_to_array")(2)(a =>

@@ -360,20 +360,12 @@ object HashKernels {
     -1L
   }
 
-  /** Primitive-array twins of agreeCount/firstEqualIndex/
-    * sortedIntersectCount for the bucket-local pair generator
+  /** Primitive-array twins of firstEqualIndex/sortedIntersectCount
+    * for the bucket-local pair generator
     * ([[LshBucketPairs]]), which unpacks each member's arrays once and
     * compares them O(m²/2) times — re-wrapping in ArrayData per pair
     * would allocate in the innermost loop.
     */
-  def agreeCountLong(x: Array[Long], y: Array[Long]): Long = {
-    val n = math.min(x.length, y.length)
-    var c = 0L
-    var i = 0
-    while (i < n) { if (x(i) == y(i)) c += 1; i += 1 }
-    c
-  }
-
   def firstEqualLong(x: Array[Long], y: Array[Long]): Long = {
     val n = math.min(x.length, y.length)
     var i = 0

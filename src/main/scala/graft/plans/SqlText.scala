@@ -11,6 +11,8 @@ import scala.util.matching.Regex
   * The spans, as the reference's lexer reads them:
   *   - `'…'`, `"…"` and `` `…` `` end at the first quote of their kind
   *     that is not doubled (`''`, `""`, ``` `` ``` are escapes);
+  *   - `E'…'` (or `e'…'`, not inside a word) also takes backslash
+  *     escapes: `\'` does not end it;
   *   - `$tag$…$tag$` ends at the next same delimiter; the tag is
   *     letters, digits and `_`, empty or starting with a non-digit
   *     (`$1` is a parameter), and a `$` inside a word opens nothing;
@@ -29,15 +31,20 @@ object SqlText {
     val n = s.length
     if (i >= n) return i
     def at(k: Int): Char = if (k < n) s.charAt(k) else '\u0000'
+    // end of a quoted span whose body starts at `from`; `esc`: `\x` escapes
+    def closeAt(q: Char, from: Int, esc: Boolean): Int = {
+      var j = from
+      while (j < n) {
+        if ((esc && s.charAt(j) == '\\') || (s.charAt(j) == q && at(j + 1) == q)) j += 2
+        else if (s.charAt(j) == q) return j + 1
+        else j += 1
+      }
+      n
+    }
     s.charAt(i) match {
-      case q @ ('\'' | '"' | '`') =>
-        var j = i + 1
-        while (j < n) {
-          if (s.charAt(j) != q) j += 1
-          else if (at(j + 1) == q) j += 2
-          else return j + 1
-        }
-        n
+      case q @ ('\'' | '"' | '`') => closeAt(q, i + 1, esc = false)
+      case 'E' | 'e' if at(i + 1) == '\'' && (i == 0 || !isWordChar(s.charAt(i - 1))) =>
+        closeAt('\'', i + 2, esc = true)
       case '-' if at(i + 1) == '-' =>
         val e = s.indexOf('\n', i)
         if (e < 0) n else e
@@ -230,9 +237,21 @@ object SqlText {
     else None
   }
 
-  /** The value of `lit` when it is exactly one `'…'` string literal. */
-  def decode(lit: String): Option[String] =
-    if (lit.trim.startsWith("'")) unquote(lit) else None
+  private val EscapeLit = """(?s)[Ee]'((?:[^'\\]++|\\.|'')*+)'""".r
+  private val Escape = """(?s)\\(?:x([0-9a-fA-F]{1,2})|([0-7]{1,3})|(.))|''""".r
+
+  /** The value of `lit` when it is exactly one `'…'` or `E'…'` string
+    * literal. The `E` form decodes `\b \f \n \r \t`, `\x` + 1–2 hex
+    * digits and `\` + 1–3 octal digits; `\c` is `c` for any other `c`.
+    */
+  def decode(lit: String): Option[String] = lit.trim match {
+    case EscapeLit(body) => Some(Escape.replaceAllIn(body, m => Regex.quoteReplacement(
+      if (m.group(1) != null) Integer.parseInt(m.group(1), 16).toChar.toString
+      else if (m.group(2) != null) Integer.parseInt(m.group(2), 8).toChar.toString
+      else Option(m.group(3)).fold("'")(c => "\b\f\n\r\t".lift("bfnrt".indexOf(c)).fold(c)(_.toString)))))
+    case t if t.startsWith("'") => unquote(t)
+    case _ => None
+  }
 
   /** The `'…'` literal spelling of `v`. */
   def encode(v: String): String = "'" + v.replace("'", "''") + "'"

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -21,7 +21,6 @@ object RelationalA {
   private val decQty = DecimalType(18, 2)
 
   /** l_extendedprice * (1 - l_discount) in pure decimal arithmetic. */
-  private def revDec(): Column = revenue(col("l_extendedprice"), col("l_discount"))
   private val revSql = revenueSql
 
   val defs: Seq[QDef] = Seq(

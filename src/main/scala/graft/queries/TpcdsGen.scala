@@ -653,9 +653,6 @@ object TpcdsGen {
     dec(s"($item) * 977 % 990000 + 100")
   private def salesPrice(item: String): String =
     dec(s"($item) * 499 % 19900 + 50")
-  private def returnAmt(item: String): String =
-    dec(s"($item) * 9973 % 2000000 + 100")
-
   /** Bimodal net profit: 70% in -100..400 dollars so the corpus's
     * narrow BETWEEN bands (q85 100–200 etc.) carry real mass. */
   private def netProfit(x: String, s1: Int, s2: Int, s3: Int): String =

@@ -16,7 +16,6 @@ object Tpch {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def revDec(): Column = revenue(col("l_extendedprice"), col("l_discount"))
   private val revSql = revenueSql
 
   private def ts(d: String): Column = lit(d).cast("timestamp")

@@ -24,13 +24,6 @@ object Catalog {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Dimension tables small enough to broadcast at any scale factor
-    * (region/nation are fixed-size; supplier/part/customer grow slowly
-    * vs. the fact tables — on a real 100 TB deployment customer moves
-    * to the shuffle side and AQE decides from runtime stats).
-    */
-  val broadcastDims: Set[String] = Set("region", "nation", "supplier", "part")
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
     else parquet(spark, s"$sfDir/$name.parquet")

@@ -20,9 +20,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * then `runs` (default 3) measured runs of build + noop sink. Every
   * run prints one JSON line: wall seconds; jobs, stages and tasks;
   * summed executor run, CPU and GC time; input, shuffle read/write and
-  * spill bytes; one row per stage (wall, run, CPU, tasks); and the
-  * operator counts of the noop write's final post-AQE plan. After an
-  * entry's runs, that final plan of its last run is printed.
+  * spill bytes; the largest peak execution memory of one task (the
+  * Tungsten pages of its hash maps and sorters); one row per stage
+  * (wall, run, CPU, tasks); and the operator counts of the noop write's
+  * final post-AQE plan. After an entry's runs, that final plan of its
+  * last run is printed.
   *
   * Events belong to a run through its job group. Totals sum the
   * run's task-end events; stage rows come from its stage completions,
@@ -35,7 +37,7 @@ object OptProf {
   final case class Run(
       entry: String, run: Int, wallS: Double, jobs: Int, tasks: Int,
       runMs: Long, cpuNs: Long, gcMs: Long, inputBytes: Long,
-      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long, peakExecMemBytes: Long,
       stages: Seq[StageRow], planCounts: Seq[(String, Int)], finalPlan: String) {
 
     def toJson: String = {
@@ -49,6 +51,7 @@ object OptProf {
         s""""stages":${stages.size},"tasks":$tasks,"run_ms":$runMs,"cpu_ms":${ms(cpuNs)},""" +
         s""""gc_ms":$gcMs,"input_bytes":$inputBytes,"shuffle_read_bytes":$shuffleReadBytes,""" +
         s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,""" +
+        s""""peak_exec_mem_bytes":$peakExecMemBytes,""" +
         s""""plan":${plan.mkString("{", ",", "}")},"stage_rows":${rows.mkString("[", ",", "]")}}"""
     }
   }
@@ -80,7 +83,7 @@ object OptProf {
     var jobs = 0
     val stageIds = mutable.Set.empty[Int]
     val stages = mutable.ArrayBuffer.empty[StageRow]
-    var tasks, runMs, cpuNs, gcMs, input, shRead, shWrite, spill = 0L
+    var tasks, runMs, cpuNs, gcMs, input, shRead, shWrite, spill, peakExecMem = 0L
     var lastQe: Option[QueryExecution] = None
 
     private def ours(p: java.util.Properties) =
@@ -111,6 +114,7 @@ object OptProf {
         shRead += m.shuffleReadMetrics.totalBytesRead
         shWrite += m.shuffleWriteMetrics.bytesWritten
         spill += m.diskBytesSpilled
+        peakExecMem = math.max(peakExecMem, m.peakExecutionMemory)
       }
     }
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -143,7 +147,7 @@ object OptProf {
     val plan = c.lastQe.getOrElse(sys.error(s"$entry: no query execution seen")).executedPlan
     c.synchronized {
       Run(entry, run, wall, c.jobs, c.tasks.toInt, c.runMs, c.cpuNs, c.gcMs, c.input,
-        c.shRead, c.shWrite, c.spill, c.stages.sortBy(_.id).toList, planCounts(plan),
+        c.shRead, c.shWrite, c.spill, c.peakExecMem, c.stages.sortBy(_.id).toList, planCounts(plan),
         plan.treeString)
     }
   }

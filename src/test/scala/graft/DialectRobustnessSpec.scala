@@ -251,7 +251,10 @@ class DialectRobustnessSpec extends AnyFunSuite {
       // statement passes must not fire on keywords inside a literal
       "SELECT 'x UNION ALL BY NAME y' AS s" -> Seq(Seq("x UNION ALL BY NAME y")),
       "SELECT 'a EXCLUDE CURRENT ROW' AS s" -> Seq(Seq("a EXCLUDE CURRENT ROW")),
-      "SELECT 'CAST(explode(x) AS INT)' AS s" -> Seq(Seq("CAST(explode(x) AS INT)")))
+      "SELECT 'CAST(explode(x) AS INT)' AS s" -> Seq(Seq("CAST(explode(x) AS INT)")),
+      // escape-string literals: \' does not end one, \n is a newline
+      "SELECT E'it\\'s' AS s" -> Seq(Seq("it's")),
+      "SELECT 'a' || E'\\n' || 'b' AS s" -> Seq(Seq("a\nb")))
     cases.foreach { case (q, want) => assert(rows(q) === want, q) }
   }
 
@@ -270,9 +273,10 @@ class DialectRobustnessSpec extends AnyFunSuite {
     val ends = Seq(
       "'it''s' x" -> 7, "\"a\"\"b\" x" -> 6, "`a``b` x" -> 6, "'open" -> 5,
       "$$it's$$ x" -> 8, "$t$a$$b$t$ x" -> 10, "/* a /* b */ c */ x" -> 17, "-- c\nx" -> 4,
-      "$1 x" -> 0, "x" -> 0)
+      "$1 x" -> 0, "x" -> 0, "E'it\\'s' x" -> 8, "e'a''b\\\\' x" -> 9, "E 'a'" -> 0)
     ends.foreach { case (s, end) => assert(SqlText.spanEnd(s, 0) === end, s) }
     assert(SqlText.spanEnd("a$b$ x", 1) === 1, "a $ inside a word opens nothing")
+    assert(SqlText.spanEnd("xe'a'", 1) === 1, "an e inside a word opens no escape string")
     // a paren, a comma and a keyword inside each kind of span
     Seq("'" -> "'", "\"" -> "\"", "`" -> "`", "$$" -> "$$", "$q$" -> "$q$", "/*" -> "*/",
         "--" -> "\n").foreach { case (open, close) =>
@@ -285,7 +289,8 @@ class DialectRobustnessSpec extends AnyFunSuite {
     }
     assert(SqlText.matchParen("f('x)", 1) === -1, "an unterminated literal runs to the end")
     assert(SqlText.decode(" 'it''s' ") === Some("it's"))
-    assert(Seq("'a'b'", "'open", "'a''", "x").forall(SqlText.decode(_).isEmpty))
+    assert(SqlText.decode("E'a\\tb\\x41\\101\\q\\\\\\''''") === Some("a\tbAAq\\''"))
+    assert(Seq("'a'b'", "'open", "'a''", "x", "E'a\\'").forall(SqlText.decode(_).isEmpty))
     assert(SqlText.encode("it's") === "'it''s'")
     assert(SqlText.stripComments("a /* b */c -- d\ne '--'") === "a  c \ne '--'")
     assert(SqlText.mapWords("x + 'x' + \"x\" + x1 -- x")((_, end) => Some("y" -> end)) ===

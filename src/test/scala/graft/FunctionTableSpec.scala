@@ -44,7 +44,7 @@ class FunctionTableSpec extends AnyFunSuite {
 
   test("allow-listed names return the plain-session result at every Spark arity") {
     val calls = Seq(
-      "len('héllo')", "len(X'01020304')",
+      "len('héllo')", "len(X'01020304')", "len(123)", "len(CAST(1.5 AS DECIMAL(3,1)))",
       "datediff(DATE'2024-03-01', DATE'2024-01-31')",
       "date_diff(DATE'2024-03-01', DATE'2024-01-31')",
       "encode('héllo', 'UTF-8')",

@@ -36,6 +36,8 @@ class OptProfSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(r.stages.map(_.runMs).sum === r.runMs)
       assert(r.stages.map(_.cpuNs).sum === r.cpuNs)
       assert(r.toJson.startsWith(s"""{"entry":"$name","run":1,"""))
+      assert(r.toJson.contains(s""""peak_exec_mem_bytes":${r.peakExecMemBytes},"""))
+      if (name == "q07_groupjoin") assert(r.peakExecMemBytes > 0, "a grouped aggregate holds a hash map")
     }
 
     test(s"$name: plan counts equal the entry's own executedPlan") {
