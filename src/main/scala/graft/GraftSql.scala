@@ -339,16 +339,11 @@ object GraftSql {
       case TxnRollback() =>
         graft.sources.Txn.rollback(spark); return spark.emptyDataFrame
       // a plain INSERT INTO inside an open transaction appends via
-      // Spark's native path — snapshot the table first so ROLLBACK
-      // can drop the appended files
+      // Spark's native path — touch the table first so ROLLBACK can
+      // drop the appended files
       case PlainInsert(table) if graft.sources.Txn.isActive &&
           !graft.sources.DmlSql.matches(text) =>
         val insPath = graft.sources.DmlSql.tablePath(spark, table)
-        // a pinned shadow view (another connection's open snapshot)
-        // blocks Spark's native INSERT resolution — engine-layer
-        // append by path instead
-        if (graft.sources.Txn.isPinned(table))
-          return graft.sources.DmlSql.run(spark, text)
         graft.sources.Txn.touch(spark, insPath)
         val insOut = spark.sql(translate(text))
         graft.sources.Txn.wrote(spark, insPath)

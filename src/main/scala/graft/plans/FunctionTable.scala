@@ -922,9 +922,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => GroupJoinRule)
     e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    // secondary-transaction reader snapshots (sources/Txn): post-hoc
-    // so relations are already resolved to their file sources
-    e.injectPostHocResolutionRule(s => SecondarySnapshotRule(s))
+    // transaction read snapshots, one model for every connection
+    // (sources/Txn): post-hoc so relations are already resolved to
+    // their file sources
+    e.injectPostHocResolutionRule(s => TxnSnapshotRule(s))
     FunctionTable.inject(e)
   }
 }

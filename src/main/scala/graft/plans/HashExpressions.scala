@@ -293,25 +293,6 @@ case class SegmentMd5s(child: Expression, segWords: Int) extends UnaryExpression
     copy(child = c)
 }
 
-/** md5 digests of the SLIDING word n-grams (16-byte binary per gram;
-  * n=1 → per-word digests). See HashKernels.slidingNgramMd5s.
-  */
-case class SlidingNgramMd5s(child: Expression, n: Int) extends UnaryExpression {
-  import HashExpressions.kernels
-
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.slidingNgramMd5s(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"$kernels.slidingNgramMd5s($c, $n)")
-
-  override protected def withNewChildInternal(c: Expression): SlidingNgramMd5s =
-    copy(child = c)
-}
-
 /** Segment count companion of [[SegmentMd5s]] (tokenize only, no md5). */
 case class SegmentCount(child: Expression, segWords: Int) extends UnaryExpression {
   import HashExpressions.kernels
@@ -536,8 +517,8 @@ case class TokenCounts(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-/** 64-bit hashes of the sliding word n-grams (long-keyed sibling of
-  * [[SlidingNgramMd5s]]; duplicates kept).
+/** 64-bit hashes of the sliding word n-grams (duplicates kept).
+  * See HashKernels.slidingNgramHash64s.
   */
 case class SlidingNgramHash64s(child: Expression, n: Int) extends UnaryExpression {
   import HashExpressions.kernels

@@ -328,19 +328,6 @@ object HashKernels {
     new GenericArrayData(blocks)
   }
 
-  /** Number of positions where two long arrays agree (minhash
-    * signature agreement → estimated jaccard).
-    */
-  def agreeCount(a: ArrayData, b: ArrayData): Long = {
-    val x = a.toLongArray()
-    val y = b.toLongArray()
-    val n = math.min(x.length, y.length)
-    var c = 0L
-    var i = 0
-    while (i < n) { if (x(i) == y(i)) c += 1; i += 1 }
-    c
-  }
-
   /** Index of the FIRST position where two long arrays agree, -1 if
     * none — the emit-once band test for LSH pair generation: a
     * candidate pair sharing k band buckets appears in k bucket joins,
@@ -717,36 +704,6 @@ object HashKernels {
     new GenericArrayData(out)
   }
 
-  /** md5 of each SLIDING word n-gram of the lowercased text (words
-    * i..i+n-1 joined by single spaces; stride 1, t-n+1 grams, none if
-    * t < n). n=1 gives per-word digests — the unigram companion for
-    * first-word conditioning keys. Digest equality stands in for gram
-    * STRING equality, so count tables and joins carry 16-byte keys
-    * instead of gram text.
-    */
-  def slidingNgramMd5s(input: UTF8String, n: Int): ArrayData = {
-    val (bytes, starts, ends) = tokenize(input)
-    val t = starts.size
-    val m = math.max(t - n + 1, 0)
-    val md = md5Local.get()
-    val out = new Array[Any](m)
-    var p = 0
-    while (p < m) {
-      md.reset()
-      var w = 0
-      while (w < n) {
-        if (w > 0) md.update(' '.toByte)
-        val a = starts.get(p + w).intValue()
-        val b = ends.get(p + w).intValue()
-        md.update(bytes, a, b - a)
-        w += 1
-      }
-      out(p) = md.digest()
-      p += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** Number of fixed-width word segments (max(ceil(tokens/w), 1)) —
     * the tokenize-only companion of [[segmentMd5s]].
     */
@@ -838,9 +795,8 @@ object HashKernels {
     h
   }
 
-  /** 64-bit hashes of the SLIDING word n-grams (the long-keyed
-    * sibling of [[slidingNgramMd5s]]; duplicates kept, t−n+1 grams,
-    * none if t&lt;n; n=1 → per-word hashes).
+  /** 64-bit hashes of the SLIDING word n-grams (stride 1, duplicates
+    * kept, t−n+1 grams, none if t&lt;n; n=1 → per-word hashes).
     */
   def slidingNgramHash64s(input: UTF8String, n: Int): ArrayData = {
     val (bytes, starts, ends) = tokenize(input)

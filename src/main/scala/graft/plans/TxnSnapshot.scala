@@ -7,30 +7,23 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
-/** Repeatable reads for SECONDARY transaction connections
-  * (sources/Txn.onConnection, ids >= 1) — the reference gives every
-  * transaction a pinned MVCC snapshot
-  * (src/transaction/duck_transaction_manager.cpp); the primary
-  * connection gets one via shadowing temp views (Txn.pinCatalogTables),
-  * but the session has ONE temp-view namespace, so secondaries pin at
-  * PLAN RESOLUTION time instead: while the current thread runs inside
-  * an open secondary transaction, any parquet relation rooted at a
-  * table that transaction snapshotted at BEGIN is re-pointed to
-  * exactly the BEGIN file list (Txn.threadReadPins — re-pointed live
-  * when a concurrent writer trash-renames a member, dropped at the
-  * transaction's first own write for own-write visibility).
+/** Repeatable reads inside a transaction (sources/Txn) — the
+  * reference gives every transaction a pinned MVCC snapshot
+  * (src/transaction/duck_transaction_manager.cpp). While the current
+  * thread's connection has an open transaction, any parquet relation
+  * rooted at a table that transaction listed at BEGIN is re-pointed, at
+  * PLAN RESOLUTION time, to exactly the BEGIN file list
+  * (Txn.threadReadPins — re-pointed live when a writer moves a member,
+  * dropped at the transaction's first own write for own-write
+  * visibility).
   *
   * The rewrite keeps the ORIGINAL relation output (LogicalRelation
   * .copy with a new file index only), so attribute ids and metadata
   * columns (`_metadata.file_path`, which the DML layer reads) survive.
-  * Relations already reading an explicit file list (a pin's own
-  * output, the primary's shadow-view plan) are left alone when the
-  * list matches; a stale explicit list under a pinned root (e.g. a
-  * plan cached from the primary's older pin) is re-pointed too.
-  * Threads with no open secondary transaction — including every
-  * writer on the primary front door — see a no-op.
+  * Only whole-root reads are re-pointed. Threads whose connection has
+  * no open transaction see a no-op after one lookup.
   */
-case class SecondarySnapshotRule(session: SparkSession) extends Rule[LogicalPlan] {
+case class TxnSnapshotRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def norm(p: String): String = new Path(p).toUri.getPath
 
@@ -40,8 +33,8 @@ case class SecondarySnapshotRule(session: SparkSession) extends Rule[LogicalPlan
     plan match {
       // a write's TARGET relation must never be re-pointed at a
       // snapshot file list — rewrite only the source query side
-      // (the DML front door unpins the target before analysis, but
-      // an INSERT ... SELECT over a DIFFERENT pinned table must
+      // (the writer's touch drops the target's pin before analysis,
+      // but an INSERT ... SELECT over a DIFFERENT pinned table must
       // still snapshot its read side)
       case ins: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement =>
         return ins.copy(query = apply(ins.query))
@@ -64,11 +57,9 @@ case class SecondarySnapshotRule(session: SparkSession) extends Rule[LogicalPlan
           // made every pruned rewrite read the whole table and
           // DUPLICATE the carried-through rows of non-hit files
           // (r12 two-writer split-units test exposed this)
-          val hit = pins.collectFirst {
-            case (rootN, files)
-                if roots.nonEmpty && roots.forall(_ == rootN) &&
-                  roots.toSet != files.map(norm).toSet =>
-              files
+          val hit = roots.distinct match {
+            case Seq(root) => pins.get(root)
+            case _ => None
           }
           hit match {
             case Some(files) =>

@@ -130,14 +130,9 @@ object Dml {
     df.write.mode(SaveMode.Append)
       .option("maxRecordsPerFile", maxFileRows(spark))
       .parquet(path)
-    if (Txn.isActive) {
-      // inside a transaction the delete is DEFERRED: replaced files
-      // move to the hidden trash so ROLLBACK can restore them
-      oldFiles.foreach(f => Txn.trash(spark, path, f))
-    } else {
-      val hfs = fs(spark, path)
-      oldFiles.foreach(f => hfs.delete(new Path(f), false))
-    }
+    // Txn deletes each replaced file, or defers the delete for the
+    // open transaction's ROLLBACK or an open reader's snapshot
+    oldFiles.foreach(f => Txn.retire(spark, path, f))
     Txn.wrote(spark, path)
   }
 

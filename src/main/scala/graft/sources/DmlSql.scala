@@ -395,13 +395,7 @@ object DmlSql {
   private[graft] def tablePath(spark: SparkSession, table: String): String = {
     val cat = spark.sessionState.catalog
     val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    // an open transaction may be shadowing the table with its pinned
-    // snapshot view — DML targets the real table (own-write rule).
-    // A FOREIGN writer's unpin is a no-op (the pin protects the open
-    // reader's snapshot), so a surviving pin view is NOT a user temp
-    // view: resolve the underlying catalog table through it.
-    Txn.unpin(spark, id.table)
-    require(!cat.isTempView(id) || Txn.isPinned(id.table),
+    require(!cat.isTempView(id),
       s"DML target $table is a temporary view; DML needs a TABLE " +
         "(CREATE TABLE through the front door, or the Dml API on a parquet path)")
     cat.getTableMetadata(id).location.toString

@@ -142,7 +142,7 @@ class DmlSqlSpec extends AnyFunSuite {
       GraftSql.sql(spark, "BEGIN")
       assert(sumV === 100L)
       // the concurrent writer: a second logical connection
-      graft.sources.Txn.foreign {
+      graft.sources.Txn.onConnection(1) {
         graft.sources.Dml.update(spark, path,
           org.apache.spark.sql.functions.lit(true),
           Map("v" -> org.apache.spark.sql.functions.expr("v + 1000")))
@@ -151,7 +151,7 @@ class DmlSqlSpec extends AnyFunSuite {
       GraftSql.sql(spark, "COMMIT")
       assert(sumV === 5100L, "after COMMIT the writer's state is visible")
       GraftSql.sql(spark, "BEGIN")
-      graft.sources.Txn.foreign {
+      graft.sources.Txn.onConnection(1) {
         graft.sources.Dml.update(spark, path,
           org.apache.spark.sql.functions.lit(true),
           Map("v" -> org.apache.spark.sql.functions.expr("v + 1")))
@@ -523,6 +523,88 @@ class DmlSqlSpec extends AnyFunSuite {
       Txn.onConnection(2) { if (Txn.isActive) try Txn.rollback(spark) catch { case _: Exception => } }
       if (Txn.isActive) try Txn.rollback(spark) catch { case _: Exception => }
       spark.sql("DROP TABLE IF EXISTS t3")
+      spark.sql("USE default")
+    }
+  }
+
+  test("an autocommit UPDATE on another connection conflicts with connection 0's transaction per file") {
+    // every writer meets a live transaction under one file-granularity
+    // rule: connection 1's autocommit UPDATE of the row connection 0's
+    // open transaction rewrote raises, a disjoint row commits at once
+    import graft.sources.Txn
+    spark.sql("CREATE DATABASE IF NOT EXISTS txn6db")
+    spark.sql("USE txn6db")
+    spark.sql("DROP TABLE IF EXISTS t6a")
+    def sum: Double = spark.sql("SELECT SUM(y) FROM t6a").collect()(0).getDouble(0)
+    spark.conf.set("spark.graft.dml.maxFileRows", "1")
+    try {
+      GraftSql.runScript(spark,
+        """CREATE OR REPLACE TABLE t6a (x INTEGER, y DOUBLE);
+          |INSERT INTO t6a VALUES (1, 10.0), (2, 20.0)""".stripMargin)
+      GraftSql.sql(spark, "UPDATE t6a SET y = y + 0 WHERE x >= 0") // split files
+      GraftSql.sql(spark, "BEGIN")
+      GraftSql.sql(spark, "UPDATE t6a SET y = 11 WHERE x = 1")
+      val e = intercept[Exception] {
+        Txn.onConnection(1) { GraftSql.sql(spark, "UPDATE t6a SET y = 98 WHERE x = 1") }
+      }
+      assert(e.getMessage.contains("Conflict on update"), e.getMessage)
+      Txn.onConnection(1) { GraftSql.sql(spark, "UPDATE t6a SET y = 99 WHERE x = 2") }
+      GraftSql.sql(spark, "COMMIT")
+      assert(sum === 110.0) // 11 + 99
+      assert(Txn.onConnection(1) { sum } === 110.0)
+    } finally {
+      spark.conf.unset("spark.graft.dml.maxFileRows")
+      if (Txn.isActive) Txn.rollback(spark)
+      spark.sql("DROP TABLE IF EXISTS t6a")
+      spark.sql("USE default")
+    }
+  }
+
+  test("a table dropped inside an open transaction does not fail its COMMIT") {
+    // DDL autocommits: the end-of-transaction refresh of a table that
+    // no longer exists is skipped, and every other table still refreshes
+    import graft.sources.Txn
+    spark.sql("CREATE DATABASE IF NOT EXISTS txn7db")
+    spark.sql("USE txn7db")
+    Seq("t7a", "t7b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      GraftSql.runScript(spark,
+        """CREATE OR REPLACE TABLE t7a (x INTEGER, y DOUBLE);
+          |INSERT INTO t7a VALUES (1, 1.0);
+          |CREATE OR REPLACE TABLE t7b (x INTEGER, y DOUBLE);
+          |INSERT INTO t7b VALUES (1, 5.0)""".stripMargin)
+      GraftSql.sql(spark, "BEGIN")
+      GraftSql.sql(spark, "UPDATE t7a SET y = 2 WHERE x = 1")
+      GraftSql.sql(spark, "UPDATE t7b SET y = 6 WHERE x = 1")
+      GraftSql.sql(spark, "DROP TABLE t7a")
+      GraftSql.sql(spark, "COMMIT")
+      assert(!Txn.isActive)
+      assert(spark.sql("SELECT y FROM t7b").collect().map(_.getDouble(0)).toSeq === Seq(6.0))
+    } finally {
+      if (Txn.isActive) Txn.rollback(spark)
+      Seq("t7a", "t7b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.sql("USE default")
+    }
+  }
+
+  test("a transaction's read snapshot is not a temp view") {
+    import graft.sources.Txn
+    spark.sql("CREATE DATABASE IF NOT EXISTS txn8db")
+    spark.sql("USE txn8db")
+    spark.sql("DROP TABLE IF EXISTS t8")
+    try {
+      GraftSql.runScript(spark,
+        """CREATE OR REPLACE TABLE t8 (x INTEGER);
+          |INSERT INTO t8 VALUES (1)""".stripMargin)
+      GraftSql.sql(spark, "BEGIN")
+      val shadows = spark.catalog.listTables().collect()
+        .filter(t => t.isTemporary && t.name == "t8")
+      assert(shadows.isEmpty, shadows.mkString(", "))
+      assert(spark.sql("SELECT count(*) FROM t8").collect()(0).getLong(0) === 1L)
+      GraftSql.sql(spark, "COMMIT")
+    } finally {
+      if (Txn.isActive) Txn.rollback(spark)
+      spark.sql("DROP TABLE IF EXISTS t8")
       spark.sql("USE default")
     }
   }

@@ -23,6 +23,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Where a literal, a quoted name or a comment ends is decided in one
   * place, plans/SqlText: a quote char literal anywhere else is a second
   * lexical rule that disagrees with it.
+  *
+  * A transaction's read snapshot is taken when a plan resolves its
+  * relations (plans/TxnSnapshot), never by shadowing a table with a
+  * session temp view: the session has one temp-view namespace, and a
+  * view in it would be a second snapshot model.
   */
 class ReadPathLintSpec extends AnyFunSuite {
 
@@ -82,6 +87,11 @@ class ReadPathLintSpec extends AnyFunSuite {
     // JOB texts to solve for witness rows; it never rewrites SQL text
     val quoteOk = Set(root.resolve("plans/SqlText.scala"), root.resolve("queries/ImdbWitness.scala"))
     val found = offenders(scalaSources.filterNot(quoteOk), """'\\''""".r)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("sources/Txn.scala creates no temp view: snapshots stay in the plan-resolution rule") {
+    val found = offenders(Seq(root.resolve("sources/Txn.scala")), """createOrReplaceTempView""".r)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
