@@ -106,6 +106,11 @@ object GraftSql {
     // an empty / whitespace-only / comment-only statement is a no-op
     // (the reference's `statement ok` on a lone invisible space)
     if (text0.trim.isEmpty) return spark.emptyDataFrame
+    // one statement per call: a script's later statements must not be
+    // dropped in silence
+    val statements = SqlText.splitTop(text0, ';').size
+    if (statements > 1) throw new IllegalArgumentException(
+      s"GraftSql.sql runs one statement, got $statements; run a script with GraftSql.runScript")
     // CREATE MACRO registers; every other statement gets macro calls
     // textually inlined first (the reference binder does the same)
     if (graft.plans.MacroReg.isCreate(text0)) {

@@ -702,8 +702,18 @@ object FunctionTable {
   ).flatten
 
   private def listAggregate(arr: Expression, fnName: String): Expression = fnName match {
-    case "sum" => ArrayAggregate(Cast(arr, ArrayType(LongType)), Literal(0L),
-      lambda2(Add(_, _)), lambda1(identity))
+    // the reference's sum: in the element's numeric kind (integers as
+    // BIGINT, decimals at precision 38, floats as DOUBLE), NULL elements
+    // skipped, NULL for an empty or all-NULL list
+    case "sum" =>
+      val acc = arr.dataType match {
+        case ArrayType(d: DecimalType, _) => DecimalType(DecimalType.MAX_PRECISION, d.scale)
+        case ArrayType(FloatType | DoubleType, _) => DoubleType
+        case _ => LongType
+      }
+      ArrayAggregate(Cast(arr, ArrayType(acc)), Literal(null, acc),
+        lambda2((s, x) => If(IsNull(x), s, Cast(Add(Coalesce(Seq(s, Literal.default(acc))), x), acc))),
+        lambda1(identity))
     case "min" => ArrayMin(arr)
     case "max" => ArrayMax(arr)
     case "count" => Cast(Size(ArrayCompact(arr)), LongType)

@@ -22,24 +22,29 @@ object Tpch {
 
   /** q3/q5/q10/q12 plan builders are parameterized by a table
     * provider so the bucketed-storage variants (TpchBucketed) run the
-    * IDENTICAL plan over bucketed tables — the only difference is the
-    * scan's output partitioning, which is exactly what the bucketing
-    * experiment isolates.
+    * same plan over bucketed tables — the differences are the scan's
+    * output partitioning, which is exactly what the bucketing
+    * experiment isolates, and the orderkey join's strategy (`bucketed`),
+    * which that partitioning decides.
     */
-  private[graft] def q3Plan(tab: String => DataFrame): DataFrame =
-    tab("customer").filter(col("c_mktsegment") === "MACHINERY")
+  private[graft] def q3Plan(tab: String => DataFrame, bucketed: Boolean = false): DataFrame = {
+    val ord = tab("orders").filter(col("o_orderdate") < ts("1997-06-01"))
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
+    val custOrd = tab("customer").filter(col("c_mktsegment") === "MACHINERY")
       .select(col("c_custkey"))
-      .join(tab("orders").filter(col("o_orderdate") < ts("1997-06-01"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-        col("c_custkey") === col("o_custkey"))
-      // build side MUST be this (customer-filtered orders, ~5% of
-      // lineitem's row count): without the hint Spark's estimates
-      // pick BuildRight and hash-build the ~30M-row FACT side — 3×
-      // the stage CPU, and the allocation burst is the r10 verdict's
-      // "bimodal" variance (measured r11: 16–53 s of task CPU for
-      // the same rows). Hinting the dimension side is also the only
-      // choice that survives 100×: the fact side never fits.
-      .hint("shuffle_hash")
+      .join(ord, col("c_custkey") === col("o_custkey"))
+    // The build side is customer⋈orders, never the filtered lineitem
+    // fact side that Spark's estimates would pick (measured r11: 3× the
+    // stage CPU and bimodal run times). c_custkey is customer's key, so
+    // the join has at most one row per orders-slice row, and the
+    // slice's Catalyst estimate bounds it; Catalyst's own estimate of
+    // the join is the product of its inputs (80.9 GB at sf0.1, for
+    // 11,212 rows). Within the broadcast threshold that side broadcasts
+    // and lineitem is probed where it is scanned, with no exchange
+    // (sf0.1: a 1.1 MB estimate, 398,809 → 10,376 shuffle records, 7
+    // interleaved pairs wall 0.47 → 0.38 s); past it (10.6 MB at sf1)
+    // it stays a shuffle-hash build.
+    hashBuild(custOrd, ord, bucketed)
       .join(tab("lineitem").filter(col("l_shipdate") > ts("1997-06-01"))
           .select(col("l_orderkey"),
             revenueUnits(col("l_extendedprice"), col("l_discount")).as("__rev")),
@@ -49,6 +54,26 @@ object Tpch {
       .select(col("l_orderkey"), col("revenue"), to_date(col("o_orderdate")).as("order_date"))
       .orderBy(col("revenue").desc, col("l_orderkey"))
       .limit(10)
+  }
+
+  /** `side` as the build side of a hash join: a broadcast when
+    * Catalyst's size estimate of `bound`, a relation at least as large
+    * as `side`, is within `spark.sql.autoBroadcastJoinThreshold` (never
+    * when it is -1), else a shuffle-hash build. The test is the one
+    * Spark's JoinSelection applies to a join side; `bound` stands in
+    * where Catalyst over-estimates the side itself.
+    *
+    * On the orderkey-bucketed tables (`bucketed`) the shuffle-hash build
+    * stays: the orderkey join there has no exchange to save, and a
+    * broadcast only adds its driver collect. 7 interleaved pairs,
+    * shuffle-hash → broadcast wall medians: q3 0.40 → 0.46 s (0/7 wins)
+    * at sf0.1; q10 0.44 → 0.54 s (1/7) at sf0.1 and 0.74 → 0.85 s (0/7)
+    * at sf1; q12 0.35 → 0.42 s (2/7) at sf0.1.
+    */
+  private def hashBuild(side: DataFrame, bound: DataFrame, bucketed: Boolean = false): DataFrame =
+    if (!bucketed && bound.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        bound.sparkSession.sessionState.conf.autoBroadcastJoinThreshold) broadcast(side)
+    else side.hint("shuffle_hash")
 
   /** Q5. The two fact relations join each other first, on orderkey
     * (an exchange-free sorted-merge join on the bucketed tables), and
@@ -94,9 +119,13 @@ object Tpch {
     val ord = tab("orders")
       .filter(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1998-01-01"))
       .select(col("o_orderkey"), col("o_custkey"))
+    // the orders slice builds (never the lineitem side), broadcast
+    // while its estimate fits: 7 interleaved pairs won at sf0.1 (5/7,
+    // wall 0.49 → 0.43 s) and sf1 (6/7, 1.29 → 1.15 s; task CPU 2.2 →
+    // 1.4 s), where it still broadcasts
     val lo =
       if (bucketed) li.join(ord.hint("merge"), col("l_orderkey") === col("o_orderkey"))
-      else li.join(ord.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
+      else li.join(hashBuild(ord, ord), col("l_orderkey") === col("o_orderkey"))
     val perCust = lo
       .groupBy(col("o_custkey"), col("s_nationkey"))
       .agg(sum(col("__rev")).as("__rev1"))
@@ -112,6 +141,12 @@ object Tpch {
     // sorts rows itself). The sort planned an Exchange rangepartitioning
     // + Sort = two extra AQE scheduling rounds per run for a handful of
     // rows (OPTIMIZATION_r15.md §2c).
+    // a shuffle-hash build of the customer slice, not the size rule:
+    // perCust is already partitioned on the join keys by its aggregate,
+    // so a broadcast saves only the slice's own small exchange (3k of
+    // 201k shuffle records at sf0.1), and it was no faster in 7
+    // interleaved pairs (sf0.1: 3/7 wins, wall 0.42 → 0.41 s; sf1: 3/7,
+    // 1.13 → 1.16 s)
     perCust.join(cust.hint("shuffle_hash"),
         col("o_custkey") === col("c_custkey")
           && col("s_nationkey") === col("c_nationkey"))
@@ -120,15 +155,15 @@ object Tpch {
       .select(nameExpr.as("n_name"), col("revenue"))
   }
 
-  private[queries] def q10Plan(tab: String => DataFrame): DataFrame = {
-    val rev = tab("orders")
+  private[queries] def q10Plan(tab: String => DataFrame, bucketed: Boolean = false): DataFrame = {
+    val ord = tab("orders")
       .filter(col("o_orderdate") >= ts("1997-01-01") && col("o_orderdate") < ts("1997-07-01"))
       .select(col("o_orderkey"), col("o_custkey"))
-      // the 6-month orders slice is ~10× smaller than the R-flag
-      // lineitem side — pin it as the hash build side (Spark already
-      // picks it today, but the estimate could flip at another scale
-      // and fact-side builds don't survive 100×)
-      .hint("shuffle_hash")
+    // the 6-month orders slice is ~10× smaller than the R-flag lineitem
+    // side, so it builds (fact-side builds don't survive 100×),
+    // broadcast while its estimate fits: 7 interleaved pairs won at
+    // sf0.1 (6/7, wall 0.30 → 0.24 s) and sf1 (7/7, 0.95 → 0.70 s)
+    val rev = hashBuild(ord, ord, bucketed)
       .join(tab("lineitem").filter(col("l_returnflag") === "R")
           .select(col("l_orderkey"),
             revenueUnits(col("l_extendedprice"), col("l_discount")).as("__rev")),
@@ -142,17 +177,19 @@ object Tpch {
       .limit(20)
   }
 
-  private[queries] def q12Plan(tab: String => DataFrame): DataFrame = {
+  private[queries] def q12Plan(tab: String => DataFrame, bucketed: Boolean = false): DataFrame = {
     val ordHigh = tab("orders").select(col("o_orderkey"),
       col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("__high"))
+    val liYear = tab("lineitem")
+      .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01"))
+      .select(col("l_orderkey"), col("l_linestatus"))
+    // build from the date-filtered lineitem year (~60% the row count of
+    // the unfiltered orders side Spark's estimates would otherwise
+    // hash-build), broadcast while its estimate fits: 7 interleaved
+    // pairs at sf0.1 won 7/7 on process CPU (0.58 → 0.46 s); at sf1 it
+    // is past the threshold and the plan is unchanged
     ordHigh
-      .join(tab("lineitem")
-          .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01"))
-          .select(col("l_orderkey"), col("l_linestatus"))
-          // build from the date-filtered lineitem year (~60% the row
-          // count of the unfiltered orders side Spark's estimates
-          // would otherwise hash-build)
-          .hint("shuffle_hash"),
+      .join(hashBuild(liYear, liYear, bucketed),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("l_linestatus"))
       .agg(

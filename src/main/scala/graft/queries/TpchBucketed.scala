@@ -20,16 +20,16 @@ object TpchBucketed {
 
   val defs: Seq[QDef] = Seq(
     QDef.sql("tpch_q3_bucketed", oracleOf("tpch_q3")) { (s, dir) =>
-      Tpch.q3Plan(n => Bucketize.table(s, dir, n))
+      Tpch.q3Plan(n => Bucketize.table(s, dir, n), bucketed = true)
     },
     QDef.sql("tpch_q5_bucketed", oracleOf("tpch_q5")) { (s, dir) =>
       Tpch.q5PlanV2(n => Bucketize.table(s, dir, n), bucketed = true)
     },
     QDef.sql("tpch_q10_bucketed", oracleOf("tpch_q10")) { (s, dir) =>
-      Tpch.q10Plan(n => Bucketize.table(s, dir, n))
+      Tpch.q10Plan(n => Bucketize.table(s, dir, n), bucketed = true)
     },
     QDef.sql("tpch_q12_bucketed", oracleOf("tpch_q12")) { (s, dir) =>
-      Tpch.q12Plan(n => Bucketize.table(s, dir, n))
+      Tpch.q12Plan(n => Bucketize.table(s, dir, n), bucketed = true)
     },
     // q18 touches the orderkey layout twice: the 15 M-group HAVING
     // aggregate (groupBy on the bucket key → NO exchange before the

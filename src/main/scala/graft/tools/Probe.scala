@@ -61,7 +61,9 @@ object Probe {
             t.foreach { _ =>
               nTrans += 1
               try {
-                val df = graft.GraftSql.sql(spark, sql)
+                // an oracle text may be a script (f20_macro); its last
+                // statement is the query
+                val df = graft.GraftSql.runScript(spark, sql).last
                 nParse += 1
                 df.limit(1).collect()
                 nRun += 1

@@ -258,6 +258,18 @@ class DialectRobustnessSpec extends AnyFunSuite {
     cases.foreach { case (q, want) => assert(rows(q) === want, q) }
   }
 
+  test("list_sum sums in the element's numeric type and skips NULLs (DuckDB 1.0.0 answers)") {
+    def one(q: String): Any = GraftSql.sql(spark, s"SELECT $q AS v").collect().head.get(0)
+    assert(one("list_sum([1.5, 2.25])") === new java.math.BigDecimal("3.75"))
+    assert(one("list_sum([1.5::DOUBLE, 2.25])") === 3.75)
+    assert(one("list_sum([1, NULL, 2])") === 3L)
+    assert(one("list_sum([]::INT[])") === null)
+    assert(one("list_sum([NULL]::INT[])") === null)
+    // a unit vector's sum of squares (the front door's cosine texts)
+    assert(one("list_sum(list_transform([0.6::DOUBLE, 0.8], x -> x * x))") === 1.0)
+    assert(one("list_aggregate([1.5, 2.5], 'sum')") === new java.math.BigDecimal("4.0"))
+  }
+
   test("a trailing comment never reaches the statement layer (DuckDB 1.0.0 accepts each)") {
     GraftSql.sql(spark, "CREATE OR REPLACE TEMP VIEW cmt_t AS SELECT 1 AS a")
     assert(GraftSql.sql(spark, "DESCRIBE cmt_t -- note").collect().map(_.getString(0)).toSeq === Seq("a"))

@@ -40,4 +40,17 @@ class MacroSpec extends AnyFunSuite {
       .as[Int].collect().toSeq
     assert(r == Seq(1, 2, 3, 4))
   }
+
+  test("the f20_macro script: GraftSql.sql refuses it, runScript runs every statement") {
+    val text = SparkEntry.oracleSql("f20_macro")
+    graft.sources.Catalog.registerAll(spark, sfDir)
+    val e = intercept[IllegalArgumentException](GraftSql.sql(spark, text))
+    assert(e.getMessage.contains("runScript"), e.getMessage)
+    val results = GraftSql.runScript(spark, text)
+    assert(results.size === 3)
+    val got = results.last
+    val ref = SparkEntry.queries("f20_macro")(spark, sfDir)
+    assert(got.count() > 0 && got.count() === ref.count())
+    assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty)
+  }
 }

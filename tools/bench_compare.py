@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
 """Compare a round's Spark bench runs against the same-box DuckDB
 baseline: per-query median-of-runs vs the baseline, flagged at the 2x
-grade line. Kernel-emulation oracles (t04) are excluded from the
+grade line. Each total is printed with the per-query picture next to
+it: the geometric mean of the per-query ratios and the count of queries
+above 2x, since a total is dominated by its longest queries. Kernel-emulation oracles (t04) are excluded from the
 comparable totals (DuckDB executing the repo's own algorithm is not a
 capability baseline — r12 verdict).
 
 Usage: python3 tools/bench_compare.py <duckdb.json> <spark_run.json...>
 """
 import json
+import math
 import statistics
 import sys
 
@@ -19,6 +22,13 @@ BUCKETED = {
     "tpch_q10_bucketed": "tpch_q10", "tpch_q12_bucketed": "tpch_q12",
     "tpch_q18_bucketed": "tpch_q18",
 }
+
+
+def picture(ratios):
+    """Geomean of per-query ratios and the count above 2x."""
+    g = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+    above = sum(r > 2.0 for r in ratios)
+    return f"geomean {g:.2f}x, {above} of {len(ratios)} above 2x"
 
 
 def main(base_path, run_paths):
@@ -39,14 +49,16 @@ def main(base_path, run_paths):
     st = sum(med[q] for q in comparable)
     dt = sum(base[q] for q in comparable)
     print(f"\ncomparable set ({len(comparable)}): spark {st:.1f}s vs duckdb "
-          f"{dt:.1f}s = {st / dt:.2f}x")
-    # bucketed-substituted total
-    st2 = sum(med.get(b, med[f]) if f in med else med.get(b, 0)
-              for b, f in BUCKETED.items())
-    st2 += sum(med[q] for q in comparable if q not in BUCKETED.values())
-    dt2 = dt
-    print(f"bucketed-substituted: spark {st2:.1f}s vs duckdb {dt2:.1f}s = "
-          f"{st2 / dt2:.2f}x")
+          f"{dt:.1f}s = {st / dt:.2f}x; "
+          f"{picture([med[q] / base[q] for q in comparable])}")
+    # bucketed-substituted: each flat query whose bucketed variant ran
+    # is replaced by that variant
+    subst = {f: med[b] for b, f in BUCKETED.items()
+             if f in comparable and b in med}
+    st2 = sum(subst.get(q, med[q]) for q in comparable)
+    print(f"bucketed-substituted: spark {st2:.1f}s vs duckdb {dt:.1f}s = "
+          f"{st2 / dt:.2f}x; "
+          f"{picture([subst.get(q, med[q]) / base[q] for q in comparable])}")
     for b, f in sorted(BUCKETED.items()):
         if b in med and f in base:
             print(f"  {b:24s} {med[b]:8.3f} vs flat-duckdb {base[f]:8.3f} "
