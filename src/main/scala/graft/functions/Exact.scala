@@ -54,10 +54,6 @@ object Exact {
   def davg(c: Column, scale: Int = 2): Column =
     sum(units(c, scale)).cast(DoubleType) / p10(scale) / count(lit(1))
 
-  /** Sum that is 0.0 (not NULL) over an empty group — for outer joins. */
-  def dsum0(c: Column, scale: Int = 2): Column =
-    coalesce(sum(units(c, scale)).cast(DoubleType) / p10(scale), lit(0.0))
-
   /** Complete revenue aggregate Σ price·(1-disc) as long fixed-point:
     * cents·(100-discCents) summed in int64, /10^4 at the end. Value-
     * identical to the decimal-arithmetic oracle form ([[revenueSql]]).

@@ -2022,16 +2022,40 @@ object DuckDialect {
     /** A call whose DuckDB meaning differs from the Spark built-in of
       * the same name, spelled in Spark terms: the reference's 2-arg
       * regexp_extract/_all return the FULL match (group 0; Spark's
-      * default group is 1) and its dayname/monthname spell full names
-      * (Spark's abbreviate: Mon, Jan).
+      * default group is 1), its dayname/monthname spell full names
+      * (Spark's abbreviate: Mon, Jan), its scalar date parts and
+      * cardinality(map) are BIGINT (Spark's are int; cardinality is
+      * UBIGINT there) and its day of week is 0 on a Sunday (Spark's
+      * is 1).
       */
     private def duckMeaning(name: String, args: Seq[String]): Option[String] =
       (name.toLowerCase, args) match {
         case ("regexp_extract" | "regexp_extract_all", Seq(s, re)) => Some(s"$name($s, $re, 0)")
         case ("dayname", Seq(d)) => Some(s"date_format(CAST($d AS TIMESTAMP), 'EEEE')")
         case ("monthname", Seq(d)) => Some(s"date_format(CAST($d AS TIMESTAMP), 'MMMM')")
+        case ("dayofweek", Seq(d)) => Some(s"CAST(dayofweek($d) - 1 AS BIGINT)")
+        case ("cardinality", Seq(m)) => Some(s"CAST(cardinality($m) AS BIGINT)")
+        case (f, Seq(d)) if bigintPartFns(f) => Some(s"CAST($name($d) AS BIGINT)")
+        case ("extract", Seq(unit, "FROM", d)) => datePart(unit, s"EXTRACT($unit FROM $d)")
+        case ("date_part" | "datepart", Seq(unit, d)) =>
+          datePart(unit.stripPrefix("'").stripSuffix("'"), s"$name($unit, $d)")
         case _ => None
       }
+
+    private val bigintPartFns = Set("year", "quarter", "month", "week", "weekofyear", "day",
+      "dayofmonth", "dayofyear", "hour", "minute")
+
+    /** `part` (the Spark spelling of a date part `unit`) in DuckDB's
+      * type and numbering, or None where Spark's already agree.
+      */
+    private def datePart(unit: String, part: String): Option[String] = unit.toLowerCase match {
+      case "dow" | "dayofweek" => Some(s"CAST($part - 1 AS BIGINT)")
+      case "y" | "yr" | "yrs" | "year" | "years" | "quarter" | "qtr" | "mon" | "mons" |
+           "month" | "months" | "w" | "week" | "weeks" | "d" | "day" | "days" | "doy" |
+           "h" | "hour" | "hours" | "min" | "mins" | "minute" | "minutes" =>
+        Some(s"CAST($part AS BIGINT)")
+      case _ => None
+    }
 
     /** `f(args)` after the dot-chaining sugar `x.f(args)`. */
     private def chainCall(name: String, args: Seq[String]): String =
@@ -2085,7 +2109,7 @@ object DuckDialect {
         val src = expr(0)
         expectOp(")")
         lastGlue = savedGlue
-        return s"date_part($part, $src)"
+        return duckMeaning("date_part", Seq(part, src)).getOrElse(s"date_part($part, $src)")
       }
       expectOp("(")
       val parts = ArrayBuffer.empty[String]

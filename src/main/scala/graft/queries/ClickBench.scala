@@ -1,11 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-
-import graft.sources.Catalog
-
 /** ClickBench-shape suite (SURVEY §2.2d) — the web-analytics scan/
   * aggregate workload that rounds out the reference's benchmark grade
   * (stock DuckDB advertises TPC-H + TPC-DS + ClickBench; see
@@ -30,23 +24,10 @@ import graft.sources.Catalog
   * doubles route through DECIMAL(18,4) (functions/Exact discipline)
   * so both engines hash-match bit-exactly.
   *
-  * Where the SQL is pure ANSI the SAME text runs verbatim on both
-  * engines (mk); the URL-derived shapes split only on the JSON
-  * accessor name (Spark get_json_object ≡ DuckDB json_extract_string,
-  * the f10 mapping).
+  * The URL column is derived with DuckDB's json_extract_string, which
+  * the front door runs as Spark's get_json_object (the f10 mapping).
   */
 object ClickBench {
-
-  private def mk(name: String, q: String): QDef =
-    QDef.sql(name, q) { (s: SparkSession, dir: String) =>
-      Catalog.registerAll(s, dir)
-      s.sql(q)
-    }
-
-  /** events + a ClickBench-style derived URL column (Spark side). */
-  private def hits(s: SparkSession, dir: String): DataFrame =
-    Catalog.table(s, dir, "events").withColumn(
-      "page", concat(lit("/page/"), get_json_object(col("props"), "$.k")))
 
   /** Oracle-side spelling of the derived URL column. */
   private val pageSql =
@@ -55,7 +36,7 @@ object ClickBench {
   val defs: Seq[QDef] = Seq(
 
     // Q0–Q3 class: full-scan counts, a conditional count, exact sums.
-    mk("cb01_scan_agg",
+    QDef.text("cb01_scan_agg",
       """SELECT COUNT(*) AS n,
         | COUNT(*) FILTER (WHERE value > 50) AS n_hi,
         | CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value,
@@ -63,44 +44,40 @@ object ClickBench {
         |FROM events""".stripMargin),
 
     // Q4–Q6 class: distinct cardinalities + time extent in one pass.
-    mk("cb02_distincts",
+    QDef.text("cb02_distincts",
       """SELECT COUNT(DISTINCT user_id) AS users,
         | COUNT(DISTINCT event_type) AS types,
         | MIN(ts) AS first_ts, MAX(ts) AS last_ts
         |FROM events""".stripMargin),
 
     // Q7 class: low-cardinality GROUP BY ordered by count.
-    mk("cb03_type_counts",
+    QDef.text("cb03_type_counts",
       """SELECT event_type, COUNT(*) AS n
         |FROM events GROUP BY event_type
         |ORDER BY n DESC, event_type""".stripMargin),
 
     // Q8–Q9 class: cohort (region≈user_id%10) distinct-user tops.
-    mk("cb04_region_users",
+    QDef.text("cb04_region_users",
       """SELECT user_id % 10 AS region, COUNT(DISTINCT user_id) AS users,
         | COUNT(*) AS hits
         |FROM events GROUP BY user_id % 10
         |ORDER BY users DESC, region LIMIT 10""".stripMargin),
 
     // Q10–Q13 class: top pages by hits + distinct visitors.
-    QDef.sql("cb05_top_pages",
+    QDef.text("cb05_top_pages",
       s"""SELECT $pageSql AS page, COUNT(*) AS n,
          | COUNT(DISTINCT user_id) AS users
          |FROM events GROUP BY 1
-         |ORDER BY n DESC, page LIMIT 10""".stripMargin) { (s, dir) =>
-      hits(s, dir).groupBy(col("page"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("users"))
-        .orderBy(col("n").desc, col("page")).limit(10)
-    },
+         |ORDER BY n DESC, page LIMIT 10""".stripMargin),
 
     // Q14–Q17 class: composite user×phrase top-N.
-    mk("cb06_user_type_top",
+    QDef.text("cb06_user_type_top",
       """SELECT user_id, event_type, COUNT(*) AS n
         |FROM events GROUP BY user_id, event_type
         |ORDER BY n DESC, user_id, event_type LIMIT 10""".stripMargin),
 
     // Q18 class: per-user per-minute activity timeline.
-    mk("cb07_user_minute",
+    QDef.text("cb07_user_minute",
       """SELECT user_id, date_trunc('minute', ts) AS m, COUNT(*) AS n
         |FROM events GROUP BY user_id, date_trunc('minute', ts)
         |ORDER BY n DESC, user_id, m LIMIT 10""".stripMargin),
@@ -109,30 +86,26 @@ object ClickBench {
     // user_id 7 exists at every SF (sf0.001's id range is only 0–14,
     // so ClickBench's traditional UserID constant would select zero
     // rows there and defeat the pushdown probe).
-    mk("cb08_point_lookup",
+    QDef.text("cb08_point_lookup",
       """SELECT event_id, ts, event_type,
         | CAST(CAST(value AS DECIMAL(18,4)) AS DOUBLE) AS value
         |FROM events WHERE user_id = 7
         |ORDER BY ts, event_id LIMIT 20""".stripMargin),
 
     // Q20–Q22 class: LIKE scan over the derived URL.
-    QDef.sql("cb09_like_scan",
+    QDef.text("cb09_like_scan",
       s"""SELECT COUNT(*) AS n, MIN(page) AS min_page, MAX(page) AS max_page
          |FROM (SELECT $pageSql AS page FROM events)
-         |WHERE page LIKE '%3%'""".stripMargin) { (s, dir) =>
-      hits(s, dir).filter(col("page").like("%3%"))
-        .agg(count(lit(1)).as("n"), min(col("page")).as("min_page"),
-          max(col("page")).as("max_page"))
-    },
+         |WHERE page LIKE '%3%'""".stripMargin),
 
     // Q23–Q26 class: filtered detail rows, time-ordered page.
-    mk("cb10_recent_hot",
+    QDef.text("cb10_recent_hot",
       """SELECT event_id, ts, event_type
         |FROM events WHERE value > 90
         |ORDER BY ts, event_id LIMIT 10""".stripMargin),
 
     // Q29 class: wide sum battery (many aggregates, one scan).
-    mk("cb11_sum_battery",
+    QDef.text("cb11_sum_battery",
       """SELECT
         | CAST(SUM(CAST(value + 1 AS DECIMAL(18,4))) AS DOUBLE) AS s1,
         | CAST(SUM(CAST(value + 2 AS DECIMAL(18,4))) AS DOUBLE) AS s2,
@@ -147,30 +120,25 @@ object ClickBench {
         |FROM events""".stripMargin),
 
     // Q30–Q32 class: frequency cohort via HAVING.
-    mk("cb12_frequent_users",
+    QDef.text("cb12_frequent_users",
       """SELECT user_id, COUNT(*) AS n,
         | CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY user_id HAVING COUNT(*) > 50
         |ORDER BY n DESC, user_id""".stripMargin),
 
     // Q34–Q35 class: hourly distinct-user trend.
-    mk("cb13_hourly_users",
+    QDef.text("cb13_hourly_users",
       """SELECT date_trunc('hour', ts) AS h, COUNT(DISTINCT user_id) AS users,
         | COUNT(*) AS n
         |FROM events GROUP BY date_trunc('hour', ts)
         |ORDER BY h""".stripMargin),
 
     // Q36–Q42 class: paginated top pages (LIMIT … OFFSET) in a window.
-    QDef.sql("cb14_paged_pages",
+    QDef.text("cb14_paged_pages",
       s"""SELECT $pageSql AS page, COUNT(*) AS n
          |FROM events
          |WHERE event_type IN ('click', 'view')
          |GROUP BY 1
-         |ORDER BY n DESC, page LIMIT 10 OFFSET 10""".stripMargin) { (s, dir) =>
-      hits(s, dir).filter(col("event_type").isin("click", "view"))
-        .groupBy(col("page")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("page"))
-        .offset(10).limit(10)
-    }
+         |ORDER BY n DESC, page LIMIT 10 OFFSET 10""".stripMargin)
   )
 }

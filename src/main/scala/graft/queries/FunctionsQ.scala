@@ -1,28 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.sources.Catalog
-
 /** Scalar-function surface F1–F10 (SURVEY §2.3): the DuckDB function
-  * library re-expressed with Spark's codegen'd builtins. All stay
-  * inside whole-stage codegen (no UDFs anywhere).
+  * library through the front door onto Spark's codegen'd builtins. All
+  * stay inside whole-stage codegen (no UDFs anywhere).
   *
   * Cross-engine semantics notes baked in below:
   *  - DuckDB regexp_replace is first-match unless flagged 'g'; Spark is
-  *    global → oracle carries the 'g' flag.
+  *    global → the text carries the 'g' flag.
   *  - DuckDB CAST(double AS INT) rounds, Spark truncates → go through
   *    FLOOR explicitly.
-  *  - DuckDB dayofweek is 0=Sunday, Spark is 1=Sunday → oracle adds 1.
+  *  - dayofweek is 0 on a Sunday (DuckDB's numbering, which the front
+  *    door keeps); the text adds 1.
   */
 object FunctionsQ {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Catalog.table(s, dir, name)
-
   val defs: Seq[QDef] = Seq(
 
-    QDef.sql("f01_string_funcs",
+    QDef.text("f01_string_funcs",
       """SELECT p_partkey,
         | upper(p_name) AS up_name,
         | lower(p_brand) AS lo_brand,
@@ -33,38 +26,17 @@ object FunctionsQ {
         | lpad(p_brand, 12, '*') AS padded,
         | reverse(p_type) AS rev,
         | trim(concat(' ', p_type, ' ')) AS trimmed
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        upper(col("p_name")).as("up_name"),
-        lower(col("p_brand")).as("lo_brand"),
-        substring(col("p_name"), 1, 6).as("pre6"),
-        concat(col("p_brand"), lit(":"), col("p_type")).as("brand_type"),
-        regexp_replace(col("p_type"), "A", "@").as("repl"),
-        length(col("p_name")).cast("int").as("name_len"),
-        lpad(col("p_brand"), 12, "*").as("padded"),
-        reverse(col("p_type")).as("rev"),
-        trim(concat(lit(" "), col("p_type"), lit(" "))).as("trimmed"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    QDef.sql("f02_regex_funcs",
+    QDef.text("f02_regex_funcs",
       """SELECT doc_id,
         | regexp_extract(text, '[a-z]+') AS first_word,
         | CAST(len(regexp_extract_all(text, 'scan')) AS BIGINT) AS n_scan,
         | substr(regexp_replace(text, 'a', '@', 'g'), 1, 40) AS replaced,
         | CASE WHEN regexp_matches(text, 'join.*merge') THEN 1 ELSE 0 END AS has_seq
-        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        regexp_extract(col("text"), "[a-z]+", 0).as("first_word"),
-        size(regexp_extract_all(col("text"), lit("scan"), lit(0))).cast("bigint").as("n_scan"),
-        substring(regexp_replace(col("text"), "a", "@"), 1, 40).as("replaced"),
-        when(col("text").rlike("join.*merge"), 1).otherwise(0).as("has_seq"))
-        .orderBy(col("doc_id"))
-    },
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    QDef.sql("f03_date_funcs",
+    QDef.text("f03_date_funcs",
       """SELECT o_orderkey,
         | CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
         | CAST(EXTRACT(month FROM o_orderdate) AS INT) AS mo,
@@ -74,22 +46,9 @@ object FunctionsQ {
         | CAST(CAST(o_orderdate AS DATE) + INTERVAL 90 DAY AS DATE) AS due_date,
         | last_day(CAST(o_orderdate AS DATE)) AS month_end,
         | CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).as("yr"),
-        month(col("o_orderdate")).as("mo"),
-        dayofmonth(col("o_orderdate")).as("dy"),
-        date_trunc("month", col("o_orderdate")).cast("date").as("month_start"),
-        datediff(to_date(col("o_orderdate")), lit("1995-01-01").cast("date"))
-          .cast("bigint").as("days_since"),
-        date_add(to_date(col("o_orderdate")), 90).as("due_date"),
-        last_day(to_date(col("o_orderdate"))).as("month_end"),
-        dayofweek(col("o_orderdate")).as("dow"))
-        .orderBy(col("o_orderkey"))
-    },
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
-    QDef.sql("f04_math_funcs",
+    QDef.text("f04_math_funcs",
       """SELECT p_partkey,
         | abs(p_size - 25) AS dist25,
         | CAST(ceil(p_retailprice / 7.0) AS BIGINT) AS ceil7,
@@ -99,109 +58,49 @@ object FunctionsQ {
         | CAST(p_size % 7 AS INT) AS md,
         | CAST(sign(p_size - 25) AS DOUBLE) AS sgn,
         | round(p_retailprice / 3.0, 2) AS r2
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        abs(col("p_size") - 25).as("dist25"),
-        ceil(col("p_retailprice") / 7.0).cast("bigint").as("ceil7"),
-        floor(col("p_retailprice") / 7.0).cast("bigint").as("floor7"),
-        sqrt(col("p_size").cast("double")).as("sq"),
-        pow(col("p_size").cast("double"), 2.0).as("sz2"),
-        (col("p_size") % 7).cast("int").as("md"),
-        signum((col("p_size") - 25).cast("double")).cast("double").as("sgn"),
-        round(col("p_retailprice") / 3.0, 2).as("r2"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    QDef.sql("f05_hash_funcs",
+    QDef.text("f05_hash_funcs",
       """SELECT p_partkey,
         | md5(p_name) AS h_md5,
         | sha256(p_name) AS h_sha256,
         | substr(md5(concat(p_brand, p_type)), 1, 8) AS h_short
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        md5(col("p_name").cast("binary")).as("h_md5"),
-        sha2(col("p_name").cast("binary"), 256).as("h_sha256"),
-        substring(md5(concat(col("p_brand"), col("p_type")).cast("binary")), 1, 8).as("h_short"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    QDef.sql("f06_list_funcs",
+    QDef.text("f06_list_funcs",
       """SELECT vec_id,
         | CAST(len(embedding) AS INT) AS dim,
         | CAST(embedding[1] AS DOUBLE) + CAST(embedding[2] AS DOUBLE) + CAST(embedding[3] AS DOUBLE) AS head3,
         | CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_pos,
         | CAST(embedding[1] AS DOUBLE) * 2.0 AS first_scaled
-        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      t(s, dir, "embeddings").select(
-        col("vec_id"),
-        size(col("embedding")).cast("int").as("dim"),
-        (element_at(col("embedding"), 1).cast("double")
-          + element_at(col("embedding"), 2).cast("double")
-          + element_at(col("embedding"), 3).cast("double")).as("head3"),
-        size(filter(col("embedding"), x => x > 0f)).cast("int").as("n_pos"),
-        (element_at(col("embedding"), 1).cast("double") * 2.0).as("first_scaled"))
-        .orderBy(col("vec_id"))
-    },
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
 
-    QDef.sql("f07_struct_funcs",
+    QDef.text("f07_struct_funcs",
       """SELECT c_custkey,
         | struct_pack(k := c_custkey, b := c_acctbal).b AS bal_via_struct,
         | struct_pack(k := c_custkey, b := c_acctbal).k AS key_via_struct,
         | {'seg': c_mktsegment, 'nk': c_nationkey}.seg AS seg_via_struct
-        |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
-      val st = struct(col("c_custkey").as("k"), col("c_acctbal").as("b"))
-      t(s, dir, "customer").select(
-        col("c_custkey"),
-        st.getField("b").as("bal_via_struct"),
-        st.getField("k").as("key_via_struct"),
-        struct(col("c_mktsegment").as("seg"), col("c_nationkey").as("nk"))
-          .getField("seg").as("seg_via_struct"))
-        .orderBy(col("c_custkey"))
-    },
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    QDef.sql("f08_casts",
+    QDef.text("f08_casts",
       """SELECT c_custkey,
         | CAST(FLOOR(c_acctbal) AS BIGINT) AS bal_floor,
         | CAST(c_custkey AS VARCHAR) AS key_str,
         | TRY_CAST(CAST(c_custkey AS VARCHAR) AS BIGINT) AS key_back,
         | TRY_CAST(c_name AS DOUBLE) AS bad_cast,
         | CAST(c_nationkey AS DOUBLE) AS nk_dbl
-        |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").select(
-        col("c_custkey"),
-        floor(col("c_acctbal")).cast("bigint").as("bal_floor"),
-        col("c_custkey").cast("string").as("key_str"),
-        expr("try_cast(cast(c_custkey AS string) AS bigint)").as("key_back"),
-        expr("try_cast(c_name AS double)").as("bad_cast"),
-        col("c_nationkey").cast("double").as("nk_dbl"))
-        .orderBy(col("c_custkey"))
-    },
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    QDef.sql("f09_levenshtein",
+    QDef.text("f09_levenshtein",
       """SELECT p_partkey,
         | CAST(levenshtein(p_brand, 'Brand#25') AS INT) AS d_brand,
         | CAST(levenshtein(p_type, 'PROMO') AS INT) AS d_type
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        levenshtein(col("p_brand"), lit("Brand#25")).cast("int").as("d_brand"),
-        levenshtein(col("p_type"), lit("PROMO")).cast("int").as("d_type"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    QDef.sql("f10_json_funcs",
+    QDef.text("f10_json_funcs",
       """SELECT event_id,
         | TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
         | CASE WHEN TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) > 50 THEN 'hi' ELSE 'lo' END AS k_band
-        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-      t(s, dir, "events").select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").cast("bigint").as("k_val"),
-        when(get_json_object(col("props"), "$.k").cast("bigint") > 50, "hi")
-          .otherwise("lo").as("k_band"))
-        .orderBy(col("event_id"))
-    }
+        |FROM events ORDER BY event_id""".stripMargin)
   )
 }

@@ -24,20 +24,14 @@ import graft.sources.Catalog
   */
 object FunctionsQ10 {
 
-  private def verbatim(name: String, text: String): QDef =
-    QDef.sql(name, text) { (s, dir) =>
-      Catalog.registerAll(s, dir)
-      GraftSql.sql(s, text)
-    }
-
   val defs: Seq[QDef] = Seq(
-    verbatim("f81_pivot_stmt",
+    QDef.text("f81_pivot_stmt",
       """SELECT * FROM (
         |  PIVOT (SELECT l_returnflag, l_linestatus, CAST(l_quantity AS BIGINT) AS q FROM lineitem)
         |  ON l_returnflag USING min(q) AS lo, count(*) AS cnt GROUP BY l_linestatus)
         |ORDER BY l_linestatus""".stripMargin),
 
-    verbatim("f82_unpivot_stmt",
+    QDef.text("f82_unpivot_stmt",
       """SELECT o_orderkey, k, v FROM (
         |  UNPIVOT (SELECT o_orderkey, CAST(o_custkey AS BIGINT) AS ck,
         |           CAST(floor(o_totalprice) AS BIGINT) AS sp
@@ -48,7 +42,7 @@ object FunctionsQ10 {
     // list outputs rendered via array_to_string: the driver's pandas
     // hash gate cannot sort raw LIST cells (the F41 lesson, re-learned
     // in r7 — VERDICT r7 "What's wrong" #1)
-    verbatim("f83_slice_step",
+    QDef.text("f83_slice_step",
       """SELECT n_nationkey,
         | array_to_string(([n_nationkey, n_nationkey+1, n_nationkey+2, n_nationkey+3, n_nationkey+4, n_nationkey+5])[2:5:2], ',') AS s1,
         | array_to_string(([n_nationkey, n_nationkey+1, n_nationkey+2])[:-:-1], ',') AS s2,
@@ -57,7 +51,7 @@ object FunctionsQ10 {
         | (n_name)[2:4] AS s5
         |FROM nation ORDER BY n_nationkey""".stripMargin),
 
-    verbatim("f84_quantified",
+    QDef.text("f84_quantified",
       """SELECT n_nationkey, n_name,
         | n_nationkey > ANY(SELECT r_regionkey FROM region) AS any_gt,
         | n_nationkey >= ALL(SELECT r_regionkey FROM region) AS all_ge,
@@ -67,7 +61,7 @@ object FunctionsQ10 {
     // the window ORDER BY must be TOTAL: (orderkey, linenumber) has
     // duplicates in the testdata, and a ROWS frame over a tied order
     // is nondeterministic in both engines
-    verbatim("f86_window_filter",
+    QDef.text("f86_window_filter",
       """SELECT l_linestatus, l_orderkey, l_linenumber,
         | CAST(sum(l_quantity) FILTER (WHERE l_returnflag = 'R') OVER (
         |   PARTITION BY l_linestatus
@@ -77,12 +71,12 @@ object FunctionsQ10 {
         |FROM lineitem WHERE l_orderkey < 2000
         |ORDER BY l_linestatus, l_orderkey, l_linenumber, l_returnflag, l_quantity""".stripMargin),
 
-    verbatim("f87_chaining",
+    QDef.text("f87_chaining",
       """SELECT p_partkey, p_name.upper().replace('OL', '#') AS chained,
         | p_name.split(' ')[1].lower() AS first_word
         |FROM part WHERE p_partkey < 200 ORDER BY p_partkey""".stripMargin),
 
-    verbatim("f88_asof_right",
+    QDef.text("f88_asof_right",
       """SELECT event_id, o_orderkey
         |FROM orders ASOF RIGHT JOIN events
         |ON o_custkey = user_id AND CAST(o_orderdate AS TIMESTAMP) <= ts
@@ -93,7 +87,7 @@ object FunctionsQ10 {
     // order-preserving 16-byte encoding, BigInteger kernels;
     // reference src/common/types/hugeint.cpp). The same text renders
     // identical strings on both engines.
-    verbatim("f89_hugeint",
+    QDef.text("f89_hugeint",
       """SELECT n_nationkey,
         | CAST('170141183460469231731687303715884105727'::HUGEINT - n_nationkey AS VARCHAR) AS sub_edge,
         | CAST(('150000000000000000000000000000000000000'::HUGEINT // 3 + n_nationkey) * 3 AS VARCHAR) AS mul_big,
@@ -111,7 +105,7 @@ object FunctionsQ10 {
     // short-year temporal literals, huge-exponent literals (1e1000 =
     // inf), glued/repeated interval units, DISTINCT ON with ordinal
     // key + trailing LIMIT. One text, both engines.
-    verbatim("f90_dialect_tail",
+    QDef.text("f90_dialect_tail",
       """SELECT
         | '3' GLOB '[0-9]' AS g1, '012' GLOB '[0-9][0-9][0-9]' AS g2,
         | 'a' GLOB '[!0-9]' AS g3, '3]' GLOB '[]3][]]' AS g4,
@@ -134,7 +128,7 @@ object FunctionsQ10 {
     // blob, so the comparable surface is FINALIZE outputs — which is
     // also the part a user consumes. One text, both engines (DuckDB
     // runs its native states).
-    verbatim("f91_state_export",
+    QDef.text("f91_state_export",
       """SELECT n_regionkey,
         | finalize(count(*) EXPORT_STATE)::BIGINT AS c,
         | finalize(sum(n_nationkey) EXPORT_STATE)::BIGINT AS s,
@@ -149,7 +143,7 @@ object FunctionsQ10 {
     // parsed strings: half away from zero) where Spark truncates;
     // integer cast targets route through graft_rint (DuckNames
     // .DuckRint). One text, both engines.
-    verbatim("f92_cast_rounding",
+    QDef.text("f92_cast_rounding",
       """SELECT 49.5::DOUBLE::INTEGER AS a, 48.5::DOUBLE::INTEGER AS b,
         | (-49.5)::DOUBLE::INTEGER AS c, CAST(2.7::DOUBLE AS INTEGER) AS d,
         | CAST(CAST(48.5 AS DECIMAL(4,1)) AS INTEGER) AS e,
@@ -161,7 +155,7 @@ object FunctionsQ10 {
     // (test_json_extract.test:163-226) — resolved through
     // json_array_length chains at query time; out-of-range and
     // non-array prefixes yield NULL in both engines.
-    verbatim("f93_json_negidx",
+    QDef.text("f93_json_negidx",
       """SELECT
         | CAST(json_extract('{"b": [1,2,3,4]}', '$.b[#-1]') AS BIGINT) AS a,
         | CAST(json_extract('{"b": [1,2,3,4]}', '$.b[-2]') AS BIGINT) AS b,
@@ -170,7 +164,7 @@ object FunctionsQ10 {
         | json_extract('{"a": 1}', '$.a[#-1]') IS NULL AS e,
         | CAST('{"b": [[1,2],[3]]}'->'$.b[#-2][#-1]' AS BIGINT) AS f""".stripMargin),
 
-    verbatim("f85_ordered_agg",
+    QDef.text("f85_ordered_agg",
       """SELECT n_regionkey,
         | array_to_string(list(n_name ORDER BY n_name DESC), ',') AS names_desc,
         | array_to_string(list(n_nationkey ORDER BY n_name), ',') AS keys_by_name,
@@ -184,7 +178,7 @@ object FunctionsQ10 {
     // at translate time). One text, both engines — DuckDB 1.0 ships
     // both. repeat's output column is named by the value's literal
     // text (RepeatBind pushes inputs[0].ToString()).
-    verbatim("f95_repeat_tf",
+    QDef.text("f95_repeat_tf",
       """SELECT r."graft" AS rep_val, rr.column0 AS c0, rr.column1 AS c1,
         | n_nationkey
         |FROM repeat('graft', 2) r

@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.sources.Catalog
 
 /** Function-surface extensions F15–F17: remaining string utilities,
@@ -10,12 +7,9 @@ import graft.sources.Catalog
   * DuckDB scalar-function coverage.
   */
 object FunctionsQ2 {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Catalog.table(s, dir, name)
-
   val defs: Seq[QDef] = Seq(
 
-    QDef.sql("f15_string_more",
+    QDef.text("f15_string_more",
       """SELECT p_partkey,
         | repeat(p_brand, 2) AS doubled,
         | translate(p_type, 'AEIOU', 'aeiou') AS lowered_vowels,
@@ -27,54 +21,23 @@ object FunctionsQ2 {
         | CAST(ascii(p_brand) AS INT) AS first_code,
         | chr(65 + CAST(p_size % 26 AS INT)) AS size_letter,
         | CAST(strpos(p_name, 'o') AS INT) AS first_o
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        repeat(col("p_brand"), 2).as("doubled"),
-        translate(col("p_type"), "AEIOU", "aeiou").as("lowered_vowels"),
-        substring(col("p_name"), 1, 4).as("l4"),
-        expr("right(p_name, 4)").as("r4"),
-        col("p_name").contains("widget").as("has_widget"),
-        col("p_name").startsWith("cold").as("is_cold"),
-        col("p_name").endsWith("bolt").as("is_bolt"),
-        ascii(col("p_brand")).cast("int").as("first_code"),
-        chr(lit(65) + (col("p_size") % 26).cast("int")).as("size_letter"),
-        instr(col("p_name"), "o").cast("int").as("first_o"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    QDef.sql("f16_list_more",
+    QDef.text("f16_list_more",
       """SELECT vec_id,
         | CAST(list_contains(list_transform(embedding, x -> x > 0), true) AS BOOLEAN) AS any_pos,
         | CAST(embedding[5] AS DOUBLE) AS fifth,
         | CAST(len(embedding[1:8]) AS INT) AS head8_len,
         | CAST(list_transform(list_reverse(embedding), x -> CAST(x AS DOUBLE))[1] AS DOUBLE) AS last_elem,
         | CAST(list_position(list_transform(embedding, x -> x > 0), true) AS INT) AS first_pos_idx
-        |FROM embeddings WHERE vec_id < 50 ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      t(s, dir, "embeddings").filter(col("vec_id") < 50).select(
-        col("vec_id"),
-        array_contains(transform(col("embedding"), x => x > 0f), true).as("any_pos"),
-        element_at(col("embedding"), 5).cast("double").as("fifth"),
-        size(slice(col("embedding"), 1, 8)).cast("int").as("head8_len"),
-        element_at(reverse(col("embedding")), 1).cast("double").as("last_elem"),
-        array_position(transform(col("embedding"), x => x > 0f), true)
-          .cast("int").as("first_pos_idx"))
-        .orderBy(col("vec_id"))
-    },
+        |FROM embeddings WHERE vec_id < 50 ORDER BY vec_id""".stripMargin),
 
-    QDef.sql("f17_format",
+    QDef.text("f17_format",
       """SELECT o_orderkey,
         | printf('%d:%s', o_orderkey, o_orderstatus) AS tagged,
         | CAST(format('{:.2f}', ROUND(o_totalprice, 2)) AS VARCHAR) AS price_2dp,
         | lpad(CAST(o_orderkey AS VARCHAR), 10, '0') AS padded_key
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        format_string("%d:%s", col("o_orderkey"), col("o_orderstatus")).as("tagged"),
-        format_string("%.2f", round(col("o_totalprice"), 2)).as("price_2dp"),
-        lpad(col("o_orderkey").cast("string"), 10, "0").as("padded_key"))
-        .orderBy(col("o_orderkey"))
-    },
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // F18: list transform utilities (sort/distinct/flatten) — results
     // canonicalized through list_sort AND serialized to delimited
@@ -82,23 +45,15 @@ object FunctionsQ2 {
     // sort rows containing array cells (pandas lexsort chokes on
     // ndarray), so the list outputs are array_join'ed. The list ops
     // themselves still run; only the final cell type is scalar.
-    QDef.sql("f18_list_transform",
+    QDef.text("f18_list_transform",
       """SELECT p_partkey,
         | array_to_string(list_sort(string_split(p_name, ' ')), ' ') AS toks,
         | array_to_string(list_sort(list_distinct(string_split(p_type, ' '))), ' ') AS type_toks,
         | array_to_string(flatten([string_split(p_brand, '#'), string_split(p_type, ' ')]), ' ') AS flat
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        array_join(sort_array(split(col("p_name"), " ")), " ").as("toks"),
-        array_join(sort_array(array_distinct(split(col("p_type"), " "))), " ").as("type_toks"),
-        array_join(flatten(array(split(col("p_brand"), "#"), split(col("p_type"), " "))), " ")
-          .as("flat"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F19: bit manipulation (popcount, shifts, and/or/xor).
-    QDef.sql("f19_bit_ops",
+    QDef.text("f19_bit_ops",
       """SELECT p_partkey,
         | CAST(bit_count(CAST(p_size AS BIGINT)) AS INT) AS pop,
         | CAST(p_size << 2 AS BIGINT) AS shl,
@@ -106,17 +61,7 @@ object FunctionsQ2 {
         | CAST(p_size & 15 AS BIGINT) AS and_v,
         | CAST(p_size | 64 AS BIGINT) AS or_v,
         | CAST(xor(CAST(p_size AS BIGINT), 21) AS BIGINT) AS xor_v
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        bit_count(col("p_size").cast("bigint")).cast("int").as("pop"),
-        shiftleft(col("p_size"), 2).cast("bigint").as("shl"),
-        shiftright(col("p_size"), 1).cast("bigint").as("shr"),
-        expr("p_size & 15").cast("bigint").as("and_v"),
-        expr("p_size | 64").cast("bigint").as("or_v"),
-        expr("CAST(p_size AS BIGINT) ^ 21").cast("bigint").as("xor_v"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F20: CREATE MACRO (the reference's scalar macro surface,
     // src/parser/parsed_data/create_macro_info.cpp) — Spark 4's SQL
@@ -146,60 +91,36 @@ object FunctionsQ2 {
     },
 
     // F21: star modifiers — SELECT * EXCLUDE/EXCEPT (drop columns in
-    // the projection, reference: star_expression.cpp's exclude_list).
-    // Spark spells it EXCEPT; DuckDB spells it EXCLUDE; identical
-    // semantics (remaining columns keep table order).
-    QDef.sql("f21_star_exclude",
+    // the projection, reference: star_expression.cpp's exclude_list);
+    // the remaining columns keep table order.
+    QDef.text("f21_star_exclude",
       """SELECT * EXCLUDE (n_comment_like) FROM (
         |  SELECT n_nationkey, n_name, n_regionkey,
         |         n_name || '!' AS n_comment_like
-        |  FROM nation) ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      Catalog.registerAll(s, dir)
-      s.sql(
-        """SELECT * EXCEPT (n_comment_like) FROM (
-          |  SELECT n_nationkey, n_name, n_regionkey,
-          |         n_name || '!' AS n_comment_like
-          |  FROM nation) ORDER BY n_nationkey""".stripMargin)
-    },
+        |  FROM nation) ORDER BY n_nationkey""".stripMargin),
 
     // F22: GROUP BY ALL + ORDER BY ALL — the convenience grouping the
     // reference popularized (bind_select_node's ALL expansion):
-    // non-aggregated select items become the grouping keys. Identical
-    // SQL text runs on both engines.
-    {
-      val q =
-        """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-          |FROM orders
-          |GROUP BY ALL
-          |ORDER BY ALL""".stripMargin
-      QDef.sql("f22_group_by_all", q) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        s.sql(q)
-      }
-    },
+    // non-aggregated select items become the grouping keys.
+    QDef.text("f22_group_by_all",
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders
+        |GROUP BY ALL
+        |ORDER BY ALL""".stripMargin),
 
     // F24: interpolated quantiles — quantile_cont ≡ Spark percentile
     // (both: linear interpolation at rank p·(n-1) over the sorted
     // group). Identical inputs → identical IEEE interpolation. Scalar
     // columns (not an array) because the oracle harness hashes cell
     // values — one scalar per quantile keeps every cell hashable.
-    QDef.sql("f24_quantiles",
+    QDef.text("f24_quantiles",
       """SELECT o_orderstatus,
         | quantile_cont(o_totalprice, 0.25) AS q25,
         | quantile_cont(o_totalprice, 0.5)  AS q50,
         | quantile_cont(o_totalprice, 0.75) AS q75,
         | CAST(quantile_disc(o_totalprice, 0.5) AS DOUBLE) AS med_disc
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_orderstatus"))
-        .agg(expr("percentile(o_totalprice, 0.25D)").as("q25"),
-          expr("percentile(o_totalprice, 0.5D)").as("q50"),
-          expr("percentile(o_totalprice, 0.75D)").as("q75"),
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice)")
-            .cast("double").as("med_disc"))
-        .orderBy(col("o_orderstatus"))
-    },
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // F23: time_bucket — fixed-width tumbling buckets. Spark's native
     // window(ts, width) aligns to the epoch; DuckDB's time_bucket
@@ -208,16 +129,10 @@ object FunctionsQ2 {
     // 15-minute buckets) — the alignment identity the oracle relies
     // on. The bucket aggregation itself is the st01 shape at finer
     // grain.
-    QDef.sql("f23_time_bucket",
+    QDef.text("f23_time_bucket",
       """SELECT time_bucket(INTERVAL '15 minutes', ts) AS bucket_start,
         | COUNT(*) AS n,
         | CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY bucket_start ORDER BY bucket_start""".stripMargin) { (s, dir) =>
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "15 minutes").getField("start").as("bucket_start"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-        .orderBy(col("bucket_start"))
-    }
+        |FROM events GROUP BY bucket_start ORDER BY bucket_start""".stripMargin)
   )
 }

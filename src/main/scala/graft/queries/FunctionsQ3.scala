@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Aggregates
 import graft.sources.Catalog
@@ -35,11 +34,8 @@ object FunctionsQ3 {
     // reference's mode() is tie-nondeterministic (hash-table scan
     // order), so the oracle pins the DETERMINISTIC variant: highest
     // count, ties to the smallest value — exactly what Spark's
-    // mode() WITHIN GROUP (ORDER BY v) computes. Both sides are
-    // two-level aggregates (count per value, then argmax), the shape
-    // that scales: no sort of the raw rows, just the value-cardinality
-    // table.
-    QDef.sql("f25_mode",
+    // mode() WITHIN GROUP (ORDER BY v) computes.
+    QDef.text("f25_mode",
       """WITH c AS (
         |  SELECT o_orderpriority, o_orderstatus, o_custkey % 10 AS bucket,
         |         COUNT(*) AS cnt
@@ -58,15 +54,7 @@ object FunctionsQ3 {
         |       CAST(rb.bucket AS BIGINT) AS mode_bucket
         |FROM rs JOIN rb ON rs.o_orderpriority = rb.o_orderpriority
         |WHERE rs.rn = 1 AND rb.rn = 1
-        |ORDER BY rs.o_orderpriority""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          expr("mode() WITHIN GROUP (ORDER BY o_orderstatus)").as("mode_status"),
-          expr("mode() WITHIN GROUP (ORDER BY o_custkey % 10)")
-            .cast("long").as("mode_bucket"))
-        .orderBy(col("o_orderpriority"))
-    },
+        |ORDER BY rs.o_orderpriority""".stripMargin),
 
     // F26: SKEWNESS / KURTOSIS, the reference's bias-corrected sample
     // definitions (distributive/skew.cpp: g1·√(n(n−1))/(n−2);
@@ -82,7 +70,7 @@ object FunctionsQ3 {
     // then ÷10^scale — measured 1-ulp-off when the unscaled value
     // exceeds 2^53), while decimal→varchar→double is exact-then-
     // correctly-rounded, matching Spark's BigDecimal cast.
-    QDef.sql("f26_skew_kurt",
+    QDef.text("f26_skew_kurt",
       """WITH m AS (
         |  SELECT l_returnflag,
         |    CAST(COUNT(*) AS DOUBLE) AS n,
@@ -103,35 +91,7 @@ object FunctionsQ3 {
         |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
         |  (SQRT(n*(n-1.0))/(n-2.0)) * (m3/(m2*SQRT(m2))) AS skew,
         |  ((n-1.0)/((n-2.0)*(n-3.0))) * ((n+1.0)*(m4/(m2*m2) - 3.0) + 6.0) AS kurt
-        |FROM d ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      val qd = col("l_quantity").cast(DecimalType(6, 2))
-      val m = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), qd.as("qd"))
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).cast("double").as("n"),
-          sum(col("qd")).cast("double").as("sx"),
-          sum(col("qd") * col("qd")).cast("double").as("sxx"),
-          sum(col("qd") * col("qd") * col("qd")).cast("double").as("sxxx"),
-          sum((col("qd") * col("qd")) * (col("qd") * col("qd"))).cast("double").as("sxxxx"))
-      val c = m.select(col("l_returnflag"), col("n"),
-        (col("sx") / col("n")).as("mean"), col("sxx"), col("sxxx"), col("sxxxx"))
-      val n = col("n"); val mean = col("mean")
-      val d = c.select(col("l_returnflag"), n, mean,
-        (col("sxx") / n - mean * mean).as("m2"),
-        (col("sxxx") / n - lit(3.0) * mean * (col("sxx") / n)
-          + lit(2.0) * mean * mean * mean).as("m3"),
-        (col("sxxxx") / n - lit(4.0) * mean * (col("sxxx") / n)
-          + lit(6.0) * (mean * mean) * (col("sxx") / n)
-          - lit(3.0) * (mean * mean) * (mean * mean)).as("m4"))
-      val m2 = col("m2"); val m3 = col("m3"); val m4 = col("m4")
-      d.select(col("l_returnflag"), n.cast("long").as("n"),
-          ((sqrt(n * (n - lit(1.0))) / (n - lit(2.0)))
-            * (m3 / (m2 * sqrt(m2)))).as("skew"),
-          (((n - lit(1.0)) / ((n - lit(2.0)) * (n - lit(3.0))))
-            * ((n + lit(1.0)) * (m4 / (m2 * m2) - lit(3.0)) + lit(6.0))).as("kurt"))
-        .orderBy(col("l_returnflag"))
-    },
+        |FROM d ORDER BY l_returnflag""".stripMargin),
 
     // F27: COVAR_POP/COVAR_SAMP + the REGR_* family (algebraic/
     // covar.cpp, regression/regr_slope.cpp, regr_intercept.cpp,
@@ -140,7 +100,7 @@ object FunctionsQ3 {
     // precisely how an engine computes them at scale: one narrow
     // 6-number buffer per group through the shuffle, every statistic
     // a finalize-time formula.
-    QDef.sql("f27_covar_regr",
+    QDef.text("f27_covar_regr",
       """WITH m AS (
         |  SELECT l_returnflag,
         |    CAST(COUNT(*) AS DOUBLE) AS n,
@@ -168,60 +128,19 @@ object FunctionsQ3 {
         |  (cxy*cxy)/(cxx*cyy) AS r2,
         |  cxy/n AS covar_pop,
         |  cxy/(n-1.0) AS covar_samp
-        |FROM c ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      val m = t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          col("l_quantity").cast(DecimalType(6, 2)).as("xd"),
-          col("l_extendedprice").cast(DecimalType(9, 2)).as("yd"))
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).cast("double").as("n"),
-          sum(col("xd")).cast("double").as("sx"),
-          sum(col("yd")).cast("double").as("sy"),
-          sum(col("xd") * col("xd")).cast("double").as("sxx"),
-          sum(col("yd") * col("yd")).cast("double").as("syy"),
-          sum(col("xd") * col("yd")).cast("double").as("sxy"))
-      val n = col("n")
-      val c = m.select(col("l_returnflag"), n, col("sx"), col("sy"),
-        (col("sxx") - (col("sx") * col("sx")) / n).as("cxx"),
-        (col("syy") - (col("sy") * col("sy")) / n).as("cyy"),
-        (col("sxy") - (col("sx") * col("sy")) / n).as("cxy"))
-      c.select(col("l_returnflag"),
-          n.cast("long").as("regr_cnt"),
-          (col("sx") / n).as("avgx"), (col("sy") / n).as("avgy"),
-          col("cxx").as("rsxx"), col("cyy").as("rsyy"), col("cxy").as("rsxy"),
-          (col("cxy") / col("cxx")).as("slope"),
-          ((col("sy") / n) - (col("cxy") / col("cxx")) * (col("sx") / n)).as("intercept"),
-          ((col("cxy") * col("cxy")) / (col("cxx") * col("cyy"))).as("r2"),
-          (col("cxy") / n).as("covar_pop"),
-          (col("cxy") / (n - lit(1.0))).as("covar_samp"))
-        .orderBy(col("l_returnflag"))
-    },
+        |FROM c ORDER BY l_returnflag""".stripMargin),
 
     // F28: ENTROPY (distributive/entropy.cpp) — Shannon entropy in
     // bits of the value distribution. The oracle runs the NATIVE
     // entropy(); log2 is libm-territory (Spark computes ln x/ln 2,
     // DuckDB std::log2 — last-ulp differences of ~1e-15), so both
     // sides snap to a 1e-9 grid, which the ~1e-6-wide agreement
-    // margin clears by three orders of magnitude. Spark side is the
-    // scalable two-level shape: count per (group, value) — the
-    // value-cardinality table, tiny — then Σ c·log2 c per group.
-    QDef.sql("f28_entropy",
+    // margin clears by three orders of magnitude.
+    QDef.text("f28_entropy",
       """SELECT o_orderpriority,
         |  CAST(FLOOR(entropy(o_orderstatus)*1e9 + 0.5) AS BIGINT) AS ent_e9
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-      val counts = t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).cast("double").as("c"))
-      counts.groupBy(col("o_orderpriority"))
-        .agg(sum(col("c")).as("n"),
-          sum(col("c") * log2(col("c"))).as("sclog"))
-        .select(col("o_orderpriority"),
-          floor((log2(col("n")) - col("sclog") / col("n")) * lit(1e9) + lit(0.5))
-            .cast("long").as("ent_e9"))
-        .orderBy(col("o_orderpriority"))
-    },
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // F29: PRODUCT (distributive/product.cpp) — custom
     // DeclarativeAggregate (operators/Aggregates.scala): Spark has no
@@ -271,27 +190,13 @@ object FunctionsQ3 {
     // F31: MAD — median absolute deviation (holistic/mad.cpp):
     // median(|x − median(x)|), both medians interpolated
     // (quantile_cont ≡ Spark percentile, the f24 identity; the
-    // deviations are single IEEE subtractions). Spark shape: tiny
-    // per-group median table broadcast back onto the fact — one wide
-    // scan, no self-shuffle.
-    QDef.sql("f31_mad",
+    // deviations are single IEEE subtractions).
+    QDef.text("f31_mad",
       """SELECT o_orderstatus,
         |  mad(o_totalprice) AS mad_price,
         |  median(o_totalprice) AS med_price
         |FROM orders GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-      val orders = t(s, dir, "orders")
-      val med = orders.groupBy(col("o_orderstatus"))
-        .agg(expr("percentile(o_totalprice, 0.5D)").as("med_price"))
-      orders.join(broadcast(med), "o_orderstatus")
-        .select(col("o_orderstatus"), col("med_price"),
-          abs(col("o_totalprice") - col("med_price")).as("dev"))
-        .groupBy(col("o_orderstatus"))
-        .agg(expr("percentile(dev, 0.5D)").as("mad_price"),
-          first(col("med_price")).as("med_price"))
-        .select(col("o_orderstatus"), col("mad_price"), col("med_price"))
-        .orderBy(col("o_orderstatus"))
-    },
+        |ORDER BY o_orderstatus""".stripMargin),
 
     // F32: binned HISTOGRAM (nested/histogram.cpp,
     // binned_histogram.cpp) — exploded to (group, bin, count) rows
@@ -299,26 +204,18 @@ object FunctionsQ3 {
     // one aggregation, and the row shape is what a 1000-executor
     // plan wants anyway (maps concentrate a group's histogram on one
     // row; rows parallelize).
-    QDef.sql("f32_histogram",
+    QDef.text("f32_histogram",
       """SELECT o_orderstatus,
         |  CAST(FLOOR(o_totalprice / 25000.0) AS BIGINT) AS bin,
         |  CAST(COUNT(*) AS BIGINT) AS cnt
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_orderstatus"),
-          floor(col("o_totalprice") / lit(25000.0)).cast("long").as("bin"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("o_orderstatus"), col("bin"))
-    },
+        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // F35: MAP / STRUCT construction and access — the reference's
     // nested types (src/include/duckdb/common/types/: MAP, STRUCT;
     // map.cpp, struct_extract.cpp). All accesses project back to
     // SCALAR columns so the hash gate sees plain values; note the
-    // reference's map[k] yields a LIST (unwrapped with [1]) while
-    // Spark's element_at yields the value directly — same semantics,
-    // different spelling, pinned by the oracle.
-    QDef.sql("f35_map_struct",
+    // reference's map[k] yields a LIST (unwrapped with [1]).
+    QDef.text("f35_map_struct",
       """SELECT p_partkey,
         |  map([p_brand, p_type],
         |      [CAST(p_size AS BIGINT), CAST(p_partkey % 100 AS BIGINT)])[p_brand][1]
@@ -326,22 +223,7 @@ object FunctionsQ3 {
         |  CAST(cardinality(map([p_brand, p_type], [1, 2])) AS BIGINT) AS m_card,
         |  struct_pack(brand := p_brand, size := p_size).brand AS s_brand,
         |  CAST({'k': p_size, 'j': p_partkey}.k AS BIGINT) AS s_size
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-          col("p_partkey"),
-          element_at(
-            map_from_arrays(
-              array(col("p_brand"), col("p_type")),
-              array(col("p_size").cast("long"), (col("p_partkey") % 100).cast("long"))),
-            col("p_brand")).as("brand_val"),
-          size(map_from_arrays(array(col("p_brand"), col("p_type")),
-            array(lit(1), lit(2)))).cast("long").as("m_card"),
-          struct(col("p_brand").as("brand"), col("p_size").as("size"))
-            .getField("brand").as("s_brand"),
-          struct(col("p_size").as("k"), col("p_partkey").as("j"))
-            .getField("k").cast("long").as("s_size"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F34: timezone-aware timestamp operations — the reference
     // bundles extension/icu/ for TIMESTAMPTZ / AT TIME ZONE; Spark's
@@ -352,7 +234,7 @@ object FunctionsQ3 {
     // land one hour later than ny_hour — wrong-by-offset
     // implementations fail the hash. All zone math is per-row scalar
     // work (no shuffle beyond the final small groupBy).
-    QDef.sql("f34_timezone",
+    QDef.text("f34_timezone",
       """SELECT ny_hour, tokyo_hour, dst_hour, CAST(COUNT(*) AS BIGINT) AS n
         |FROM (SELECT
         |  CAST(EXTRACT(HOUR FROM (CAST(ts AS TIMESTAMP) AT TIME ZONE 'UTC')
@@ -363,34 +245,15 @@ object FunctionsQ3 {
         |    AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York') AS INT) AS dst_hour
         | FROM events)
         |GROUP BY ny_hour, tokyo_hour, dst_hour
-        |ORDER BY ny_hour, tokyo_hour, dst_hour""".stripMargin) { (s, dir) =>
-      t(s, dir, "events")
-        .select(
-          hour(from_utc_timestamp(col("ts"), "America/New_York")).as("ny_hour"),
-          hour(from_utc_timestamp(col("ts"), "Asia/Tokyo")).as("tokyo_hour"),
-          hour(from_utc_timestamp(col("ts") + expr("INTERVAL 68 DAYS"),
-            "America/New_York")).as("dst_hour"))
-        .groupBy(col("ny_hour"), col("tokyo_hour"), col("dst_hour"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("ny_hour"), col("tokyo_hour"), col("dst_hour"))
-    },
+        |ORDER BY ny_hour, tokyo_hour, dst_hour""".stripMargin),
 
     // F33: BITSTRING_AGG (distributive/bitstring_agg.cpp) — presence
     // bitmap over a bounded int domain, leftmost bit = domain min
-    // (probed against the reference's VARCHAR rendering). Spark
-    // spelling: BIT_OR of single-bit masks — a codegen'd 8-byte
-    // aggregation buffer, the same cost class as the reference's —
-    // rendered with bin/lpad at finalize.
-    QDef.sql("f33_bitstring_agg",
+    // (probed against the reference's VARCHAR rendering).
+    QDef.text("f33_bitstring_agg",
       """SELECT l_orderkey AS o_orderkey,
         |  CAST(bitstring_agg(l_linenumber, 1, 7) AS VARCHAR) AS line_bits
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey").as("o_orderkey"))
-        .agg(expr("lpad(bin(bit_or(shiftleft(1L, 7 - l_linenumber))), 7, '0')")
-          .as("line_bits"))
-        .orderBy(col("o_orderkey"))
-    },
+        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin),
 
     // F36: string-distance family (scalar/string/damerau_levenshtein
     // .cpp, hamming.cpp, jaccard.cpp, jaro_winkler.cpp). Spark has

@@ -1,10 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.sources.Catalog
-
 /** Scalar-function surface F45–F48: list distance metrics, the map
   * long tail, tagged UNION types, and interval/age arithmetic — the
   * last uncovered families under the reference's
@@ -20,15 +15,6 @@ import graft.sources.Catalog
   * IEEE exact-rounded).
   */
 object FunctionsQ5 {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Catalog.table(s, dir, name)
-
-  /** Sequential left double fold: ((0+v1)+v2)+… — the one summation
-    * order both engines can spell exactly.
-    */
-  private def fold(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, x) => acc + x)
-
   val defs: Seq[QDef] = Seq(
 
     // F45: list_distance / list_inner_product / list_cosine_similarity
@@ -36,7 +22,7 @@ object FunctionsQ5 {
     // Pairing is a shuffle join on vec_id+1 (no single-partition
     // window); at 100 TB the pair source would be any co-partitioned
     // key join — the distance kernels themselves are per-row map work.
-    QDef.sql("f45_list_distance",
+    QDef.text("f45_list_distance",
       """WITH p AS (
         |  SELECT a.vec_id,
         |         list_transform(a.embedding, x -> CAST(x AS DOUBLE)) AS e1,
@@ -53,29 +39,16 @@ object FunctionsQ5 {
         |         list_transform(e1, x -> x*x)), (a,b) -> a+b))
         |       * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
         |         list_transform(e2, x -> x*x)), (a,b) -> a+b))) AS cs
-        |FROM p ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      val emb = t(s, dir, "embeddings")
-      val a = emb.select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e1"))
-      val b = emb.select((col("vec_id") - 1).as("vec_id"), transform(col("embedding"), _.cast("double")).as("e2"))
-      val ip = fold(zip_with(col("e1"), col("e2"), (x, y) => x * y))
-      a.join(b, "vec_id")
-        .select(
-          col("vec_id"),
-          sqrt(fold(zip_with(col("e1"), col("e2"), (x, y) => (x - y) * (x - y)))).as("l2"),
-          ip.as("ip"),
-          (ip / (sqrt(fold(transform(col("e1"), x => x * x))) *
-                 sqrt(fold(transform(col("e2"), x => x * x))))).as("cs"))
-        .orderBy("vec_id")
-    },
+        |FROM p ORDER BY vec_id""".stripMargin),
 
     // F46: map long tail — map_concat, map_entries, map_from_entries,
     // key membership, cardinality (scalar/map/*.cpp), plus
-    // struct_insert (scalar/struct/struct_insert.cpp ≡ withField).
+    // struct_insert (scalar/struct/struct_insert.cpp).
     // Map cells can't ride the driver's hash gate (the f24 lesson), so
     // every map renders as a sorted "k=v" join — identical bytes both
     // engines. map_contains doesn't exist in DuckDB 1.0.0, so
     // membership is spelled list_contains(map_keys(m), k) there.
-    QDef.sql("f46_map_extended",
+    QDef.text("f46_map_extended",
       """SELECT p_partkey,
         |  array_to_string(list_sort(list_transform(map_entries(
         |    map_concat(MAP{'brand': p_brand, 'type': p_type}, MAP{'size': CAST(p_size AS VARCHAR)})),
@@ -88,24 +61,7 @@ object FunctionsQ5 {
         |  cardinality(map_concat(MAP{'brand': p_brand, 'type': p_type},
         |                         MAP{'size': CAST(p_size AS VARCHAR)})) AS card,
         |  struct_insert({'pk': p_partkey}, sz := p_size).sz AS ins_sz
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      def render(m: Column): Column =
-        array_join(array_sort(transform(map_entries(m), e =>
-          concat(e.getField("key"), lit("="), e.getField("value")))), ",")
-      val m1 = map(lit("brand"), col("p_brand"), lit("type"), col("p_type"))
-      val m2 = map(lit("size"), col("p_size").cast("string"))
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        render(map_concat(m1, m2)).as("concat_r"),
-        render(m1).as("entries_r"),
-        element_at(map_from_entries(array(struct(lit("nm").as("key"), col("p_name").as("value")))), "nm")
-          .as("from_entries_v"),
-        map_contains_key(m1, lit("brand")).as("has_brand"),
-        map_contains_key(m1, lit("color")).as("has_color"),
-        size(map_concat(m1, m2)).cast("long").as("card"),
-        struct(col("p_partkey").as("pk")).withField("sz", col("p_size")).getField("sz").as("ins_sz"))
-        .orderBy("p_partkey")
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F47: tagged UNION type (scalar/union/union_{value,tag,extract}
     // .cpp). Spark has no native union type; the standard encoding is
@@ -113,7 +69,7 @@ object FunctionsQ5 {
     // exactly DuckDB's own physical layout for UNION. The oracle uses
     // the genuine DuckDB union functions; extraction of the inactive
     // member yields NULL on both sides.
-    QDef.sql("f47_union_type",
+    QDef.text("f47_union_type",
       """SELECT event_id, union_tag(u) AS tag,
         |       CAST(union_extract(u, 'num') AS DOUBLE) AS num,
         |       union_extract(u, 'txt') AS txt
@@ -122,21 +78,7 @@ object FunctionsQ5 {
         |             THEN CAST(union_value(num := value) AS UNION(num DOUBLE, txt VARCHAR))
         |             ELSE CAST(union_value(txt := event_type) AS UNION(num DOUBLE, txt VARCHAR)) END AS u
         |      FROM events)
-        |ORDER BY event_id""".stripMargin) { (s, dir) =>
-      val isNum = col("event_type") === "click"
-      val u = when(isNum,
-          struct(lit("num").as("tag"), col("value").as("num"), lit(null).cast("string").as("txt")))
-        .otherwise(
-          struct(lit("txt").as("tag"), lit(null).cast("double").as("num"), col("event_type").as("txt")))
-      t(s, dir, "events")
-        .select(col("event_id"), u.as("u"))
-        .select(
-          col("event_id"),
-          col("u.tag").as("tag"),
-          col("u.num").as("num"),
-          col("u.txt").as("txt"))
-        .orderBy("event_id")
-    },
+        |ORDER BY event_id""".stripMargin),
 
     // F48: interval arithmetic + age() (scalar/date/{age,to_interval,
     // date_diff}.cpp). age(L, E) decomposes fieldwise with a single
@@ -146,7 +88,7 @@ object FunctionsQ5 {
     // Month addition clamps to month end identically in both engines
     // (2024-01-31 + 1 MONTH = 2024-02-29 ≡ Spark add_months). All
     // integer arithmetic — no floats anywhere.
-    QDef.sql("f48_age_interval",
+    QDef.text("f48_age_interval",
       """WITH d AS (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS od FROM orders),
         |a AS (SELECT o_orderkey, od, age(DATE '2025-06-15', od) AS ag FROM d)
         |SELECT o_orderkey,
@@ -157,28 +99,6 @@ object FunctionsQ5 {
         |  CAST(od + INTERVAL 45 DAY AS DATE) AS plus45d,
         |  CAST(date_diff('month', od, DATE '2025-06-15') AS BIGINT) AS mdiff,
         |  CAST(date_diff('day', od, DATE '2025-06-15') AS BIGINT) AS ddiff
-        |FROM a ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      val later = to_date(lit("2025-06-15"))
-      val od = col("o_orderdate").cast("date")
-      val y0 = year(later) - year(od)
-      val m0 = month(later) - month(od)
-      val d0 = dayofmonth(later) - dayofmonth(od)
-      val borrowDay = d0 < 0
-      val d1 = when(borrowDay, d0 + dayofmonth(last_day(od))).otherwise(d0)
-      val m1 = when(borrowDay, m0 - 1).otherwise(m0)
-      val borrowMonth = m1 < 0
-      val m2 = when(borrowMonth, m1 + 12).otherwise(m1)
-      val y1 = when(borrowMonth, y0 - 1).otherwise(y0)
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        y1.cast("long").as("age_y"),
-        m2.cast("long").as("age_m"),
-        d1.cast("long").as("age_d"),
-        add_months(od, 1).as("plus1m"),
-        date_add(od, 45).as("plus45d"),
-        ((year(later) * 12 + month(later)) - (year(od) * 12 + month(od))).cast("long").as("mdiff"),
-        datediff(later, od).cast("long").as("ddiff"))
-        .orderBy("o_orderkey")
-    }
+        |FROM a ORDER BY o_orderkey""".stripMargin)
   )
 }

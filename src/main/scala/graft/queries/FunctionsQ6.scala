@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,9 +34,9 @@ object FunctionsQ6 {
     // does Spark's array_intersect — sorted render pins the order),
     // array_slice has INCLUSIVE bounds (Spark slice takes a length),
     // list_aggregate('sum') is the lambda-free fold, list_where is a
-    // boolean mask gather (zip_with + filter on the Spark side). All
+    // boolean mask gather. All
     // elements BIGINT; pure per-row map work — nothing shuffles.
-    QDef.sql("f49_list_set_ops",
+    QDef.text("f49_list_set_ops",
       """SELECT p_partkey,
         |  CAST(list_unique([p_partkey % 7, p_partkey % 5, p_partkey % 7, p_partkey % 3]) AS BIGINT) AS uniq,
         |  array_to_string(list_sort(list_intersect(
@@ -48,37 +48,16 @@ object FunctionsQ6 {
         |  array_to_string(list_where(
         |    [p_partkey % 7, p_partkey % 5, p_partkey % 7, p_partkey % 3],
         |    [true, false, p_partkey % 2 = 0, true]), ',') AS wh
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      val k = col("p_partkey")
-      val l1 = array(k % 7, k % 5, k % 7, k % 3)
-      val l2 = array(k % 5, k % 3, lit(4L))
-      val mask = array(lit(true), lit(false), k % 2 === 0, lit(true))
-      t(s, dir, "part").select(
-        k,
-        size(array_distinct(l1)).cast("long").as("uniq"),
-        array_join(array_sort(array_intersect(l1, l2)), ",").as("inter"),
-        array_join(slice(l1, 2, 2), ",").as("sl"),
-        aggregate(l1, lit(0L), (acc, x) => acc + x).as("asum"),
-        array_join(
-          filter(zip_with(l1, mask, (x, m) => when(m, x)), _.isNotNull),
-          ",").as("wh"))
-        .orderBy(k)
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F50: SELECT * EXCLUDE ... REPLACE ... (the reference's star
     // expression modifiers, parser/expression/star_expression.cpp).
-    // REPLACE keeps the column's position — exactly withColumn's
-    // contract — and EXCLUDE is drop. Pure projection.
-    QDef.sql("f50_star_replace",
+    // REPLACE keeps the column's position and EXCLUDE drops it. Pure
+    // projection.
+    QDef.text("f50_star_replace",
       """SELECT * EXCLUDE (n_regionkey)
         |       REPLACE (lower(n_name) AS n_name, n_nationkey * 10 AS n_nationkey)
-        |FROM nation ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "nation")
-        .drop("n_regionkey")
-        .withColumn("n_name", lower(col("n_name")))
-        .withColumn("n_nationkey", col("n_nationkey") * 10)
-        .orderBy(col("n_nationkey"))
-    },
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
 
     // F51: COLUMNS('regex') — dynamic multi-column application
     // (star_expression.cpp's columns flag) + typeof
@@ -116,7 +95,7 @@ object FunctionsQ6 {
     // json_keys renders as a joined list. Doubles are deliberately
     // kept out of the JSON — number formatting is the one divergent
     // surface. row_to_json ≡ to_json(struct(...)).
-    QDef.sql("f52_json_construct",
+    QDef.text("f52_json_construct",
       """SELECT o_orderkey,
         |  to_json({'k': o_orderkey, 's': o_orderpriority}) AS j1,
         |  json_merge_patch(to_json({'a': o_orderkey % 10}),
@@ -124,17 +103,7 @@ object FunctionsQ6 {
         |  array_to_string(json_keys(to_json(
         |    {'x': o_orderkey, 'y': o_orderpriority, 'z': o_orderstatus})), ',') AS jk,
         |  row_to_json(struct_pack(k := o_orderkey, c := o_orderstatus)) AS rj
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      val o = t(s, dir, "orders")
-      o.select(
-        col("o_orderkey"),
-        to_json(struct(col("o_orderkey").as("k"), col("o_orderpriority").as("s"))).as("j1"),
-        to_json(struct((col("o_orderkey") % 10).as("a"), (col("o_custkey") % 10).as("b"))).as("jm"),
-        expr("array_join(json_object_keys(to_json(struct(" +
-          "o_orderkey AS x, o_orderpriority AS y, o_orderstatus AS z))), ',')").as("jk"),
-        to_json(struct(col("o_orderkey").as("k"), col("o_orderstatus").as("c"))).as("rj"))
-        .orderBy(col("o_orderkey"))
-    },
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // F53: Unicode normalization + split tail. strip_accents is
     // utf8proc NFD+STRIPMARK (function/scalar/string/strip_accents
@@ -169,24 +138,13 @@ object FunctionsQ6 {
     // F54: temporal constructors — make_timestamp from parts
     // (scalar/date/make_date.cpp's timestamp sibling) and yearweek
     // (date_part.cpp), which is ISO year * 100 + ISO week (both
-    // cross year boundaries together: 2021-01-01 → 202053). The
-    // Spark isoyear spelling reuses f39's Thursday-of-week identity.
-    QDef.sql("f54_temporal_make",
+    // cross year boundaries together: 2021-01-01 → 202053).
+    QDef.text("f54_temporal_make",
       """SELECT o_orderkey,
         |  make_timestamp(year(o_orderdate), month(o_orderdate), day(o_orderdate),
         |                 12, 34, 56.789) AS mts,
         |  CAST(yearweek(o_orderdate) AS BIGINT) AS yw
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      val d = col("o_orderdate")
-      val isodow = ((dayofweek(d) + lit(5)) % 7 + lit(1))
-      val isoyear = year(date_add(d, (lit(4) - isodow).cast("int")))
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        expr("make_timestamp(year(o_orderdate), month(o_orderdate), day(o_orderdate), " +
-          "12, 34, 56.789)").as("mts"),
-        (isoyear.cast("long") * 100L + weekofyear(d).cast("long")).as("yw"))
-        .orderBy(col("o_orderkey"))
-    },
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // F55: PREPARE / EXECUTE (reference
     // src/parser/statement/prepare_statement.cpp + execute_statement
@@ -216,24 +174,18 @@ object FunctionsQ6 {
     // list_intersect, list_sort, array_to_string, array_slice,
     // list_aggregate, list_where, yearweek; FunctionTable lambda-built
     // HOFs). One query text, both engines — the f43 proof shape.
-    {
-      val q =
-        """SELECT p_partkey,
-          |  CAST(list_unique(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3)) AS BIGINT) AS uniq,
-          |  array_to_string(list_sort(list_intersect(
-          |    list_value(p_partkey % 7, p_partkey % 5), list_value(p_partkey % 5, p_partkey % 3))), ',') AS inter,
-          |  array_to_string(array_slice(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3), 2, 3), ',') AS sl,
-          |  CAST(list_aggregate(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3), 'sum') AS BIGINT) AS asum,
-          |  CAST(list_aggregate(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3), 'max') AS BIGINT) AS amax,
-          |  array_to_string(list_where(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3),
-          |    list_value(true, p_partkey % 2 = 0, false)), ',') AS wh,
-          |  yearweek(DATE '1995-01-01') AS yw
-          |FROM part ORDER BY p_partkey""".stripMargin
-      QDef.sql("f56_sql_lists", q) { (s, dir) =>
-        graft.sources.Catalog.registerAll(s, dir)
-        s.sql(q)
-      }
-    },
+    QDef.text("f56_sql_lists",
+      """SELECT p_partkey,
+        |  CAST(list_unique(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3)) AS BIGINT) AS uniq,
+        |  array_to_string(list_sort(list_intersect(
+        |    list_value(p_partkey % 7, p_partkey % 5), list_value(p_partkey % 5, p_partkey % 3))), ',') AS inter,
+        |  array_to_string(array_slice(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3), 2, 3), ',') AS sl,
+        |  CAST(list_aggregate(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3), 'sum') AS BIGINT) AS asum,
+        |  CAST(list_aggregate(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3), 'max') AS BIGINT) AS amax,
+        |  array_to_string(list_where(list_value(p_partkey % 7, p_partkey % 5, p_partkey % 3),
+        |    list_value(true, p_partkey % 2 = 0, false)), ',') AS wh,
+        |  yearweek(DATE '1995-01-01') AS yw
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F57: corr (algebraic/corr.cpp) + any_value
     // (distributive/arbitrary.cpp). corr follows the f27 float
@@ -244,7 +196,7 @@ object FunctionsQ6 {
     // nondeterministic under parallel scans by contract, so it is
     // pinned over input CONSTANT within each group — the one shape
     // where both engines must agree.
-    QDef.sql("f57_corr_any",
+    QDef.text("f57_corr_any",
       """WITH m AS (
         |  SELECT o_orderstatus,
         |    CAST(COUNT(*) AS DOUBLE) AS n,
@@ -262,26 +214,6 @@ object FunctionsQ6 {
         |SELECT o_orderstatus, CAST(n AS BIGINT) AS cnt, tag,
         |  (sxy - (sx*sy)/n)
         |    / (sqrt(sxx - (sx*sx)/n) * sqrt(syy - (sy*sy)/n)) AS r
-        |FROM m ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-      val m = t(s, dir, "orders")
-        .select(col("o_orderstatus"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("xd"),
-          col("o_custkey").cast(DecimalType(12, 0)).as("yd"))
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).cast("double").as("n"),
-          sum(col("xd")).cast("double").as("sx"),
-          sum(col("yd")).cast("double").as("sy"),
-          sum(col("xd") * col("xd")).cast("double").as("sxx"),
-          sum(col("yd") * col("yd")).cast("double").as("syy"),
-          sum(col("xd") * col("yd")).cast("double").as("sxy"),
-          any_value(substring(col("o_orderstatus"), 1, 1)).as("tag"))
-      val n = col("n")
-      m.select(col("o_orderstatus"), n.cast("long").as("cnt"), col("tag"),
-          ((col("sxy") - (col("sx") * col("sy")) / n)
-            / (sqrt(col("sxx") - (col("sx") * col("sx")) / n)
-               * sqrt(col("syy") - (col("sy") * col("sy")) / n))).as("r"))
-        .orderBy(col("o_orderstatus"))
-    }
+        |FROM m ORDER BY o_orderstatus""".stripMargin)
   )
 }

@@ -293,40 +293,26 @@ object FunctionsQ7 {
         .orderBy(col("p_partkey"))
     },
 
-    // F66: reservoir_quantile (holistic/reservoir_quantile.cpp) in
-    // its EXACT regime: sample_size ≥ group row count means the
-    // reservoir is the whole group and the finalize index math —
-    // sorted element at truncate((n−1)·q), reservoir_quantile
-    // .cpp:165, which differs from quantile_disc's ceil(q·n)−1 — is
-    // deterministic on both engines. The custom
-    // TypedImperativeAggregate keeps the bounded-memory sampling path
-    // for the beyond-cap regime (AggregatesSpec covers it).
     // F68: the F60–F65 fringe through the SQL front door — ONE query
     // text, run VERBATIM by both engines (the f43 proof shape). The
     // custom expressions ride Spark's FunctionRegistry under their
     // reference names (plans/FunctionTable.scala): left/right_grapheme,
     // nextafter, md5_number(+lower), gamma/lgamma (grid-snapped —
     // libm), and the even/signbit/isfinite/isinf trees.
-    {
-      val q =
-        """SELECT p_partkey,
-          |  left_grapheme(p_name, 4) AS lg,
-          |  right_grapheme(p_name, 3) AS rg,
-          |  nextafter(p_retailprice, 1e18) AS na,
-          |  CAST(md5_number(p_name) AS STRING) AS mdn,
-          |  CAST(md5_number_lower(p_brand) AS STRING) AS mlo,
-          |  CAST(FLOOR(gamma(0.5 + p_partkey % 10) * 1e6 + 0.5) AS BIGINT) AS gam_e6,
-          |  CAST(FLOOR(lgamma(5.5 + p_partkey % 20) * 1e9 + 0.5) AS BIGINT) AS lgam_e9,
-          |  even(p_retailprice / 100.0) AS ev,
-          |  signbit(1200.0 - p_retailprice) AS sb,
-          |  isfinite(p_retailprice) AS fin,
-          |  isinf(p_retailprice) AS inf_f
-          |FROM part ORDER BY p_partkey""".stripMargin
-      QDef.sql("f68_sql_fringe", q) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        s.sql(q)
-      }
-    },
+    QDef.text("f68_sql_fringe",
+      """SELECT p_partkey,
+        |  left_grapheme(p_name, 4) AS lg,
+        |  right_grapheme(p_name, 3) AS rg,
+        |  nextafter(p_retailprice, 1e18) AS na,
+        |  CAST(md5_number(p_name) AS STRING) AS mdn,
+        |  CAST(md5_number_lower(p_brand) AS STRING) AS mlo,
+        |  CAST(FLOOR(gamma(0.5 + p_partkey % 10) * 1e6 + 0.5) AS BIGINT) AS gam_e6,
+        |  CAST(FLOOR(lgamma(5.5 + p_partkey % 20) * 1e9 + 0.5) AS BIGINT) AS lgam_e9,
+        |  even(p_retailprice / 100.0) AS ev,
+        |  signbit(1200.0 - p_retailprice) AS sb,
+        |  isfinite(p_retailprice) AS fin,
+        |  isinf(p_retailprice) AS inf_f
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F70: blob/array fringe (scalar/blob/encode.cpp, string/hex.cpp
     // unbin, array/array_functions.cpp cross product): ord ≡ ascii,
@@ -336,7 +322,7 @@ object FunctionsQ7 {
     // array_cross_product over integer-valued FLOAT[3] vectors with
     // INT-cast components (float VARCHAR renders differ across
     // engines; the cross product of integer vectors is exact).
-    QDef.sql("f70_blob_fringe",
+    QDef.text("f70_blob_fringe",
       """SELECT p_partkey,
         |  CAST(ord(p_name) AS INT) AS o,
         |  CAST(octet_length(CAST(p_brand AS BLOB)) AS INT) AS ol,
@@ -351,40 +337,19 @@ object FunctionsQ7 {
         |  CAST(array_cross_product(
         |    CAST([CAST(p_partkey % 5 AS FLOAT), CAST(p_partkey % 7 AS FLOAT), CAST(p_partkey % 3 AS FLOAT)] AS FLOAT[3]),
         |    CAST([CAST(p_partkey % 4 AS FLOAT), CAST(p_partkey % 6 AS FLOAT), CAST(p_partkey % 8 AS FLOAT)] AS FLOAT[3]))[3] AS INT) AS cz
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      val k = col("p_partkey")
-      val bits = lpad(bin(pmod(k, lit(256))), 16, "0")
-      val (a1, a2, a3) = (pmod(k, lit(5)), pmod(k, lit(7)), pmod(k, lit(3)))
-      val (b1, b2, b3) = (pmod(k, lit(4)), pmod(k, lit(6)), pmod(k, lit(8)))
-      t(s, dir, "part").select(
-        k,
-        ascii(col("p_name")).cast("int").as("o"),
-        length(col("p_brand").cast("binary")).cast("int").as("ol"),
-        lower(hex(unhex(lpad(conv(bits, 2, 16), 4, "0")))).as("ub"),
-        col("p_type").cast("binary").cast("string").as("rt"),
-        (a2 * b3 - a3 * b2).cast("int").as("cx"),
-        (a3 * b1 - a1 * b3).cast("int").as("cy"),
-        (a1 * b2 - a2 * b1).cast("int").as("cz"))
-        .orderBy(k)
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F69: the aggregate fringe through the SQL front door —
     // kahan_sum (+fsum alias) and reservoir_quantile registered as
     // real aggregates under their reference names; one query text
     // runs verbatim on both engines (exact-integer kahan regime,
     // exact-regime reservoir — the same disciplines as f62/f66).
-    {
-      val q =
-        """SELECT o_orderstatus,
-          |  kahan_sum(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS DOUBLE)) AS ks,
-          |  fsum(CAST(o_custkey % 1000 AS DOUBLE)) AS fs,
-          |  reservoir_quantile(CAST(o_totalprice AS DOUBLE), 0.5, 100000) AS rq
-          |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
-      QDef.sql("f69_sql_aggregates", q) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        s.sql(q)
-      }
-    },
+    QDef.text("f69_sql_aggregates",
+      """SELECT o_orderstatus,
+        |  kahan_sum(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS DOUBLE)) AS ks,
+        |  fsum(CAST(o_custkey % 1000 AS DOUBLE)) AS fs,
+        |  reservoir_quantile(CAST(o_totalprice AS DOUBLE), 0.5, 100000) AS rq
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // F67: equi_width_bins + histogram/histogram_exact over generated
     // bins (generic/binning.cpp, nested/binned_histogram.cpp). These
@@ -454,6 +419,14 @@ object FunctionsQ7 {
         .orderBy(col("kind"), col("bin"))
     },
 
+    // F66: reservoir_quantile (holistic/reservoir_quantile.cpp) in
+    // its EXACT regime: sample_size ≥ group row count means the
+    // reservoir is the whole group and the finalize index math —
+    // sorted element at truncate((n−1)·q), reservoir_quantile
+    // .cpp:165, which differs from quantile_disc's ceil(q·n)−1 — is
+    // deterministic on both engines. The custom
+    // TypedImperativeAggregate keeps the bounded-memory sampling path
+    // for the beyond-cap regime (AggregatesSpec covers it).
     QDef.sql("f66_reservoir_quantile",
       """SELECT o_orderstatus,
         |  reservoir_quantile(o_totalprice, 0.25, 100000) AS rq25,
@@ -477,45 +450,33 @@ object FunctionsQ7 {
     // distance, hex render, path parsing, split→transform→aggregate
     // list pipelines, argsort, %-code strftime, python-style format,
     // epoch, time_bucket.
-    {
-      val q =
-        """SELECT p_partkey,
-          |  sha256(p_name) AS h,
-          |  CAST(strpos(p_name, 'o') AS BIGINT) AS sp,
-          |  starts_with(p_type, 'STANDARD') AS st,
-          |  CAST(editdist3(p_brand, 'Brand#13') AS BIGINT) AS ed,
-          |  to_hex(p_partkey) AS hx,
-          |  parse_filename(replace(p_type, ' ', '/')) AS pf,
-          |  CAST(list_aggr(list_transform(string_split(p_name, ' '),
-          |         x -> CAST(length(x) AS BIGINT)), 'sum') AS BIGINT) AS lens,
-          |  array_to_string(list_grade_up(list_transform(string_split(p_name, ' '),
-          |         x -> CAST(length(x) AS BIGINT))), ',') AS gr,
-          |  format('{}-{}', p_partkey, p_brand) AS fm,
-          |  strftime(TIMESTAMP '2026-08-14 05:06:07', '%Y/%m/%d %H:%M') AS sf,
-          |  epoch_us(TIMESTAMP '2026-01-01 01:02:03.5') AS eu,
-          |  time_bucket(INTERVAL '15 minutes', TIMESTAMP '2026-08-14 05:07:33') AS tb
-          |FROM part ORDER BY p_partkey""".stripMargin
-      QDef.sql("f71_alias_scalars", q) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        s.sql(q)
-      }
-    },
+    QDef.text("f71_alias_scalars",
+      """SELECT p_partkey,
+        |  sha256(p_name) AS h,
+        |  CAST(strpos(p_name, 'o') AS BIGINT) AS sp,
+        |  starts_with(p_type, 'STANDARD') AS st,
+        |  CAST(editdist3(p_brand, 'Brand#13') AS BIGINT) AS ed,
+        |  to_hex(p_partkey) AS hx,
+        |  parse_filename(replace(p_type, ' ', '/')) AS pf,
+        |  CAST(list_aggr(list_transform(string_split(p_name, ' '),
+        |         x -> CAST(length(x) AS BIGINT)), 'sum') AS BIGINT) AS lens,
+        |  array_to_string(list_grade_up(list_transform(string_split(p_name, ' '),
+        |         x -> CAST(length(x) AS BIGINT))), ',') AS gr,
+        |  format('{}-{}', p_partkey, p_brand) AS fm,
+        |  strftime(TIMESTAMP '2026-08-14 05:06:07', '%Y/%m/%d %H:%M') AS sf,
+        |  epoch_us(TIMESTAMP '2026-01-01 01:02:03.5') AS eu,
+        |  time_bucket(INTERVAL '15 minutes', TIMESTAMP '2026-08-14 05:07:33') AS tb
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F72: aliased aggregates, verbatim. arg_max/arg_min key on the
     // UNIQUE o_orderkey so tie-breaking cannot differ between
     // engines; quantile_cont is the f24-proved interpolation
     // identity (raw doubles compare exactly).
-    {
-      val q =
-        """SELECT o_orderstatus,
-          |  arg_max(o_orderpriority, o_orderkey) AS am,
-          |  arg_min(o_orderpriority, o_orderkey) AS an,
-          |  quantile_cont(o_totalprice, 0.25) AS q25
-          |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
-      QDef.sql("f72_alias_aggregates", q) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        s.sql(q)
-      }
-    }
+    QDef.text("f72_alias_aggregates",
+      """SELECT o_orderstatus,
+        |  arg_max(o_orderpriority, o_orderkey) AS am,
+        |  arg_min(o_orderpriority, o_orderkey) AS an,
+        |  quantile_cont(o_totalprice, 0.25) AS q25
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
   )
 }

@@ -1,9 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
-import graft.sources.Catalog
-
 /** F73/F74: the round's name-closure tranche through the SQL front
   * door — holistic aggregates (entropy, mad, quantile/quantile_disc,
   * bitstring_agg; operators/HolisticAggs.scala + plans/FunctionTable)
@@ -22,15 +18,9 @@ import graft.sources.Catalog
   */
 object FunctionsQ8 {
 
-  private def mk(name: String, q: String): QDef =
-    QDef.sql(name, q) { (s: SparkSession, dir: String) =>
-      Catalog.registerAll(s, dir)
-      s.sql(q)
-    }
-
   val defs: Seq[QDef] = Seq(
 
-    mk("f73_holistic_names",
+    QDef.text("f73_holistic_names",
       """SELECT o_orderpriority,
         |  CAST(FLOOR(entropy(o_orderstatus)*1e9 + 0.5) AS BIGINT) AS ent_e9,
         |  CAST(mad(o_totalprice) AS DOUBLE) AS mad_tp,
@@ -39,7 +29,7 @@ object FunctionsQ8 {
         |  CAST(bitstring_agg(CAST(o_orderkey % 32 AS INT), 0, 31) AS STRING) AS bs
         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    mk("f74_fringe_names",
+    QDef.text("f74_fringe_names",
       """SELECT o_orderkey,
         |  CAST(era(CAST(o_orderdate AS DATE)) AS BIGINT) AS er,
         |  julian(CAST(o_orderdate AS DATE)) AS jd,

@@ -22,12 +22,6 @@ import graft.sources.Catalog
   */
 object FunctionsQ9 {
 
-  private def verbatim(name: String, text: String): QDef =
-    QDef.sql(name, text) { (s, dir) =>
-      Catalog.registerAll(s, dir)
-      GraftSql.sql(s, text)
-    }
-
   val defs: Seq[QDef] = Seq(
     // F76: operator spellings — power, truncating int division,
     // postfix factorial, prefix abs, bit ops at the reference's
@@ -36,7 +30,7 @@ object FunctionsQ9 {
     // portable type: `**` is DOUBLE in both engines, but `//` is
     // INTEGER/BIGINT by input width and `!` is HUGEINT in the
     // reference — BIGINT keeps the hash comparable.
-    verbatim("f76_dialect_ops",
+    QDef.text("f76_dialect_ops",
       """SELECT p_partkey,
         | CAST(p_partkey ** 2 AS BIGINT) AS sq,
         | CAST(p_partkey // 7 AS BIGINT) AS dv,
@@ -53,7 +47,7 @@ object FunctionsQ9 {
     // subscripts, inclusive string slices (negative-from-end), the
     // polymorphic len, struct literals with dot access, struct_pack /
     // struct_insert `k := v`.
-    verbatim("f77_dialect_literals",
+    QDef.text("f77_dialect_literals",
       """SELECT n_nationkey,
         | string_split(n_name, '_')[1] AS first_seg,
         | n_name[2:4] AS mid,
@@ -68,7 +62,7 @@ object FunctionsQ9 {
     // through the dialect (CAST(union_value(k := v) AS UNION(...)) —
     // the translator emits the engine's tagged-struct encoding, f47's
     // hand-built shape, from the reference's own spelling).
-    verbatim("f78_dialect_union",
+    QDef.text("f78_dialect_union",
       """FROM events SELECT event_id,
         | union_tag(CASE WHEN event_type = 'click'
         |   THEN CAST(union_value(num := value) AS UNION(num DOUBLE, txt VARCHAR))
@@ -79,7 +73,7 @@ object FunctionsQ9 {
     // F80: QUALIFY through the dialect — the translator emits q29's
     // window-column-then-filter shape from the reference's own
     // spelling (deterministic: full ordering ties broken by key).
-    verbatim("f80_dialect_qualify",
+    QDef.text("f80_dialect_qualify",
       """SELECT o_custkey, o_orderkey, o_totalprice
         |FROM orders
         |WHERE o_orderstatus = 'O'

@@ -1,8 +1,5 @@
 package graft.queries
 
-import graft.GraftSql
-import graft.sources.Catalog
-
 /** The h2oai (db-benchmark) groupby + join families from the
   * reference's benchmark tree
   * (/root/reference/benchmark/h2oai/{group,join}/queries/q*.sql),
@@ -107,13 +104,7 @@ object H2oai {
     texts(joinFiles).map((_, "v2")))
 
   val defs: Seq[QDef] = Seq(
-    QDef.sql("h2o_group_sweep", groupSweep, groupFiles) { (s, dir) =>
-      Catalog.registerAll(s, dir)
-      GraftSql.sql(s, groupSweep)
-    },
-    QDef.sql("h2o_join_sweep", joinSweep, joinFiles) { (s, dir) =>
-      Catalog.registerAll(s, dir)
-      GraftSql.sql(s, joinSweep)
-    }
+    QDef.text("h2o_group_sweep", groupSweep, groupFiles),
+    QDef.text("h2o_join_sweep", joinSweep, joinFiles)
   )
 }

@@ -618,17 +618,13 @@ object Pipeline {
         .orderBy(col("doc_id"))
     },
 
-    // L15: PII redaction — email/phone/IP patterns replaced with typed
-    // placeholders, a standard pre-training scrub pass. Pure
-    // projection (no shuffle); identical regex dialect in both engines
-    // makes it exactly oracle-checkable.
     // T8: repetition filtering — within-document duplicate-n-gram
     // fraction (the Gopher-family repetition signal; heavily repeated
     // docs are TEMPLATE/SPAM and get dropped before training). Two
     // aggregations on (doc, gram) then doc: the repeated-gram ratio
     // is emitted as integer ppm — exact-int division is correctly
     // rounded identically on both engines, then snapped to the grid.
-    QDef.sql("t08_repetition",
+    QDef.text("t08_repetition",
       """WITH toks AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
@@ -640,21 +636,7 @@ object Pipeline {
         |  CAST(COUNT(DISTINCT gram) AS BIGINT) AS n_distinct,
         |  CAST(FLOOR(1e6 * (CAST(COUNT(*) - COUNT(DISTINCT gram) AS DOUBLE)
         |    / greatest(COUNT(*), 1)) + 0.5) AS BIGINT) AS dup_ppm
-        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        filter(split(lower(col("text")), "\\s+"), x => x =!= "").as("w"))
-      toks.filter(size(col("w")) >= 3)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, size(w)-2), i -> concat_ws(' ', w[i-1], w[i], w[i+1]))"))
-          .as("gram"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_grams"),
-          countDistinct(col("gram")).as("n_distinct"))
-        .select(col("doc_id"), col("n_grams"), col("n_distinct"),
-          floor(lit(1e6) * ((col("n_grams") - col("n_distinct")).cast("double")
-            / greatest(col("n_grams"), lit(1))) + 0.5).cast("long").as("dup_ppm"))
-        .orderBy(col("doc_id"))
-    },
+        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // T9: Gopher quality RULES (Rae et al. 2021, Appendix A1.1) —
     // the published heuristic battery as literal thresholds: word
@@ -664,7 +646,7 @@ object Pipeline {
     // split + bounded list folds), no shuffle — at 100 TB this is a
     // pure scan pass; the keep flag derives from exact integer counts
     // and one grid-snapped ratio, so the oracle replays it verbatim.
-    QDef.sql("t09_gopher_rules",
+    QDef.text("t09_gopher_rules",
       raw"""WITH w AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS words
@@ -684,26 +666,7 @@ object Pipeline {
         |   AND mean_word_len >= 3 AND mean_word_len <= 10
         |   AND CAST(alpha_words AS DOUBLE) / n_words > 0.8
         |   AND stop_hits >= 2) AS keep
-        |FROM m ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val words = filter(split(col("text"), "\\s+"), x => x =!= "")
-      val stops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-      val m = t(s, dir, "documents").select(
-        col("doc_id"),
-        size(words).as("n_words"),
-        (length(array_join(words, "")).cast("double") / size(words)).as("mean_word_len"),
-        size(filter(words, x => x.rlike("[a-z]"))).as("alpha_words"),
-        size(filter(words, x => x.isin(stops: _*))).as("stop_hits"))
-      m.select(col("doc_id"),
-          col("n_words").cast("long").as("n_words"),
-          floor(col("mean_word_len") * 1e9 + 0.5).cast("long").as("mwl_e9"),
-          col("alpha_words").cast("long").as("alpha_words"),
-          col("stop_hits").cast("long").as("stop_hits"),
-          (col("n_words") >= 10 && col("n_words") <= 100000 &&
-            col("mean_word_len") >= 3 && col("mean_word_len") <= 10 &&
-            col("alpha_words").cast("double") / col("n_words") > 0.8 &&
-            col("stop_hits") >= 2).as("keep"))
-        .orderBy(col("doc_id"))
-    },
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // T7: benchmark DECONTAMINATION — remove/flag training documents
     // sharing word n-grams with an evaluation set (the GPT-3-style
@@ -715,7 +678,7 @@ object Pipeline {
     // This entry joins on gram STRINGS so the DuckDB oracle can
     // replay it exactly; the production path swaps in the 64-bit gram
     // hashes of TextOps (identical plan, narrower rows).
-    QDef.sql("t07_decontaminate",
+    QDef.text("t07_decontaminate",
       """WITH toks AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
@@ -731,27 +694,7 @@ object Pipeline {
         |  COALESCE(h.n_shared, 0) > 0 AS contaminated
         |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 <> 0) d
         |LEFT JOIN hits h ON d.doc_id = h.doc_id
-        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-      val docs = t(s, dir, "documents")
-      val toks = docs.select(col("doc_id"),
-        filter(split(lower(col("text")), "\\s+"), x => x =!= "").as("w"))
-      val grams = toks.filter(size(col("w")) >= 3)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, size(w)-2), i -> concat_ws(' ', w[i-1], w[i], w[i+1]))"))
-          .as("gram"))
-      val bench = grams.filter(col("doc_id") % 50 === 0)
-        .select(col("gram")).distinct()
-      val hits = grams.filter(col("doc_id") % 50 =!= 0)
-        .dropDuplicates("doc_id", "gram")
-        .join(broadcast(bench), Seq("gram"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
-      docs.filter(col("doc_id") % 50 =!= 0).select(col("doc_id"))
-        .join(hits, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-          (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
-        .orderBy(col("doc_id"))
-    },
+        |ORDER BY d.doc_id""".stripMargin),
 
     // T6: fixed-size chunking with overlap — the standard
     // pre-tokenization step of a training-data pipeline (500-char
@@ -761,40 +704,25 @@ object Pipeline {
     // downstream tokenize/dedup. Chunk grid is integer arithmetic on
     // exact small ints (the float ceil is exact), so both engines
     // produce the identical chunk set.
-    QDef.sql("t06_chunk_text",
+    QDef.text("t06_chunk_text",
       """SELECT doc_id, i AS chunk_idx,
         |  substr(text, i*400 + 1, 500) AS chunk
         |FROM (SELECT doc_id, text,
         |        greatest(1, CAST(ceil(CAST(length(text) - 100 AS DOUBLE) / 400) AS INT)) AS nchunks
         |      FROM documents),
         |  LATERAL unnest(generate_series(0, nchunks - 1)) AS gs(i)
-        |ORDER BY doc_id, chunk_idx""".stripMargin) { (s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), col("text"),
-          greatest(lit(1),
-            ceil((length(col("text")) - 100).cast("double") / 400).cast("int"))
-            .as("nchunks"))
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), col("nchunks") - 1)).as("chunk_idx"))
-        .select(col("doc_id"), col("chunk_idx"),
-          expr("substring(text, chunk_idx*400 + 1, 500)").as("chunk"))
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    },
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
 
-    QDef.sql("t05_pii_redact",
+    // L15: PII redaction — email/phone/IP patterns replaced with typed
+    // placeholders, a standard pre-training scrub pass. Pure
+    // projection (no shuffle); identical regex dialect in both engines
+    // makes it exactly oracle-checkable.
+    QDef.text("t05_pii_redact",
       """SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(text,
         |  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |  '\+?\d[\d\-\s]{7,}\d', '<PHONE>', 'g'),
         |  '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS clean_text
-        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        regexp_replace(regexp_replace(regexp_replace(col("text"),
-          lit("[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"), lit("<EMAIL>")),
-          lit("\\+?\\d[\\d\\-\\s]{7,}\\d"), lit("<PHONE>")),
-          lit("\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"), lit("<IP>")).as("clean_text"))
-        .orderBy(col("doc_id"))
-    },
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // L11: winnowing fingerprint (rolling-hash document id). Map-only
     // projection — a trailing total order would add a full corpus

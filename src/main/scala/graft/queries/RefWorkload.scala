@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** The reference fork's OWN documented workloads
   * (/root/reference/sql_files/sml.sql and big.sql) run verbatim-shape
   * on this engine — the queries its AM_US_JOIN and GROUPJOIN operators
@@ -30,42 +28,36 @@ object RefWorkload {
       |  (903,3,30,300),(904,2,30,300))
       |""".stripMargin
 
-  private def sql(name: String, q: String): QDef =
-    QDef.sql(name, q) { (s: SparkSession, dir: String) =>
-      graft.sources.Catalog.registerAll(s, dir)
-      s.sql(q): DataFrame
-    }
-
   val defs: Seq[QDef] = Seq(
 
     // sml.sql Query 01: plain equi join.
-    sql("ref_sml_q1", studEnrol +
+    QDef.text("ref_sml_q1", studEnrol +
       """SELECT stud.sid, enrol.cid
         |FROM stud JOIN enrol ON stud.sid = enrol.sid
         |ORDER BY stud.sid, enrol.cid""".stripMargin),
 
     // sml.sql Query 02: join + filter.
-    sql("ref_sml_q2", studEnrol +
+    QDef.text("ref_sml_q2", studEnrol +
       """SELECT stud.sid, enrol.cid
         |FROM stud JOIN enrol ON stud.sid = enrol.sid
         |WHERE stud.sage > 25
         |ORDER BY stud.sid, enrol.cid""".stripMargin),
 
     // sml.sql Query 03: the GROUPJOIN shape (join feeding GROUP BY).
-    sql("ref_sml_q3", studEnrol +
+    QDef.text("ref_sml_q3", studEnrol +
       """SELECT enrol.cid, COUNT(stud.sid) AS student_count
         |FROM stud JOIN enrol ON stud.sid = enrol.sid
         |GROUP BY enrol.cid
         |ORDER BY cid""".stripMargin),
 
     // big.sql Query A: the AM_US_JOIN non-equi (!=) join.
-    sql("ref_big_qa", userOrders +
+    QDef.text("ref_big_qa", userOrders +
       """SELECT users.user_id, orders2.order_id
         |FROM users JOIN orders2 ON users.user_id <> orders2.user_id
         |ORDER BY users.user_id, orders2.order_id""".stripMargin),
 
     // big.sql Query B: chained non-equi joins.
-    sql("ref_big_qb", userOrders +
+    QDef.text("ref_big_qb", userOrders +
       """SELECT u.first_name, u.last_name, p.product_name, o.total_paid
         |FROM orders2 o
         |JOIN users u ON o.user_id <> u.user_id
@@ -73,7 +65,7 @@ object RefWorkload {
         |ORDER BY first_name, product_name, total_paid""".stripMargin),
 
     // big.sql Query C: plain grouped aggregation.
-    sql("ref_big_qc", userOrders +
+    QDef.text("ref_big_qc", userOrders +
       """SELECT o.user_id, o.product_ordered,
         | CAST(SUM(o.total_paid) AS BIGINT) AS total_spent
         |FROM orders2 o
@@ -81,7 +73,7 @@ object RefWorkload {
         |ORDER BY user_id, product_ordered""".stripMargin),
 
     // big.sql Query D: non-equi joins + GROUP BY (GROUPJOIN target).
-    sql("ref_big_qd", userOrders +
+    QDef.text("ref_big_qd", userOrders +
       """SELECT u.first_name, u.last_name, p.product_name,
         | CAST(SUM(o.total_paid) AS BIGINT) AS total_spent
         |FROM orders2 o

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Joins
 import graft.sources.Catalog
@@ -16,159 +15,92 @@ object RelationalB {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  /** spark.sql against registered temp views — the SQL front door of
-    * the engine (same Catalyst plans as the DataFrame API).
-    */
-  private def viaSql(s: SparkSession, dir: String, q: String): DataFrame = {
-    Catalog.registerAll(s, dir)
-    s.sql(q)
-  }
-
   val defs: Seq[QDef] = Seq(
 
     // R21: correlated scalar subquery (TPC-H Q17 shape).
-    {
-      val q =
-        """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
-          |FROM lineitem JOIN part ON p_partkey = l_partkey
-          |WHERE p_brand = 'Brand#12'
-          | AND l_quantity < (
-          |   SELECT 0.5 * (CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*))
-          |   FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin
-      QDef.sql("q21_subquery_scalar", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q21_subquery_scalar",
+      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_brand = 'Brand#12'
+        | AND l_quantity < (
+        |   SELECT 0.5 * (CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*))
+        |   FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin),
 
     // R22: correlated EXISTS subquery + agg (TPC-H Q4 shape).
-    {
-      val q =
-        """SELECT o_orderpriority, COUNT(*) AS order_count
-          |FROM orders
-          |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          | AND EXISTS (SELECT 1 FROM lineitem
-          |             WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-          |GROUP BY o_orderpriority
-          |ORDER BY o_orderpriority""".stripMargin
-      QDef.sql("q22_subquery_exists", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q22_subquery_exists",
+      """SELECT o_orderpriority, COUNT(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+        | AND EXISTS (SELECT 1 FROM lineitem
+        |             WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // R23: CTE / WITH.
-    {
-      val q =
-        """WITH big_cust AS (
-          |  SELECT o_custkey, COUNT(*) AS n
-          |  FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 10
-          |)
-          |SELECT c_custkey, c_name, n
-          |FROM customer JOIN big_cust ON c_custkey = o_custkey
-          |ORDER BY n DESC, c_custkey""".stripMargin
-      QDef.sql("q23_cte", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q23_cte",
+      """WITH big_cust AS (
+        |  SELECT o_custkey, COUNT(*) AS n
+        |  FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 10
+        |)
+        |SELECT c_custkey, c_name, n
+        |FROM customer JOIN big_cust ON c_custkey = o_custkey
+        |ORDER BY n DESC, c_custkey""".stripMargin),
 
     // R24: ROLLUP with subtotal rows made explicit via COALESCE.
-    QDef.sql("q24_rollup",
+    QDef.text("q24_rollup",
       """SELECT COALESCE(l_returnflag, 'ALL') AS rf, COALESCE(l_linestatus, 'ALL') AS ls,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         | COUNT(*) AS n
         |FROM lineitem
         |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(graft.functions.Exact.dsum(col("l_quantity")).as("sum_qty"),
-          count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("ls"),
-          col("sum_qty"), col("n"))
-        .orderBy(col("rf"), col("ls"))
-    },
+        |ORDER BY rf, ls""".stripMargin),
 
     // R25: CUBE.
-    QDef.sql("q25_cube",
+    QDef.text("q25_cube",
       """SELECT COALESCE(o_orderstatus, 'ALL') AS st, COALESCE(o_orderpriority, 'ALL') AS pri,
         | COUNT(*) AS n,
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders
         |GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY st, pri""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          graft.functions.Exact.dsum(col("o_totalprice")).as("total"))
-        .select(coalesce(col("o_orderstatus"), lit("ALL")).as("st"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("pri"),
-          col("n"), col("total"))
-        .orderBy(col("st"), col("pri"))
-    },
+        |ORDER BY st, pri""".stripMargin),
 
     // R26: PIVOT (wide conditional aggregation).
-    QDef.sql("q26_pivot",
+    QDef.text("q26_pivot",
       """SELECT l_linestatus,
         | CAST(SUM(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_A,
         | CAST(SUM(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_N,
         | CAST(SUM(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_R
         |FROM lineitem
         |GROUP BY l_linestatus
-        |ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_linestatus"))
-        .pivot("l_returnflag", Seq("A", "N", "R"))
-        .agg(sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double"))
-        .select(col("l_linestatus"), col("A").as("qty_A"), col("N").as("qty_N"),
-          col("R").as("qty_R"))
-        .orderBy(col("l_linestatus"))
-    },
+        |ORDER BY l_linestatus""".stripMargin),
 
     // R27: UNPIVOT / melt.
-    QDef.sql("q27_unpivot",
+    QDef.text("q27_unpivot",
       """SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS value FROM part
         |UNION ALL
         |SELECT p_partkey, 'p_size' AS metric, CAST(p_size AS DOUBLE) AS value FROM part
-        |ORDER BY p_partkey, metric""".stripMargin) { (s, dir) =>
-      t(s, dir, "part")
-        .select(col("p_partkey"), col("p_retailprice").cast("double").as("p_retailprice"),
-          col("p_size").cast("double").as("p_size"))
-        .unpivot(Array(col("p_partkey")),
-          Array(col("p_retailprice"), col("p_size")), "metric", "value")
-        .orderBy(col("p_partkey"), col("metric"))
-    },
+        |ORDER BY p_partkey, metric""".stripMargin),
 
     // R28: HAVING (post-aggregation filter).
-    QDef.sql("q28_having",
+    QDef.text("q28_having",
       """SELECT o_custkey, COUNT(*) AS n_orders
         |FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 12
-        |ORDER BY o_custkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 12)
-        .orderBy(col("o_custkey"))
-    },
+        |ORDER BY o_custkey""".stripMargin),
 
-    // R29: QUALIFY — DuckDB's window-filter clause; in Spark a window
-    // column + filter (Catalyst prunes the helper column).
-    QDef.sql("q29_qualify",
+    // R29: QUALIFY — DuckDB's window-filter clause.
+    QDef.text("q29_qualify",
       """SELECT s_suppkey, s_nationkey, s_acctbal FROM supplier
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey) <= 2
-        |ORDER BY s_nationkey, s_acctbal DESC, s_suppkey""".stripMargin) { (s, dir) =>
-      val w = Window.partitionBy(col("s_nationkey"))
-        .orderBy(col("s_acctbal").desc, col("s_suppkey"))
-      t(s, dir, "supplier")
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= 2)
-        .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
-        .orderBy(col("s_nationkey"), col("s_acctbal").desc, col("s_suppkey"))
-    },
+        |ORDER BY s_nationkey, s_acctbal DESC, s_suppkey""".stripMargin),
 
     // R30: mark join — NOT IN with NULL-aware semantics; the fork's
     // AM_US mark join (am_us_join_mark.cpp) computes the same
     // three-valued membership mark.
-    {
-      val q =
-        """SELECT c_custkey, c_name FROM customer
-          |WHERE c_custkey NOT IN (
-          |  SELECT o_custkey FROM orders WHERE o_totalprice > 400000.0)
-          |ORDER BY c_custkey""".stripMargin
-      QDef.sql("q30_mark_join", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q30_mark_join",
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE c_custkey NOT IN (
+        |  SELECT o_custkey FROM orders WHERE o_totalprice > 400000.0)
+        |ORDER BY c_custkey""".stripMargin),
 
     // R31: ASOF join — latest order at-or-before each event timestamp,
     // WITH the matched order's payload columns (true ASOF semantics,
@@ -253,26 +185,18 @@ object RelationalB {
     },
 
     // R33: cross join (bounded dims only — a guarded operator at scale).
-    QDef.sql("q33_cross_join",
+    QDef.text("q33_cross_join",
       """SELECT r_name, st FROM region
         |CROSS JOIN (SELECT DISTINCT o_orderstatus AS st FROM orders)
-        |ORDER BY r_name, st""".stripMargin) { (s, dir) =>
-      t(s, dir, "region").select(col("r_name"))
-        .crossJoin(t(s, dir, "orders").select(col("o_orderstatus").as("st")).distinct())
-        .orderBy(col("r_name"), col("st"))
-    },
+        |ORDER BY r_name, st""".stripMargin),
 
     // R34: deterministic hash sampling — engine-portable (md5-based)
     // unlike TABLESAMPLE, and stable under repartitioning.
-    QDef.sql("q34_sample",
+    QDef.text("q34_sample",
       """SELECT COUNT(*) AS n,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem
-        |WHERE substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 1) = '0'""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(substring(md5(col("l_orderkey").cast("string").cast("binary")), 1, 1) === "0")
-        .agg(count(lit(1)).as("n"), graft.functions.Exact.dsum(col("l_quantity")).as("sum_qty"))
-    },
+        |WHERE substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 1) = '0'""".stripMargin),
 
     // R35: POSITIONAL join (zip by row position under a total order).
     QDef.sql("q35_positional_join",
@@ -288,75 +212,44 @@ object RelationalB {
     },
 
     // R36: LIMIT + OFFSET under total order.
-    QDef.sql("q36_limit_offset",
+    QDef.text("q36_limit_offset",
       """SELECT o_orderkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 10 OFFSET 5""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .offset(5).limit(10)
-    },
+        |LIMIT 10 OFFSET 5""".stripMargin),
 
     // R37: top-N per group (window + filter; single shuffle on the key).
-    QDef.sql("q37_topn_per_group",
+    QDef.text("q37_topn_per_group",
       """SELECT c_mktsegment, c_custkey, c_acctbal FROM (
         |  SELECT c_mktsegment, c_custkey, c_acctbal,
         |   ROW_NUMBER() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey) AS rn
         |  FROM customer)
         |WHERE rn <= 3
-        |ORDER BY c_mktsegment, c_acctbal DESC, c_custkey""".stripMargin) { (s, dir) =>
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      t(s, dir, "customer")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"))
-        .orderBy(col("c_mktsegment"), col("c_acctbal").desc, col("c_custkey"))
-    },
+        |ORDER BY c_mktsegment, c_acctbal DESC, c_custkey""".stripMargin),
 
     // R38: exact median / interpolated percentile.
-    QDef.sql("q38_median",
+    QDef.text("q38_median",
       """SELECT c_mktsegment,
         | MEDIAN(c_acctbal) AS med_bal,
         | QUANTILE_CONT(c_acctbal, 0.25) AS p25_bal
         |FROM customer
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer")
-        .groupBy(col("c_mktsegment"))
-        .agg(expr("median(c_acctbal)").as("med_bal"),
-          expr("percentile(c_acctbal, 0.25D)").as("p25_bal"))
-        .orderBy(col("c_mktsegment"))
-    },
+        |ORDER BY c_mktsegment""".stripMargin),
 
     // R39: arg_min / arg_max (min_by / max_by).
-    QDef.sql("q39_arg_minmax",
+    QDef.text("q39_arg_minmax",
       """SELECT o_orderpriority,
         | ARG_MAX(o_orderkey, o_totalprice) AS max_order,
         | ARG_MIN(o_orderkey, o_totalprice) AS min_order
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(max_by(col("o_orderkey"), col("o_totalprice")).as("max_order"),
-          min_by(col("o_orderkey"), col("o_totalprice")).as("min_order"))
-        .orderBy(col("o_orderpriority"))
-    },
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // R40: list / string aggregation with deterministic element order.
-    QDef.sql("q40_list_agg",
+    QDef.text("q40_list_agg",
       """SELECT n_regionkey, STRING_AGG(n_name, ',' ORDER BY n_name) AS names_csv,
         | COUNT(*) AS n
         |FROM nation
         |GROUP BY n_regionkey
-        |ORDER BY n_regionkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "nation")
-        .groupBy(col("n_regionkey"))
-        .agg(array_join(array_sort(collect_list(col("n_name"))), ",").as("names_csv"),
-          count(lit(1)).as("n"))
-        .orderBy(col("n_regionkey"))
-    }
+        |ORDER BY n_regionkey""".stripMargin)
   )
 }

@@ -15,11 +15,6 @@ object RelationalD {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def viaSql(s: SparkSession, dir: String, q: String): DataFrame = {
-    Catalog.registerAll(s, dir)
-    s.sql(q)
-  }
-
   val defs: Seq[QDef] = Seq(
 
     // R48: RANGE frame over event time (rolling 30-day window).
@@ -44,51 +39,39 @@ object RelationalD {
     },
 
     // R49: recursive CTE (series + running product shape).
-    {
-      val q =
-        """WITH RECURSIVE t(n, fact) AS (
-          |  SELECT 1, CAST(1 AS BIGINT)
-          |  UNION ALL
-          |  SELECT n + 1, fact * (n + 1) FROM t WHERE n < 12)
-          |SELECT CAST(n AS INT) AS n, fact FROM t ORDER BY n""".stripMargin
-      QDef.sql("q49_recursive_cte", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q49_recursive_cte",
+      """WITH RECURSIVE t(n, fact) AS (
+        |  SELECT 1, CAST(1 AS BIGINT)
+        |  UNION ALL
+        |  SELECT n + 1, fact * (n + 1) FROM t WHERE n < 12)
+        |SELECT CAST(n AS INT) AS n, fact FROM t ORDER BY n""".stripMargin),
 
     // R50: FILTER clause on aggregates.
-    {
-      val q =
-        """SELECT o_orderpriority,
-          | COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
-          | COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
-          | COUNT(*) AS n
-          |FROM orders
-          |GROUP BY o_orderpriority
-          |ORDER BY o_orderpriority""".stripMargin
-      QDef.sql("q50_filter_clause", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q50_filter_clause",
+      """SELECT o_orderpriority,
+        | COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
+        | COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
+        | COUNT(*) AS n
+        |FROM orders
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // R51: explicit GROUPING SETS.
-    {
-      val q =
-        """SELECT COALESCE(l_returnflag, 'ALL') AS rf, COALESCE(l_linestatus, 'ALL') AS ls,
-          | COUNT(*) AS n
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-          |ORDER BY rf, ls""".stripMargin
-      QDef.sql("q51_grouping_sets", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q51_grouping_sets",
+      """SELECT COALESCE(l_returnflag, 'ALL') AS rf, COALESCE(l_linestatus, 'ALL') AS ls,
+        | COUNT(*) AS n
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+        |ORDER BY rf, ls""".stripMargin),
 
     // R52: explicit NULLS FIRST/LAST ordering (engine defaults differ:
     // Spark sorts nulls first ASC, DuckDB last — always be explicit).
-    {
-      val q =
-        """SELECT o_orderkey, prev FROM (
-          |  SELECT o_orderkey, LAG(o_orderkey) OVER (ORDER BY o_orderkey) AS prev
-          |  FROM orders)
-          |ORDER BY prev NULLS FIRST, o_orderkey
-          |LIMIT 20""".stripMargin
-      QDef.sql("q52_null_ordering", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("q52_null_ordering",
+      """SELECT o_orderkey, prev FROM (
+        |  SELECT o_orderkey, LAG(o_orderkey) OVER (ORDER BY o_orderkey) AS prev
+        |  FROM orders)
+        |ORDER BY prev NULLS FIRST, o_orderkey
+        |LIMIT 20""".stripMargin),
 
     // R53: top-K per group on the CUSTOM bounded-heap operator
     // (graft.plans.TopKPerGroupExec) — same oracle as a window+filter,
@@ -110,50 +93,28 @@ object RelationalD {
     },
 
     // F12: epoch/format/round-trip time functions.
-    QDef.sql("f12_time_funcs",
+    QDef.text("f12_time_funcs",
       """SELECT o_orderkey,
         | CAST(epoch(o_orderdate) AS BIGINT) AS ep,
         | strftime(o_orderdate, '%Y-%m') AS ym,
         | CAST(to_timestamp(epoch(o_orderdate)) AS DATE) AS round_trip
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        unix_timestamp(col("o_orderdate")).as("ep"),
-        date_format(col("o_orderdate"), "yyyy-MM").as("ym"),
-        timestamp_seconds(unix_timestamp(col("o_orderdate"))).cast("date").as("round_trip"))
-        .orderBy(col("o_orderkey"))
-    },
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // F13: MAP construction + access (DuckDB map access yields a list,
     // hence the [1]; Spark element_at is scalar).
-    QDef.sql("f13_map_funcs",
+    QDef.text("f13_map_funcs",
       """SELECT p_partkey,
         | CAST(MAP {'size': p_size, 'dbl': p_size * 2}['dbl'][1] AS INT) AS dbl_via_map,
         | array_to_string(map_keys(MAP {'size': p_size, 'dbl': p_size * 2}), ',') AS keys_csv,
         | CAST(cardinality(MAP {'size': p_size, 'dbl': p_size * 2}) AS INT) AS n_keys
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      val m = map(lit("size"), col("p_size"), lit("dbl"), col("p_size") * 2)
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        element_at(m, "dbl").cast("int").as("dbl_via_map"),
-        array_join(map_keys(m), ",").as("keys_csv"),
-        size(map_keys(m)).cast("int").as("n_keys"))
-        .orderBy(col("p_partkey"))
-    },
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // F14: case-insensitive pattern matching.
-    QDef.sql("f14_ilike",
+    QDef.text("f14_ilike",
       """SELECT p_partkey,
         | CAST(p_type ILIKE '%PrOmO%' AS BOOLEAN) AS is_promo,
         | CAST(p_name LIKE '%widget%' AS BOOLEAN) AS is_widget,
         | CAST(p_name NOT LIKE 'cold%' AS BOOLEAN) AS not_cold
-        |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        col("p_type").ilike("%PrOmO%").as("is_promo"),
-        col("p_name").like("%widget%").as("is_widget"),
-        (!col("p_name").like("cold%")).as("not_cold"))
-        .orderBy(col("p_partkey"))
-    }
+        |FROM part ORDER BY p_partkey""".stripMargin)
   )
 }

@@ -88,17 +88,11 @@ object RelationalE {
     // differently per engine (Spark → DECIMAL(28,2), DuckDB →
     // DECIMAL(38,2)) and the widened cells hash-differ; l_quantity is
     // integral so the double sum is exact regardless of add order.
-    QDef.sql("q26b_dynamic_pivot",
+    QDef.text("q26b_dynamic_pivot",
       """SELECT * FROM (
         |  PIVOT (SELECT l_linestatus, l_returnflag, CAST(l_quantity AS DOUBLE) AS q FROM lineitem)
         |  ON l_returnflag USING SUM(q) GROUP BY l_linestatus)
-        |ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_linestatus"))
-        .pivot("l_returnflag") // no value list: discovery pass, like DuckDB
-        .agg(sum(col("l_quantity").cast("double")))
-        .orderBy(col("l_linestatus"))
-    },
+        |ORDER BY l_linestatus""".stripMargin),
 
     // R54: case-insensitive COLLATE in a filter (the reference's
     // collation_binding surface — /root/reference/src/planner/
@@ -106,37 +100,23 @@ object RelationalE {
     // UTF8_LCASE compares case-insensitively inside codegen, no
     // lower() rewrite. A mixed-case segment column is derived so the
     // comparison is actually exercised; DuckDB's NOCASE is the oracle.
-    QDef.sql("q54_collation_filter",
+    QDef.text("q54_collation_filter",
       """SELECT c_custkey, seg FROM (
         |  SELECT c_custkey,
         |    CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment) ELSE c_mktsegment END AS seg
         |  FROM customer)
         |WHERE seg COLLATE NOCASE = 'bUiLdInG'
-        |ORDER BY c_custkey LIMIT 50""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer")
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 2 === 0, lower(col("c_mktsegment")))
-            .otherwise(col("c_mktsegment")).as("seg"))
-        .filter(collate(col("seg"), "UTF8_LCASE") === "bUiLdInG")
-        .orderBy(col("c_custkey")).limit(50)
-    },
+        |ORDER BY c_custkey LIMIT 50""".stripMargin),
 
     // R54b: case-insensitive COLLATE in ORDER BY — equal-under-collation
     // strings ('Automobile' vs 'AUTOMOBILE') are real ties, broken by a
     // deterministic secondary key so both engines emit identical order.
-    QDef.sql("q54b_collation_order",
+    QDef.text("q54b_collation_order",
       """SELECT c_custkey, seg FROM (
         |  SELECT c_custkey,
         |    CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment) ELSE c_mktsegment END AS seg
         |  FROM customer)
-        |ORDER BY seg COLLATE NOCASE, c_custkey LIMIT 50""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer")
-        .select(col("c_custkey"),
-          when(col("c_custkey") % 2 === 0, lower(col("c_mktsegment")))
-            .otherwise(col("c_mktsegment")).as("seg"))
-        .orderBy(collate(col("seg"), "UTF8_LCASE"), col("c_custkey"))
-        .limit(50)
-    },
+        |ORDER BY seg COLLATE NOCASE, c_custkey LIMIT 50""".stripMargin),
 
     // R55: approximate quantiles (the reference's approx_quantile
     // t-digest — /root/reference/src/core_functions/aggregate/holistic/

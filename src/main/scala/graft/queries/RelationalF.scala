@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{GroupsFrame, WindowExclude}
@@ -68,12 +67,9 @@ object RelationalF {
         .orderBy(col("user_id"), col("event_id"))
     },
 
-    // R56: named WINDOW clause — one definition, many consumers, in
-    // pure SQL via the engine's SQL front door (Spark's parser binds
-    // OVER w references; same Catalyst plan as the DataFrame API, so
-    // both named windows still collapse into at most two sorted
-    // passes). Oracle is the IDENTICAL SQL text in DuckDB.
-    QDef.sql("q56_named_window",
+    // R56: named WINDOW clause — one definition, many consumers (both
+    // named windows collapse into at most two sorted passes).
+    QDef.text("q56_named_window",
       """SELECT user_id, event_id,
         | RANK() OVER w AS rnk,
         | CAST(SUM(v) OVER w AS BIGINT) AS run_sum,
@@ -84,46 +80,21 @@ object RelationalF {
         |      FROM events)
         |WINDOW w AS (PARTITION BY user_id ORDER BY event_id),
         |       w_all AS (PARTITION BY user_id)
-        |ORDER BY user_id, event_id""".stripMargin) { (s, dir) =>
-      Catalog.registerAll(s, dir)
-      s.sql(
-        """SELECT user_id, event_id,
-          | RANK() OVER w AS rnk,
-          | CAST(SUM(v) OVER w AS BIGINT) AS run_sum,
-          | CAST(COUNT(*) OVER w_all AS BIGINT) AS n_part,
-          | CAST(MAX(v) OVER w_all AS BIGINT) AS max_part
-          |FROM (SELECT user_id, event_id,
-          |        CAST(FLOOR(value*100 + 0.5) AS BIGINT) AS v
-          |      FROM events)
-          |WINDOW w AS (PARTITION BY user_id ORDER BY event_id),
-          |       w_all AS (PARTITION BY user_id)
-          |ORDER BY user_id, event_id""".stripMargin)
-    },
+        |ORDER BY user_id, event_id""".stripMargin),
 
     // R58: UNION BY NAME — schema-aligned union with column
     // reordering and missing-column NULL fill (the reference's
-    // UNION ALL BY NAME, set_operation_node.cpp). Spark side is
-    // unionByName(allowMissingColumns = true); the aggregate on top
+    // UNION ALL BY NAME, set_operation_node.cpp); the aggregate on top
     // proves both the alignment (amt sums across both branches) and
     // the NULL fill (seg exists only in the customer branch).
-    QDef.sql("q57_union_by_name",
+    QDef.text("q57_union_by_name",
       """SELECT CAST(COUNT(*) AS BIGINT) AS n,
         | CAST(SUM(CAST(amt AS DECIMAL(18,2))) AS DOUBLE) AS total,
         | CAST(SUM(CASE WHEN seg IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_seg
         |FROM (SELECT o_orderkey AS id, o_totalprice AS amt FROM orders
         |      UNION ALL BY NAME
         |      SELECT c_acctbal AS amt, c_custkey AS id, c_mktsegment AS seg
-        |      FROM customer)""".stripMargin) { (s, dir) =>
-      val a = t(s, dir, "orders")
-        .select(col("o_orderkey").as("id"), col("o_totalprice").as("amt"))
-      val b = t(s, dir, "customer")
-        .select(col("c_acctbal").as("amt"), col("c_custkey").as("id"),
-          col("c_mktsegment").as("seg"))
-      a.unionByName(b, allowMissingColumns = true)
-        .agg(count(lit(1)).as("n"),
-          graft.functions.Exact.dsum(col("amt")).as("total"),
-          sum(when(col("seg").isNull, 0).otherwise(1)).cast("bigint").as("n_seg"))
-    },
+        |      FROM customer)""".stripMargin),
 
     // R61: GROUPS window frame — SQL:2011 frame bounds counted in
     // peer groups (operators/GroupsFrame.scala: RANGE-over-dense_rank
@@ -160,27 +131,15 @@ object RelationalF {
     // R59: INTERSECT ALL — bag-semantics intersection (multiplicity =
     // min of the two sides), the ALL flag the reference's parser
     // carries (transform_select_node.cpp:131) and q18 deliberately
-    // didn't cover. Spark's intersectAll plans it as a counted
-    // aggregate + generate — no quadratic anything; identical SQL
-    // text runs on both engines.
-    {
-      val q =
-        """SELECT o_orderpriority, o_orderstatus
-          |FROM orders WHERE o_totalprice < 150000
-          |INTERSECT ALL
-          |SELECT o_orderpriority, o_orderstatus
-          |FROM orders WHERE o_totalprice > 50000
-          |ORDER BY o_orderpriority, o_orderstatus""".stripMargin
-      QDef.sql("q58_intersect_all", q) { (s, dir) =>
-        val o = t(s, dir, "orders")
-        o.filter(col("o_totalprice") < 150000)
-          .select(col("o_orderpriority"), col("o_orderstatus"))
-          .intersectAll(
-            o.filter(col("o_totalprice") > 50000)
-              .select(col("o_orderpriority"), col("o_orderstatus")))
-          .orderBy(col("o_orderpriority"), col("o_orderstatus"))
-      }
-    },
+    // didn't cover. Spark plans it as a counted aggregate + generate
+    // — no quadratic anything.
+    QDef.text("q58_intersect_all",
+      """SELECT o_orderpriority, o_orderstatus
+        |FROM orders WHERE o_totalprice < 150000
+        |INTERSECT ALL
+        |SELECT o_orderpriority, o_orderstatus
+        |FROM orders WHERE o_totalprice > 50000
+        |ORDER BY o_orderpriority, o_orderstatus""".stripMargin),
 
     // R60: EXCEPT ALL — bag-semantics difference (multiplicity =
     // max(0, left − right)); same rationale as R59. The right side's
@@ -188,23 +147,12 @@ object RelationalF {
     // multiplicities dominate right ones at every scale factor (an
     // overlapping split left the bag empty at sf0.001 and tripped
     // the rows>0 smoke).
-    {
-      val q =
-        """SELECT o_orderpriority, o_orderstatus
-          |FROM orders WHERE o_totalprice < 150000
-          |EXCEPT ALL
-          |SELECT o_orderpriority, o_orderstatus
-          |FROM orders WHERE o_totalprice > 120000 AND o_totalprice < 150000
-          |ORDER BY o_orderpriority, o_orderstatus""".stripMargin
-      QDef.sql("q59_except_all", q) { (s, dir) =>
-        val o = t(s, dir, "orders")
-        o.filter(col("o_totalprice") < 150000)
-          .select(col("o_orderpriority"), col("o_orderstatus"))
-          .exceptAll(
-            o.filter(col("o_totalprice") > 120000 && col("o_totalprice") < 150000)
-              .select(col("o_orderpriority"), col("o_orderstatus")))
-          .orderBy(col("o_orderpriority"), col("o_orderstatus"))
-      }
-    }
+    QDef.text("q59_except_all",
+      """SELECT o_orderpriority, o_orderstatus
+        |FROM orders WHERE o_totalprice < 150000
+        |EXCEPT ALL
+        |SELECT o_orderpriority, o_orderstatus
+        |FROM orders WHERE o_totalprice > 120000 AND o_totalprice < 150000
+        |ORDER BY o_orderpriority, o_orderstatus""".stripMargin)
   )
 }

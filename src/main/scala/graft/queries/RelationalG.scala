@@ -1,11 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.sources.Catalog
-
 /** Relational long tail G: DISTINCT aggregates over window
   * partitions (reference window segment tree handles DISTINCT
   * natively — src/execution/window_segment_tree.cpp) and time-series
@@ -13,33 +7,19 @@ import graft.sources.Catalog
   * the canonical DuckDB time-series recipe.
   */
 object RelationalG {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Catalog.table(s, dir, name)
-
   val defs: Seq[QDef] = Seq(
 
     // R62: COUNT(DISTINCT) / SUM(DISTINCT) over a window partition.
-    // Spark's window engine rejects DISTINCT aggregates, so the
-    // rewrite is collect_set over the partition — size() for the
-    // count, an integer fold for the sum (exact, order-free). The
-    // oracle runs the genuine DISTINCT window aggregate. Scale note:
+    // Spark's window engine rejects DISTINCT aggregates, so the front
+    // door rewrites them to collect_set over the partition. Scale note:
     // the partition is one customer's orders (bounded); the state is
     // a per-partition set, same asymptotics as DuckDB's segment tree.
-    QDef.sql("q61_window_distinct",
+    QDef.text("q61_window_distinct",
       """SELECT o_orderkey,
         |  count(DISTINCT o_orderpriority) OVER (PARTITION BY o_custkey) AS n_prio,
         |  count(DISTINCT o_orderstatus)   OVER (PARTITION BY o_custkey) AS n_stat,
         |  CAST(sum(DISTINCT CAST(FLOOR(o_totalprice) AS BIGINT)) OVER (PARTITION BY o_custkey) AS BIGINT) AS sd_price
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      val w = Window.partitionBy("o_custkey")
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        size(collect_set(col("o_orderpriority")).over(w)).cast("long").as("n_prio"),
-        size(collect_set(col("o_orderstatus")).over(w)).cast("long").as("n_stat"),
-        aggregate(collect_set(floor(col("o_totalprice")).cast("long")).over(w),
-          lit(0L), (acc, x) => acc + x).as("sd_price"))
-        .orderBy("o_orderkey")
-    },
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // R63: time-series gap fill — per-user daily activity grid from
     // min to max day (generate_series ≡ Spark sequence), missing days
@@ -48,7 +28,7 @@ object RelationalG {
     // no float summation order can drift. Scale note: the grid
     // explodes per key and joins co-partitioned on (user_id, d); the
     // fill is one window pass per key — no global sort.
-    QDef.sql("q62_gapfill",
+    QDef.text("q62_gapfill",
       """WITH daily AS (
         |  SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS d, count(*) AS c
         |  FROM events GROUP BY 1, 2),
@@ -62,22 +42,7 @@ object RelationalG {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled,
         |  daily.c IS NOT NULL AS observed
         |FROM grid g LEFT JOIN daily ON daily.user_id = g.user_id AND daily.d = g.d
-        |ORDER BY g.user_id, g.d""".stripMargin) { (s, dir) =>
-      val daily = t(s, dir, "events")
-        .groupBy(col("user_id"), to_date(date_trunc("DAY", col("ts"))).as("d"))
-        .agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("user_id")
-        .agg(min("d").as("lo"), max("d").as("hi"))
-        .select(col("user_id"), explode(sequence(col("lo"), col("hi"))).as("d"))
-      val w = Window.partitionBy("user_id").orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      grid.join(daily, Seq("user_id", "d"), "left")
-        .select(
-          col("user_id"), col("d"),
-          last(col("c"), ignoreNulls = true).over(w).as("filled"),
-          col("c").isNotNull.as("observed"))
-        .orderBy("user_id", "d")
-    },
+        |ORDER BY g.user_id, g.d""".stripMargin),
 
     // R64: locale-aware ICU collation beyond NOCASE (reference
     // bundles extension/icu/ — COLLATE "de"). Both engines delegate
@@ -88,64 +53,49 @@ object RelationalG {
     // semantics decide the result SET — the driver's sorted-hash
     // compare would not see order alone. Tiebreak on p_partkey keeps
     // the cut deterministic.
-    QDef.sql("q63_icu_collation",
+    QDef.text("q63_icu_collation",
       """SELECT p_partkey, translate(p_name, 'aeo', 'äéö') AS t
         |FROM part
         |ORDER BY translate(p_name, 'aeo', 'äéö') COLLATE "de", p_partkey
-        |LIMIT 120""".stripMargin) { (s, dir) =>
-      val tcol = translate(col("p_name"), "aeo", "äéö")
-      t(s, dir, "part")
-        .select(col("p_partkey"), tcol.as("t"))
-        .orderBy(collate(tcol, "de"), col("p_partkey"))
-        .limit(120)
-    },
+        |LIMIT 120""".stripMargin),
 
     // R64 locale matrix (both engines delegate to ICU, so each
     // locale's tailoring decides the LIMIT set; orderings were
     // cross-checked against the oracle's ICU build for all three):
     // Turkish — dotless ı collates BEFORE i (and far from its U+0131
     // code point, which binary order puts after all ASCII).
-    QDef.sql("q63b_icu_tr",
+    QDef.text("q63b_icu_tr",
       """SELECT p_partkey, translate(p_name, 'i', 'ı') AS t
         |FROM part
         |ORDER BY translate(p_name, 'i', 'ı') COLLATE "tr", p_partkey
-        |LIMIT 120""".stripMargin) { (s, dir) =>
-      val tcol = translate(col("p_name"), "i", "ı")
-      t(s, dir, "part")
-        .select(col("p_partkey"), tcol.as("t"))
-        .orderBy(collate(tcol, "tr"), col("p_partkey"))
-        .limit(120)
-    },
+        |LIMIT 120""".stripMargin),
 
     // Swedish — å/ö are distinct letters AFTER z (under "de" they
     // collate with a/o, so the locale itself changes the cut).
-    QDef.sql("q63c_icu_sv",
+    QDef.text("q63c_icu_sv",
       """SELECT p_partkey, translate(p_name, 'ao', 'åö') AS t
         |FROM part
         |ORDER BY translate(p_name, 'ao', 'åö') COLLATE "sv", p_partkey
-        |LIMIT 120""".stripMargin) { (s, dir) =>
-      val tcol = translate(col("p_name"), "ao", "åö")
-      t(s, dir, "part")
-        .select(col("p_partkey"), tcol.as("t"))
-        .orderBy(collate(tcol, "sv"), col("p_partkey"))
-        .limit(120)
-    },
+        |LIMIT 120""".stripMargin),
 
     // Chinese — pinyin ordering (大 dà < 国 guó < 人 rén < 文 wén <
     // 中 zhōng), which disagrees with code-point order (中 U+4E2D <
     // 人 < 大 < 国 < 文) on this very alphabet, so a binary-collating
     // engine would pick a different LIMIT set.
-    QDef.sql("q63d_icu_zh",
+    QDef.text("q63d_icu_zh",
       """SELECT p_partkey, translate(p_name, 'aeiou', '中文国人大') AS t
         |FROM part
         |ORDER BY translate(p_name, 'aeiou', '中文国人大') COLLATE "zh", p_partkey
-        |LIMIT 120""".stripMargin) { (s, dir) =>
-      val tcol = translate(col("p_name"), "aeiou", "中文国人大")
-      t(s, dir, "part")
-        .select(col("p_partkey"), tcol.as("t"))
-        .orderBy(collate(tcol, "zh"), col("p_partkey"))
-        .limit(120)
-    },
+        |LIMIT 120""".stripMargin),
+
+    // R66: LIMIT x PERCENT (the reference's percent-limit modifier,
+    // parser/transform/statement — floor(n·pct/100) rows, measured
+    // against the engine: 10 rows LIMIT 25% → 2, 15 rows LIMIT 33% →
+    // 4). The UNIQUE sort order makes the cut deterministic on both
+    // engines.
+    QDef.text("q65_limit_percent",
+      """SELECT o_orderkey, o_totalprice
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 1%""".stripMargin),
 
     // R65: EXACT quantile as a WINDOW function — the reference's
     // holistic aggregates run over window frames natively (quantile
@@ -156,86 +106,39 @@ object RelationalG {
     // keys would make frame membership engine-dependent. Rolling
     // median per frame is O(frame) — fine for bounded frames; the
     // unbounded-partition variant is the per-group q38 median.
-    // R66: LIMIT x PERCENT (the reference's percent-limit modifier,
-    // parser/transform/statement — floor(n·pct/100) rows, measured
-    // against the engine: 10 rows LIMIT 25% → 2, 15 rows LIMIT 33% →
-    // 4). Spark has no percent limit; the honest distributed spelling
-    // is one count (a cheap statistics pass) + limit(floor) — the
-    // UNIQUE sort order makes the cut deterministic on both engines.
-    QDef.sql("q65_limit_percent",
-      """SELECT o_orderkey, o_totalprice
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 1%""".stripMargin) { (s, dir) =>
-      val orders = t(s, dir, "orders")
-      val n = orders.count()
-      orders.select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit((n / 100L).toInt)
-    },
-
-    QDef.sql("q64_window_quantile",
+    QDef.text("q64_window_quantile",
       """SELECT o_orderkey, o_custkey, amt,
         |  quantile_cont(amt, 0.5) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS roll_med,
         |  quantile_cont(amt, 0.5) OVER (PARTITION BY o_custkey) AS part_med
         |FROM (SELECT o_orderkey, o_custkey, o_orderdate, CAST(o_totalprice AS DOUBLE) AS amt FROM orders)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val wRoll = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(-3, Window.currentRow)
-      val wPart = Window.partitionBy(col("o_custkey"))
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_totalprice").cast("double").as("amt"))
-        .select(col("o_orderkey"), col("o_custkey"), col("amt"),
-          expr("percentile(amt, 0.5D)").over(wRoll).as("roll_med"),
-          expr("percentile(amt, 0.5D)").over(wPart).as("part_med"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    },
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
 
     // R67: GROUPING() bitmask over CUBE — the standard way to tell a
     // subtotal row's NULL from a data NULL (reference:
-    // GROUPING/GROUPING_ID bound in the aggregate binder). Identical
-    // SQL text runs on both engines; the flags also pin the sort so
-    // subtotal rows land deterministically.
-    {
-      val q =
-        """SELECT l_returnflag, l_linestatus,
-          |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-          |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-          |  COUNT(*) AS n
-          |FROM lineitem
-          |GROUP BY CUBE (l_returnflag, l_linestatus)
-          |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
-      QDef.sql("q66_grouping_fn", q) { (s, dir) =>
-        t(s, dir, "lineitem")
-          .cube(col("l_returnflag"), col("l_linestatus"))
-          .agg(grouping(col("l_returnflag")).cast("int").as("g_rf"),
-            grouping(col("l_linestatus")).cast("int").as("g_ls"),
-            count(lit(1)).as("n"))
-          .orderBy(col("g_rf"), col("g_ls"),
-            col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-      }
-    },
+    // GROUPING/GROUPING_ID bound in the aggregate binder). The flags
+    // also pin the sort so subtotal rows land deterministically.
+    QDef.text("q66_grouping_fn",
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
+        |  CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
+        |  COUNT(*) AS n
+        |FROM lineitem
+        |GROUP BY CUBE (l_returnflag, l_linestatus)
+        |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
 
     // R68: recursive UNNEST of nested lists (reference
     // unnest(recursive := true)) ≡ Spark explode(flatten(...)) — one
     // level of structure collapses per flatten; the oracle spells the
     // reference's native recursive form over the same synthesized
     // nesting.
-    QDef.sql("q67_unnest_recursive",
+    QDef.text("q67_unnest_recursive",
       """SELECT p_partkey, u FROM (
         |  SELECT p_partkey,
         |    unnest([[p_partkey % 7, p_partkey % 5], [p_partkey % 3]],
         |           recursive := true) AS u
         |  FROM part)
-        |ORDER BY p_partkey, u""".stripMargin) { (s, dir) =>
-      val k = col("p_partkey")
-      t(s, dir, "part")
-        .select(k, explode(flatten(array(
-          array(k % 7, k % 5), array(k % 3)))).as("u"))
-        .orderBy(col("p_partkey"), col("u"))
-    },
+        |ORDER BY p_partkey, u""".stripMargin),
 
     // R69: the reference's ASOF JOIN *statement* syntax
     // (transform_join.cpp:54) runs VERBATIM on both engines — the
@@ -245,30 +148,18 @@ object RelationalG {
     // row's o_orderdate only — (o_custkey, o_orderdate) can tie, and
     // the DATE of the match is deterministic where the full row
     // isn't.
-    {
-      val text =
-        """SELECT event_id, user_id, CAST(o_orderdate AS DATE) AS last_od
-          |FROM events e ASOF JOIN orders ON e.user_id = o_custkey AND e.ts >= o_orderdate
-          |ORDER BY event_id""".stripMargin
-      QDef.sql("q68_asof_statement", text) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        graft.GraftSql.sql(s, text)
-      }
-    },
+    QDef.text("q68_asof_statement",
+      """SELECT event_id, user_id, CAST(o_orderdate AS DATE) AS last_od
+        |FROM events e ASOF JOIN orders ON e.user_id = o_custkey AND e.ts >= o_orderdate
+        |ORDER BY event_id""".stripMargin),
 
     // R70: ASOF LEFT JOIN, forward `<=` — earliest event at-or-after
     // each order date; orders whose customer has no events keep NULL
     // payloads (LEFT). (user_id, ts) is unique in the testdata, so
     // the matched event is deterministic.
-    {
-      val text =
-        """SELECT o_orderkey, event_id, ts
-          |FROM orders ASOF LEFT JOIN events e ON o_custkey = e.user_id AND o_orderdate <= e.ts
-          |ORDER BY o_orderkey""".stripMargin
-      QDef.sql("q69_asof_left_statement", text) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        graft.GraftSql.sql(s, text)
-      }
-    }
+    QDef.text("q69_asof_left_statement",
+      """SELECT o_orderkey, event_id, ts
+        |FROM orders ASOF LEFT JOIN events e ON o_custkey = e.user_id AND o_orderdate <= e.ts
+        |ORDER BY o_orderkey""".stripMargin)
   )
 }

@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.GraftSql
-import graft.sources.Catalog
 
 /** Round-10 window surface: the two frame classes the reference
   * evaluates natively and Spark's window exec cannot express —
@@ -33,12 +30,6 @@ import graft.sources.Catalog
   */
 object RelationalH {
 
-  private def verbatim(name: String, text: String): QDef =
-    QDef.sql(name, text) { (s, dir) =>
-      Catalog.registerAll(s, dir)
-      GraftSql.sql(s, text)
-    }
-
   val defs: Seq[QDef] = Seq(
 
     // R71: per-row frame bounds. The bound expressions vary row by
@@ -46,7 +37,7 @@ object RelationalH {
     // Spark through the collected-partition rewrite. SUM pins the
     // distributive path, MEDIAN the holistic one, COUNT(*) the
     // row-counting (frame-clamp) arithmetic at partition edges.
-    verbatim("q70_frame_expr_bounds",
+    QDef.text("q70_frame_expr_bounds",
       """SELECT o_orderkey, o_custkey,
         | CAST(SUM(v) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
         |   ROWS BETWEEN (o_orderkey % 3) PRECEDING AND (o_orderkey % 2) FOLLOWING) AS BIGINT) AS s_var,
@@ -66,7 +57,7 @@ object RelationalH {
     // always contain whole peer groups; the bounded ROWS frames use
     // a unique (hb, event_id) order, the only deterministic choice
     // either engine offers for bounded ROWS.
-    verbatim("q71_exclude_holistic",
+    QDef.text("q71_exclude_holistic",
       """SELECT user_id, event_id,
         | CAST(MEDIAN(v) OVER (wf RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE GROUP) AS DOUBLE) AS med_grp,
         | CAST(MAD(v) OVER (wf RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE TIES) AS DOUBLE) AS mad_ties,

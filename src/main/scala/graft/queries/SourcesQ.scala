@@ -118,16 +118,10 @@ object SourcesQ {
     },
 
     // S5: SQL front door over registered views.
-    {
-      val q =
-        """SELECT n_name, COUNT(*) AS n_cust
-          |FROM customer JOIN nation ON c_nationkey = n_nationkey
-          |GROUP BY n_name ORDER BY n_name""".stripMargin
-      QDef.sql("s05_sql_view", q) { (s, dir) =>
-        Catalog.registerAll(s, dir)
-        s.sql(q)
-      }
-    },
+    QDef.text("s05_sql_view",
+      """SELECT n_name, COUNT(*) AS n_cust
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
 
     // S6: CREATE TABLE AS SELECT — the reference's CTAS/persistence
     // surface (/root/reference/src/execution/operator/persistent/
@@ -356,22 +350,11 @@ object SourcesQ {
 
     // S17: DESCRIBE — table metadata AS a result set (reference
     // src/parser/statement/... DESCRIBE → pragma_table_info). The
-    // Spark analog reads the catalog schema, never the data: six
+    // front door reads the catalog schema, never the data: six
     // columns (column_name, column_type, null, key, default, extra)
     // with the reference's type names from DuckTypes. Metadata-only
     // on both engines — zero scan tasks.
-    QDef.sql("s16_describe", "DESCRIBE orders") { (s, dir) =>
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val schema = StructType(
-        Seq("column_name", "column_type", "null", "key", "default", "extra")
-          .map(StructField(_, StringType, nullable = true)))
-      val rows = t(s, dir, "orders").schema.fields.toSeq.map { f =>
-        Row(f.name, DuckTypes.name(f.dataType),
-          if (f.nullable) "YES" else "NO", null, null, null)
-      }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
-    },
+    QDef.text("s16_describe", "DESCRIBE orders"),
 
     // S18: EXPORT DATABASE / IMPORT DATABASE round-trip (reference
     // export_statement.cpp — dir of per-table parquet + schema.sql +

@@ -1,9 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.sources.Catalog
 import graft.streaming.StreamingOps
@@ -90,19 +88,12 @@ object StreamingQ {
     // ST3: stream-batch (fact-dim) join shape: events enriched with a
     // broadcast dim — in streaming mode the identical plan is a
     // stream-static join.
-    QDef.sql("st03_stream_join",
+    QDef.text("st03_stream_join",
       """SELECT c_mktsegment, event_type, COUNT(*) AS n,
         | CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events JOIN customer ON user_id = c_custkey
         |GROUP BY c_mktsegment, event_type
-        |ORDER BY c_mktsegment, event_type""".stripMargin) { (s, dir) =>
-      t(s, dir, "events")
-        .join(broadcast(t(s, dir, "customer")), col("user_id") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast("double").as("sum_value"))
-        .orderBy(col("c_mktsegment"), col("event_type"))
-    },
+        |ORDER BY c_mktsegment, event_type""".stripMargin),
 
     // ST5: streaming dedup — at-least-once input (events delivered
     // twice here) repaired to exactly-once by key. The batch plan is

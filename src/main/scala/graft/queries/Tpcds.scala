@@ -1,9 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.sources.Catalog
-
 /** TPC-DS-shape starter set (20 queries) adapted to the test star
   * schema — the query SHAPES of the reference's TPC-DS suite
   * (/root/reference/benchmark/tpcds/) re-targeted at the tables that
@@ -20,16 +16,10 @@ import graft.sources.Catalog
   */
 object Tpcds {
 
-  private def mk(name: String, q: String): QDef =
-    QDef.sql(name, q) { (s: SparkSession, dir: String) =>
-      Catalog.registerAll(s, dir)
-      s.sql(q)
-    }
-
   val defs: Seq[QDef] = Seq(
 
     // DS q1 shape: entities above 1.2× the average of a derived metric.
-    mk("tpcds_q01",
+    QDef.text("tpcds_q01",
       """WITH ret AS (
         |  SELECT o_custkey, COUNT(*) AS nret
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -39,7 +29,7 @@ object Tpcds {
         |ORDER BY nret DESC, c_custkey LIMIT 100""".stripMargin),
 
     // DS q3 shape: date-part grouped brand sales.
-    mk("tpcds_q03",
+    QDef.text("tpcds_q03",
       """SELECT CAST(year(l_shipdate) AS BIGINT) AS d_year, p_brand,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_agg
         |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -48,7 +38,7 @@ object Tpcds {
         |ORDER BY d_year, sum_agg DESC, p_brand""".stripMargin),
 
     // DS q5 shape: multi-channel UNION ALL + ROLLUP summary.
-    mk("tpcds_q05",
+    QDef.text("tpcds_q05",
       """WITH ch AS (
         |  SELECT 'orders' AS channel, o_orderpriority AS grp, CAST(o_totalprice AS DECIMAL(18,2)) AS amt FROM orders
         |  UNION ALL
@@ -58,7 +48,7 @@ object Tpcds {
         |FROM ch GROUP BY ROLLUP(channel, grp) ORDER BY channel, grp""".stripMargin),
 
     // DS q7 shape: multi-metric averages under a date filter.
-    mk("tpcds_q07",
+    QDef.text("tpcds_q07",
       """SELECT p_type,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
         | CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_disc,
@@ -68,7 +58,7 @@ object Tpcds {
         |GROUP BY p_type ORDER BY p_type""".stripMargin),
 
     // DS q34 shape: entities whose activity count falls in a band.
-    mk("tpcds_q34",
+    QDef.text("tpcds_q34",
       """WITH cnt AS (
         |  SELECT o_custkey, COUNT(*) AS n FROM orders GROUP BY o_custkey
         |  HAVING COUNT(*) BETWEEN 13 AND 20)
@@ -76,14 +66,14 @@ object Tpcds {
         |ORDER BY n DESC, c_custkey""".stripMargin),
 
     // DS q42 shape: top revenue by (year, segment).
-    mk("tpcds_q42",
+    QDef.text("tpcds_q42",
       """SELECT CAST(year(o_orderdate) AS BIGINT) AS d_year, c_mktsegment,
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1, 2 ORDER BY rev DESC, d_year, c_mktsegment LIMIT 20""".stripMargin),
 
     // DS q47 shape: month-series LAG per brand.
-    mk("tpcds_q47",
+    QDef.text("tpcds_q47",
       """WITH m AS (
         |  SELECT p_brand, CAST(year(l_shipdate) AS BIGINT) AS yr, CAST(month(l_shipdate) AS BIGINT) AS mo,
         |   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sales
@@ -94,7 +84,7 @@ object Tpcds {
         |FROM m ORDER BY p_brand, yr, mo""".stripMargin),
 
     // DS q51 shape: running cumulative totals per entity.
-    mk("tpcds_q51",
+    QDef.text("tpcds_q51",
       """WITH daily AS (
         |  SELECT o_custkey, CAST(o_orderdate AS DATE) AS d,
         |   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS amt
@@ -105,7 +95,7 @@ object Tpcds {
 
     // DS q65 shape: items below a fraction of their class average —
     // the class average stays in exact decimal until one final cast.
-    mk("tpcds_q65",
+    QDef.text("tpcds_q65",
       """WITH pr AS (
         |  SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS rev
         |  FROM lineitem GROUP BY l_partkey),
@@ -117,7 +107,7 @@ object Tpcds {
 
     // DS q98 shape: item revenue as a ratio of its class total
     // (aggregate-of-aggregate window).
-    mk("tpcds_q98",
+    QDef.text("tpcds_q98",
       """WITH r AS (
         |  SELECT p_type, p_partkey, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS itemrev,
         |   CAST(SUM(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))) OVER (PARTITION BY p_type) AS DOUBLE) AS classrev
@@ -129,7 +119,7 @@ object Tpcds {
     // DS q11 shape: year-over-year customer growth — the aggregate
     // CTE self-joined on entity with per-year slices; ratio filter on
     // exactly-derived doubles.
-    mk("tpcds_q11",
+    QDef.text("tpcds_q11",
       """WITH yr AS (
         |  SELECT o_custkey, CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
         |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
@@ -141,7 +131,7 @@ object Tpcds {
 
     // DS q88 shape: one scan, many banded counts via FILTER — the
     // multi-count pattern that replaces 8 self-joins in the original.
-    mk("tpcds_q88",
+    QDef.text("tpcds_q88",
       """SELECT
         |  COUNT(*) FILTER (WHERE l_quantity < 10) AS band1,
         |  COUNT(*) FILTER (WHERE l_quantity >= 10 AND l_quantity < 20) AS band2,
@@ -154,7 +144,7 @@ object Tpcds {
 
     // DS q23 shape: frequent items ∩ best customers — two HAVING
     // CTEs driving IN-subquery semi-joins into the fact scan.
-    mk("tpcds_q23",
+    QDef.text("tpcds_q23",
       """WITH freq AS (
         |  SELECT l_partkey FROM lineitem
         |  GROUP BY l_partkey HAVING COUNT(DISTINCT l_orderkey) > 3),
@@ -173,7 +163,7 @@ object Tpcds {
 
     // DS q59 shape: same-month sales ratio across consecutive years
     // per nation (aggregate CTE self-join keyed on (entity, month)).
-    mk("tpcds_q59",
+    QDef.text("tpcds_q59",
       """WITH m AS (
         |  SELECT c_nationkey AS nk, CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
         |         CAST(EXTRACT(month FROM o_orderdate) AS INT) AS mo,
@@ -192,7 +182,7 @@ object Tpcds {
     // rank WITHIN PARENT (subtotal rows partition by their parent key
     // via the CASE-on-grouping trick, exactly q36's spelling). NULLS
     // FIRST pinned — Spark and DuckDB default null ordering differs.
-    mk("tpcds_q36",
+    QDef.text("tpcds_q36",
       """WITH agg AS (
         |  SELECT n_name, p_type,
         |    GROUPING(n_name) + GROUPING(p_type) AS lochierarchy,
@@ -213,7 +203,7 @@ object Tpcds {
     // the window average is spelled SUM(decimal) OVER / COUNT OVER so
     // both engines produce the identical double before the deviation
     // filter (a float AVG OVER would hash-drift).
-    mk("tpcds_q89",
+    QDef.text("tpcds_q89",
       """WITH m AS (
         |  SELECT p_brand, CAST(month(l_shipdate) AS INT) AS mo,
         |    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sales_dec
@@ -233,7 +223,7 @@ object Tpcds {
     // DS q93 shape: net sales after subtracting the returns table —
     // here returns are the R-flagged lineitems self-left-joined back
     // on (orderkey, linenumber), so returned rows net to zero.
-    mk("tpcds_q93",
+    QDef.text("tpcds_q93",
       """WITH ret AS (
         |  SELECT l_orderkey AS r_okey, l_linenumber AS r_line,
         |         CAST(l_quantity AS DECIMAL(12,2)) AS ret_qty
@@ -246,7 +236,7 @@ object Tpcds {
 
     // DS q97 shape: cohort overlap between two periods via FULL OUTER
     // JOIN of distinct key sets + null-pattern counts.
-    mk("tpcds_q97",
+    QDef.text("tpcds_q97",
       """WITH y95 AS (SELECT DISTINCT o_custkey AS k FROM orders WHERE year(o_orderdate) = 1995),
         |y96 AS (SELECT DISTINCT o_custkey AS k FROM orders WHERE year(o_orderdate) = 1996)
         |SELECT CAST(SUM(CASE WHEN y95.k IS NOT NULL AND y96.k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS only_first,
@@ -257,7 +247,7 @@ object Tpcds {
     // DS q48 shape: one fact scan under a wide disjunction of
     // (segment × quantity band × price band) predicates — the
     // OR-of-ANDs pushes to the scan as a single filter.
-    mk("tpcds_q48",
+    QDef.text("tpcds_q48",
       """SELECT CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty, COUNT(*) AS n
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
@@ -266,7 +256,7 @@ object Tpcds {
         |   OR (c_mktsegment = 'MACHINERY' AND l_quantity BETWEEN 10 AND 35 AND l_extendedprice BETWEEN 2000 AND 50000)
         |   OR (c_mktsegment = 'AUTOMOBILE' AND l_quantity BETWEEN 25 AND 50 AND l_extendedprice BETWEEN 5000 AND 80000)""".stripMargin),
 
-    mk("tpcds_q67",
+    QDef.text("tpcds_q67",
       """WITH agg AS (
         |  SELECT n_name, p_brand,
         |         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sales

@@ -16,11 +16,6 @@ object Tpch2 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
 
-  private def viaSql(s: SparkSession, dir: String, q: String): DataFrame = {
-    Catalog.registerAll(s, dir)
-    s.sql(q)
-  }
-
   private def ts(d: String): Column = lit(d).cast("timestamp")
   private val revSql = revenueSql
 
@@ -28,21 +23,18 @@ object Tpch2 {
 
     // Q4 (adapted: EXISTS over late-shipped lines — shipped after the
     // order quarter instead of receipt>commit which the schema lacks).
-    {
-      val q =
-        """SELECT o_orderpriority, COUNT(*) AS order_count
-          |FROM orders
-          |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01'
-          | AND EXISTS (SELECT 1 FROM lineitem
-          |             WHERE l_orderkey = o_orderkey
-          |               AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-          |GROUP BY o_orderpriority
-          |ORDER BY o_orderpriority""".stripMargin
-      QDef.sql("tpch_q4", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("tpch_q4",
+      """SELECT o_orderpriority, COUNT(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01'
+        | AND EXISTS (SELECT 1 FROM lineitem
+        |             WHERE l_orderkey = o_orderkey
+        |               AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // Q7: volume shipping between two nations.
-    QDef.sql("tpch_q7",
+    QDef.text("tpch_q7",
       s"""SELECT supp_nation, cust_nation, l_year,
          | CAST(SUM(volume) AS DOUBLE) AS revenue
          |FROM (
@@ -58,30 +50,11 @@ object Tpch2 {
          |  AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
          |) shipping
          |GROUP BY supp_nation, cust_nation, l_year
-         |ORDER BY supp_nation, cust_nation, l_year""".stripMargin) { (s, dir) =>
-      val n1 = broadcast(t(s, dir, "nation")).as("n1")
-      val n2 = broadcast(t(s, dir, "nation")).as("n2")
-      t(s, dir, "supplier")
-        .join(t(s, dir, "lineitem"), col("s_suppkey") === col("l_suppkey"))
-        .filter(col("l_shipdate") >= ts("1996-01-01") && col("l_shipdate") < ts("1998-01-01"))
-        .join(t(s, dir, "orders"), col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, dir, "customer"), col("c_custkey") === col("o_custkey"))
-        .join(n1, col("s_nationkey") === col("n1.n_nationkey"))
-        .join(n2, col("c_nationkey") === col("n2.n_nationkey"))
-        .filter(
-          (col("n1.n_name") === "NATION_3" && col("n2.n_name") === "NATION_8") ||
-          (col("n1.n_name") === "NATION_8" && col("n2.n_name") === "NATION_3"))
-        .select(col("n1.n_name").as("supp_nation"), col("n2.n_name").as("cust_nation"),
-          year(col("l_shipdate")).cast("bigint").as("l_year"),
-          col("l_extendedprice"), col("l_discount"))
-        .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-        .agg(sumRevenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    },
+         |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
 
     // Q8 (adapted: market share of one supplier nation inside a region,
     // PROMO parts standing in for the p_type filter).
-    QDef.sql("tpch_q8",
+    QDef.text("tpch_q8",
       s"""SELECT o_year,
          | CAST(SUM(CASE WHEN nation = 'NATION_3' THEN $revSql END) AS DOUBLE)
          |   / CAST(SUM($revSql) AS DOUBLE) AS mkt_share
@@ -99,31 +72,11 @@ object Tpch2 {
          |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
          |) nations
          |GROUP BY o_year
-         |ORDER BY o_year""".stripMargin) { (s, dir) =>
-      val n1 = broadcast(t(s, dir, "nation")).as("n1")
-      val n2 = broadcast(t(s, dir, "nation")).as("n2")
-      broadcast(t(s, dir, "part").filter(col("p_type") === "PROMO"))
-        .join(t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"))
-        .join(broadcast(t(s, dir, "supplier")), col("s_suppkey") === col("l_suppkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1998-01-01"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(n1, col("c_nationkey") === col("n1.n_nationkey"))
-        .join(broadcast(t(s, dir, "region").filter(col("r_name") === "AMERICA")),
-          col("n1.n_regionkey") === col("r_regionkey"))
-        .join(n2, col("s_nationkey") === col("n2.n_nationkey"))
-        .select(year(col("o_orderdate")).cast("bigint").as("o_year"),
-          col("l_extendedprice"), col("l_discount"), col("n2.n_name").as("nation"))
-        .groupBy(col("o_year"))
-        .agg((sumRevenueWhere(col("nation") === "NATION_3",
-            col("l_extendedprice"), col("l_discount")) /
-          sumRevenue(col("l_extendedprice"), col("l_discount"))).as("mkt_share"))
-        .orderBy(col("o_year"))
-    },
+         |ORDER BY o_year""".stripMargin),
 
     // Q9 (adapted: profit = revenue - retailprice·qty since partsupp/
     // supplycost don't exist; parts picked by name pattern).
-    QDef.sql("tpch_q9",
+    QDef.text("tpch_q9",
       """SELECT nation, o_year, CAST(SUM(amount) AS DOUBLE) AS sum_profit
         |FROM (
         | SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
@@ -136,112 +89,76 @@ object Tpch2 {
         | WHERE p_name LIKE '%widget%'
         |) profit
         |GROUP BY nation, o_year
-        |ORDER BY nation, o_year DESC""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.types.DecimalType
-      val amount =
-        col("l_extendedprice").cast(DecimalType(12, 2)) *
-          (lit(1) - col("l_discount").cast(DecimalType(4, 2))) -
-        col("p_retailprice").cast(DecimalType(12, 2)) *
-          col("l_quantity").cast(DecimalType(12, 2))
-      broadcast(t(s, dir, "part").filter(col("p_name").like("%widget%")))
-        .join(t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"))
-        .join(broadcast(t(s, dir, "supplier")), col("s_suppkey") === col("l_suppkey"))
-        .join(t(s, dir, "orders"), col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"),
-          year(col("o_orderdate")).cast("bigint").as("o_year"), amount.as("amount"))
-        .groupBy(col("nation"), col("o_year"))
-        .agg(sum(col("amount")).cast("double").as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    },
+        |ORDER BY nation, o_year DESC""".stripMargin),
 
     // Q13: customer distribution by order count (left join + double agg).
-    {
-      val q =
-        """SELECT c_count, COUNT(*) AS custdist
-          |FROM (
-          |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-          |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          |   AND o_orderpriority <> '5-LOW'
-          |  GROUP BY c_custkey
-          |) c_orders
-          |GROUP BY c_count
-          |ORDER BY custdist DESC, c_count DESC""".stripMargin
-      QDef.sql("tpch_q13", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("tpch_q13",
+      """SELECT c_count, COUNT(*) AS custdist
+        |FROM (
+        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        |   AND o_orderpriority <> '5-LOW'
+        |  GROUP BY c_custkey
+        |) c_orders
+        |GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
 
     // Q15: top supplier(s) by quarterly revenue (view + max subquery).
-    {
-      val q =
-        """WITH revenue0 AS (
-          |  SELECT l_suppkey AS supplier_no,
-          |   CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS total_revenue
-          |  FROM lineitem
-          |  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
-          |  GROUP BY l_suppkey)
-          |SELECT s_suppkey, s_name, total_revenue
-          |FROM supplier JOIN revenue0 ON s_suppkey = supplier_no
-          |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue0)
-          |ORDER BY s_suppkey""".stripMargin
-      QDef.sql("tpch_q15", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("tpch_q15",
+      """WITH revenue0 AS (
+        |  SELECT l_suppkey AS supplier_no,
+        |   CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM supplier JOIN revenue0 ON s_suppkey = supplier_no
+        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue0)
+        |ORDER BY s_suppkey""".stripMargin),
 
     // Q16 (adapted: supplier breadth per brand/size from lineitem since
     // partsupp doesn't exist).
-    QDef.sql("tpch_q16",
+    QDef.text("tpch_q16",
       """SELECT p_brand, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
         |FROM part JOIN lineitem ON p_partkey = l_partkey
         |WHERE p_brand <> 'Brand#1' AND p_size >= 10
         |GROUP BY p_brand, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin) { (s, dir) =>
-      broadcast(t(s, dir, "part")
-          .filter(col("p_brand") =!= "Brand#1" && col("p_size") >= 10))
-        .join(t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"))
-        .groupBy(col("p_brand"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_size"))
-    },
+        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin),
 
     // Q21 (adapted: suppliers with returned lines on multi-supplier
     // orders where no other supplier had returns — keeps the
     // EXISTS + NOT EXISTS double correlation).
-    {
-      val q =
-        """SELECT s_name, COUNT(*) AS numwait
-          |FROM supplier JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-          | JOIN orders ON o_orderkey = l1.l_orderkey
-          |WHERE o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-          | AND EXISTS (SELECT 1 FROM lineitem l2
-          |             WHERE l2.l_orderkey = l1.l_orderkey
-          |               AND l2.l_suppkey <> l1.l_suppkey)
-          | AND NOT EXISTS (SELECT 1 FROM lineitem l3
-          |                 WHERE l3.l_orderkey = l1.l_orderkey
-          |                   AND l3.l_suppkey <> l1.l_suppkey
-          |                   AND l3.l_returnflag = 'R')
-          |GROUP BY s_name
-          |ORDER BY numwait DESC, s_name""".stripMargin
-      QDef.sql("tpch_q21", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("tpch_q21",
+      """SELECT s_name, COUNT(*) AS numwait
+        |FROM supplier JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+        | JOIN orders ON o_orderkey = l1.l_orderkey
+        |WHERE o_orderstatus = 'F' AND l1.l_returnflag = 'R'
+        | AND EXISTS (SELECT 1 FROM lineitem l2
+        |             WHERE l2.l_orderkey = l1.l_orderkey
+        |               AND l2.l_suppkey <> l1.l_suppkey)
+        | AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                 WHERE l3.l_orderkey = l1.l_orderkey
+        |                   AND l3.l_suppkey <> l1.l_suppkey
+        |                   AND l3.l_returnflag = 'R')
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name""".stripMargin),
 
     // Q22 (adapted: above-average-balance customers with no orders —
     // no phone column, so the country-code IN-list becomes nationkey).
-    {
-      val q =
-        """SELECT cntrycode, COUNT(*) AS numcust,
-          | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-          |FROM (
-          |  SELECT CAST(c_nationkey % 10 AS INT) AS cntrycode, c_acctbal
-          |  FROM customer
-          |  WHERE c_nationkey % 10 IN (1, 3, 5, 7)
-          |   AND c_acctbal > (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*)
-          |                    FROM customer WHERE c_acctbal > 0.0 AND c_nationkey % 10 IN (1, 3, 5, 7))
-          |   AND NOT EXISTS (SELECT 1 FROM orders
-          |                   WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
-          |) custsale
-          |GROUP BY cntrycode
-          |ORDER BY cntrycode""".stripMargin
-      QDef.sql("tpch_q22", q)((s, dir) => viaSql(s, dir, q))
-    },
+    QDef.text("tpch_q22",
+      """SELECT cntrycode, COUNT(*) AS numcust,
+        | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+        |FROM (
+        |  SELECT CAST(c_nationkey % 10 AS INT) AS cntrycode, c_acctbal
+        |  FROM customer
+        |  WHERE c_nationkey % 10 IN (1, 3, 5, 7)
+        |   AND c_acctbal > (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)/COUNT(*)
+        |                    FROM customer WHERE c_acctbal > 0.0 AND c_nationkey % 10 IN (1, 3, 5, 7))
+        |   AND NOT EXISTS (SELECT 1 FROM orders
+        |                   WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
+        |) custsale
+        |GROUP BY cntrycode
+        |ORDER BY cntrycode""".stripMargin),
 
     // Q14: promo revenue share. The conditional and total revenue sums
     // ride ONE scan/aggregate (sumRevenueWhere / sumRevenue share the
@@ -265,34 +182,13 @@ object Tpch2 {
     },
 
     // Q17 (adapted: p_container does not exist → p_brand + p_size
-    // select the part group): small-quantity-order revenue. The
-    // correlated per-part average becomes a groupBy + broadcast join
-    // (the filtered part set is tiny, so the per-part thresholds
-    // broadcast; lineitem is scanned once for the averages and once
-    // for the probe — the classic decorrelation Spark's optimizer
-    // would produce for the subquery form).
-    QDef.sql("tpch_q17",
+    // select the part group): small-quantity-order revenue.
+    QDef.text("tpch_q17",
       """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE p_brand = 'Brand#23' AND p_size = 5
         |  AND l_quantity < (
         |    SELECT 0.2 * AVG(CAST(l2.l_quantity AS DECIMAL(18,2)))
-        |    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin) { (s, dir) =>
-      val parts = t(s, dir, "part")
-        .filter(col("p_brand") === "Brand#23" && col("p_size") === 5)
-        .select(col("p_partkey"))
-      val li = t(s, dir, "lineitem")
-      // per-part threshold over ONLY the selected parts: semi-filter
-      // first so the average aggregates a tiny slice, then broadcast
-      val thresholds = li
-        .join(broadcast(parts), col("l_partkey") === col("p_partkey"), "left_semi")
-        .groupBy(col("l_partkey"))
-        .agg((avg(col("l_quantity").cast("decimal(18,2)")) * 0.2).as("__thr"))
-        .select(col("l_partkey").as("__pk"), col("__thr"))
-      li.select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
-        .join(broadcast(thresholds), col("l_partkey") === col("__pk"))
-        .filter(col("l_quantity") < col("__thr"))
-        .agg((dsum(col("l_extendedprice")) / 7.0).cast("double").as("avg_yearly"))
-    }
+        |    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin)
   )
 }

@@ -270,6 +270,24 @@ class DialectRobustnessSpec extends AnyFunSuite {
     assert(one("list_aggregate([1.5, 2.5], 'sum')") === new java.math.BigDecimal("4.0"))
   }
 
+  test("date parts are BIGINT with Sunday as day 0; cardinality(map) is BIGINT (DuckDB 1.0.0 answers)") {
+    import org.apache.spark.sql.types.LongType
+    def one(q: String) = {
+      val df = GraftSql.sql(spark, s"SELECT $q AS v")
+      (df.collect().head.get(0), df.schema.head.dataType)
+    }
+    val sun = "DATE '2024-01-07'"
+    val sat = "TIMESTAMP '2024-01-06 10:00:00'"
+    // DuckDB types every one BIGINT (cardinality UBIGINT)
+    Seq(s"dayofweek($sun)" -> 0L, s"dayofweek($sat)" -> 6L, s"date_part('dow', $sun)" -> 0L,
+      s"EXTRACT(dow FROM $sat)" -> 6L, s"year($sun)" -> 2024L, s"EXTRACT(year FROM $sun)" -> 2024L,
+      s"date_part('year', $sun)" -> 2024L, s"EXTRACT('year' FROM $sun)" -> 2024L,
+      s"month($sun)" -> 1L, s"date_part('month', $sat)" -> 1L, s"day($sun)" -> 7L,
+      s"dayofyear($sun)" -> 7L, s"quarter($sun)" -> 1L, s"week($sun)" -> 1L, s"hour($sat)" -> 10L,
+      s"minute($sat)" -> 0L, "cardinality(MAP {'a': 1, 'b': 2})" -> 2L)
+      .foreach { case (q, want) => assert(one(q) === ((want, LongType)), q) }
+  }
+
   test("a trailing comment never reaches the statement layer (DuckDB 1.0.0 accepts each)") {
     GraftSql.sql(spark, "CREATE OR REPLACE TEMP VIEW cmt_t AS SELECT 1 AS a")
     assert(GraftSql.sql(spark, "DESCRIBE cmt_t -- note").collect().map(_.getString(0)).toSeq === Seq("a"))

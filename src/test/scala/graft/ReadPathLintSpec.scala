@@ -28,6 +28,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * relations (plans/TxnSnapshot), never by shadowing a table with a
   * session temp view: the session has one temp-view namespace, and a
   * view in it would be a second snapshot model.
+  *
+  * A coverage entry runs its text one way, `QDef.text`: a private
+  * "bind the tables and run this text" closure is a second way, and a
+  * hand plan that re-spells its text is a second spelling the oracle
+  * gate would test instead of the front door.
   */
 class ReadPathLintSpec extends AnyFunSuite {
 
@@ -93,5 +98,47 @@ class ReadPathLintSpec extends AnyFunSuite {
   test("sources/Txn.scala creates no temp view: snapshots stay in the plan-resolution rule") {
     val found = offenders(Seq(root.resolve("sources/Txn.scala")), """createOrReplaceTempView""".r)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  /** The queries/ code that runs SQL text itself, by owning entry or
+    * helper (the last `QDef.…("name"` or `def name` above the line).
+    */
+  private val textRunners: Map[String, String] = Map(
+    "ClickBench43.scala:cb_full43_sweep" -> "binds the hits view and fingerprints 43 texts",
+    "DmlQ.scala:freshTable" -> "drops the entry's table before a DML entry writes it",
+    "DmlQ.scala:u09_dml_statements" -> "DML statements against its own table",
+    "DmlQ.scala:u10_upsert_statement" -> "DML statements against its own table",
+    "DmlQ.scala:u11_transactions" -> "transaction statements against its own table",
+    "FunctionsQ2.scala:f20_macro" -> "CREATE TEMPORARY FUNCTION before its query",
+    "FunctionsQ9.scala:f59_enum" -> "CREATE TYPE before its query",
+    "FunctionsQ6.scala:f55_prepared" -> "binds parameters through spark.sql(text, args)",
+    "FunctionsQ10.scala:f94_query_tf" -> "query()/query_table(), which its DuckDB 1.0 oracle predates",
+    "Imdb.scala:imdb_job_sweep" -> "binds the JOB views and fingerprints 113 texts",
+    "RelationalH.scala:q72_varint" -> "VARINT, which its DuckDB 1.0 oracle cannot run (no oracle)",
+    "SourcesQ.scala:s06_ctas" -> "CREATE TABLE AS before reading the table back",
+    "SourcesQ.scala:s07_insert_append" -> "CREATE TABLE and two INSERTs before reading back",
+    "SourcesQ.scala:s13_bucketed_join" -> "drops the bucketed tables it rewrites",
+    "SourcesQ.scala:s18_attach" -> "a query over two ATTACHed databases",
+    "TpcdsFull.scala:tpcds_full99_sweep" -> "fingerprints the 99 official texts",
+    "TpcdsGen.scala:register" -> "binds the synthesized TPC-DS tables",
+    "Tpch3.scala:mk" -> "a Spark-side CTE spelling that differs from its oracle's")
+
+  test("queries/ runs an entry's text only through QDef.text, save the listed setup statements") {
+    val dir = root.resolve("queries")
+    val runs = """Catalog\.registerAll\(|\bs\.sql\(|GraftSql\.sql\(|\brunScript\(""".r
+    val owner = """QDef\.\w+\(\s*"(\w+)"|\bdef (\w+)""".r
+    val found = for {
+      p <- scalaSources if p.startsWith(dir) && p != dir.resolve("QDef.scala")
+      lines = Files.readAllLines(p).asScala.toSeq
+      owners = lines.scanLeft("")((last, l) =>
+        owner.findAllMatchIn(l).toSeq.lastOption.map(m => Option(m.group(1)).getOrElse(m.group(2)))
+          .getOrElse(last)).tail
+      ((line, who), i) <- lines.zip(owners).zipWithIndex
+      if runs.findFirstIn(line).isDefined
+    } yield (s"${p.getFileName}:$who", s"$p:${i + 1}: ${line.trim}")
+    val stray = found.filterNot { case (key, _) => textRunners.contains(key) }.map(_._2)
+    assert(stray.isEmpty, stray.mkString("use QDef.text:\n", "\n", ""))
+    val stale = textRunners.keySet -- found.map(_._1)
+    assert(stale.isEmpty, stale.mkString("listed but running no text: ", ", ", ""))
   }
 }

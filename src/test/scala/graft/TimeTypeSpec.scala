@@ -34,7 +34,8 @@ class TimeTypeSpec extends AnyFunSuite {
     val r = one("SELECT EXTRACT(HOUR FROM TIME '12:30:45') AS h, " +
       "EXTRACT(MINUTE FROM TIME '12:30:45') AS m, " +
       "CAST(EXTRACT(SECOND FROM TIME '12:30:45') AS INT) AS s")
-    assert((r.getInt(0), r.getInt(1), r.getInt(2)) === ((12, 30, 45)))
+    // hour and minute are BIGINT, as in DuckDB
+    assert((r.getLong(0), r.getLong(1), r.getInt(2)) === ((12L, 30L, 45)))
   }
 
   test("ORDER BY over TIME values is chronological") {

@@ -6,9 +6,10 @@ gate validates against) in DuckDB on the same parquet tables, warm
 (best of 3 after one warm-up), and prints one JSON line comparable to
 Bench's output. The oracle SQL comes from a Verify output dir
 (oracle_sql.json) so Spark and DuckDB are guaranteed to run the same
-computation.
+computation. The entries are the query keys of a graft.Bench JSON line
+(the last line of <benchOut> that has one), so the set is Bench's own.
 
-Usage: python3 tools/bench_baseline.py <sfDir> <verifyOutDir> [threads]
+Usage: python3 tools/bench_baseline.py <sfDir> <verifyOutDir> <benchOut> [threads]
 """
 import json
 import os
@@ -20,21 +21,15 @@ import duckdb
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
-# keep in sync with graft.Bench.headline
-HEADLINE = [
-    "tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6", "tpch_q10", "tpch_q12",
-    "tpch_q18", "tpch_q19",
-    "q06_theta_join", "q07_groupjoin", "q13_window_rank", "q31_asof_join",
-    "q32_range_join", "q48_window_range", "q53_topk_custom",
-    "d01_dedup_exact", "d02_dedup_minhash", "d03_dedup_simhash",
-    "d04_ngram_jaccard", "d07_dedup_star_clusters", "s01_cosine_topk",
-    "s03_ann_ivf", "t02_quality_score", "t04_fingerprint", "st02_sessionize",
-    "p05_crossdoc_grams", "p07_contamination",
-    "d08_line_dedup", "p08_dsir_select", "p12_ngram_lm",
-]
+def bench_entries(bench_out):
+    """The query keys, in order, of the last graft.Bench JSON line in a file."""
+    lines = [l for l in open(bench_out) if l.startswith('{"metric"') and '"queries"' in l]
+    if not lines:
+        sys.exit(f"{bench_out}: no graft.Bench JSON line")
+    return list(json.loads(lines[-1])["queries"])
 
 
-def main(sf_dir, out_dir, threads=32):
+def main(sf_dir, out_dir, bench_out, threads=32):
     con = duckdb.connect()
     con.execute(f"SET threads={threads}")
     for t in TABLES:
@@ -44,7 +39,7 @@ def main(sf_dir, out_dir, threads=32):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     res, skipped = {}, []
-    for name in HEADLINE:
+    for name in bench_entries(bench_out):
         if name not in oracle:
             skipped.append(name)  # rows-only entry: no oracle SQL to time
             continue
@@ -83,5 +78,5 @@ def _timed(con, sql):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2],
-         int(sys.argv[3]) if len(sys.argv) > 3 else 32)
+    main(sys.argv[1], sys.argv[2], sys.argv[3],
+         int(sys.argv[4]) if len(sys.argv) > 4 else 32)
