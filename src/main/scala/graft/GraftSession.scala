@@ -1,6 +1,10 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import com.sun.management.HotSpotDiagnosticMXBean
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.Platform
 
 /** Tuned SparkSession factory for the graft engine.
   *
@@ -19,10 +23,20 @@ import org.apache.spark.sql.SparkSession
   * Spark's default page (a larger array is humongous). That default,
   * nextPow2(execution pool / cores / 16), is 32 MB on a 4-core 4 GB JVM,
   * and every BytesToBytesMap takes a whole page on its first insert:
-  * d03's broadcast hash relation (88 KB serialized) held 33,024 KB of
+  * d03's cap broadcast of the time (88 KB serialized) held 33,024 KB of
   * driver heap, now 1,280 KB; headline_mini's heap_live_peak_mb fell
   * 106.4 → 75.4 MB. Other masters keep Spark's default: the driver does
   * not know the executors' heap.
+  *
+  * Under G1, broadcast blocks are sized below the humongous threshold
+  * on every master: `spark.broadcast.blockSize` = min(4 MB, half the
+  * driver's G1 region less the byte[] header), in KiB. The driver
+  * blockifies every broadcast, each stage's task binary included, into
+  * one such chunk at least. Spark's 4 MB chunk is a humongous object on
+  * any region up to 8 MB; on the benchmark's 4 GB heap (2 MB regions,
+  * now 1023 KiB blocks) those allocations set off about one young GC
+  * plus a concurrent cycle per headline pass. Other collectors keep
+  * Spark's default.
   */
 object GraftSession {
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
@@ -68,20 +82,18 @@ object GraftSession {
       // default for multi-file buckets, which never occur here.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "400m")
-      // InferFiltersFromGenerate re-evaluates the generator's INPUT
-      // expression in an inferred `size(e)>0 AND isnotnull(e)` filter
-      // that pushdown then moves to the scan — for explode over a
-      // kernel-computed array (d03: simhashblocks over the tokenizer)
-      // that is a full extra kernel pass over every RAW row, purely to
-      // drop rows the Generate drops anyway (r14 plans carried it on
-      // all four scan copies). Excluding the rule: d03 sf30
-      // interleaved 5.2→3.9 s min; q44/q67/p05/d08 (cheap split-array
-      // generators, where the filter can at most save the rows-with-
-      // empty-arrays path) all measured neutral. Scale-safe: the rule
-      // only ever trades an extra input-expression evaluation per raw
-      // row against early-dropping rows that produce no generate
-      // output — and every generate in this engine feeds off the same
-      // relation it filters, so nothing upstream is ever saved.
+      // InferFiltersFromGenerate puts `size(e) > 0 AND isnotnull(e)`
+      // under every inner explode/posexplode/inline; pushdown then
+      // substitutes the projected alias, so where `e` is a kernel
+      // column (d03: posexplode over the SimHash blocks) the kernel
+      // runs in that filter as well as in the projection, only to drop
+      // rows the Generate drops anyway.
+      // Excluding the rule: d03 sf30 interleaved 5.2→3.9 s min (r14
+      // plan shape); q44/q67/p05/d08, which explode cheap split
+      // arrays, measured neutral. The rule can only save work between
+      // the filter and the Generate on rows whose array is empty or
+      // NULL; the graft generators (LshBucketPairs, SimHashBucketPairs)
+      // are not among the generators it touches.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       // Never use the bypass-merge shuffle writer (r14): it creates
@@ -114,16 +126,27 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config(heapPages(master))
+      .config(broadcastBlocks)
+
+  private def g1: Boolean = ManagementFactory.getGarbageCollectorMXBeans.stream
+    .anyMatch(_.getName.startsWith("G1"))
 
   // the page rule above
   private def heapPages(master: String): Map[String, Any] =
     if (master != "local" && !master.startsWith("local[")) Map.empty
     else {
-      val g1 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.stream
-        .anyMatch(_.getName.startsWith("G1"))
-      val header = if (g1) org.apache.spark.unsafe.Platform.LONG_ARRAY_OFFSET else 0
+      val header = if (g1) Platform.LONG_ARRAY_OFFSET else 0
       val minPage = (Runtime.getRuntime.maxMemory + 8191) / 8192 + header
       Map("spark.buffer.pageSize" -> (math.max(1L << 20, java.lang.Long.highestOneBit(minPage - 1) << 1) - header))
+    }
+
+  // the broadcast block rule above
+  private def broadcastBlocks: Map[String, Any] =
+    if (!g1) Map.empty
+    else {
+      val region = ManagementFactory.getPlatformMXBean(classOf[HotSpotDiagnosticMXBean])
+        .getVMOption("G1HeapRegionSize").getValue.toLong
+      Map("spark.broadcast.blockSize" -> s"${math.min(4096L, (region / 2 - Platform.BYTE_ARRAY_OFFSET) / 1024)}k")
     }
 
   /** Scale-adaptive scan split sizing (r14, guide §2/§6): derive

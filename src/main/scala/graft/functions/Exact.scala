@@ -78,6 +78,15 @@ object Exact {
   def revenueUnits(price: Column, discount: Column): Column =
     units(price, 2) * (lit(100L) - units(discount, 2))
 
+  /** Exact Σ a·b of two 2-decimal columns as scale-4 long units (TPC-H
+    * q6's Σ price·discount). The exact 4-decimal product is what
+    * `CAST(a * b AS DECIMAL(18,4))` rounds the double product to, so
+    * the total is bit-identical to that oracle form without Spark's
+    * per-row double → BigDecimal conversion.
+    */
+  def sumProduct(a: Column, b: Column): Column =
+    sum(units(a, 2) * units(b, 2)).cast(DoubleType) / 1e4
+
   /** Final conversion of a pre-shuffled scale-4 unit sum. */
   def sumFromUnits(c: Column): Column = sum(c).cast(DoubleType) / 1e4
 

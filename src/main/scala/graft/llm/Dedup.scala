@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for LLM-data pipelines.
@@ -19,9 +20,8 @@ object Dedup {
     * consumer is its own physical subtree and the text kernels (the
     * pipelines' dominant CPU) re-run once per consumer: the only
     * shared node was the corpus-text exchange BELOW them. Only applied
-    * where every consumer needs the bucket partitioning anyway (star
-    * variants, simhash) — minhashPairs/lshJaccardPairs documented why
-    * not.
+    * where every consumer needs the bucket partitioning anyway (the
+    * star variants) — minhashPairs/lshJaccardPairs documented why not.
     */
   private def sharedBucketEx(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(keys: _*)
@@ -44,10 +44,10 @@ object Dedup {
     * projection — OPTIMIZATION_r14.md).
     *
     * Exchange reuse requires all consumers' below-exchange subtrees to
-    * canonicalize identically; where a consumer needs fewer columns,
-    * [[graft.plans.WithReferences]] pins the full column set below the
-    * exchange (column pruning was exactly what defeated reuse in the
-    * r14 d03/d04 plans).
+    * canonicalize identically: column pruning gives each consumer's
+    * copy its own minimal column set, so a consumer that drops a column
+    * the others keep plans its own exchange and kernel pass (what
+    * defeated reuse in the r14 d03/d04 plans).
     *
     * Used only where the exchanged payload is the narrow signature
     * (minhashPairs). The sites whose payload carries
@@ -174,9 +174,9 @@ object Dedup {
     // members still pair through their other, more selective bands.
     // The cap is decided on narrow (id, bk) rows only.
     //
-    // NOT shared via an explicit bk repartition (r14 A/B): the star/
-    // simhash variants share their exploded exchange across consumers
-    // (guide §2.4) because every consumer there needs bk partitioning
+    // NOT shared via an explicit bk repartition (r14 A/B): the star
+    // variants share their exploded exchange across consumers (guide
+    // §2.4) because every consumer there needs bk partitioning
     // anyway. HERE the masked groupBy(id) rides the text exchange's
     // id partitioning for free, so sharing would trade one kernel
     // recompute for TWO new narrow exchanges (bk + id) — measured a
@@ -426,49 +426,43 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** SimHash near-dup pairs: fingerprint → 4×16-bit blocks → join on
-    * any equal block (pigeonhole guarantees recall for hamming ≤ 3) →
-    * verify exact hamming.
+  /** SimHash near-dup pairs `(id_a, id_b, hamming)`, id_a < id_b and
+    * hamming ≤ `maxHamming` over 64-bit fingerprints, among the
+    * representatives of distinct texts: one kernel pass and one bucket
+    * pass.
+    *
+    * The kernel ([[TextOps.simhashBlocks]]) turns each text into four
+    * 16-bit blocks, and `posexplode` keys the doc by its four
+    * (block_idx, block_val) buckets; by pigeonhole, fingerprints within
+    * hamming 3 share a block. One exchange on the bucket feeds a window
+    * count — a bucket of more than `maxBucket` docs is boilerplate and
+    * dropped, its members still pair through their other blocks — then
+    * `collect_list` of each surviving bucket and the bucket-local
+    * generator [[graft.plans.SimHashBucketPairs]]. The window buffers a
+    * bucket in Spark's spillable row array, so an oversized bucket
+    * never becomes one row. The trailing `distinct` collapses a pair
+    * found in several buckets: an emit-once block selection was
+    * output-identical and slower at sf0.1, sf10 and sf30
+    * (OPTIMIZATION_r15.md), its masks costing a corpus-wide
+    * collect_list plus a join.
     */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 256): DataFrame = {
     import graft.plans.HashExpressions.{columnOf, exprOf}
-    import graft.plans.WithReferences
     // same duplicate-cluster defense as minhashPairs: exact copies
-    // collapse to a representative, oversized blocks are dropped
-    val reps = representatives(df, idCol, textCol)
-    val fp = reps
-      .select(col("id"),
-        TextOps.tokenHashes(TextOps.wordTokens(col("__text"))).as("hs"))
-      .select(col("id"), TextOps.simhashBlocks(col("hs")).as("blocks"))
-    // Every pair is generated at every shared surviving block (up to
-    // 4×) and deduplicated by a distinct. One (block_idx, block_val)
-    // exchange is shared by the cap aggregate and both self-join sides;
-    // the WithReferences pin keeps id/blocks in the cap aggregate's
-    // copy so it canonicalizes equal (r15 verdict item 4). An emit-once
-    // block selection was output-identical and slower at sf0.1, sf10
-    // and sf30 (OPTIMIZATION_r15.md): the quadratic term is the
-    // within-bucket pair enumeration, which is output-bound.
-    val exploded = sharedBucketEx(fp.select(
-      col("id"), col("blocks"),
-      posexplode(col("blocks")).as(Seq("block_idx", "block_val"))),
-      col("block_idx"), col("block_val"))
-    val pinnedOne = columnOf(WithReferences(Seq(lit(1), col("id"), col("blocks")).map(exprOf)))
-    val okBlocks = exploded.groupBy(col("block_idx"), col("block_val"))
-      .agg(count(pinnedOne).as("__n"))
+    // collapse to a representative
+    val bucket = Seq(col("block_idx"), col("block_val"))
+    representatives(df, idCol, textCol)
+      .select(col("id").cast("long").as("id"), TextOps.simhashBlocks(col("__text")).as("blocks"))
+      .select(col("id"), col("blocks"),
+        posexplode(col("blocks")).as(Seq("block_idx", "block_val")))
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(bucket: _*)))
       .filter(col("__n") <= maxBucket)
-      .select(col("block_idx"), col("block_val"))
-    val capped = exploded.join(okBlocks, Seq("block_idx", "block_val"))
-    val a = capped.select(col("id").as("id_a"), col("blocks").as("blocks_a"),
-      col("block_idx"), col("block_val"))
-    val b = capped.select(col("id").as("id_b"), col("blocks").as("blocks_b"),
-      col("block_idx"), col("block_val"))
-    a.join(b, Seq("block_idx", "block_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        TextOps.simhashHamming(col("blocks_a"), col("blocks_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .groupBy(bucket: _*)
+      .agg(collect_list(struct(col("id"), col("blocks"))).as("ms"))
+      .select(columnOf(graft.plans.SimHashBucketPairs(exprOf(col("ms")), maxHamming))
+        .as(Seq("id_a", "id_b", "hamming")))
       .distinct()
   }
 

@@ -69,30 +69,18 @@ object TextOps {
     graft.plans.HashExpressions.columnOf(
       graft.plans.WordNgramHashes(graft.plans.HashExpressions.exprOf(text), n))
 
-  /** Token hashes for simhash — materialize once (`withColumn`) so the
-    * string hashing isn't re-evaluated per bit position.
+  /** SimHash fingerprint of a text as 4×16-bit blocks (pigeonhole
+    * blocking for hamming ≤ 3: at least one block must match exactly).
+    * Spark's `lower` case-maps the text; the custom
+    * [[graft.plans.SimHashBlocks]] kernel then splits it on ASCII
+    * whitespace, hashes each token with `xxhash64`'s hash and votes the
+    * bits in one primitive loop — the same blocks as
+    * `transform(wordTokens(text), t -> xxhash64(t))` voted, without the
+    * token strings or the interpreted lambdas.
     */
-  def tokenHashes(tokens: Column): Column =
-    transform(tokens, t => xxhash64(t))
-
-  /** SimHash fingerprint as 4×16-bit blocks (pigeonhole blocking for
-    * hamming ≤ 3: at least one block must match exactly). Runs as the
-    * custom [[graft.plans.SimHashBlocks]] expression (same rationale
-    * as minhash: one primitive loop beats 64 interpreted lambdas).
-    */
-  def simhashBlocks(hashes: Column): Column =
+  def simhashBlocks(text: Column): Column =
     graft.plans.HashExpressions.columnOf(
-      graft.plans.SimHashBlocks(graft.plans.HashExpressions.exprOf(hashes)))
-
-  /** Hamming distance between two simhash block arrays — one fused
-    * loop (see [[graft.plans.BlockHamming]]) instead of an interpreted
-    * zip_with + aggregate pair.
-    */
-  def simhashHamming(a: Column, b: Column): Column =
-    graft.plans.HashExpressions.columnOf(
-      graft.plans.BlockHamming(
-        graft.plans.HashExpressions.exprOf(a),
-        graft.plans.HashExpressions.exprOf(b)))
+      graft.plans.SimHashBlocks(graft.plans.HashExpressions.exprOf(lower(text))))
 
   /** Winnowing-style document fingerprint: k-gram rolling hashes → min
     * of each sliding window of w → distinct sorted mins → one 64-bit

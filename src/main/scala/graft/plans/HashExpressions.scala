@@ -31,45 +31,6 @@ object HashExpressions {
   private[plans] val kernels = "graft.plans.HashKernels"
 }
 
-/** Pass-through of `children.head` that additionally REFERENCES the
-  * remaining children without ever evaluating them.
-  *
-  * Purpose (r15, guide §2.4): exchange reuse requires the subtrees
-  * below two Exchange nodes to canonicalize identically, but column
-  * pruning rewrites each consumer's copy of a shared subtree to its
-  * own minimal column set — one consumer dropping a column the others
-  * keep is enough to defeat reuse and re-run the whole subtree (the
-  * dedup kernels' dominant CPU) once per consumer. Wrapping one
-  * expression of the narrower consumer in
-  * `WithReferences(value, theColumnsTheOthersNeed…)` makes pruning
-  * keep those columns below the shared exchange, so all copies stay
-  * canonically equal and plan exactly one exchange + one kernel pass.
-  * Evaluation cost is zero: eval/codegen delegate to `value` alone.
-  */
-case class WithReferences(children: Seq[Expression]) extends Expression {
-  require(children.nonEmpty, "WithReferences needs a value expression")
-  private def value: Expression = children.head
-
-  override def dataType: DataType = value.dataType
-  // always "nullable": a non-nullable value would let NullPropagation
-  // rewrite count(WithReferences(1, refs…)) to count(1) and strip the
-  // pinned references. Runtime null-ness still follows `value` exactly
-  // (eval/codegen delegate), so results are unchanged.
-  override def nullable: Boolean = true
-  override def foldable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    value.eval(input)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val v = value.genCode(ctx)
-    ev.copy(code = v.code, isNull = v.isNull, value = v.value)
-  }
-
-  override protected def withNewChildrenInternal(
-      cs: IndexedSeq[Expression]): WithReferences = copy(children = cs)
-}
-
 /** Distinct 31-bit rolling hashes of the byte k-grams of a string —
   * the shingle+hash+dedup pipeline fused into one allocation-free pass
   * (a `transform(sequence…substr)` expression tree allocates a
@@ -190,8 +151,11 @@ case class MinHashSignature(child: Expression, as: Array[Long], bs: Array[Long])
     copy(child = c)
 }
 
-/** SimHash fingerprint over token hashes as 4×16-bit blocks (the
-  * pigeonhole blocking unit for hamming ≤ 3 joins).
+/** SimHash fingerprint of a text as 4×16-bit blocks (the pigeonhole
+  * blocking unit for hamming ≤ 3 joins): tokenize on ASCII whitespace,
+  * hash each token and vote the 64 bits in one pass ([[HashKernels.simhashText]]).
+  * The input is tokenized as is; callers lower-case it with Spark's
+  * `lower` first.
   */
 case class SimHashBlocks(child: Expression) extends UnaryExpression {
   import HashExpressions.kernels
@@ -200,10 +164,10 @@ case class SimHashBlocks(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = child.nullable
 
   override def nullSafeEval(input: Any): Any =
-    HashKernels.simhashBlocks(input.asInstanceOf[ArrayData])
+    HashKernels.simhashText(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"$kernels.simhashBlocks($c)")
+    defineCodeGen(ctx, ev, c => s"$kernels.simhashText($c)")
 
   override protected def withNewChildInternal(c: Expression): SimHashBlocks =
     copy(child = c)
@@ -397,25 +361,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     defineCodeGen(ctx, ev, (a, b) => s"$kernels.sortedIntersectCount($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectCount =
-    copy(left = l, right = r)
-}
-
-/** Total hamming distance between two simhash block arrays. */
-case class BlockHamming(left: Expression, right: Expression)
-    extends BinaryExpression {
-  import HashExpressions.kernels
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(
-      HashKernels.blockHamming(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$kernels.blockHamming($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BlockHamming =
     copy(left = l, right = r)
 }
 

@@ -1,6 +1,8 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Primitive-loop kernels behind the custom expressions.
@@ -295,38 +297,52 @@ object HashKernels {
     c
   }
 
-  /** SimHash fingerprint over token hashes as 4×16-bit blocks (the
-    * pigeonhole blocking unit for hamming ≤ 3 joins): majority vote
-    * per bit, MSB-first fold within each block.
+  /** SimHash fingerprint of a text as 4×16-bit blocks (the pigeonhole
+    * blocking unit for hamming ≤ 3): tokens are the maximal runs of
+    * bytes other than ASCII whitespace (0x20 and 0x09–0x0D, Java's
+    * `\s`), each hashed from its UTF-8 bytes as Spark's `xxhash64` hashes
+    * a string (XXH64, seed 42); majority vote per bit, MSB-first fold
+    * within each block. One pass over the bytes, no token strings: equal
+    * to `xxhash64` over `filter(split(text, '\\s+'), t -> length(t) > 0)`,
+    * since no byte of a multi-byte UTF-8 sequence is ASCII.
     */
-  def simhashBlocks(input: ArrayData): ArrayData = {
-    val hs = input.toLongArray()
+  def simhashText(input: UTF8String): ArrayData = {
+    val base = input.getBaseObject
+    val off = input.getBaseOffset
+    val n = input.numBytes
     val ones = new Array[Int](64)
-    var j = 0
-    while (j < hs.length) {
-      val h = hs(j)
-      var i = 0
-      while (i < 64) {
-        if (((h >>> i) & 1L) == 1L) ones(i) += 1
-        i += 1
+    var tokens = 0
+    var i = 0
+    while (i < n) {
+      while (i < n && isAsciiSpace(Platform.getByte(base, off + i))) i += 1
+      if (i < n) {
+        val start = i
+        while (i < n && !isAsciiSpace(Platform.getByte(base, off + i))) i += 1
+        val h = XXH64.hashUnsafeBytes(base, off + start, i - start, 42L)
+        var b = 0
+        while (b < 64) {
+          ones(b) += ((h >>> b) & 1L).toInt
+          b += 1
+        }
+        tokens += 1
       }
-      j += 1
     }
-    val half = hs.length
     val blocks = new Array[Long](4)
     var b = 0
     while (b < 4) {
       var acc = 0L
-      var i = 0
-      while (i < 16) {
-        acc = acc * 2 + (if (ones(b * 16 + i) * 2 > half) 1L else 0L)
-        i += 1
+      var k = 0
+      while (k < 16) {
+        acc = acc * 2 + (if (ones(b * 16 + k) * 2 > tokens) 1L else 0L)
+        k += 1
       }
       blocks(b) = acc
       b += 1
     }
     new GenericArrayData(blocks)
   }
+
+  private def isAsciiSpace(c: Byte): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
 
   /** Index of the FIRST position where two long arrays agree, -1 if
     * none — the emit-once band test for LSH pair generation: a
@@ -399,17 +415,6 @@ object HashKernels {
       else j += 1
     }
     c
-  }
-
-  /** Total hamming distance between two simhash block arrays. */
-  def blockHamming(a: ArrayData, b: ArrayData): Long = {
-    val x = a.toLongArray()
-    val y = b.toLongArray()
-    val n = math.min(x.length, y.length)
-    var d = 0L
-    var i = 0
-    while (i < n) { d += java.lang.Long.bitCount(x(i) ^ y(i)); i += 1 }
-    d
   }
 
   /** Sign-LSH bucket id: MSB-first fold over hyperplanes of the dot

@@ -83,47 +83,117 @@ case class LshBucketPairs(
       i += 1
     }
 
-    // lazy iterator: a bucket's pair space is never buffered — the
-    // consumer pulls one row at a time straight out of the loop state
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var j = 1
-      private var nextRow: InternalRow = null
-
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null && i < m - 1) {
-          // emit-once: this bucket is the pair's first shared surviving band
-          if (HashKernels.firstEqualLong(masks(i), masks(j)) == bandIdx) {
-            val agree = HashKernels.agreeCountInts(sigs(i), sigs(j))
-            val est = agree.toDouble / numHashes
-            if (est >= threshold) {
-              val lo = math.min(ids(i), ids(j))
-              val hi = math.max(ids(i), ids(j))
-              if (withGrams) {
-                val (gi, gj) = (grams(i), grams(j))
-                val inter = HashKernels.sortedIntersectLong(gi, gj)
-                val uni = math.max(gi.length + gj.length - inter, 1L)
-                val jac = inter.toDouble / uni
-                if (jac >= minJaccard)
-                  nextRow = new GenericInternalRow(Array[Any](lo, hi, jac))
-              } else {
-                nextRow = new GenericInternalRow(Array[Any](lo, hi, est))
-              }
-            }
-          }
-          j += 1
-          if (j >= m) { i += 1; j = i + 1 }
-        }
-      }
-
-      advance()
-      override def hasNext: Boolean = nextRow != null
-      override def next(): InternalRow = {
-        val r = nextRow
-        advance()
-        r
+    new BucketPairIterator(m) {
+      protected def pair(i: Int, j: Int): InternalRow = {
+        // emit-once: this bucket is the pair's first shared surviving band
+        if (HashKernels.firstEqualLong(masks(i), masks(j)) != bandIdx) return null
+        val est = HashKernels.agreeCountInts(sigs(i), sigs(j)).toDouble / numHashes
+        if (est < threshold) return null
+        val lo = math.min(ids(i), ids(j))
+        val hi = math.max(ids(i), ids(j))
+        if (!withGrams) return new GenericInternalRow(Array[Any](lo, hi, est))
+        val (gi, gj) = (grams(i), grams(j))
+        val inter = HashKernels.sortedIntersectLong(gi, gj)
+        val jac = inter.toDouble / math.max(gi.length + gj.length - inter, 1L)
+        if (jac >= minJaccard) new GenericInternalRow(Array[Any](lo, hi, jac)) else null
       }
     }
+  }
+}
+
+/** Bucket-local SimHash pair generation, the generator form of the
+  * bucket self-join: one surviving (block_idx, block_val) bucket's
+  * `(id, blocks)` members in, `(id_a, id_b, hamming)` out for each
+  * member pair with distinct non-NULL ids (id_a < id_b) and hamming ≤
+  * `maxHamming`. The four 16-bit blocks of [[SimHashBlocks]] are
+  * unpacked once per member into its 64-bit fingerprint, so a
+  * candidate costs one xor and one popcount. A pair sharing k buckets
+  * comes out k times; the caller's `distinct` keeps one.
+  *
+  * Scale posture as [[LshBucketPairs]]: the caller groups only buckets
+  * within the `maxBucket` cap, so a bucket's work is at most
+  * maxBucket² popcounts, and the iterator is lazy — a bucket's pairs
+  * are never buffered.
+  */
+case class SimHashBucketPairs(members: Expression, maxHamming: Int)
+  extends Generator with CodegenFallback {
+
+  override def children: Seq[Expression] = Seq(members)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SimHashBucketPairs =
+    copy(members = newChildren(0))
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("id_a", LongType, nullable = false),
+    StructField("id_b", LongType, nullable = false),
+    StructField("hamming", LongType, nullable = false)))
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val arr = members.eval(input)
+    if (arr == null) return Iterator.empty
+    val a = arr.asInstanceOf[ArrayData]
+
+    // unpack once; a member with a NULL id or blocks pairs with nothing
+    val ids = new Array[Long](a.numElements())
+    val fps = new Array[Long](a.numElements())
+    var m = 0
+    var k = 0
+    while (k < a.numElements()) {
+      val row = a.getStruct(k, 2)
+      if (!row.isNullAt(0) && !row.isNullAt(1)) {
+        val blocks = row.getArray(1)
+        var fp = 0L
+        var b = 0
+        while (b < blocks.numElements()) { fp = (fp << 16) | blocks.getLong(b); b += 1 }
+        ids(m) = row.getLong(0)
+        fps(m) = fp
+        m += 1
+      }
+      k += 1
+    }
+    new BucketPairIterator(m) {
+      protected def pair(i: Int, j: Int): InternalRow = {
+        val d = java.lang.Long.bitCount(fps(i) ^ fps(j))
+        if (ids(i) == ids(j) || d > maxHamming) null
+        else new GenericInternalRow(Array[Any](
+          math.min(ids(i), ids(j)), math.max(ids(i), ids(j)), d.toLong))
+      }
+    }
+  }
+}
+
+/** The pairs i < j of a bucket's `m` members, lazily: `pair(i, j)` gives
+  * a pair's row, or null when the pair emits none. A bucket's pair
+  * space is never buffered; the consumer pulls one row at a time
+  * straight out of the loop state.
+  */
+private[plans] abstract class BucketPairIterator(m: Int) extends Iterator[InternalRow] {
+  protected def pair(i: Int, j: Int): InternalRow
+
+  private var i = 0
+  private var j = 1
+  private var nextRow: InternalRow = null
+  private var ready = false
+
+  override def hasNext: Boolean = {
+    while (!ready) {
+      if (i >= m - 1) ready = true
+      else {
+        nextRow = pair(i, j)
+        j += 1
+        if (j >= m) { i += 1; j = i + 1 }
+        ready = nextRow != null
+      }
+    }
+    nextRow != null
+  }
+
+  override def next(): InternalRow = {
+    if (!hasNext) throw new NoSuchElementException
+    ready = false
+    val r = nextRow
+    nextRow = null
+    r
   }
 }

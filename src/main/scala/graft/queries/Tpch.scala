@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.Exact._
 import graft.sources.Catalog
@@ -309,7 +308,8 @@ object Tpch {
     },
 
     // Q6: forecast revenue — pure scan+filter+agg; predicates must all
-    // push to parquet.
+    // push to parquet. The sum runs in long units (Exact.sumProduct),
+    // equal to the text's per-row DECIMAL(18,4) cast.
     QDef.sql("tpch_q6",
       """SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -320,8 +320,7 @@ object Tpch {
         .filter(col("l_shipdate") >= ts("1996-01-01") && col("l_shipdate") < ts("1997-01-01")
           && col("l_discount") >= 0.05 && col("l_discount") <= 0.07
           && col("l_quantity") < 24.0)
-        .agg(sum((col("l_extendedprice") * col("l_discount")).cast(DecimalType(18, 4)))
-          .cast("double").as("revenue"))
+        .agg(sumProduct(col("l_extendedprice"), col("l_discount")).as("revenue"))
     },
 
     // Q10: returned-items ranking.

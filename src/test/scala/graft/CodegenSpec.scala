@@ -27,13 +27,32 @@ class CodegenSpec extends AnyFunSuite {
         col("doc_id"),
         TextOps.charShingleHashes(col("text"), 5).as("sh"),
         TextOps.wordNgramHashes(col("text"), 3).as("ng"),
-        TextOps.fingerprint(col("text")).as("fp"))
+        TextOps.fingerprint(col("text")).as("fp"),
+        TextOps.simhashBlocks(col("text")).as("blocks"))
         .select(col("doc_id"),
           TextOps.minhashFromHashes(col("sh"), 64).as("sig"),
-          TextOps.simhashBlocks(col("ng")).as("blocks"),
+          col("blocks"),
           col("fp"))
       assert(out.count() > 0)
     }
+  }
+
+  test("the fused SimHash kernel and simhashPairs run codegen-only and match the interpreted path") {
+    val docs = graft.sources.Catalog.table(spark, sfDir, "documents")
+    def run() = (
+      docs.select(col("doc_id"), TextOps.simhashBlocks(col("text")).as("blocks"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap,
+      Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 20).collect().toSet)
+    val compiled = noFallback(run())
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val interpreted =
+      try run()
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    assert(compiled._1.nonEmpty && compiled._2.nonEmpty && compiled === interpreted)
   }
 
   test("two minhash columns in ONE projection codegen together") {

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.{Dedup, TextOps}
+import graft.llm.Dedup
 import graft.queries.RelationalB
 import graft.sources.Catalog
 
@@ -65,30 +65,74 @@ class RewriteEquivSpec extends AnyFunSuite {
       assert(ref.filter(col("last_ok").isNotNull).count() > 0, "no event matched an order")
     }
 
-    test(s"simhashPairs equals brute-force hamming <= 3 over all representative pairs ($sf)") {
-      // the documents plus planted near-duplicates (a one-word edit) and
-      // exact copies, so the pair set and the representative collapse
-      // are both exercised
+    // the documents plus planted near-duplicates (a one-word edit) and
+    // exact copies, so the pair set and the representative collapse
+    // are both exercised
+    def simhashCorpus: DataFrame = {
       val docs = Catalog.table(spark, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs
+      docs
         .unionAll(docs.filter(col("doc_id") < 20)
           .select((col("doc_id") + 100000).as("doc_id"), concat(col("text"), lit(" zz")).as("text")))
         .unionAll(docs.filter(col("doc_id") < 5)
           .select((col("doc_id") + 200000).as("doc_id"), col("text")))
-      val n = corpus.count()
+    }
+
+    test(s"simhashPairs equals brute-force hamming <= 3 over all representative pairs ($sf)") {
+      val corpus = simhashCorpus
       val got = Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3,
-        maxBucket = n.toInt)
-      val fp = corpus.groupBy(col("text")).agg(min(col("doc_id")).as("id"))
-        .select(col("id"),
-          TextOps.simhashBlocks(TextOps.tokenHashes(TextOps.wordTokens(col("text")))).as("blocks"))
-      val a = fp.select(col("id").as("id_a"), col("blocks").as("blocks_a"))
-      val b = fp.select(col("id").as("id_b"), col("blocks").as("blocks_b"))
-      val ref = a.crossJoin(b)
+        maxBucket = corpus.count().toInt)
+      val fp = refFingerprints(corpus)
+      val ref = fp.select(col("id").as("id_a"), col("blocks").as("blocks_a"))
+        .crossJoin(fp.select(col("id").as("id_b"), col("blocks").as("blocks_b")))
         .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          TextOps.simhashHamming(col("blocks_a"), col("blocks_b")).as("hamming"))
+        .select(col("id_a"), col("id_b"), refHamming.as("hamming"))
         .filter(col("hamming") <= 3)
       assert(assertSameMultiset(got, ref) >= 20)
     }
+
+    test(s"simhashPairs with a bucket cap equals the capped block self-join ($sf)") {
+      val maxBucket = 2
+      val corpus = simhashCorpus
+      val got = Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3, maxBucket = maxBucket)
+      // the cap as a join: count each (block_idx, block_val) bucket,
+      // join the survivors back, self-join the bucket on id_a < id_b
+      val exploded = refFingerprints(corpus)
+        .select(col("id"), col("blocks"), posexplode(col("blocks")).as(Seq("block_idx", "block_val")))
+      val sizes = exploded.groupBy(col("block_idx"), col("block_val")).agg(count(lit(1)).as("n"))
+      assert(sizes.filter(col("n") > maxBucket).count() > 0, "the cap drops no bucket")
+      val capped = exploded.join(sizes.filter(col("n") <= maxBucket), Seq("block_idx", "block_val"))
+      val ref = capped.select(col("id").as("id_a"), col("blocks").as("blocks_a"),
+          col("block_idx"), col("block_val"))
+        .join(capped.select(col("id").as("id_b"), col("blocks").as("blocks_b"),
+          col("block_idx"), col("block_val")), Seq("block_idx", "block_val"))
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"), refHamming.as("hamming"))
+        .filter(col("hamming") <= 3)
+        .distinct()
+      assert(assertSameMultiset(got, ref) > 0)
+    }
   }
+
+  /** (min id, SimHash blocks) per distinct text, in plain Spark: the
+    * lower-cased whitespace tokens hashed with xxhash64, each of the 64
+    * bits set where more than half the tokens set it, folded MSB-first
+    * into four 16-bit blocks.
+    */
+  private def refFingerprints(corpus: DataFrame): DataFrame = {
+    val hs = transform(filter(split(lower(col("text")), "\\s+"), t => length(t) > 0),
+      t => xxhash64(t))
+    def bit(k: Int): Column =
+      size(filter(col("hs"), h => shiftrightunsigned(h, k).bitwiseAND(1L) === 1L)) * 2 > size(col("hs"))
+    val blocks = array((0 until 4).map(b =>
+      (0 until 16).map(i => when(bit(b * 16 + i), lit(1L << (15 - i))).otherwise(lit(0L)))
+        .reduce(_ + _)): _*)
+    corpus.groupBy(col("text")).agg(min(col("doc_id")).as("id"))
+      .filter(col("id").isNotNull)
+      .select(col("id"), hs.as("hs"))
+      .select(col("id"), blocks.as("blocks"))
+  }
+
+  private val refHamming: Column = (0 until 4)
+    .map(b => bit_count(col("blocks_a")(b).bitwiseXOR(col("blocks_b")(b))).cast("long"))
+    .reduce(_ + _)
 }

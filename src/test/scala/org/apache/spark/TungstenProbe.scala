@@ -2,8 +2,9 @@ package org.apache.spark
 
 import org.apache.spark.storage.BroadcastBlockId
 
-/** Reads the driver's Tungsten page size and the size its memory store
-  * holds a broadcast value at; both are package-private to Spark.
+/** Reads the driver's Tungsten page size, the size its memory store
+  * holds a broadcast value at and the sizes of a broadcast's serialized
+  * pieces; all are package-private to Spark.
   */
 object TungstenProbe {
   def pageSizeBytes: Long = SparkEnv.get.memoryManager.pageSizeBytes
@@ -11,4 +12,14 @@ object TungstenProbe {
   /** Bytes the memory store reports for broadcast `id`'s deserialized value. */
   def broadcastValueBytes(id: Long): Long =
     SparkEnv.get.blockManager.memoryStore.getSize(BroadcastBlockId(id))
+
+  /** Sizes of the serialized pieces the driver's block manager holds for
+    * broadcast `id`, in piece order.
+    */
+  def broadcastPieceBytes(id: Long): Seq[Long] =
+    Iterator.from(0)
+      .map(k => SparkEnv.get.blockManager.getStatus(BroadcastBlockId(id, s"piece$k")))
+      .takeWhile(_.isDefined)
+      .map(s => s.get.memSize + s.get.diskSize)
+      .toSeq
 }
