@@ -2,16 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.plans.{DuckDialect, SqlText}
+import graft.plans.{AsofSql, DuckDialect, PivotStmt, SqlText, StatementScope}
 import graft.plans.{StatementSurface => S}
 
 /** The DuckDB-dialect front door: run the reference engine's query
   * text verbatim. `sql` translates the dialect-specific spellings
-  * (plans/DuckDialect) and hands the result to Catalyst; the original
-  * text is recorded in the session so `current_query()` answers like
-  * the reference's. Every statement pass here reads the text through
-  * plans/SqlText, the one lexical rule: keywords, parens and commas
-  * inside literals, quoted names and comments are never code.
+  * (plans/DuckDialect) and hands the result to Catalyst. Each
+  * statement runs in its own plans/StatementScope: a pass that
+  * computes a relation binds it there, and `current_query()` reads the
+  * statement as typed from it. Every statement pass here reads the
+  * text through plans/SqlText, the one lexical rule: keywords, parens
+  * and commas inside literals, quoted names and comments are never
+  * code.
   */
 object GraftSql {
   def translate(text: String): String = DuckDialect.translate(text)
@@ -24,9 +26,8 @@ object GraftSql {
     ("""(?is)^\s*(WITH\b.+?\))?\s*(?:SELECT\s+\*\s+)?FROM\s+([\w.]+)\s+PIVOT\s*\(\s*(.+?)\s+FOR\s+""" +
       """([\w.]+)\s+IN\s*\((.+?)\)\s*GROUP\s+BY\s+(.+?)\s*\)\s*;?\s*$""").r
 
-  private[graft] val CreateViewPivot =
-    ("""(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?(TEMP(?:ORARY)?\s+)?VIEW\s+""" +
-      """([\w."`]+)\s+AS\s+((?:PIVOT|PIVOT_WIDER|UNPIVOT|PIVOT_LONGER)\b.*)$""").r
+  private val CreateView =
+    """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW\s+([\w."`]+)\s+AS\s+(.*)$""".r
 
   /** `inner LIMIT <pct> % [OFFSET <expr>]` at statement tail — the
     * percent operand is a number, a parenthesized expression of ANY
@@ -98,11 +99,16 @@ object GraftSql {
     * literals and quoted names they are data and must survive. */
   private val InvisibleSpace = "[\u2000-\u200B\u202F\u3000\u205F\uFEFF\u00A0]".r
 
-  def sql(spark: SparkSession, text00: String): DataFrame = {
+  /** Run one statement. The outermost call opens the statement scope
+    * and closes it when the statement's frame is analyzed; the
+    * re-entries below join it. */
+  def sql(spark: SparkSession, text00: String): DataFrame =
+    StatementScope.run(text00)(statement(spark, text00))
+
+  private def statement(spark: SparkSession, text00: String): DataFrame = {
     // comments go first: the statement layer's verb patterns would
     // read a trailing `-- note` as part of the statement
     val text0 = SqlText.stripComments(SqlText.replaceInCode(text00, InvisibleSpace)(_ => " "))
-    spark.conf.set("spark.graft.current_query", text00)
     // an empty / whitespace-only / comment-only statement is a no-op
     // (the reference's `statement ok` on a lone invisible space)
     if (text0.trim.isEmpty) return spark.emptyDataFrame
@@ -126,6 +132,18 @@ object GraftSql {
       case _ =>
         graft.plans.EnumTypes.substitute(spark,
           graft.plans.Variables.substitute(spark, text1))
+    }
+    // CREATE VIEW … AS <a body the front door computes>: its text
+    // reaches Spark only over names bound in this statement's scope, so
+    // the view is registered from the analyzed frame — as a session
+    // temp view under the last name part, also for a non-TEMP or
+    // schema-qualified CREATE VIEW (the session has one view namespace)
+    text match {
+      case CreateView(name, body) if eagerBody(body) =>
+        val viewName = name.replace("\"", "").replace("`", "").split('.').last
+        sql(spark, body).createOrReplaceTempView(viewName)
+        return S.emptyDf(spark)
+      case _ =>
     }
     // schema-aware dialect rewrites that need the session
     unionByNamePass(spark, text) match {
@@ -169,23 +187,18 @@ object GraftSql {
           s"PIVOT $rel ON $col IN ($vals) USING $agg GROUP BY $grp")
       case _ =>
     }
-    // CREATE VIEW … AS <statement-form PIVOT/UNPIVOT>: the verb can't
-    // reach Spark's parser — materialize the pivot and register the
-    // view name (session view, like the engine's other view surface)
-    text match {
-      case CreateViewPivot(_, _, name, body) =>
-        // createOrReplaceTempView rejects multi-part names: a
-        // schema-qualified `CREATE VIEW s.v` registers under the last
-        // name part (the session has one view namespace — same
-        // downgrade the engine's other view surface applies, and a
-        // non-TEMP CREATE VIEW also becomes a session temp view here)
-        val viewName = name.replace("\"", "").replace("`", "")
-          .split('.').last
-        sql(spark, body).createOrReplaceTempView(viewName)
-        return S.emptyDf(spark)
-      case _ =>
+    // `WITH ctes… <DML | statement PIVOT | ASOF join>`, or CTE bodies
+    // holding an ASOF join: the remainder runs outside Spark's parser,
+    // so each CTE is bound in the statement scope under its own name
+    // (the engine's CTE materialization; a later body sees the earlier
+    // names) and the remainder runs
+    cteBinding(text) match {
+      case Some((ctes, rest)) =>
+        ctes.foreach { case (name, body) => StatementScope.get.bind(name, sql(spark, body)) }
+        return sql(spark, rest)
+      case None =>
     }
-    graft.plans.PivotStmt.pass(spark, text, sql) match {
+    PivotStmt.pass(spark, text, sql) match {
       case Some(v) => return sql(spark, v)
       case None =>
     }
@@ -385,48 +398,16 @@ object GraftSql {
       // Spark's native path below.
       case _ if graft.sources.DmlSql.matches(text) =>
         return graft.sources.DmlSql.run(spark, text)
-      // `WITH ctes… UPDATE/DELETE/INSERT/MERGE …` (incl. AS
-      // [NOT] MATERIALIZED bodies): materialize the CTEs as temp views
-      // — the engine's CTE materialization — and re-enter with the
-      // bare DML statement (r13, cte_in_dml corpus). The views are
-      // STATEMENT-scoped: a CTE name must not outlive the DML, shadow
-      // a same-named catalog table for later queries, or clobber a
-      // pre-existing user temp view — so capture any prior temp view
-      // and drop/restore in a finally (r13 advice; DML executes
-      // eagerly through DmlSql, so nothing lazy escapes the scope).
-      case _ if text.trim.toUpperCase.startsWith("WITH") &&
-          graft.plans.PivotStmt.cteTail(text).exists { case (_, rest) =>
-            "(?is)^\\s*(UPDATE|DELETE|INSERT|MERGE)\\b".r
-              .findFirstIn(rest).isDefined } =>
-        val (ctes, rest) = graft.plans.PivotStmt.cteTail(text).get
-        val prior = ctes.map { case (name, _) =>
-          val wasTempView =
-            try spark.sessionState.catalog.isTempView(
-              spark.sessionState.sqlParser.parseTableIdentifier(name))
-            catch { case _: Exception => false }
-          name -> (if (wasTempView) Some(spark.table(name)) else None)
-        }
-        try {
-          ctes.foreach { case (name, body) =>
-            sql(spark, body).createOrReplaceTempView(name)
-          }
-          return sql(spark, rest)
-        } finally {
-          prior.foreach {
-            case (name, Some(df)) => df.createOrReplaceTempView(name)
-            case (name, None)     => spark.catalog.dropTempView(name)
-          }
-        }
       // ASOF … USING (col) — at any depth — rewrites LAZILY to a
       // LATERAL top-1 probe (composes with correlated subqueries,
       // which the eager statement rewrite below cannot)
-      case _ if graft.plans.AsofSql.usingPass(text).isDefined =>
-        return sql(spark, graft.plans.AsofSql.usingPass(text).get)
+      case _ if AsofSql.usingPass(text).isDefined =>
+        return sql(spark, AsofSql.usingPass(text).get)
       // ASOF [LEFT] JOIN statement syntax → the union+window plan
       // (plans/AsofSql → operators/Joins.asofJoin), then the rewritten
       // statement continues through the normal path
-      case _ if graft.plans.AsofSql.matches(text) =>
-        return sql(spark, graft.plans.AsofSql.rewrite(spark, text))
+      case _ if AsofSql.matches(text) =>
+        return sql(spark, AsofSql.rewrite(spark, text))
       case _ =>
     }
     limitPercentSplit(text) match {
@@ -614,13 +595,31 @@ object GraftSql {
       sql.substring(rows.last._2 + 1))
   }
 
-  private val asofViewId = new java.util.concurrent.atomic.AtomicLong(100L)
+  private val DmlVerb = "(?is)^\\s*(UPDATE|DELETE|INSERT|MERGE)\\b".r
+
+  /** The CTE list and remainder of a `WITH` statement whose remainder
+    * the front door runs itself (a DML verb, a statement PIVOT, an ASOF
+    * join) or whose CTE bodies hold an ASOF join; None otherwise, and
+    * the WITH stays Spark's. */
+  private[graft] def cteBinding(text: String): Option[(Seq[(String, String)], String)] =
+    PivotStmt.cteTail(text).filter { case (ctes, rest) =>
+      DmlVerb.findFirstIn(rest).isDefined || PivotStmt.leads(rest) ||
+        AsofSql.matches(rest) || ctes.exists { case (_, body) => AsofSql.matches(body) }
+    }
+
+  /** A view body the front door computes eagerly, or that names a
+    * relation already bound in the statement scope. */
+  private def eagerBody(body: String): Boolean =
+    SqlText.findInCode(body, UnionByName).isDefined ||
+      SqlText.findInCode(body, SubStmtRe).isDefined ||
+      AsofSql.matches(body) || PivotStmt.find(body).isDefined ||
+      cteBinding(body).isDefined || StatementScope.get.mentions(body)
 
   /** `(DESCRIBE …)` / `(SUMMARIZE …)` as a RELATION (reference
     * show_select: describe_subquery.test, summarize_subquery.test):
-    * run the inner statement through the front door and splice the
-    * result back as a subselect, so FROM items, aliases, and setop
-    * arms compose. (`(PIVOT …)` relations — pivot_6390's
+    * run the inner statement through the front door, bind the result
+    * in the statement scope and splice it back as a subselect, so FROM
+    * items, aliases, and setop arms compose. (`(PIVOT …)` relations — pivot_6390's
     * parenthesized statement form — are already handled upstream by
     * PivotStmt.pass, whose isStmt check treats a `(`-preceded PIVOT
     * keyword as the statement form.)
@@ -632,21 +631,20 @@ object GraftSql {
     SqlText.findInCode(text, SubStmtRe).map { m =>
       val close = SqlText.matchParen(text, m.start)
       val inner = text.substring(m.start + 1, close).trim
-      val df = sql(spark, inner)
-      val view = s"__sub_${asofViewId.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
+      val view = StatementScope.get.fresh("__sub_", sql(spark, inner))
       text.substring(0, m.start) + s"(SELECT * FROM $view)" + text.substring(close + 1)
     }
 
   /** `… UNION [ALL] BY NAME …` (reference setop syntax): execute the
-    * two sides, `unionByName(allowMissingColumns = true)`, splice a
-    * temp view into the enclosing scope. Without ALL the reference
-    * dedups — so does this. Column order matches the reference: left
-    * columns first, right-only columns appended.
+    * two sides, `unionByName(allowMissingColumns = true)`, bind the
+    * frame in the statement scope and splice its name into the
+    * enclosing query. Without ALL the reference dedups — so does this.
+    * Column order matches the reference: left columns first,
+    * right-only columns appended.
     */
+  private val UnionByName = "(?i)\\bUNION\\s+(ALL\\s+)?BY\\s+NAME\\b".r
   private def unionByNamePass(spark: SparkSession, text: String): Option[String] = {
-    val Re = "(?i)\\bUNION\\s+(ALL\\s+)?BY\\s+NAME\\b".r
-    SqlText.findInCode(text, Re).map { m =>
+    SqlText.findInCode(text, UnionByName).map { m =>
       val all = m.group(1) != null
       // enclosing scope: the '(' whose depth the match sits inside
       val open = SqlText.openParen(text, m.start)
@@ -683,9 +681,7 @@ object GraftSql {
       val l = sql(spark, left)
       val r = sql(spark, right)
       val u0 = l.unionByName(r, allowMissingColumns = true)
-      val u = if (all) u0 else u0.distinct()
-      val view = s"__setop_${asofViewId.incrementAndGet()}"
-      u.createOrReplaceTempView(view)
+      val view = StatementScope.get.fresh("__setop_", if (all) u0 else u0.distinct())
       text.substring(0, scopeStart) + prefix + s" SELECT * FROM $view $tail " +
         text.substring(close)
     }
@@ -752,11 +748,11 @@ object GraftSql {
       joinOperands(sql0, m.start, m.end) match {
         case Some((ls, left, rel, alias, re)) if SqlText.topIndexOf(left, "JOIN") < 0 =>
           val right = rel + alias.map(" " + _).getOrElse("")
-          val common = try {
-            val l = sql(spark, s"SELECT * FROM $left").columns
-            val r = sql(spark, s"SELECT * FROM $right").columns.map(_.toLowerCase).toSet
-            l.filter(c => r.contains(c.toLowerCase))
-          } catch { case _: Exception => Array.empty[String] }
+          // a probe that fails names the real fault: Spark has no
+          // NATURAL SEMI/ANTI, so the unrewritten statement fails too
+          val l = sql(spark, s"SELECT * FROM $left").columns
+          val r = sql(spark, s"SELECT * FROM $right").columns.map(_.toLowerCase).toSet
+          val common = l.filter(c => r.contains(c.toLowerCase))
           if (common.nonEmpty)
             return sql0.substring(0, ls) + s" $left LEFT ${m.group(1).toUpperCase} JOIN $right " +
               s"USING (${common.map(c => s"`$c`").mkString(", ")})" + sql0.substring(re)

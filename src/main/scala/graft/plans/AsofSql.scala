@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,10 +14,11 @@ import SqlText.{splitTop, topIndexOf}
   * reference's physical_asof_join.cpp, which is the plan that holds
   * at 100 TB.
   *
-  * Translate-time rewrite, schema-aware: the joined result is
-  * registered as a temp view and the statement re-targeted at it, so
-  * everything around the join (projections, WHERE, GROUP BY, the rest
-  * of the dialect) flows through the normal path. Supported shape:
+  * Translate-time rewrite, schema-aware: the joined result is bound in
+  * the statement scope (plans/StatementScope) and the statement
+  * re-targeted at it, so everything around the join (projections,
+  * WHERE, GROUP BY, the rest of the dialect) flows through the normal
+  * path. Supported shape:
   * `FROM <table> [alias] ASOF [LEFT] JOIN <table> [alias] ON <conds>`
   * with plain table names; equality conjuncts become the key, the one
   * inequality (>=, >, <=, <) the time ordering. Right-side columns
@@ -29,80 +28,20 @@ import SqlText.{splitTop, topIndexOf}
   */
 object AsofSql {
 
-  private val viewId = new AtomicLong(0L)
-
   private val ClauseKw = Set("WHERE", "GROUP", "HAVING", "WINDOW", "QUALIFY",
     "ORDER", "LIMIT", "UNION", "EXCEPT", "INTERSECT", "USING")
 
   /** True when the statement contains a top-level `ASOF
-    * [LEFT|RIGHT|SEMI] JOIN` — or is a WITH statement whose CTE
-    * bodies contain one (the rewrite materializes CTE bodies through
-    * the front door, which routes their nested ASOF recursively). */
+    * [LEFT|RIGHT|SEMI|ANTI] JOIN`. A WITH list ahead of it, or CTE
+    * bodies holding one, are bound by GraftSql first. */
   def matches(text: String): Boolean =
-    topIndexOf(text, "ASOF JOIN") >= 0 ||
-      topIndexOf(text, "ASOF LEFT JOIN") >= 0 ||
-      topIndexOf(text, "ASOF RIGHT JOIN") >= 0 ||
-      topIndexOf(text, "ASOF SEMI JOIN") >= 0 ||
-      topIndexOf(text, "ASOF ANTI JOIN") >= 0 ||
-      (text.trim.toUpperCase.startsWith("WITH") && cteBodyAsof(text))
-
-  private def cteBodyAsof(text: String): Boolean =
-    try {
-      var i = text.toUpperCase.indexOf("WITH") + 4
-      var found = false
-      var more = true
-      while (more && !found) {
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        val nameEnd = text.indexWhere(c => !(c.isLetterOrDigit || c == '_'), i)
-        if (nameEnd <= i) return false
-        i = nameEnd
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        if (!text.regionMatches(true, i, "AS", 0, 2)) return false
-        i += 2
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        if (i >= text.length || text.charAt(i) != '(') return false
-        val close = SqlText.matchParen(text, i)
-        if (matches(text.substring(i + 1, close))) found = true
-        i = close + 1
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        if (i < text.length && text.charAt(i) == ',') i += 1 else more = false
-      }
-      found
-    } catch { case _: Exception => false }
+    Seq("ASOF JOIN", "ASOF LEFT JOIN", "ASOF RIGHT JOIN", "ASOF SEMI JOIN", "ASOF ANTI JOIN")
+      .exists(topIndexOf(text, _) >= 0)
 
   /** Execute the join and return the statement rewritten over the
-    * registered view. A leading WITH clause is materialized first —
-    * each CTE becomes a temp view (the reference binds CTEs before
-    * the join ref the same way), so `ASOF JOIN <cte>` works.
-    */
-  def rewrite(spark: SparkSession, text0: String): String = {
-    var text = text0
-    if (text.trim.toUpperCase.startsWith("WITH")) {
-      var i = text.indexOf(text.trim.take(4)) + 4
-      var more = true
-      while (more) {
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        val nameEnd = text.indexWhere(c => !(c.isLetterOrDigit || c == '_'), i)
-        val name = text.substring(i, nameEnd)
-        i = nameEnd
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        require(text.regionMatches(true, i, "AS", 0, 2), "WITH: expected AS")
-        i += 2
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        require(text.charAt(i) == '(', "WITH: expected (query)")
-        val close = SqlText.matchParen(text, i)
-        graft.GraftSql.sql(spark, text.substring(i + 1, close))
-          .createOrReplaceTempView(name)
-        i = close + 1
-        while (i < text.length && text.charAt(i).isWhitespace) i += 1
-        if (i < text.length && text.charAt(i) == ',') i += 1 else more = false
-      }
-      text = text.substring(i)
-    }
+    * joined frame's name in the statement scope. */
+  def rewrite(spark: SparkSession, text: String): String = {
     val asofIdx = topIndexOf(text, "ASOF")
-    // WITH statement whose ASOF lived entirely inside the (already
-    // materialized) CTE bodies: nothing left to rewrite here
-    if (asofIdx < 0) return text
     val fromIdx = topIndexOf(text, "FROM")
     require(fromIdx >= 0, "ASOF JOIN: no FROM clause")
     require(asofIdx > fromIdx, "ASOF JOIN: ASOF before FROM")
@@ -220,8 +159,7 @@ object AsofSql {
       else if (anti)
         lt.exceptAll(joined0.select(lt.columns.map(col).toIndexedSeq: _*))
       else joined0
-    val view = s"__asof_${viewId.incrementAndGet()}"
-    joined.createOrReplaceTempView(view)
+    val view = StatementScope.get.fresh("__asof_", joined)
     strip(textHead) + "FROM " + view + " " + strip(tailR)
   }
 
@@ -229,9 +167,9 @@ object AsofSql {
     val t = s.trim
     if (t.startsWith("(")) {
       // parenthesized relation (`(VALUES …) AS t1` / `(SELECT …) t1`):
-      // materialize through the front door as a temp view. Bare
-      // VALUES bodies get the reference's col0… column names (Spark
-      // numbers them col1…).
+      // run through the front door and bound in the statement scope.
+      // Bare VALUES bodies get the reference's col0… column names
+      // (Spark numbers them col1…).
       val close = SqlText.matchParen(t, 0)
       var df = graft.GraftSql.sql(spark, t.substring(1, close))
       if (t.substring(1, close).trim.toUpperCase.startsWith("VALUES") &&
@@ -253,13 +191,11 @@ object AsofSql {
         if (cols.length == df.columns.length)
           df = df.toDF(cols.toIndexedSeq: _*)
       }
-      val view = s"__asof_rel_${viewId.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      // do NOT register the raw alias as a session view: it would
-      // outlive the statement and shadow same-named catalog tables
-      // for every later query (r13 advice). Alias qualifiers in the
-      // spliced statement are handled by strip()/renameRefs instead.
-      (view, alias)
+      // bound under a fresh name, not the raw alias: the alias would
+      // shadow a same-named table for the rest of the statement. Alias
+      // qualifiers in the spliced statement are handled by
+      // strip()/renameRefs instead.
+      (StatementScope.get.fresh("__asof_rel_", df), alias)
     } else {
       val parts = t.split("\\s+").filterNot(_.equalsIgnoreCase("AS"))
       require(parts.nonEmpty && parts.length <= 2,

@@ -331,7 +331,9 @@ object DuckDialect {
             return out.mkString(" ")
           }
         } catch {
-          case _: Exception => i = save // not a plain CTE list: glue path
+          // not a plain CTE list (a failed require, or the tokens ran
+          // out): re-read it on the glue path
+          case _: IllegalArgumentException | _: IndexOutOfBoundsException => i = save
         }
       }
       while (more && !peekOp(")")) {

@@ -838,15 +838,15 @@ object FunctionTable {
   // ---- session introspection, all bind-time constants like the
   // reference's bind data: current_setting reads SQLConf,
   // current_schemas/in_search_path read the session catalog,
-  // current_query returns the text GraftSql recorded, txid_current is
-  // a session-monotonic id (transactions are per-query; sources/Dml) ----
+  // current_query returns the front-door statement as typed (its
+  // StatementScope), txid_current is a session-monotonic id
+  // (transactions are per-query; sources/Dml) ----
   private val txid = new AtomicLong(1000L)
 
   private def introspection: Seq[Fn] = Seq(
     fn("current_setting")(1)(a =>
       Literal(SQLConf.get.getConfString(constString("current_setting", a(0)), ""))),
-    fn("current_query")(0)(_ =>
-      Literal(SQLConf.get.getConfString("spark.graft.current_query", ""))),
+    fn("current_query")(0)(_ => Literal(StatementScope.current.map(_.text).getOrElse(""))),
     fn("txid_current")(0)(_ => Literal(txid.incrementAndGet())),
     fn("current_schemas")(1) { a =>
       val db = SparkSession.active.catalog.currentDatabase
@@ -936,6 +936,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (sources/Txn): post-hoc so relations are already resolved to
     // their file sources
     e.injectPostHocResolutionRule(s => TxnSnapshotRule(s))
+    // relations a front-door statement computed for itself, resolved
+    // ahead of the catalog (plans/StatementScope)
+    e.injectHintResolutionRule(_ => StatementScopeRule)
     FunctionTable.inject(e)
   }
 }

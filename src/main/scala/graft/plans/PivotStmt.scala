@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,9 +22,10 @@ import SqlText.{splitTop, topIndexOf}
   * Spark's relational `groupBy(..).pivot(values).agg(..)` — a
   * map-side-combinable single shuffle, no driver data path beyond
   * the bounded (≤10k) value list every engine materializes as
-  * schema. The rewritten statement is spliced back as a temp view so
-  * the surrounding scope (CTE arm, FROM item, setop arm, tails)
-  * continues through the normal front door.
+  * schema. The pivoted frame is bound in the statement scope
+  * (plans/StatementScope) and its name spliced back, so the
+  * surrounding query (CTE arm, FROM item, setop arm, tails) continues
+  * through the normal front door.
   *
   * Observed reference semantics pinned by PivotStmtSpec:
   * - implicit GROUP BY (no GROUP BY given): with ON → every source
@@ -45,8 +44,6 @@ import SqlText.{splitTop, topIndexOf}
   *   `name`/`value`.
   */
 object PivotStmt {
-  private val viewId = new AtomicLong(500L)
-
   private val KwRe = "(?i)\\b(PIVOT_WIDER|PIVOT_LONGER|UNPIVOT|PIVOT)\\b".r
   // scope openers a statement-form keyword can directly follow; an
   // identifier or ')' before PIVOT means the SQL-standard FROM-clause
@@ -54,28 +51,15 @@ object PivotStmt {
   private val PrevWordOk =
     Set("UNION", "ALL", "DISTINCT", "INTERSECT", "EXCEPT", "NAME")
 
-  /** Rewrite the first statement-form occurrence; None = nothing to do. */
-  def pass(spark: SparkSession, text: String,
-      runSql: (SparkSession, String) => DataFrame): Option[String] = {
-    // `WITH ctes… PIVOT tbl ON …` (pivot_6390.test): a statement-form
-    // pivot can follow a CTE list — materialize the CTEs as temp
-    // views (the reference binds CTEs before the pivot ref the same
-    // way) and continue on the remainder
-    cteTail(text).foreach { case (ctes, rest) =>
-      if (KwRe.findPrefixMatchOf(rest.trim).exists(_.start == 0) ||
-          rest.trim.toUpperCase.matches("(?s)^(PIVOT|PIVOT_WIDER|UNPIVOT|PIVOT_LONGER)\\b.*")) {
-        ctes.foreach { case (name, body) =>
-          runSql(spark, body).createOrReplaceTempView(name)
-        }
-        return Some(rest)
-      }
-    }
-    for (m <- KwRe.findAllMatchIn(text)
-           if SqlText.inCode(text, m.start)) {
-      val before = text.substring(0, m.start)
-      val trimmed = before.reverse.dropWhile(_.isWhitespace)
+  /** True when the text starts with a statement-form keyword. */
+  def leads(text: String): Boolean = KwRe.findPrefixMatchOf(text.trim).isDefined
+
+  /** The first statement-form keyword in code; None = nothing to do. */
+  def find(text: String): Option[scala.util.matching.Regex.Match] =
+    KwRe.findAllMatchIn(text).find { m =>
+      val trimmed = text.substring(0, m.start).reverse.dropWhile(_.isWhitespace)
       val after = text.substring(m.end).dropWhile(_.isWhitespace)
-      val isStmt = trimmed.isEmpty || trimmed.head == '(' || {
+      SqlText.inCode(text, m.start) && (trimmed.isEmpty || trimmed.head == '(' || {
         val w = trimmed.takeWhile(c => c.isLetterOrDigit || c == '_').reverse
         w.nonEmpty && PrevWordOk(w.toUpperCase)
       } || {
@@ -84,71 +68,43 @@ object PivotStmt {
         // means the statement form
         trimmed.headOption.contains(')') && after.headOption.exists(c =>
           c.isLetter || c == '_' || c == '"')
-      }
-      if (isStmt) {
-        val kw = m.group(1).toUpperCase
-        val unpivot = kw == "UNPIVOT" || kw == "PIVOT_LONGER"
-        return Some(rewriteAt(spark, text, m.start, m.end, unpivot, runSql))
-      }
+      })
     }
-    None
-  }
+
+  /** Rewrite the first statement-form occurrence; None = nothing to do. */
+  def pass(spark: SparkSession, text: String,
+      runSql: (SparkSession, String) => DataFrame): Option[String] =
+    find(text).map { m =>
+      val kw = m.group(1).toUpperCase
+      val unpivot = kw == "UNPIVOT" || kw == "PIVOT_LONGER"
+      rewriteAt(spark, text, m.start, m.end, unpivot, runSql)
+    }
+
+  // one CTE head up to its body's '(': name, optional column-alias
+  // list, AS, optional [NOT] MATERIALIZED (the reference's
+  // materialization hint — a no-op here: a CTE bound in the statement
+  // scope is the materialization)
+  private val CteHead =
+    """(?is)^\s*([\p{L}\p{N}_]+)\s*(?:\(([^()]*)\))?\s*AS\s*(?:NOT\s+)?(?:MATERIALIZED\s*)?(?=\()""".r
 
   /** Parse a leading `WITH name[(cols)] AS (body) [, …]` list; returns
     * the (name, body-with-column-aliases) pairs and the remainder. */
   private[graft] def cteTail(text: String): Option[(Seq[(String, String)], String)] = {
-    val t = text
-    var i = 0
-    while (i < t.length && t.charAt(i).isWhitespace) i += 1
-    if (!t.regionMatches(true, i, "WITH", 0, 4)) return None
-    i += 4
+    var i = "(?is)^\\s*WITH\\b".r.findFirstMatchIn(text).getOrElse(return None).end
     val ctes = Seq.newBuilder[(String, String)]
     var more = true
     while (more) {
-      while (i < t.length && t.charAt(i).isWhitespace) i += 1
-      val nameEnd = {
-        val e = t.indexWhere(c => !(c.isLetterOrDigit || c == '_'), i)
-        if (e < 0) t.length else e
-      }
-      val name = t.substring(i, nameEnd)
-      if (name.isEmpty) return None
-      i = nameEnd
-      while (i < t.length && t.charAt(i).isWhitespace) i += 1
-      // optional column-alias list
-      var colAliases = ""
-      if (i < t.length && t.charAt(i) == '(') {
-        val close = SqlText.matchParen(t, i)
-        colAliases = t.substring(i + 1, close)
-        i = close + 1
-        while (i < t.length && t.charAt(i).isWhitespace) i += 1
-      }
-      if (!t.regionMatches(true, i, "AS", 0, 2)) return None
-      i += 2
-      while (i < t.length && t.charAt(i).isWhitespace) i += 1
-      // optional [NOT] MATERIALIZED hint (the reference's CTE
-      // materialization control — a no-op here: temp views are the
-      // materialization)
-      if (t.regionMatches(true, i, "NOT", 0, 3) &&
-          i + 3 < t.length && t.charAt(i + 3).isWhitespace) {
-        i += 3
-        while (i < t.length && t.charAt(i).isWhitespace) i += 1
-      }
-      if (t.regionMatches(true, i, "MATERIALIZED", 0, 12)) {
-        i += 12
-        while (i < t.length && t.charAt(i).isWhitespace) i += 1
-      }
-      if (i >= t.length || t.charAt(i) != '(') return None
-      val close = SqlText.matchParen(t, i)
-      val body0 = t.substring(i + 1, close)
-      val body =
-        if (colAliases.trim.isEmpty) body0
-        else s"SELECT * FROM ($body0) AS __cte_t($colAliases)"
-      ctes += ((name, body))
-      i = close + 1
-      while (i < t.length && t.charAt(i).isWhitespace) i += 1
-      if (i < t.length && t.charAt(i) == ',') i += 1 else more = false
+      val head = CteHead.findFirstMatchIn(text.substring(i)).getOrElse(return None)
+      val close = SqlText.matchParen(text, i + head.end)
+      if (close < 0) return None
+      val body = text.substring(i + head.end + 1, close)
+      ctes += head.group(1) -> Option(head.group(2)).filter(_.trim.nonEmpty)
+        .fold(body)(cols => s"SELECT * FROM ($body) AS __cte_t($cols)")
+      val comma = "^\\s*,".r.findFirstMatchIn(text.substring(close + 1))
+      i = close + 1 + comma.fold(0)(_.end)
+      more = comma.isDefined
     }
-    Some((ctes.result(), t.substring(i)))
+    Some((ctes.result(), text.substring(i)))
   }
 
   // ------------------------------------------------------------ shared
@@ -195,8 +151,7 @@ object PivotStmt {
 
   private def splice(text: String, kwStart: Int, specEnd: Int,
       df: DataFrame, tail: String): String = {
-    val view = s"__pivot_${viewId.incrementAndGet()}"
-    df.createOrReplaceTempView(view)
+    val view = StatementScope.get.fresh("__pivot_", df)
     text.substring(0, kwStart) + s"(SELECT * FROM $view) " + tail +
       text.substring(specEnd)
   }

@@ -137,8 +137,10 @@ object TableFns {
       // numeric type and fail on non-numeric data). Probe the schemas
       // and spell the casts.
       val schemas = names.map { n =>
+        // a name Spark cannot resolve keeps the plain union arm, which
+        // then raises Spark's own error for it
         try Some(spark.table(n.replace("\"", "`")).schema)
-        catch { case _: Exception => None }
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
       }
       val arms =
         if (schemas.forall(_.isDefined) &&

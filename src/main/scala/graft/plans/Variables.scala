@@ -71,8 +71,9 @@ object Variables {
   }
 
   /** Splice `getvariable('x')` calls as literals (bind-time
-    * constant-fold) and `duckdb_variables()` as a fresh temp view,
-    * skipping string-literal spans. Returns the text unchanged when
+    * constant-fold), and `duckdb_variables()` / `duckdb_secrets()` as
+    * their listing bound in the statement scope, skipping
+    * string-literal spans. Returns the text unchanged when
     * neither appears (the common path stays zero-cost).
     */
   def substitute(spark: SparkSession, text: String): String = {
@@ -93,11 +94,9 @@ object Variables {
             s"getvariable: expected a string literal, got: ${arg.trim}"))
           Some(Option(vars.get(name.toLowerCase)).map(_.literal).getOrElse("NULL") -> (close + 1))
         case "duckdb_variables" =>
-          listDf(spark).createOrReplaceTempView("__duckdb_variables")
-          Some("__duckdb_variables" -> (close + 1))
+          Some(StatementScope.get.fresh("__duckdb_variables_", listDf(spark)) -> (close + 1))
         case "duckdb_secrets" =>
-          Secrets.listDf(spark).createOrReplaceTempView("__duckdb_secrets")
-          Some("__duckdb_secrets" -> (close + 1))
+          Some(StatementScope.get.fresh("__duckdb_secrets_", Secrets.listDf(spark)) -> (close + 1))
         case _ => None
       }
     }

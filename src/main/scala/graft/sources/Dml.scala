@@ -136,6 +136,15 @@ object Dml {
     Txn.wrote(spark, path)
   }
 
+  private val Matched = "__dml_matched"
+
+  /** `hit` with `cond` (NULL as false) as a column: the observed count
+    * and the rewrite read the column, so an `IN (SELECT …)` predicate
+    * sits in a projection, where Spark allows it, and not inside the
+    * observed aggregate, where it does not. */
+  private def matched(hit: DataFrame, cond: Column): DataFrame =
+    hit.withColumn(Matched, coalesce(cond, lit(false)))
+
   /** UPDATE <path> SET <set> WHERE <cond>. Only hit files are
     * rewritten; non-matching rows in a hit file are carried through
     * unchanged. Stats come from an `observe` on the rewrite job
@@ -147,11 +156,11 @@ object Dml {
       case None => DmlStats(0, 0, 0)
       case Some((hit, files)) =>
         val obs = Observation()
-        val observed = hit.observe(obs,
-          sum(when(cond, 1L).otherwise(0L)).as("n"))
+        val observed = matched(hit, cond).observe(obs,
+          sum(when(col(Matched), 1L).otherwise(0L)).as("n"))
         val cols = hit.columns.map { c =>
           set.get(c) match {
-            case Some(v) => when(cond, v).otherwise(col(c)).as(c)
+            case Some(v) => when(col(Matched), v).otherwise(col(c)).as(c)
             case None    => col(c)
           }
         }
@@ -168,10 +177,9 @@ object Dml {
       case None => DmlStats(0, 0, 0)
       case Some((hit, files)) =>
         val obs = Observation()
-        val matchedCond = coalesce(cond, lit(false))
-        val observed = hit.observe(obs,
-          sum(when(matchedCond, 1L).otherwise(0L)).as("n"))
-        swap(spark, path, observed.filter(!matchedCond), files)
+        val observed = matched(hit, cond).observe(obs,
+          sum(when(col(Matched), 1L).otherwise(0L)).as("n"))
+        swap(spark, path, observed.filter(!col(Matched)).drop(Matched), files)
         DmlStats(files.size, obs.get("n").asInstanceOf[Long], 0)
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.plans.{DuckDialect, SqlText, TableMeta}
+import graft.plans.{DuckDialect, SqlText, StatementScope, TableMeta}
 import graft.plans.SqlText.{matchParen, splitTop, topIndexOf}
 
 /** Mutation statements through the dialect front door — the
@@ -325,8 +325,6 @@ object DmlSql {
 
   // ------------------------------------------------------------ helpers
 
-  private val retViewId = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Snapshot a DataFrame before the table's files are swapped out —
     * RETURNING materializes the affected rows to a temp location so
     * the projection never re-reads deleted files. RETURNING is a
@@ -356,17 +354,13 @@ object DmlSql {
 
   /** Apply the RETURNING projection through the front door — so `*`,
     * expressions, aliases and COLUMNS('re') all work (the reference
-    * binds the returning list like a SELECT list).
+    * binds the returning list like a SELECT list). The affected rows
+    * are bound in the statement scope for the projection.
     */
   private def projectReturning(spark: SparkSession, rows: DataFrame,
                                proj: String): DataFrame = {
-    val v = s"__returning_${retViewId.incrementAndGet()}"
-    rows.createOrReplaceTempView(v)
-    // the returned plan is analyzed eagerly, so the view can be
-    // dropped immediately — no per-statement catalog growth
-    val out = graft.GraftSql.sql(spark, s"SELECT ${proj.trim} FROM $v")
-    spark.catalog.dropTempView(v): Unit
-    out
+    val v = StatementScope.get.fresh("__returning_", rows)
+    graft.GraftSql.sql(spark, s"SELECT ${proj.trim} FROM $v")
   }
 
   /** Rebuilds `e` with each bare column reference (not qualified, not

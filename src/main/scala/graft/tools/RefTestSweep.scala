@@ -167,11 +167,9 @@ object RefTestSweep {
         statementFormPivot ||
         graft.GraftSql.FromSuffixPivot.findFirstIn(sql).isDefined ||
         (try graft.sources.DmlSql.matches(sql) catch { case _: Exception => false }) ||
-        // WITH-prefixed DML: GraftSql materializes the CTE list as
-        // temp views and re-enters with the bare DML statement
-        (try sql.trim.toUpperCase.startsWith("WITH") &&
-          graft.plans.PivotStmt.cteTail(sql).exists { case (_, rest) =>
-            "(?is)^\\s*(UPDATE|DELETE|MERGE)\\b".r.findFirstIn(rest).isDefined }
+        // WITH-prefixed DML, PIVOT or ASOF: GraftSql binds the CTE
+        // list in the statement scope and runs the remainder
+        (try graft.GraftSql.cteBinding(sql).isDefined
          catch { case _: Exception => false }) ||
         (try graft.plans.AsofSql.matches(sql) catch { case _: Exception => false }) ||
         // ASOF … USING at any depth: GraftSql's lazy LATERAL rewrite

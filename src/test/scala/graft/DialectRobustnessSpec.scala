@@ -47,6 +47,27 @@ class DialectRobustnessSpec extends AnyFunSuite {
     spark.catalog.dropTempView("temp_view_x")
   }
 
+  test("CREATE [TEMP] VIEW over a UNION BY NAME body reads back in a later statement") {
+    // DuckDB 1.0.0: (1, NULL) and (NULL, 2), for both forms
+    Seq("CREATE VIEW ubn_v", "CREATE TEMP VIEW ubn_tv").foreach { create =>
+      val name = create.split(' ').last
+      GraftSql.sql(spark, s"$create AS SELECT 1 AS a UNION ALL BY NAME SELECT 2 AS b")
+      try assert(GraftSql.sql(spark, s"SELECT * FROM $name").collect().map(_.toSeq).toSet
+        === Set(Seq(1, null), Seq(null, 2)), create)
+      finally spark.catalog.dropTempView(name)
+    }
+    // a body over a listing the statement binds for itself
+    GraftSql.sql(spark, "SET VARIABLE ubn_x = 42")
+    try {
+      GraftSql.sql(spark,
+        "CREATE TEMP VIEW ubn_vars AS SELECT value FROM duckdb_variables() WHERE name = 'ubn_x'")
+      assert(GraftSql.sql(spark, "SELECT * FROM ubn_vars").collect().map(_.get(0)).toSeq === Seq("42"))
+    } finally {
+      spark.catalog.dropTempView("ubn_vars")
+      GraftSql.sql(spark, "RESET VARIABLE ubn_x")
+    }
+  }
+
   test("CREATE SCHEMA / DROP with CASCADE modifiers") {
     GraftSql.sql(spark, "CREATE SCHEMA IF NOT EXISTS robustness_test")
     GraftSql.sql(spark, "DROP SCHEMA robustness_test")
@@ -233,29 +254,30 @@ class DialectRobustnessSpec extends AnyFunSuite {
     assert(GraftSql.sql(spark, "SELECT 2 NOT IN [1, 2, 3] AS f").collect()(0).get(0) === false)
   }
 
+  private val literalCases = Seq(
+    """SELECT x AS "it's" FROM range(10) t(x) LIMIT 20 PERCENT""" -> Seq(Seq("0"), Seq("1")),
+    "SELECT x FROM range(10) t(x) -- don't\nLIMIT 20 PERCENT" -> Seq(Seq("0"), Seq("1")),
+    """SELECT x AS "a(b" FROM range(3) t(x) LIMIT 50 PERCENT""" -> Seq(Seq("0")),
+    """SELECT "a'b".x FROM (SELECT 1 AS x) "a'b" NATURAL SEMI JOIN (SELECT 1 AS x) r""" ->
+      Seq(Seq("1")),
+    """SELECT x AS "it's", row_number() OVER () AS r FROM range(3) t(x)""" ->
+      Seq(Seq("0", "1"), Seq("1", "2"), Seq("2", "3")),
+    // keyword rewrites must leave string data byte-for-byte
+    "SELECT 'skip OFFSET 5 LIMIT 3 rows' AS s" -> Seq(Seq("skip OFFSET 5 LIMIT 3 rows")),
+    "SELECT 'FROM db.range(3)' AS s" -> Seq(Seq("FROM db.range(3)")),
+    "SELECT 'WINDOW w AS (x)' AS s" -> Seq(Seq("WINDOW w AS (x)")),
+    // statement passes must not fire on keywords inside a literal
+    "SELECT 'x UNION ALL BY NAME y' AS s" -> Seq(Seq("x UNION ALL BY NAME y")),
+    "SELECT 'a EXCLUDE CURRENT ROW' AS s" -> Seq(Seq("a EXCLUDE CURRENT ROW")),
+    "SELECT 'CAST(explode(x) AS INT)' AS s" -> Seq(Seq("CAST(explode(x) AS INT)")),
+    // escape-string literals: \' does not end one, \n is a newline
+    "SELECT E'it\\'s' AS s" -> Seq(Seq("it's")),
+    "SELECT 'a' || E'\\n' || 'b' AS s" -> Seq(Seq("a\nb")))
+
   test("literals, quoted names and comments never hide or fake code (DuckDB 1.0.0 answers)") {
     def rows(q: String): Seq[Seq[String]] =
       GraftSql.sql(spark, q).collect().toSeq.map(_.toSeq.map(String.valueOf))
-    val cases = Seq(
-      """SELECT x AS "it's" FROM range(10) t(x) LIMIT 20 PERCENT""" -> Seq(Seq("0"), Seq("1")),
-      "SELECT x FROM range(10) t(x) -- don't\nLIMIT 20 PERCENT" -> Seq(Seq("0"), Seq("1")),
-      """SELECT x AS "a(b" FROM range(3) t(x) LIMIT 50 PERCENT""" -> Seq(Seq("0")),
-      """SELECT "a'b".x FROM (SELECT 1 AS x) "a'b" NATURAL SEMI JOIN (SELECT 1 AS x) r""" ->
-        Seq(Seq("1")),
-      """SELECT x AS "it's", row_number() OVER () AS r FROM range(3) t(x)""" ->
-        Seq(Seq("0", "1"), Seq("1", "2"), Seq("2", "3")),
-      // keyword rewrites must leave string data byte-for-byte
-      "SELECT 'skip OFFSET 5 LIMIT 3 rows' AS s" -> Seq(Seq("skip OFFSET 5 LIMIT 3 rows")),
-      "SELECT 'FROM db.range(3)' AS s" -> Seq(Seq("FROM db.range(3)")),
-      "SELECT 'WINDOW w AS (x)' AS s" -> Seq(Seq("WINDOW w AS (x)")),
-      // statement passes must not fire on keywords inside a literal
-      "SELECT 'x UNION ALL BY NAME y' AS s" -> Seq(Seq("x UNION ALL BY NAME y")),
-      "SELECT 'a EXCLUDE CURRENT ROW' AS s" -> Seq(Seq("a EXCLUDE CURRENT ROW")),
-      "SELECT 'CAST(explode(x) AS INT)' AS s" -> Seq(Seq("CAST(explode(x) AS INT)")),
-      // escape-string literals: \' does not end one, \n is a newline
-      "SELECT E'it\\'s' AS s" -> Seq(Seq("it's")),
-      "SELECT 'a' || E'\\n' || 'b' AS s" -> Seq(Seq("a\nb")))
-    cases.foreach { case (q, want) => assert(rows(q) === want, q) }
+    literalCases.foreach { case (q, want) => assert(rows(q) === want, q) }
   }
 
   test("list_sum sums in the element's numeric type and skips NULLs (DuckDB 1.0.0 answers)") {
@@ -276,16 +298,28 @@ class DialectRobustnessSpec extends AnyFunSuite {
       val df = GraftSql.sql(spark, s"SELECT $q AS v")
       (df.collect().head.get(0), df.schema.head.dataType)
     }
+    // DuckDB types every one BIGINT (cardinality UBIGINT)
+    datePartCases.foreach { case (q, want) => assert(one(q) === ((want, LongType)), q) }
+  }
+
+  private val datePartCases = {
     val sun = "DATE '2024-01-07'"
     val sat = "TIMESTAMP '2024-01-06 10:00:00'"
-    // DuckDB types every one BIGINT (cardinality UBIGINT)
     Seq(s"dayofweek($sun)" -> 0L, s"dayofweek($sat)" -> 6L, s"date_part('dow', $sun)" -> 0L,
       s"EXTRACT(dow FROM $sat)" -> 6L, s"year($sun)" -> 2024L, s"EXTRACT(year FROM $sun)" -> 2024L,
       s"date_part('year', $sun)" -> 2024L, s"EXTRACT('year' FROM $sun)" -> 2024L,
       s"month($sun)" -> 1L, s"date_part('month', $sat)" -> 1L, s"day($sun)" -> 7L,
       s"dayofyear($sun)" -> 7L, s"quarter($sun)" -> 1L, s"week($sun)" -> 1L, s"hour($sat)" -> 10L,
       s"minute($sat)" -> 0L, "cardinality(MAP {'a': 1, 'b': 2})" -> 2L)
-      .foreach { case (q, want) => assert(one(q) === ((want, LongType)), q) }
+  }
+
+  test("the statement tables here leave the session's temp views as they were") {
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    (literalCases.map(_._1) ++ datePartCases.map { case (q, _) => s"SELECT $q AS v" }).foreach { q =>
+      GraftSql.sql(spark, q).collect()
+      assert(tempViews === before, q)
+    }
   }
 
   test("a trailing comment never reaches the statement layer (DuckDB 1.0.0 accepts each)") {

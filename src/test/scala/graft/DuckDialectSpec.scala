@@ -237,6 +237,12 @@ class DuckDialectSpec extends AnyFunSuite {
     // and current_query() reflects the ORIGINAL dialect text
     assert(GraftSql.sql(spark, "SELECT current_query()").collect()(0).getString(0)
       === "SELECT current_query()")
+    // … also where the front door rewrites the text before Spark sees it
+    val described = "SELECT current_query() AS q, * FROM (DESCRIBE nation) LIMIT 1"
+    assert(GraftSql.sql(spark, described).collect()(0).getString(0) === described)
+    val byName = "SELECT current_query() AS q UNION ALL BY NAME SELECT 'x' AS r"
+    assert(GraftSql.sql(spark, byName).collect().map(_.getString(0)).filter(_ != null).toSeq
+      === Seq(byName))
   }
 
   test("QUALIFY rewrites to the window-column-then-filter shape") {

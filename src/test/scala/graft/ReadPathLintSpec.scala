@@ -25,9 +25,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * lexical rule that disagrees with it.
   *
   * A transaction's read snapshot is taken when a plan resolves its
-  * relations (plans/TxnSnapshot), never by shadowing a table with a
-  * session temp view: the session has one temp-view namespace, and a
-  * view in it would be a second snapshot model.
+  * relations (plans/TxnSnapshot), and a relation the front door
+  * computes for a statement is bound in that statement's scope
+  * (plans/StatementScope); neither shadows a table with a session temp
+  * view. The session has one temp-view namespace: a view the engine
+  * puts there outlives the statement and replaces the user's view of
+  * that name.
+  *
+  * Failures are loud: a catch-all that turns any exception into a
+  * default answer hides the fault, so each catch names the exception
+  * it expects, save the listed deliberate sites.
   *
   * A coverage entry runs its text one way, `QDef.text`: a private
   * "bind the tables and run this text" closure is a second way, and a
@@ -95,9 +102,41 @@ class ReadPathLintSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
-  test("sources/Txn.scala creates no temp view: snapshots stay in the plan-resolution rule") {
-    val found = offenders(Seq(root.resolve("sources/Txn.scala")), """createOrReplaceTempView""".r)
-    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  /** Files whose temp-view sites are listed, with the site count. */
+  private val userViews: Map[Path, (Int, String)] = Map(
+    root.resolve("GraftSql.scala") ->
+      (1 -> "CREATE VIEW over a body the front door computes registers the user's view"))
+
+  test("the front door and Txn create no temp view but a user CREATE VIEW") {
+    val scope = scalaSources.filter(p => p.startsWith(root.resolve("plans")) ||
+      Seq("GraftSql.scala", "sources/Txn.scala", "sources/DmlSql.scala").map(root.resolve).contains(p))
+    val found = offenders(scope, """create\w*TempView""".r)
+    val stray = found.filterNot(f => userViews.keys.exists(p => f.startsWith(s"$p:")))
+    assert(stray.isEmpty, stray.mkString("\n", "\n", ""))
+    userViews.foreach { case (p, (n, why)) =>
+      assert(found.count(_.startsWith(s"$p:")) === n, s"$p: $why")
+    }
+  }
+
+  /** The deliberate catch-alls outside tools/, per file, with the site
+    * count. tools/ holds diagnostics whose sweeps report each entry's
+    * failure and go on. */
+  private val catchAlls: Map[Path, (Int, String)] = Map(
+    root.resolve("Bench.scala") -> (1 -> "per-entry isolation: one failing entry is reported"),
+    root.resolve("Verify.scala") -> (2 -> "per-entry isolation: one failing entry is reported"),
+    root.resolve("sources/Catalog.scala") ->
+      (1 -> "NonFatal: falls back to Spark's own inference, which raises Spark's own error"),
+    root.resolve("queries/ImdbWitness.scala") ->
+      (2 -> "solver backtracks: a reading that fails moves on to the next"))
+
+  test("no catch-all in src/main outside tools/, save the listed sites") {
+    val catchAll = """case\s+\w+\s*:\s*(Exception|Throwable)\s*=>|NonFatal\(""".r
+    val found = offenders(scalaSources.filterNot(_.startsWith(root.resolve("tools"))), catchAll)
+    val counts = found.groupBy(f => Paths.get(f.takeWhile(_ != ':'))).map { case (p, fs) => p -> fs.size }
+    val wrong = counts.filterNot { case (p, n) => catchAlls.get(p).exists(_._1 == n) }
+    assert(wrong.isEmpty,
+      found.filter(f => wrong.contains(Paths.get(f.takeWhile(_ != ':')))).mkString("\n", "\n", ""))
+    assert(catchAlls.keySet === counts.keySet, "listed but catching nothing")
   }
 
   /** The queries/ code that runs SQL text itself, by owning entry or
