@@ -187,11 +187,10 @@ object GraftSql {
           s"PIVOT $rel ON $col IN ($vals) USING $agg GROUP BY $grp")
       case _ =>
     }
-    // `WITH ctes… <DML | statement PIVOT | ASOF join>`, or CTE bodies
-    // holding an ASOF join: the remainder runs outside Spark's parser,
-    // so each CTE is bound in the statement scope under its own name
-    // (the engine's CTE materialization; a later body sees the earlier
-    // names) and the remainder runs
+    // `WITH ctes… <DML | statement PIVOT>`: the remainder runs outside
+    // Spark's parser, so each CTE is bound in the statement scope
+    // under its own name (the engine's CTE materialization; a later
+    // body sees the earlier names) and the remainder runs
     cteBinding(text) match {
       case Some((ctes, rest)) =>
         ctes.foreach { case (name, body) => StatementScope.get.bind(name, sql(spark, body)) }
@@ -399,15 +398,10 @@ object GraftSql {
       case _ if graft.sources.DmlSql.matches(text) =>
         return graft.sources.DmlSql.run(spark, text)
       // ASOF … USING (col) — at any depth — rewrites LAZILY to a
-      // LATERAL top-1 probe (composes with correlated subqueries,
-      // which the eager statement rewrite below cannot)
+      // LATERAL top-1 probe (composes with correlated subqueries);
+      // ASOF … ON is a Catalyst join (plans/AsofJoinRule)
       case _ if AsofSql.usingPass(text).isDefined =>
         return sql(spark, AsofSql.usingPass(text).get)
-      // ASOF [LEFT] JOIN statement syntax → the union+window plan
-      // (plans/AsofSql → operators/Joins.asofJoin), then the rewritten
-      // statement continues through the normal path
-      case _ if AsofSql.matches(text) =>
-        return sql(spark, AsofSql.rewrite(spark, text))
       case _ =>
     }
     limitPercentSplit(text) match {
@@ -598,13 +592,11 @@ object GraftSql {
   private val DmlVerb = "(?is)^\\s*(UPDATE|DELETE|INSERT|MERGE)\\b".r
 
   /** The CTE list and remainder of a `WITH` statement whose remainder
-    * the front door runs itself (a DML verb, a statement PIVOT, an ASOF
-    * join) or whose CTE bodies hold an ASOF join; None otherwise, and
-    * the WITH stays Spark's. */
+    * the front door runs itself (a DML verb, a statement PIVOT); None
+    * otherwise, and the WITH stays Spark's. */
   private[graft] def cteBinding(text: String): Option[(Seq[(String, String)], String)] =
-    PivotStmt.cteTail(text).filter { case (ctes, rest) =>
-      DmlVerb.findFirstIn(rest).isDefined || PivotStmt.leads(rest) ||
-        AsofSql.matches(rest) || ctes.exists { case (_, body) => AsofSql.matches(body) }
+    PivotStmt.cteTail(text).filter { case (_, rest) =>
+      DmlVerb.findFirstIn(rest).isDefined || PivotStmt.leads(rest)
     }
 
   /** A view body the front door computes eagerly, or that names a
@@ -612,7 +604,7 @@ object GraftSql {
   private def eagerBody(body: String): Boolean =
     SqlText.findInCode(body, UnionByName).isDefined ||
       SqlText.findInCode(body, SubStmtRe).isDefined ||
-      AsofSql.matches(body) || PivotStmt.find(body).isDefined ||
+      PivotStmt.find(body).isDefined ||
       cteBinding(body).isDefined || StatementScope.get.mentions(body)
 
   /** `(DESCRIBE …)` / `(SUMMARIZE …)` as a RELATION (reference

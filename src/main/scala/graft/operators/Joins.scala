@@ -52,7 +52,9 @@ object Joins {
     left.join(broadcast(right), cond, "inner")
   }
 
-  /** ASOF backward join with payload: for each left row, attach the
+  /** ASOF join with payload — the one union-and-window ASOF plan, used
+    * by the q31 hand plan and, for every `ASOF … ON` statement, by
+    * plans/AsofJoinRule. For each left row, attach the
     * payload columns of the latest right row with rightTime <= leftTime
     * on the same key (LEFT ASOF semantics — unmatched left rows keep
     * NULL payloads). Matches DuckDB's `ASOF LEFT JOIN` (reference

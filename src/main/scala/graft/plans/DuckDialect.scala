@@ -336,6 +336,7 @@ object DuckDialect {
           case _: IllegalArgumentException | _: IndexOutOfBoundsException => i = save
         }
       }
+      if (peekWord("VALUES")) valuesList().foreach(out += _)
       while (more && !peekOp(")")) {
         if (!more || peekOp(")")) return out.mkString(" ")
         val t = peek
@@ -416,6 +417,41 @@ object DuckDialect {
         }
       }
       out.mkString(" ")
+    }
+
+    /** A statement's leading `VALUES (…), (…)` list, its columns named
+      * the reference's way: col0, col1, … (Spark numbers them from
+      * col1). None, the cursor unmoved, when the rows are not all
+      * parenthesized or something other than the end of the statement
+      * or a set operation, ORDER BY or LIMIT follows them.
+      */
+    private def valuesList(): Option[String] = {
+      val save = i
+      next() // VALUES
+      val width = {
+        var (j, d, n) = (i + 1, 1, 1)
+        while (j < toks.length && d > 0) {
+          toks(j) match {
+            case TOp("(") | TOp("[") | TOp("{") => d += 1
+            case TOp(")") | TOp("]") | TOp("}") => d -= 1
+            case TOp(",") if d == 1 => n += 1
+            case _ =>
+          }
+          j += 1
+        }
+        n
+      }
+      val rows = ArrayBuffer.empty[String]
+      while (peekOp("(")) {
+        rows += expr(0)
+        if (peekOp(",") && peekAt(1).contains(TOp("("))) next()
+      }
+      val ends = !more || peekOp(")") || peekOp(";") || (peek match {
+        case TWord(w) => Set("UNION", "EXCEPT", "INTERSECT", "ORDER", "LIMIT")(w.toUpperCase)
+        case _ => false
+      })
+      if (rows.isEmpty || !ends) { i = save; None }
+      else Some(s"VALUES ${rows.mkString(", ")} AS valueslist(${(0 until width).map("col" + _).mkString(", ")})")
     }
 
     /** The statement glue loop without statement-level heuristics —
@@ -1699,15 +1735,15 @@ object DuckDialect {
             case _ => false })
         case _ => false
       }) return clauseParen()
-      // parenthesized JOIN tree as a relation (`FROM (a NATURAL JOIN
-      // b) JOIN …`): a depth-1 JOIN keyword means this is clause
-      // structure, not an expression list
-      if (hasTopLevelJoin) return clauseParen()
-      expectOp("(")
-      val isQuery = more && (peek match {
+      val isQuery = peekAt(1).exists {
         case TWord(w) => Set("SELECT", "WITH", "FROM", "VALUES", "TABLE")(w.toUpperCase)
         case _ => false
-      })
+      }
+      // parenthesized JOIN tree as a relation (`FROM (a NATURAL JOIN
+      // b) JOIN …`): a depth-1 JOIN keyword outside a query means this
+      // is clause structure, not an expression list
+      if (!isQuery && hasTopLevelJoin) return clauseParen()
+      expectOp("(")
       if (isQuery) {
         val inner = statement()
         expectOp(")")
@@ -3097,6 +3133,69 @@ object DuckDialect {
   private val InsertParenValuesRe =
     """(?is)^(\s*INSERT\s+(?:OR\s+\w+\s+)?INTO\s+[\w."`]+)\s*\(\s*(VALUES\b.*)\)\s*;?\s*$""".r
 
+  /** `ASOF [LEFT|RIGHT] JOIN <rel> ON <cond>`, at any depth →
+    * `[LEFT|RIGHT] JOIN <rel> ON graft_asof(<cond>)`, which
+    * plans/AsofJoinRule plans once Catalyst has resolved the join;
+    * `ASOF SEMI|ANTI JOIN … ON <cond>` → `SEMI|ANTI JOIN … ON <cond>`:
+    * a left row has an ASOF match exactly when some right row satisfies
+    * the condition. The condition runs to the next clause or join
+    * keyword, comma or closing paren at its own depth. An ASOF join
+    * without ON (`… USING (c)`, GraftSql's lateral rewrite) is left as
+    * it is.
+    */
+  private def asofMark(toks: IndexedSeq[Tok]): IndexedSeq[Tok] = {
+    def word(k: Int): String = toks.lift(k) match {
+      case Some(TWord(w)) => w.toUpperCase
+      case _ => ""
+    }
+    // the first of ON / USING at the join's own depth
+    def onFollows(k: Int): Boolean = {
+      var d = 0
+      for (j <- k until toks.length) toks(j) match {
+        case TOp("(") => d += 1
+        case TOp(")") => d -= 1; if (d < 0) return false
+        case TWord(w) if d == 0 && w.equalsIgnoreCase("ON") => return true
+        case TWord(w) if d == 0 && w.equalsIgnoreCase("USING") => return false
+        case _ =>
+      }
+      false
+    }
+    def isAsof(k: Int): Boolean = word(k) == "ASOF" && (word(k + 1) == "JOIN" ||
+      Set("LEFT", "RIGHT", "SEMI", "ANTI")(word(k + 1)) && word(k + 2) == "JOIN") && onFollows(k)
+    // a word after a dot is a name (`l.order`), never a keyword
+    def condEnds(k: Int): Boolean = toks(k) match {
+      case TOp(",") | TOp(";") => true
+      case _ if k > 0 && toks(k - 1) == TOp(".") => false
+      case _ => AsofCondEnd(word(k)) ||
+        Set("LEFT", "RIGHT", "FULL")(word(k)) && Set("JOIN", "OUTER", "SEMI", "ANTI")(word(k + 1))
+    }
+    val out = ArrayBuffer.empty[Tok]
+    var depth = 0
+    val awaitingOn = scala.collection.mutable.Set.empty[Int]
+    val inCond = scala.collection.mutable.Set.empty[Int]
+    def close(): Unit = if (inCond.remove(depth)) out += TOp(")")
+    for (k <- toks.indices) toks(k) match {
+      case _ if isAsof(k) =>
+        close()
+        if (!Set("SEMI", "ANTI")(word(k + 1))) awaitingOn += depth
+      case t if word(k) == "ON" && awaitingOn.remove(depth) =>
+        out += t += TWord("graft_asof") += TOp("(")
+        inCond += depth
+      case t @ TOp("(") => out += t; depth += 1
+      case t @ TOp(")") => close(); awaitingOn -= depth; depth -= 1; out += t
+      case t if inCond(depth) && condEnds(k) => close(); out += t
+      case t => out += t
+    }
+    close()
+    out.toIndexedSeq
+  }
+
+  /** Words that end an ASOF join's ON condition at its own depth. */
+  private val AsofCondEnd = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
+    "OFFSET", "QUALIFY", "WINDOW", "UNION", "EXCEPT", "INTERSECT", "JOIN",
+    "INNER", "CROSS", "NATURAL", "POSITIONAL", "SEMI", "ANTI", "ASOF",
+    "LATERAL", "USING", "PIVOT", "UNPIVOT", "TABLESAMPLE")
+
   /** Translate one DuckDB-dialect statement into Spark SQL. Dialect
     * TIME maps to Spark 4.1's native TimeType when the active session
     * enables it (spark.sql.timeType.enabled), to STRING otherwise. The
@@ -3128,7 +3227,7 @@ object DuckDialect {
         s"$head SELECT * FROM ($values)"
       case other => other
     }
-    val p = new P(lex(sql), nativeTime)
+    val p = new P(asofMark(lex(sql)), nativeTime)
     val out0 = p.statement()
     // early-return statement paths (DDL, DISTINCT ON, QUALIFY) leave
     // a trailing ';' unconsumed — every statement form accepts it

@@ -907,6 +907,9 @@ object FunctionTable {
         boolLit(a(a.length - 2)), boolLit(a(a.length - 1)))
     },
     fn("graft_glob")(2)(a => GlobMatch(a(0), a(1))),
+    // the ON condition of an ASOF join, marked by the dialect and
+    // planned by AsofJoinRule
+    fn("graft_asof")(1)(a => AsofCondition(a(0))),
     fn("graft_json_path")(1)(a => JsonPathNorm(a(0))),
     // numeric→integer cast rounding parity (the dialect wraps integer
     // cast targets in these; see DuckRint). _try: unparsable strings
@@ -930,12 +933,14 @@ object FunctionTable {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => GroupJoinRule)
     e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
     // transaction read snapshots, one model for every connection
     // (sources/Txn): post-hoc so relations are already resolved to
     // their file sources
     e.injectPostHocResolutionRule(s => TxnSnapshotRule(s))
+    // ASOF joins, resolved like any join, then planned as
+    // Joins.asofJoin's union and window (plans/AsofJoinRule)
+    e.injectPostHocResolutionRule(s => AsofJoinRule(s))
     // relations a front-door statement computed for itself, resolved
     // ahead of the catalog (plans/StatementScope)
     e.injectHintResolutionRule(_ => StatementScopeRule)

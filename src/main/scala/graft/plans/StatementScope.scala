@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The relations one front-door statement computes for itself (a
-  * `UNION BY NAME`, `(DESCRIBE …)`, ASOF join, statement PIVOT,
-  * RETURNING row set, `duckdb_variables()`, or a CTE bound ahead of a
-  * DML, PIVOT or ASOF remainder), and the statement as typed. A pass
+  * `UNION BY NAME`, `(DESCRIBE …)`, statement PIVOT, RETURNING row
+  * set, `duckdb_variables()`, or a CTE bound ahead of a DML or PIVOT
+  * remainder), and the statement as typed. A pass
   * binds its frame here and splices the name into the text;
   * `StatementScopeRule` resolves the name for the rest of the
   * statement. Nothing enters the session's temp-view namespace, so a

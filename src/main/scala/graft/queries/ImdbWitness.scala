@@ -227,14 +227,9 @@ object ImdbWitness {
     * ((alias, col→value)), or None when the predicate can't be
     * satisfied by this construction (evaluator veto).
     */
-  def witnessRows(q: String, qIdx: Int): Option[Seq[(String, Map[String, Any])]] = {
+  def witnessRows(q: String, qIdx: Int): Option[Seq[(String, Map[String, Any])]] =
     try witnessImpl(q, qIdx)
-    catch {
-      case e: Exception =>
-        if (sys.env.contains("IMDB_WITNESS_DEBUG")) throw e
-        None
-    }
-  }
+    catch { case _: Exception => None }
 
   private def aliasMap(q: String): Map[String, String] = {
     // word-boundary search: a SELECT alias like `from_company` must

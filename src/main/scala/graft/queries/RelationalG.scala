@@ -142,8 +142,8 @@ object RelationalG {
 
     // R69: the reference's ASOF JOIN *statement* syntax
     // (transform_join.cpp:54) runs VERBATIM on both engines — the
-    // dialect front door rewrites it into the q31 union+window plan
-    // (plans/AsofSql → operators/Joins.asofJoin). Backward `>=`:
+    // dialect marks the join and plans/AsofJoinRule plans it as the
+    // q31 union+window plan (operators/Joins.asofJoin). Backward `>=`:
     // latest order at-or-before each event. Payload is the matched
     // row's o_orderdate only — (o_custkey, o_orderdate) can tie, and
     // the DATE of the match is deterministic where the full row

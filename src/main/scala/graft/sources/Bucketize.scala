@@ -30,8 +30,8 @@ object Bucketize {
     "orders" -> "o_orderkey",
     "lineitem" -> "l_orderkey")
 
-  private def buckets: Int =
-    sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "32").toInt
+  /** Bucket count of the orderkey-bucketed copies. */
+  private val Buckets = 32
 
   private def tableName(src: String) = s"graft_bkt_$src"
 
@@ -60,7 +60,7 @@ object Bucketize {
       // testdata IN PLACE between rounds, so path identity alone would
       // silently reuse buckets built from a previous round's data
       val srcFile = new java.io.File(s"$dir/$src.parquet")
-      val want = s"$dir|$buckets|${srcFile.lastModified}|${srcFile.length}"
+      val want = s"$dir|$Buckets|${srcFile.lastModified}|${srcFile.length}"
       val reusable = marker.exists() &&
         new String(java.nio.file.Files.readAllBytes(marker.toPath)) == want
       // drop only the (JVM-local) catalog entry; keep reusable data
@@ -69,7 +69,7 @@ object Bucketize {
         val schema = Catalog.table(s, dir, src).schema.toDDL
         s.sql(
           s"""CREATE TABLE $tbl ($schema) USING parquet
-             |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $buckets BUCKETS
+             |CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $Buckets BUCKETS
              |LOCATION '${loc.toURI}'""".stripMargin)
       } else {
         if (loc.exists()) {
@@ -87,9 +87,9 @@ object Bucketize {
         // per-partition sort and the layout buys nothing.
         import org.apache.spark.sql.functions.col
         Catalog.table(s, dir, src)
-          .repartition(buckets, col(keyCol))
+          .repartition(Buckets, col(keyCol))
           .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, keyCol).sortBy(keyCol)
+          .bucketBy(Buckets, keyCol).sortBy(keyCol)
           .saveAsTable(tbl)
         java.nio.file.Files.write(marker.toPath, want.getBytes)
       }

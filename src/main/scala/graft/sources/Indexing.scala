@@ -24,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Indexing {
 
-  def buckets: Int = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "16").toInt
+  /** Bucket count of an index's clustered layout. */
+  private val Buckets = 16
 
   /** Rewrite `table` clustered by `cols`: bucketBy + sortBy into a
     * staging table, then swap via rename — the write is the one full
@@ -42,7 +43,7 @@ object Indexing {
     val tmp = s"${table}__idx_build"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
     spark.table(table).write
-      .bucketBy(buckets, cols.head, cols.tail: _*)
+      .bucketBy(Buckets, cols.head, cols.tail: _*)
       .sortBy(cols.head, cols.tail: _*)
       .format("parquet")
       .saveAsTable(tmp)

@@ -138,7 +138,7 @@ object RefTestSweep {
       }
       // statement layers the front door routes before Spark's parser:
       // the regex verbs, DML with upsert/RETURNING (sources/DmlSql),
-      // and ASOF JOIN statement syntax (plans/AsofSql)
+      // and ASOF … USING (plans/AsofSql)
       def statementFormPivot: Boolean =
         // FROM-first included: pivot_6390's `FROM (PIVOT t ON … GROUP
         // BY …) JOIN (PIVOT …)` executes through PivotStmt (verified
@@ -167,11 +167,10 @@ object RefTestSweep {
         statementFormPivot ||
         graft.GraftSql.FromSuffixPivot.findFirstIn(sql).isDefined ||
         (try graft.sources.DmlSql.matches(sql) catch { case _: Exception => false }) ||
-        // WITH-prefixed DML, PIVOT or ASOF: GraftSql binds the CTE
+        // WITH-prefixed DML or PIVOT: GraftSql binds the CTE
         // list in the statement scope and runs the remainder
         (try graft.GraftSql.cteBinding(sql).isDefined
          catch { case _: Exception => false }) ||
-        (try graft.plans.AsofSql.matches(sql) catch { case _: Exception => false }) ||
         // ASOF … USING at any depth: GraftSql's lazy LATERAL rewrite
         (try graft.plans.AsofSql.usingPass(sql).isDefined
          catch { case _: Exception => false }) ||

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The ASOF [LEFT] JOIN statement route (plans/AsofSql →
-  * operators/Joins.asofJoin): all four reference inequalities ×
+/** ASOF joins through the front door: the dialect marks the join,
+  * Catalyst resolves it like any join, and plans/AsofJoinRule plans it
+  * as operators/Joins.asofJoin. All four reference inequalities ×
   * inner/left, every result pinned by running the identical text in
   * DuckDB 1.0.0 (bind_joinref's ASOF validation; `>=`/`>` match
   * backward, `<=`/`<` forward, strictness decides whether equal
@@ -97,5 +98,110 @@ class AsofSqlSpec extends AnyFunSuite {
       "SELECT lid, rid FROM asof_l l ASOF RIGHT JOIN asof_r r ON l.k = r.rk AND l.t >= r.rt ORDER BY rid")
       .collect().map(r => (r.get(0), r.getInt(1))).toSeq
     assert(out === Seq((null, 10), (1, 11), (2, 12), (null, 13)))
+  }
+
+  // the right side shares the names k and t with the left side
+  private lazy val colliding: Unit = {
+    spark.sql(
+      """SELECT * FROM VALUES
+        | (1, TIMESTAMP '2024-01-01 10:00:00', 1),
+        | (1, TIMESTAMP '2024-01-01 11:00:00', 2),
+        | (2, TIMESTAMP '2024-01-01 10:30:00', 3),
+        | (3, TIMESTAMP '2024-01-01 09:00:00', 4) AS l(k, t, lid)""".stripMargin)
+      .createOrReplaceTempView("al")
+    spark.sql(
+      """SELECT * FROM VALUES
+        | (1, TIMESTAMP '2024-01-01 09:30:00', 10),
+        | (1, TIMESTAMP '2024-01-01 10:00:00', 11),
+        | (1, TIMESTAMP '2024-01-01 10:45:00', 12),
+        | (2, TIMESTAMP '2024-01-01 11:00:00', 13) AS r(k, t, rid)""".stripMargin)
+      .createOrReplaceTempView("ar")
+    spark.sql("SELECT * FROM VALUES (11, 'y'), (12, 'z'), (13, 'w') AS x(rid, tag)")
+      .createOrReplaceTempView("ax")
+  }
+
+  private val asof = "al l ASOF JOIN ar r ON l.k = r.k AND l.t >= r.t"
+
+  /** Column names and rows, timestamps as instants. */
+  private def table(q: String): (Seq[String], Seq[Seq[Any]]) = {
+    colliding
+    val df = GraftSql.sql(spark, q)
+    (df.columns.toSeq, df.collect().toSeq.map(_.toSeq.map {
+      case t: java.sql.Timestamp => t.toInstant
+      case v => v
+    }))
+  }
+  private def at(hhmm: String) = java.time.Instant.parse(s"2024-01-01T$hhmm:00Z")
+
+  test("a string literal that spells a qualified column stays a literal (DuckDB-pinned)") {
+    assert(table(s"SELECT 'r.t' AS s, lid, rid FROM $asof ORDER BY lid") ===
+      (Seq("s", "lid", "rid"), Seq(Seq("r.t", 1, 11), Seq("r.t", 2, 12))))
+  }
+
+  test("SELECT * keeps both sides' columns, colliding names included (DuckDB-pinned)") {
+    assert(table(s"SELECT * FROM $asof ORDER BY lid") ===
+      (Seq("k", "t", "lid", "k", "t", "rid"), Seq(
+        Seq(1, at("10:00"), 1, 1, at("10:00"), 11),
+        Seq(1, at("11:00"), 2, 1, at("10:45"), 12))))
+  }
+
+  test("ASOF JOIN inside a FROM subquery (DuckDB-pinned)") {
+    assert(table(s"SELECT count(*) AS n FROM (SELECT lid, rid FROM $asof) s") ===
+      (Seq("n"), Seq(Seq(2L))))
+  }
+
+  test("ASOF JOIN inside an IN subquery (DuckDB-pinned)") {
+    assert(table(s"SELECT lid FROM al WHERE lid IN (SELECT lid FROM $asof) ORDER BY lid") ===
+      (Seq("lid"), Seq(Seq(1), Seq(2))))
+  }
+
+  test("a later JOIN reads the ASOF join's right columns (DuckDB-pinned)") {
+    assert(table(s"SELECT lid, tag FROM $asof JOIN ax ON ax.rid = r.rid ORDER BY lid") ===
+      (Seq("lid", "tag"), Seq(Seq(1, "y"), Seq(2, "z"))))
+  }
+
+  test("two ASOF joins in one FROM clause (DuckDB-pinned)") {
+    assert(table(s"SELECT lid, r.rid, r2.rid FROM $asof " +
+      "ASOF JOIN ar r2 ON l.k = r2.k AND l.t <= r2.t ORDER BY lid") ===
+      (Seq("lid", "rid", "rid"), Seq(Seq(1, 11, 11))))
+  }
+
+  test("ASOF SEMI / ANTI JOIN are the plain SEMI / ANTI joins (DuckDB-pinned)") {
+    for ((kind, want) <- Seq("SEMI" -> Seq(1, 2), "ANTI" -> Seq(3, 4))) {
+      colliding
+      val q = s"SELECT lid FROM al l ASOF $kind JOIN ar r ON l.k = r.k AND l.t >= r.t ORDER BY lid"
+      val df = GraftSql.sql(spark, q)
+      assert(df.collect().map(_.getInt(0)).toSeq === want, kind)
+      assert(table(q.replace("ASOF ", ""))._2.map(_.head) === want, kind)
+      val plan = df.queryExecution.analyzed
+      assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType.sql } ===
+        Seq(s"LEFT $kind"), kind)
+      assert(!plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Except]), kind)
+    }
+  }
+
+  test("a view over an ASOF join is planned when a later statement reads it") {
+    colliding
+    GraftSql.sql(spark, s"CREATE OR REPLACE TEMP VIEW asof_v AS SELECT lid, rid FROM $asof")
+    assert(table("SELECT lid, rid FROM asof_v ORDER BY lid") ===
+      (Seq("lid", "rid"), Seq(Seq(1, 11), Seq(2, 12))))
+    spark.catalog.dropTempView("asof_v")
+  }
+
+  test("a condition without exactly one inequality raises the reference's message") {
+    colliding
+    val missing = intercept[IllegalArgumentException](
+      GraftSql.sql(spark, "SELECT lid FROM al l ASOF JOIN ar r ON l.k = r.k"))
+    assert(missing.getMessage.contains("Missing ASOF JOIN inequality"))
+    val multiple = intercept[IllegalArgumentException](GraftSql.sql(spark,
+      "SELECT lid FROM al l ASOF JOIN ar r ON l.k = r.k AND l.t >= r.t AND l.t <= r.t"))
+    assert(multiple.getMessage.contains("Multiple ASOF JOIN inequalities"))
+  }
+
+  test("an expression still holding the ASOF marker fails at execution, returning no rows") {
+    colliding
+    val df = GraftSql.sql(spark, "SELECT lid FROM al WHERE graft_asof(lid = 1)")
+    val e = intercept[Exception](df.collect())
+    assert(e.getMessage.contains("graft_asof"), e.getMessage)
   }
 }

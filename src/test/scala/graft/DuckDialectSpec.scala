@@ -28,6 +28,14 @@ class DuckDialectSpec extends AnyFunSuite {
 
   // ------------------------------------------------------ translation shape
 
+  test("unaliased VALUES columns take the reference's names col0, col1, … (DuckDB-pinned)") {
+    assert(spark.sql(t("SELECT * FROM (VALUES (1, 2)) t")).columns.toSeq === Seq("col0", "col1"))
+    assert(spark.sql(t("VALUES (1, 'a'), (2, 'b')")).columns.toSeq === Seq("col0", "col1"))
+    assert(spark.sql(t("SELECT * FROM (VALUES (1, 2)) t(a, b)")).columns.toSeq === Seq("a", "b"))
+    assert(spark.sql(t("SELECT * FROM (VALUES (1) UNION ALL VALUES (2)) t")).collect()
+      .map(_.getInt(0)).toSeq === Seq(1, 2))
+  }
+
   test("plain ANSI SQL passes through unmangled") {
     val sql = "SELECT a, sum(b) AS s FROM t WHERE c = 1 GROUP BY a ORDER BY s DESC LIMIT 3"
     val out = t(sql)

@@ -11,11 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * `read.parquet(` anywhere else in the engine sources (the ad-hoc
   * `tools/` excepted) would bring the schema-inference job back.
   *
-  * Plans are chosen in code, never by a JVM-global system property:
-  * such a switch makes every session in the JVM plan differently.
+  * Plans are chosen in code, never by a JVM-global system property or
+  * an environment variable: such a switch makes every session in the
+  * JVM plan differently.
   *
   * SQL functions enter a session through one table and one loop
   * (plans/FunctionTable), so a second registration path cannot regrow.
+  * The ASOF join marker has one emitter (the dialect) and one consumer
+  * (plans/AsofJoinRule).
   *
   * Every runnable tool is documented in the verify skill, so one-off
   * tools cannot pile up unseen.
@@ -74,6 +77,22 @@ class ReadPathLintSpec extends AnyFunSuite {
   test("no JVM system property chooses a plan: engine sources, tools/ included") {
     val found = offenders(scalaSources, graftProperty)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("no environment variable chooses a plan: engine sources outside Bench, Verify and tools/") {
+    // the bench and verify mains read their deployment inputs (scale
+    // factor directory, CPU count, entry selection) from the environment
+    val deployment = Set(root.resolve("Bench.scala"), root.resolve("Verify.scala"))
+    val sources = scalaSources
+      .filterNot(p => deployment(p) || p.startsWith(root.resolve("tools")))
+    val found = offenders(sources, """sys\.env|System\s*\.\s*getenv""".r)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("graft_asof is emitted by the dialect and consumed by one rule only") {
+    val files = offenders(scalaSources, "graft_asof".r).map(_.takeWhile(_ != ':')).distinct.sorted
+    assert(files === Seq("plans/AsofJoinRule.scala", "plans/DuckDialect.scala",
+      "plans/FunctionTable.scala").map(root.resolve(_).toString))
   }
 
   test("injectFunction( appears in exactly one file: plans/FunctionTable.scala") {
