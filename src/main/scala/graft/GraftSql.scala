@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 import graft.plans.{AsofSql, DuckDialect, PivotStmt, SqlText, StatementScope}
 import graft.plans.{StatementSurface => S}
@@ -27,7 +32,7 @@ object GraftSql {
       """([\w.]+)\s+IN\s*\((.+?)\)\s*GROUP\s+BY\s+(.+?)\s*\)\s*;?\s*$""").r
 
   private val CreateView =
-    """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW\s+([\w."`]+)\s+AS\s+(.*)$""".r
+    """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:(TEMP(?:ORARY)?)\s+)?VIEW\s+([\w."`]+)\s+AS\s+(.*)$""".r
 
   /** `inner LIMIT <pct> % [OFFSET <expr>]` at statement tail — the
     * percent operand is a number, a parenthesized expression of ANY
@@ -137,9 +142,12 @@ object GraftSql {
     // reaches Spark only over names bound in this statement's scope, so
     // the view is registered from the analyzed frame — as a session
     // temp view under the last name part, also for a non-TEMP or
-    // schema-qualified CREATE VIEW (the session has one view namespace)
+    // schema-qualified CREATE VIEW (the session has one view namespace).
+    // A non-TEMP body that reads a temporary object goes the same way:
+    // Spark's persistent CREATE VIEW rejects it.
     text match {
-      case CreateView(name, body) if eagerBody(body) =>
+      case CreateView(temp, name, body)
+          if eagerBody(body) || temp == null && readsTempObject(spark, body) =>
         val viewName = name.replace("\"", "").replace("`", "").split('.').last
         sql(spark, body).createOrReplaceTempView(viewName)
         return S.emptyDf(spark)
@@ -606,6 +614,25 @@ object GraftSql {
       SqlText.findInCode(body, SubStmtRe).isDefined ||
       PivotStmt.find(body).isDefined ||
       cteBinding(body).isDefined || StatementScope.get.mentions(body)
+
+  /** A view body whose translation reads a temporary object of the
+    * session: a temp view, or a function the session injects
+    * (plans/FunctionTable, the dialect's `graft_*` wrappers). A body
+    * Spark cannot parse reads none. */
+  private def readsTempObject(spark: SparkSession, body: String): Boolean = {
+    val cat = spark.sessionState.catalog
+    def reads(p: LogicalPlan): Boolean = (p match {
+      case u: UnresolvedRelation => cat.isTempView(u.multipartIdentifier)
+      case _ => false
+    }) || p.expressions.exists(_.exists {
+      case f: UnresolvedFunction =>
+        f.nameParts.size == 1 && cat.isTemporaryFunction(FunctionIdentifier(f.nameParts.head))
+      case s: SubqueryExpression => reads(s.plan)
+      case _ => false
+    }) || (p.children ++ p.innerChildren.collect { case c: LogicalPlan => c }).exists(reads)
+    try reads(spark.sessionState.sqlParser.parseQuery(translate(body.trim.stripSuffix(";"))))
+    catch { case _: ParseException => false }
+  }
 
   /** `(DESCRIBE …)` / `(SUMMARIZE …)` as a RELATION (reference
     * show_select: describe_subquery.test, summarize_subquery.test):

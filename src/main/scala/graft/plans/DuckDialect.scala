@@ -3133,12 +3133,10 @@ object DuckDialect {
   private val InsertParenValuesRe =
     """(?is)^(\s*INSERT\s+(?:OR\s+\w+\s+)?INTO\s+[\w."`]+)\s*\(\s*(VALUES\b.*)\)\s*;?\s*$""".r
 
-  /** `ASOF [LEFT|RIGHT] JOIN <rel> ON <cond>`, at any depth →
-    * `[LEFT|RIGHT] JOIN <rel> ON graft_asof(<cond>)`, which
-    * plans/AsofJoinRule plans once Catalyst has resolved the join;
-    * `ASOF SEMI|ANTI JOIN … ON <cond>` → `SEMI|ANTI JOIN … ON <cond>`:
-    * a left row has an ASOF match exactly when some right row satisfies
-    * the condition. The condition runs to the next clause or join
+  /** `ASOF [LEFT|RIGHT|SEMI|ANTI] JOIN <rel> ON <cond>`, at any depth
+    * → `[LEFT|RIGHT|SEMI|ANTI] JOIN <rel> ON graft_asof(<cond>)`, which
+    * plans/AsofJoinRule plans once Catalyst has resolved the join. The
+    * condition runs to the next clause or join
     * keyword, comma or closing paren at its own depth. An ASOF join
     * without ON (`… USING (c)`, GraftSql's lateral rewrite) is left as
     * it is.
@@ -3177,7 +3175,7 @@ object DuckDialect {
     for (k <- toks.indices) toks(k) match {
       case _ if isAsof(k) =>
         close()
-        if (!Set("SEMI", "ANTI")(word(k + 1))) awaitingOn += depth
+        awaitingOn += depth
       case t if word(k) == "ON" && awaitingOn.remove(depth) =>
         out += t += TWord("graft_asof") += TOp("(")
         inCond += depth

@@ -182,10 +182,12 @@ class AsofSqlSpec extends AnyFunSuite {
 
   test("a view over an ASOF join is planned when a later statement reads it") {
     colliding
-    GraftSql.sql(spark, s"CREATE OR REPLACE TEMP VIEW asof_v AS SELECT lid, rid FROM $asof")
-    assert(table("SELECT lid, rid FROM asof_v ORDER BY lid") ===
-      (Seq("lid", "rid"), Seq(Seq(1, 11), Seq(2, 12))))
-    spark.catalog.dropTempView("asof_v")
+    for (create <- Seq("CREATE VIEW", "CREATE OR REPLACE TEMP VIEW")) {
+      GraftSql.sql(spark, s"$create asof_v AS SELECT lid, rid FROM $asof")
+      try assert(table("SELECT lid, rid FROM asof_v ORDER BY lid") ===
+        (Seq("lid", "rid"), Seq(Seq(1, 11), Seq(2, 12))), create)
+      finally spark.catalog.dropTempView("asof_v")
+    }
   }
 
   test("a condition without exactly one inequality raises the reference's message") {
@@ -196,6 +198,11 @@ class AsofSqlSpec extends AnyFunSuite {
     val multiple = intercept[IllegalArgumentException](GraftSql.sql(spark,
       "SELECT lid FROM al l ASOF JOIN ar r ON l.k = r.k AND l.t >= r.t AND l.t <= r.t"))
     assert(multiple.getMessage.contains("Multiple ASOF JOIN inequalities"))
+    for (kind <- Seq("SEMI", "ANTI")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSql.sql(spark, s"SELECT lid FROM al l ASOF $kind JOIN ar r ON l.k = r.k"))
+      assert(e.getMessage.contains("Missing ASOF JOIN inequality"), kind)
+    }
   }
 
   test("an expression still holding the ASOF marker fails at execution, returning no rows") {

@@ -47,6 +47,27 @@ class DialectRobustnessSpec extends AnyFunSuite {
     spark.catalog.dropTempView("temp_view_x")
   }
 
+  test("CREATE VIEW over a session function or a temp view reads back in a later statement") {
+    fresh("cv_t")
+    GraftSql.sql(spark, "CREATE TABLE cv_t AS SELECT 1.6 AS x")
+    spark.sql("SELECT 2 AS z").createOrReplaceTempView("cv_tmp")
+    try {
+      // the dialect spells an integer cast with a session function
+      // (DuckDB 1.0.0: 2); a body over a temp view; a plain body stays
+      // a persistent view
+      GraftSql.sql(spark, "CREATE VIEW cv_fn AS SELECT CAST(x AS INTEGER) AS y FROM cv_t")
+      GraftSql.sql(spark, "CREATE VIEW cv_tv AS SELECT z FROM cv_tmp")
+      GraftSql.sql(spark, "CREATE VIEW cv_plain AS SELECT x FROM cv_t")
+      assert(GraftSql.sql(spark, "SELECT y FROM cv_fn").collect().map(_.getInt(0)).toSeq === Seq(2))
+      assert(GraftSql.sql(spark, "SELECT z FROM cv_tv").collect().map(_.getInt(0)).toSeq === Seq(2))
+      assert(!spark.catalog.getTable("cv_plain").isTemporary)
+    } finally {
+      Seq("cv_fn", "cv_tv", "cv_tmp").foreach(spark.catalog.dropTempView)
+      GraftSql.sql(spark, "DROP VIEW IF EXISTS cv_plain")
+      fresh("cv_t")
+    }
+  }
+
   test("CREATE [TEMP] VIEW over a UNION BY NAME body reads back in a later statement") {
     // DuckDB 1.0.0: (1, NULL) and (NULL, 2), for both forms
     Seq("CREATE VIEW ubn_v", "CREATE TEMP VIEW ubn_tv").foreach { create =>
