@@ -487,13 +487,9 @@ object GraftSql {
             spark.emptyDataFrame
           case t =>
             // post-translate passes: star REPLACE + COLUMNS('re')
-            // (schema-aware), then window EXCLUDE / named-window
-            // inlining, then nested-generator extraction (SqlPasses)
-            val finalSql = graft.plans.SqlPasses.generatorPass(
-              graft.plans.SqlPasses.windowExprBoundsPass(
-                graft.plans.SqlPasses.windowExcludePass(
-                  graft.plans.SqlPasses.emptyGroupingPass(
-                    columnsPass(spark, starReplacePass(spark, t))))))
+            // (schema-aware), then the schema-free SqlPasses
+            val finalSql = graft.plans.SqlPasses.sparkText(
+              columnsPass(spark, starReplacePass(spark, t)))
             val out =
               try spark.sql(finalSql)
               catch {

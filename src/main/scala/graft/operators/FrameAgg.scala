@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Array-backed window-frame aggregation kernels — the fallback path
   * for two reference window features Spark's native window exec can't
-  * express (SqlPasses rewrites produce these calls):
+  * express (plans/WindowFrameRule builds these expressions):
   *
   *  1. Non-literal ROWS frame bounds (`ROWS BETWEEN expr PRECEDING
   *     AND expr FOLLOWING`, reference
@@ -17,12 +17,14 @@ import org.apache.spark.sql.types._
   *     unbounded collect_list window expression a single time and
   *     reuses it across rows and across the multiple textual
   *     occurrences), then each row slices its own [rn−lo, rn+hi]
-  *     range and reduces it here — O(avg frame) per row, the same
+  *     range and reduces it here (FrameAgg reads the value field of
+  *     the sliced structs, so no per-row offset ever sits inside a
+  *     lambda) — O(avg frame) per row, the same
   *     work the reference's WindowBoundariesState does for
   *     expression bounds (it also re-evaluates per row).
   *
-  *  2. Window EXCLUDE over combinations the algebraic rewrite in
-  *     SqlPasses can't reach — holistic aggregates (median / mode /
+  *  2. Window EXCLUDE over combinations the algebra in
+  *     operators/WindowExclude can't reach — holistic aggregates (median / mode /
   *     quantile / mad, reference window_segment_tree exclusion), and
   *     distributive aggregates under frames that cut the peer group
   *     (bounded ROWS + EXCLUDE GROUP/TIES). The frame is collected
@@ -47,9 +49,8 @@ import org.apache.spark.sql.types._
   */
 object FrameKernel {
 
-  /** Hard cap on a COLLECTED window frame/partition (the
-    * windowExprBoundsPass / excludeFallback plans materialize one
-    * array per partition). The collect is the reference's own cost
+  /** Hard cap on a COLLECTED window frame/partition (WindowFrameRule's
+    * kernel plans materialize one array per partition). The collect is the reference's own cost
     * model for expression bounds, and Catalyst shares it across rows
     * — but a skewed partition at 100× scale would silently become a
     * single executor-memory row. Past the cap we fail LOUDLY with the
@@ -251,8 +252,11 @@ object FrameKernel {
 }
 
 /** graft_frame_agg(values_array, 'fn'[, q]) — reduce an array of
-  * values with a named aggregate (FrameKernel.compute). Emitted by
-  * SqlPasses.windowExprBoundsPass on non-literal ROWS frame bounds.
+  * values with a named aggregate (FrameKernel.compute). An array of
+  * structs is read by its last field: the value of the (order keys…,
+  * value) rows WindowFrameRule slices per row for per-row ROWS
+  * offsets. The dialect calls it on sorted value lists (ordered-set
+  * quantiles).
   */
 case class FrameAgg(arr: Expression, fnE: Expression, qE: Expression)
   extends Expression with CodegenFallback {
@@ -265,8 +269,16 @@ case class FrameAgg(arr: Expression, fnE: Expression, qE: Expression)
 
   private lazy val fn: String = FrameKernel.constString(fnE, "frame_agg fn").toLowerCase
   private lazy val q: Double = FrameKernel.constDouble(qE)
-  private lazy val elem: DataType =
-    arr.dataType.asInstanceOf[ArrayType].elementType
+  private lazy val row: DataType = arr.dataType.asInstanceOf[ArrayType].elementType
+  // the value field of a struct row, or -1 for plain values
+  private lazy val field: Int = row match {
+    case s: StructType => s.length - 1
+    case _ => -1
+  }
+  private lazy val elem: DataType = row match {
+    case s: StructType => s.fields.last.dataType
+    case t => t
+  }
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     if (!arr.dataType.isInstanceOf[ArrayType])
@@ -287,7 +299,15 @@ case class FrameAgg(arr: Expression, fnE: Expression, qE: Expression)
     val n = ad.numElements()
     val values = new Array[Any](n)
     var i = 0
-    while (i < n) { values(i) = ad.get(i, elem); i += 1 }
+    while (i < n) {
+      values(i) =
+        if (field < 0) ad.get(i, elem)
+        else {
+          val r = ad.getStruct(i, field + 1)
+          if (r.isNullAt(field)) null else r.get(field, elem)
+        }
+      i += 1
+    }
     FrameKernel.compute(fn, q, scala.collection.immutable.ArraySeq.unsafeWrapArray(values), elem)
   }
 
@@ -296,11 +316,11 @@ case class FrameAgg(arr: Expression, fnE: Expression, qE: Expression)
   override def prettyName: String = "graft_frame_agg"
 }
 
-/** graft_guard_frame(arr) — identity on a collected frame/partition
-  * array, failing LOUDLY past [[FrameKernel.MaxCollectedFrame]] with
-  * the shard fallback documented in the message. Wrapped around every
-  * collect_list the window fallbacks emit so a skewed partition at
-  * scale surfaces as a clear plan-shape error, not an executor OOM.
+/** Identity on a collected frame/partition array, failing LOUDLY past
+  * [[FrameKernel.MaxCollectedFrame]] with the shard fallback documented
+  * in the message. Wrapped around every collect_list WindowFrameRule
+  * builds so a skewed partition at scale surfaces as a clear plan-shape
+  * error, not an executor OOM.
   * Codegen'd: a static pass-through call, so it never breaks the
   * whole-stage span the collect feeds.
   */
@@ -327,8 +347,9 @@ case class FrameSizeGuard(child: Expression)
     copy(child = c)
 }
 
-/** graft_exclude_agg(frame_structs, cur_struct, 'kind', 'fn'[, q]) —
-  * window EXCLUDE applied to a collected frame. `frame_structs` is
+/** Window EXCLUDE applied to a collected frame (WindowFrameRule's
+  * kernel route; arguments: frame_structs, cur_struct, 'kind', 'fn',
+  * q). `frame_structs` is
   * the frame's rows as structs (order-key fields…, value field LAST),
   * collected by the SAME window frame the query names; `cur_struct`
   * is the current row's struct. kind:
@@ -449,5 +470,5 @@ case class ExcludeAgg(arr: Expression, cur: Expression, kindE: Expression,
 
   override protected def withNewChildrenInternal(
       c: IndexedSeq[Expression]): ExcludeAgg = copy(c(0), c(1), c(2), c(3), c(4))
-  override def prettyName: String = "graft_exclude_agg"
+  override def prettyName: String = "exclude_agg"
 }

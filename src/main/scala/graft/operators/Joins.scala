@@ -96,9 +96,15 @@ object Joins {
     val leftCols = left.columns.toSeq
     val mType = org.apache.spark.sql.types.StructType(
       payload.map(p => right.schema(p)))
+    // the times order as they are when their types agree (always so
+    // from AsofJoinRule, after coercion); otherwise, as for q31's DATE
+    // against TIMESTAMP, both as TIMESTAMP
+    val sameType =
+      left.select(leftTime).schema.head.dataType == right.select(rightTime).schema.head.dataType
+    def time(t: Column): Column = if (sameType) t else t.cast("timestamp")
     val l = left
       .withColumn("__k", leftKey)
-      .withColumn("__t", leftTime.cast("timestamp"))
+      .withColumn("__t", time(leftTime))
       .withColumn("__isl", lit(1))
       // null struct on left rows → skipped by last(ignoreNulls)
       .withColumn("__m", lit(null).cast(mType))
@@ -122,7 +128,7 @@ object Joins {
       // pruneBuild=false means the caller already pruned the build side
       if (rightOuter || !pruneBuild) r0
       else r0.join(probeKeys, Seq("__k"), "left_semi"))
-      .withColumn("__t", rightTime.cast("timestamp"))
+      .withColumn("__t", time(rightTime))
       .withColumn("__isl", lit(0))
       // non-null struct on EVERY right row (fields may be null) → the
       // matched row is attached wholesale, never mixed across rows

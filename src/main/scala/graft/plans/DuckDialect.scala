@@ -2379,7 +2379,15 @@ object DuckDialect {
         }
         else if (peekWord("OVER")) {
           next()
-          val spec = if (peekOp("(")) clauseParen() else next().text // inline / named
+          val (spec, frame) = if (peekOp("(")) windowSpec() else (next().text, None) // inline / named
+          // a frame Spark's grammar rejects: graft_window marks the
+          // windowed call, named as translated, for plans/WindowFrameRule
+          def over(call: String): String = frame match {
+            case Some(f) =>
+              val name = call.takeWhile(c => c.isLetterOrDigit || c == '_').toLowerCase
+              s"graft_window($call OVER $spec, '$name', $f)"
+            case None => s"$call OVER $spec"
+          }
           val isDistinct = parts.headOption.contains("DISTINCT")
           val bare = renderArgs(parts.drop(1).toSeq)
           // Spark rejects FILTER on window aggregates — fold the
@@ -2399,10 +2407,10 @@ object DuckDialect {
           // stay unsupported (analysis error).
           out =
             if (isDistinct && low == "count")
-              s"CAST(size(collect_set($bare) OVER $spec) AS BIGINT)"
+              s"CAST(size(${over(s"collect_set($bare)")}) AS BIGINT)"
             else if (isDistinct && low == "sum")
-              s"aggregate(collect_set($bare) OVER $spec, CAST(0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE))"
-            else s"$out OVER $spec"
+              s"aggregate(${over(s"collect_set($bare)")}, CAST(0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE))"
+            else over(out)
         }
         else if (peekWord("WITHIN")) {
           next(); require(peekWord("GROUP"), "duck-dialect: WITHIN without GROUP"); next()
@@ -2457,6 +2465,72 @@ object DuckDialect {
       }
       expectOp(")")
       s"(${out.mkString(" ")})"
+    }
+
+    /** The `( … )` of an OVER clause: the window as Spark reads it
+      * and, when its frame is one Spark's grammar rejects, that frame
+      * as graft_window's arguments — `'<unit>', '<lower kind>',
+      * <lower offset>, '<upper kind>', <upper offset>, '<exclude>'`.
+      * Spark rejects an EXCLUDE clause and a ROWS offset that is not
+      * an integer literal; the window then keeps only its PARTITION/
+      * ORDER part. EXCLUDE NO OTHERS is the default and drops. Named
+      * windows arrive inlined (windowDefs).
+      */
+    def windowSpec(): (String, Option[String]) = {
+      expectOp("(")
+      def at(ws: String*): Boolean = more && (peek match {
+        case TWord(w) => ws.exists(w.equalsIgnoreCase); case _ => false })
+      val out = ArrayBuffer.empty[String]
+      while (more && !peekOp(")") && !at("ROWS", "RANGE", "GROUPS", "EXCLUDE")) peek match {
+        case TWord(w) if GLUE(w.toUpperCase) => next(); out += w
+        case TOp(",") => next(); out += ","
+        case _ => out += expr(0)
+      }
+      val window = out.mkString(" ")
+      // (kind, offset): UNBOUNDED … and CURRENT ROW have no offset
+      def bound(): (String, String) =
+        if (at("UNBOUNDED", "CURRENT")) {
+          val kind = s"${next().text} ${next().text}"
+          out += kind
+          (kind.toUpperCase, "NULL")
+        } else {
+          val offset = expr(0)
+          val dir = next().text
+          out += offset += dir
+          (dir.toUpperCase, offset)
+        }
+      val frame = if (!at("ROWS", "RANGE", "GROUPS")) None else {
+        val unit = next().text
+        out += unit
+        if (!at("BETWEEN")) Some((unit, bound(), ("CURRENT ROW", "NULL")))
+        else {
+          out += next().text
+          val lo = bound()
+          require(at("AND"), "duck-dialect: window frame BETWEEN without AND")
+          out += next().text
+          Some((unit, lo, bound()))
+        }
+      }
+      val exclude = if (!at("EXCLUDE")) "" else {
+        next()
+        val kind = ArrayBuffer.empty[String]
+        while (more && !peekOp(")")) kind += next().text.toUpperCase
+        kind.mkString(" ") match {
+          case "NO OTHERS" => ""
+          case k @ ("CURRENT ROW" | "GROUP" | "TIES") => k
+          case k => throw new IllegalArgumentException(s"duck-dialect: EXCLUDE $k")
+        }
+      }
+      expectOp(")")
+      def perRow(b: (String, String)) = b._2 != "NULL" && !b._2.matches("\\d+")
+      frame match {
+        case Some((unit, lo, hi)) if exclude.nonEmpty ||
+            unit.equalsIgnoreCase("ROWS") && (perRow(lo) || perRow(hi)) =>
+          (s"($window)", Some(s"'${unit.toUpperCase}', '${lo._1}', ${lo._2}, '${hi._1}', ${hi._2}, '$exclude'"))
+        case _ =>
+          require(exclude.isEmpty, "duck-dialect: EXCLUDE needs a window frame")
+          (s"(${out.mkString(" ")})", None)
+      }
     }
 
     /** struct_pack / struct_insert / union_value with `k := v` args.
@@ -3188,6 +3262,90 @@ object DuckDialect {
     out.toIndexedSeq
   }
 
+  /** The WINDOW clause of each SELECT scope, written into its
+    * references and deleted: `OVER w` becomes `OVER (<body>)` and `OVER
+    * (w …)` becomes `OVER (<body> …)`, a body extending another window
+    * (`w2 AS (w ORDER BY x)`) inlined in turn. The OVER parser then
+    * sees every frame, and marks the ones Spark's grammar rejects. A
+    * scope is the SELECT's own set-operation branch, subqueries
+    * excluded; names match case-insensitively, as in the reference.
+    */
+  private def windowDefs(toks: IndexedSeq[Tok]): IndexedSeq[Tok] = {
+    def word(k: Int): String = toks.lift(k) match {
+      case Some(TWord(w)) => w.toUpperCase
+      case _ => ""
+    }
+    def isName(k: Int): Boolean = toks.lift(k).exists(_.isInstanceOf[TWord])
+    def defAt(k: Int): Boolean = isName(k) && word(k + 1) == "AS" && toks.lift(k + 2).contains(TOp("("))
+    val clauses = toks.indices.filter(k => word(k) == "WINDOW" && defAt(k + 1) &&
+      !(k > 0 && toks(k - 1) == TOp(".")))
+    if (clauses.isEmpty) return toks
+    // each paren's partner; an unbalanced statement is left to the parser
+    val partner = Array.fill(toks.length)(-1)
+    val opens = scala.collection.mutable.Stack.empty[Int]
+    toks.indices.foreach { k =>
+      if (toks(k) == TOp("(")) opens.push(k)
+      else if (toks(k) == TOp(")") && opens.nonEmpty) {
+        val o = opens.pop(); partner(o) = k; partner(k) = o
+      }
+    }
+    if (opens.nonEmpty || toks.indices.exists(k => toks(k) == TOp(")") && partner(k) < 0)) return toks
+    val edits = ArrayBuffer.empty[(Int, Int, IndexedSeq[Tok])] // [from, until) → tokens
+    for (k <- clauses) {
+      val defs = scala.collection.mutable.Map.empty[String, IndexedSeq[Tok]]
+      var j = k + 1
+      var going = true
+      while (going) {
+        defs(toks(j).text.toLowerCase) = toks.slice(j + 3, partner(j + 2))
+        j = partner(j + 2) + 1
+        going = toks.lift(j).contains(TOp(",")) && defAt(j + 1)
+        if (going) j += 1
+      }
+      val clauseEnd = j
+      def extends_(body: IndexedSeq[Tok]): Option[String] = body.headOption.collect {
+        case TWord(w) if !GLUE(w.toUpperCase) => w.toLowerCase
+      }
+      def inlined(body: IndexedSeq[Tok], seen: Set[String] = Set.empty): IndexedSeq[Tok] =
+        extends_(body).filter(b => defs.contains(b) && !seen(b)) match {
+          case Some(b) => inlined(defs(b), seen + b) ++ body.tail
+          case None => body
+        }
+      // the scope: the enclosing parens, narrowed to k's set-operation branch
+      var s = k - 1
+      while (s >= 0 && !(toks(s) == TOp("(") && partner(s) > k)) s -= 1
+      var (from, until) = (s + 1, if (s < 0) toks.length else partner(s))
+      var r = from
+      while (r < until) {
+        if (toks(r) == TOp("(")) r = partner(r)
+        else if (Set("UNION", "EXCEPT", "INTERSECT")(word(r))) {
+          if (r < k) from = r + 1 else until = r
+        }
+        r += 1
+      }
+      r = from
+      while (r < until) {
+        if (r == k) r = clauseEnd
+        else if (toks(r) == TOp("(") && Set("SELECT", "WITH", "FROM", "VALUES")(word(r + 1))) r = partner(r) + 1
+        else {
+          if (word(r) == "OVER") {
+            val named = if (toks.lift(r + 1).contains(TOp("("))) r + 2 else r + 1
+            val n = toks.lift(named).map(_.text.toLowerCase).getOrElse("")
+            if (isName(named) && defs.contains(n)) {
+              val body = inlined(defs(n))
+              edits += ((named, named + 1, if (named == r + 1) TOp("(") +: body :+ TOp(")") else body))
+            }
+          }
+          r += 1
+        }
+      }
+      edits += ((k, clauseEnd, IndexedSeq.empty))
+    }
+    val out = ArrayBuffer.empty[Tok]
+    var at = 0
+    edits.sortBy(_._1).foreach { case (a, b, ts) => out ++= toks.slice(at, a) ++= ts; at = b }
+    (out ++= toks.drop(at)).toIndexedSeq
+  }
+
   /** Words that end an ASOF join's ON condition at its own depth. */
   private val AsofCondEnd = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
     "OFFSET", "QUALIFY", "WINDOW", "UNION", "EXCEPT", "INTERSECT", "JOIN",
@@ -3225,7 +3383,7 @@ object DuckDialect {
         s"$head SELECT * FROM ($values)"
       case other => other
     }
-    val p = new P(asofMark(lex(sql)), nativeTime)
+    val p = new P(windowDefs(asofMark(lex(sql))), nativeTime)
     val out0 = p.statement()
     // early-return statement paths (DDL, DISTINCT ON, QUALIFY) leave
     // a trailing ';' unconsumed — every statement form accepts it

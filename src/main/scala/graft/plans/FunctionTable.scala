@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.PercentileDisc
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-import graft.operators.{BinnedHistogramAgg, BitstringAgg, EntropyAgg, ExcludeAgg, FrameAgg, FrameSizeGuard, HistogramAgg, KahanSumAgg, MadAgg, ProductAgg, ReservoirQuantileAgg}
+import graft.operators.{BinnedHistogramAgg, BitstringAgg, EntropyAgg, FrameAgg, HistogramAgg, KahanSumAgg, MadAgg, ProductAgg, ReservoirQuantileAgg}
 
 /** The reference's function library under its own SQL names, as one
   * table injected into every graft session's FunctionRegistry: a
@@ -916,14 +916,13 @@ object FunctionTable {
     // yield NULL (TRY_CAST); plain: they error (CAST, both engines)
     fn("graft_rint")(1)(a => DuckRint(a(0))),
     fn("graft_rint_try")(1)(a => DuckRint(a(0), strict = false)),
-    // window-frame fallback kernels (operators/FrameAgg.scala), emitted
-    // by SqlPasses.windowExprBoundsPass (non-literal ROWS bounds) and
-    // SqlPasses.rewriteOneExclude (EXCLUDE over holistic aggregates)
+    // a window frame Spark's grammar rejects, marked by the dialect and
+    // planned by WindowFrameRule
+    fn("graft_window")(8)(a => WindowFrameMark(a)),
+    // the dialect's ordered-set quantile over a sorted value list
+    // (operators/FrameAgg.scala)
     fn("graft_frame_agg")(2, 3)(a =>
-      FrameAgg(a(0), a(1), a.lift(2).getOrElse(Literal(null, DoubleType)))),
-    fn("graft_guard_frame")(1)(a => FrameSizeGuard(a(0))),
-    fn("graft_exclude_agg")(4, 5)(a =>
-      ExcludeAgg(a(0), a(1), a(2), a(3), a.lift(4).getOrElse(Literal(null, DoubleType))))
+      FrameAgg(a(0), a(1), a.lift(2).getOrElse(Literal(null, DoubleType))))
   ).flatten
 }
 
@@ -941,6 +940,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ASOF joins, resolved like any join, then planned as
     // Joins.asofJoin's union and window (plans/AsofJoinRule)
     e.injectPostHocResolutionRule(s => AsofJoinRule(s))
+    // window frames Spark's grammar rejects, planned from the resolved
+    // window before Spark extracts windows (plans/WindowFrameRule)
+    e.injectResolutionRule(_ => WindowFrameRule)
     // relations a front-door statement computed for itself, resolved
     // ahead of the catalog (plans/StatementScope)
     e.injectHintResolutionRule(_ => StatementScopeRule)

@@ -4,14 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{GroupsFrame, WindowExclude}
-import graft.operators.WindowExclude._
+import graft.operators.WindowExclude.{ExcludeCurrentRow, ExcludeGroup, ExcludeTies, countExclude, sumExclude}
 import graft.sources.Catalog
 
-/** Round-4 window surface: frame EXCLUDE and the named WINDOW clause —
-  * the last stock-DuckDB window features with no Spark counterpart
+/** Round-4 window surface: frame EXCLUDE and the named WINDOW clause
   * (SURVEY §2; reference: src/execution/window_segment_tree.cpp's
   * exclusion handling, src/parser/transform/helpers/transform_sample.cpp
-  * siblings for WINDOW clause binding).
+  * siblings for WINDOW clause binding). The dialect writes each named
+  * window into its references; EXCLUDE reaches operators/WindowExclude
+  * through plans/WindowFrameRule, the same algebra q55's hand plan
+  * calls.
   *
   * Values aggregate as fixed-point BIGINT units (floor(value·100+0.5))
   * so every window sum is exact and order-independent — the engines

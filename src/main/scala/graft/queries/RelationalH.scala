@@ -8,14 +8,14 @@ import graft.GraftSql
   *  - non-literal ROWS frame bounds (per-row boundary expressions,
   *    reference test/sql/window/test_boundary_expr.test,
   *    src/execution/window_executor.cpp WindowBoundariesState) →
-  *    SqlPasses.windowExprBoundsPass: partition collected once,
-  *    per-row slice + graft_frame_agg reduce;
+  *    plans/WindowFrameRule: partition collected once, per-row slice
+  *    reduced by FrameAgg;
   *  - EXCLUDE over holistic aggregates / frames the algebraic
   *    rewrite can't reach (reference window_segment_tree exclusion
   *    over mode/quantile/mad, test/sql/window/test_window_exclude
-  *    .test median cases) → SqlPasses.excludeFallback:
-  *    (order-keys…, value) structs collected over the NAMED frame,
-  *    exclusion applied in graft_exclude_agg.
+  *    .test median cases) → WindowFrameRule's kernel route:
+  *    (order-keys…, value) structs collected over the written frame,
+  *    exclusion applied in ExcludeAgg.
   *
   * Both entries run the IDENTICAL text on DuckDB (native support) —
   * the oracle checks values, not just plumbing. Sums ride fixed-point

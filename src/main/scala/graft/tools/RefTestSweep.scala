@@ -205,13 +205,10 @@ object RefTestSweep {
       if (layerRouted) routed += 1
       else {
         val t =
-          try Some(graft.plans.SqlPasses.generatorPass(
-            graft.plans.SqlPasses.windowExprBoundsPass(
-              graft.plans.SqlPasses.windowExcludePass(
-                graft.plans.SqlPasses.emptyGroupingPass(
-                  graft.plans.DuckDialect.translate(
-                    graft.plans.MacroReg.expand(
-                      graft.plans.SqlPasses.nestedJoinPass(sql))))))))
+          try Some(graft.plans.SqlPasses.sparkText(
+            graft.plans.DuckDialect.translate(
+              graft.plans.MacroReg.expand(
+                graft.plans.SqlPasses.nestedJoinPass(sql)))))
           catch {
             case e: Throwable =>
               val key = Option(e.getMessage).getOrElse(e.getClass.getName)

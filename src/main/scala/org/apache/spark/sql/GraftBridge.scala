@@ -14,6 +14,13 @@ object GraftBridge {
   def columnOf(e: Expression): Column = classic.ExpressionUtils.column(e)
   def exprOf(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A Column as a sort key: its own direction, else ascending. */
+  def sortOrderOf(c: Column): catalyst.expressions.SortOrder =
+    classic.ColumnConversions.expression(c) match {
+      case s: catalyst.expressions.SortOrder => s
+      case e => catalyst.expressions.SortOrder(e, catalyst.expressions.Ascending)
+    }
+
   /** Physical-plan string (for plan-shape audits). */
   def explainString(df: Dataset[_], mode: String = "formatted"): String =
     df.asInstanceOf[classic.Dataset[_]].queryExecution

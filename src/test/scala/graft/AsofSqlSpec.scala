@@ -58,6 +58,16 @@ class AsofSqlSpec extends AnyFunSuite {
     assert(run("<", left = true) === Seq((1, 12), (2, null), (3, 13), (4, null)))
   }
 
+  test("times of one type order as they are, not as TIMESTAMP (DuckDB-pinned)") {
+    // 0.0000001 and 0.0000002 are one microsecond apart at most as
+    // TIMESTAMPs; as DECIMALs the first precedes the second
+    def rows(l: String, r: String) = GraftSql.sql(spark,
+      s"SELECT p.a, e.b FROM (VALUES ($l)) p(a) ASOF JOIN (VALUES ($r)) e(b) ON p.a >= e.b")
+      .collect().map(x => (x.getDecimal(0).toPlainString, x.getDecimal(1).toPlainString)).toSeq
+    assert(rows("0.0000001", "0.0000002") === Seq())
+    assert(rows("0.0000001", "0.0000001") === Seq(("0.0000001", "0.0000001")))
+  }
+
   test("flipped spelling (right expr on the left of the inequality) normalizes") {
     fixture
     val got = GraftSql.sql(spark,

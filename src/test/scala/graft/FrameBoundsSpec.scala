@@ -2,11 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Non-literal ROWS frame bounds (SqlPasses.windowExprBoundsPass →
-  * graft_frame_agg) and the EXCLUDE fallback over holistic aggregates
-  * / peer-cutting frames (SqlPasses.excludeFallback →
-  * graft_exclude_agg). Every expectation is DuckDB output for the
-  * same text (pinned 2026-08-15, this session).
+/** Non-literal ROWS frame bounds (plans/WindowFrameRule → FrameAgg)
+  * and the EXCLUDE fallback over holistic aggregates / peer-cutting
+  * frames (WindowFrameRule → ExcludeAgg). Every expectation is DuckDB
+  * output for the same text (pinned 2026-08-15).
   */
 class FrameBoundsSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -106,6 +105,18 @@ class FrameBoundsSpec extends AnyFunSuite {
       Seq(10, 20, 30, 40, 60), Seq(10, 20, 30, 50, 60), Seq(10, 20, 30, 40, 50, 60)))
   }
 
+  test("constant ROWS offsets that are not INT literals (DuckDB-pinned)") {
+    // Spark's ROWS frames take only INT constants: these are sliced per row
+    GraftSql.sql(spark, "CREATE OR REPLACE TEMP VIEW fb6 AS SELECT * FROM (VALUES (1), (2), (3)) v(x)")
+    for (offset <- Seq("CAST(1 AS BIGINT)", "1.0"))
+      assert(rows(s"SELECT x, sum(x) OVER (ORDER BY x ROWS BETWEEN $offset PRECEDING AND CURRENT ROW) AS s " +
+        "FROM fb6 ORDER BY x") === Seq(Seq(1, 1L), Seq(2, 3L), Seq(3, 5L)), offset)
+    // an offset of 0 is the current row, also under EXCLUDE
+    assert(rows("SELECT x, min(x) OVER (ORDER BY x ROWS BETWEEN 0 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW), " +
+      "first_value(x) OVER (ORDER BY x ROWS BETWEEN 0 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) " +
+      "FROM fb6 ORDER BY x") === Seq(Seq(1, 2, 2), Seq(2, 3, 3), Seq(3, null, null)))
+  }
+
   test("integer window SUM is exact past 2^53 (no Double detour)") {
     GraftSql.sql(spark,
       "CREATE OR REPLACE TEMP VIEW fb5 AS SELECT * FROM (VALUES (1, 9007199254740993), (2, 1), (3, 2)) v(i, x)")
@@ -115,19 +126,38 @@ class FrameBoundsSpec extends AnyFunSuite {
     assert(r.map(_(1)) == Seq(9007199254740994L, 3L, 2L))
   }
 
+  private def analyzed(q: String) = GraftSql.sql(spark, q).queryExecution.analyzed
+
   test("literal bounds stay on Spark's native window frames") {
-    val sql = "SELECT SUM(x) OVER (ORDER BY i ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) FROM fb1"
-    assert(graft.plans.SqlPasses.windowExprBoundsPass(sql) == sql)
-    val unb = "SELECT SUM(x) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING) FROM fb1"
-    assert(graft.plans.SqlPasses.windowExprBoundsPass(unb) == unb)
+    setup()
+    def kernels(q: String) = analyzed(q).flatMap(_.expressions.flatMap(_.collect {
+      case f: graft.operators.FrameAgg => f
+    }))
+    assert(kernels("SELECT SUM(x) OVER (ORDER BY i ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) FROM fb1").isEmpty)
+    assert(kernels("SELECT SUM(x) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING) FROM fb1").isEmpty)
   }
 
   test("r12: partition-sized collects are size-guarded and fail loudly past the cap") {
     setup()
-    // the rewrites wrap every collect_list in graft_guard_frame
-    val t1 = graft.plans.SqlPasses.windowExprBoundsPass(
+    // the rule wraps every collect_list in FrameSizeGuard
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, WindowExpression}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectList}
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    val plan = analyzed(
       "SELECT SUM(x) OVER (ORDER BY i ROWS BETWEEN (i%2) PRECEDING AND 0 FOLLOWING) FROM fb1")
-    assert(t1.contains("graft_guard_frame(collect_list("))
+    val collected = plan.flatMap {
+      case w: Window => w.windowExpressions.collect {
+        case a @ Alias(WindowExpression(AggregateExpression(_: CollectList, _, _, _, _), _), _) => a.exprId
+      }
+      case _ => Nil
+    }.toSet
+    val guarded = plan.flatMap(_.expressions.flatMap(_.collect {
+      case g: graft.operators.FrameSizeGuard => g.child
+    }))
+    assert(guarded.nonEmpty && guarded.forall {
+      case a: Attribute => collected(a.exprId)
+      case _ => false
+    })
     // guarded queries still answer (pass-through under the cap)
     val r = rows("SELECT i, SUM(x) OVER (ORDER BY i ROWS BETWEEN (i%2) PRECEDING AND 0 FOLLOWING) AS s FROM fb1 ORDER BY i")
     assert(r.map(_(1)) == Seq(10L, 20L, 50L, 40L, 90L))

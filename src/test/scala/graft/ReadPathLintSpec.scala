@@ -95,6 +95,12 @@ class ReadPathLintSpec extends AnyFunSuite {
       "plans/FunctionTable.scala").map(root.resolve(_).toString))
   }
 
+  test("graft_window is emitted by the dialect and consumed by one rule only") {
+    val files = offenders(scalaSources, "graft_window".r).map(_.takeWhile(_ != ':')).distinct.sorted
+    assert(files === Seq("plans/DuckDialect.scala", "plans/FunctionTable.scala",
+      "plans/WindowFrameRule.scala").map(root.resolve(_).toString))
+  }
+
   test("injectFunction( appears in exactly one file: plans/FunctionTable.scala") {
     val files = offenders(scalaSources, """injectFunction\s*\(""".r).map(_.takeWhile(_ != ':')).distinct
     assert(files === Seq(root.resolve("plans/FunctionTable.scala").toString))

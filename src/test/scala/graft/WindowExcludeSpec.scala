@@ -71,6 +71,13 @@ class WindowExcludeSpec extends AnyFunSuite {
       Seq(Some(20L), Some(30L), Some(40L), Some(30L), None))
   }
 
+  test("MIN/MAX EXCLUDE CURRENT ROW over a frame starting at the current row") {
+    assert(collect(WindowExclude.minExcludeCurrentRow(col("x"), part, ordRows, 0, 1)) ==
+      Seq(Some(20L), Some(30L), Some(40L), None, None))
+    assert(collect(WindowExclude.maxExcludeCurrentRow(col("x"), part, ordRows, 1, 0)) ==
+      Seq(None, Some(10L), Some(20L), Some(30L), None))
+  }
+
   test("AVG EXCLUDE GROUP (exact rational over the fixture)") {
     assert(collect(avgExclude(col("x"), wf, part, ordFull, ExcludeGroup)) ==
       Seq(Some(30L), Some(25L), Some(25L), Some(20L), None))
@@ -114,24 +121,74 @@ class WindowExcludeSpec extends AnyFunSuite {
     assert(r == Seq(Some(30L), Some(40L), Some(10L)))
   }
 
+  /** The analyzed plan of `q` through the front door. */
+  private def analyzed(q: String) = GraftSql.sql(spark, q).queryExecution.analyzed
+
+  private def excludeKernels(q: String): Seq[(String, String)] =
+    analyzed(q).flatMap(_.expressions.flatMap(_.collect {
+      case e: graft.operators.ExcludeAgg => (e.kindE.toString, e.fnE.toString)
+    }))
+
   test("SQL pass routes peer-cutting frames to the collected-frame fallback") {
     // a bounded ROWS frame can cut the peer group — the algebraic
     // rewrite would subtract rows never in the frame; these route to
-    // graft_exclude_agg (frame-intersected by construction, r10)
-    val g = graft.plans.SqlPasses.windowExcludePass(
-      "SELECT SUM(x) OVER (ORDER BY o ROWS BETWEEN 5 PRECEDING AND CURRENT ROW EXCLUDE GROUP) FROM t")
-    assert(g.contains("graft_exclude_agg") && g.contains("'group'"))
-    val c = graft.plans.SqlPasses.windowExcludePass(
-      "SELECT SUM(x) OVER (ORDER BY o ROWS BETWEEN 5 PRECEDING AND 2 PRECEDING EXCLUDE CURRENT ROW) FROM t")
-    assert(c.contains("graft_exclude_agg") && c.contains("'current'"))
+    // ExcludeAgg (frame-intersected by construction, r10)
+    GraftSql.sql(spark,
+      "CREATE OR REPLACE TEMP VIEW wex AS SELECT * FROM (VALUES (1, 10), (2, 20), (2, 30)) v(o, x)")
+    assert(excludeKernels(
+      "SELECT SUM(x) OVER (ORDER BY o ROWS BETWEEN 5 PRECEDING AND CURRENT ROW EXCLUDE GROUP) FROM wex")
+      .map(_._1) === Seq("group"))
+    assert(excludeKernels(
+      "SELECT SUM(x) OVER (ORDER BY o ROWS BETWEEN 5 PRECEDING AND 2 PRECEDING EXCLUDE CURRENT ROW) FROM wex")
+      .map(_._1) === Seq("current"))
     // holistic aggregates always take the fallback
-    val h = graft.plans.SqlPasses.windowExcludePass(
-      "SELECT MEDIAN(x) OVER (ORDER BY o RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE GROUP) FROM t")
-    assert(h.contains("graft_exclude_agg") && h.contains("'median'"))
+    assert(excludeKernels(
+      "SELECT MEDIAN(x) OVER (ORDER BY o RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE GROUP) FROM wex")
+      .map(_._2) === Seq("median"))
     // distributive aggregates on safe frames keep the O(1)/row algebra
-    val ok = graft.plans.SqlPasses.windowExcludePass(
-      "SELECT SUM(x) OVER (ORDER BY o RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE GROUP) FROM t")
-    assert(ok.contains("RANGE BETWEEN CURRENT ROW AND CURRENT ROW"))
+    val ok = "SELECT SUM(x) OVER (ORDER BY o RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE GROUP) FROM wex"
+    assert(excludeKernels(ok).isEmpty)
+    import org.apache.spark.sql.catalyst.expressions.{CurrentRow, RangeFrame, SpecifiedWindowFrame, WindowSpecDefinition}
+    assert(analyzed(ok).exists(_.expressions.exists(_.exists {
+      case s: WindowSpecDefinition => s.frameSpecification == SpecifiedWindowFrame(RangeFrame, CurrentRow, CurrentRow)
+      case _ => false
+    })))
+  }
+
+  test("named windows bind per scope, EXCLUDE beside them (DuckDB-pinned)") {
+    // DuckDB 1.0.0 rows for the same texts; the inner scope's `w` is its own
+    def rows(q: String): Seq[Seq[Any]] = GraftSql.sql(spark, q).collect().toSeq.map(_.toSeq)
+    GraftSql.sql(spark, "CREATE OR REPLACE TEMP VIEW wt AS SELECT * FROM (VALUES (1), (2), (3)) v(x)")
+    assert(rows("""SELECT x, sum(x) OVER w AS s, (SELECT max(y) FROM (SELECT sum(x) OVER w AS y
+        FROM wt WINDOW w AS (ORDER BY x DESC ROWS BETWEEN CURRENT ROW AND CURRENT ROW))) AS m
+        FROM wt WINDOW w AS (ORDER BY x) ORDER BY x""") ===
+      Seq(Seq(1, 1L, 3L), Seq(2, 3L, 3L), Seq(3, 6L, 3L)))
+    assert(rows("SELECT exclude FROM (VALUES (1)) v(exclude)") === Seq(Seq(1)))
+    assert(rows("""SELECT x, sum(x) OVER w AS s FROM wt WINDOW w AS
+        (ORDER BY x ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) ORDER BY x""") ===
+      Seq(Seq(1, 2L), Seq(2, 4L), Seq(3, 2L)))
+    assert(rows("""SELECT x, sum(x) OVER (w ROWS BETWEEN x PRECEDING AND CURRENT ROW) AS s
+        FROM wt WINDOW w AS (ORDER BY x) ORDER BY x""") ===
+      Seq(Seq(1, 1L), Seq(2, 3L), Seq(3, 6L)))
+    assert(rows("""SELECT x,
+        count(*) OVER (ORDER BY x RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE TIES) AS c,
+        min(x) OVER (ORDER BY x ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) AS m
+        FROM wt ORDER BY x""") ===
+      Seq(Seq(1, 2L, 2), Seq(2, 3L, 1), Seq(3, 2L, 2)))
+    // a per-row offset that is a scalar subquery
+    assert(rows("""SELECT x, sum(x) OVER (ORDER BY x ROWS BETWEEN (SELECT 1) PRECEDING AND CURRENT ROW) AS s
+        FROM wt ORDER BY x""") === Seq(Seq(1, 1L), Seq(2, 3L), Seq(3, 5L)))
+    // a reference extending a named window by ORDER BY; names match case-insensitively
+    assert(rows("""SELECT x, sum(x) OVER (W ORDER BY x) AS s FROM wt
+        WINDOW w AS (PARTITION BY x % 2) ORDER BY x""") === Seq(Seq(1, 1L), Seq(2, 2L), Seq(3, 4L)))
+  }
+
+  test("FIRST_VALUE / LAST_VALUE EXCLUDE CURRENT ROW over RANGE frames keep the row's peers (DuckDB-pinned)") {
+    assert(GraftSql.sql(spark, """SELECT x,
+        first_value(x) OVER (ORDER BY x RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) f,
+        last_value(x) OVER (ORDER BY x RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW EXCLUDE CURRENT ROW) l
+        FROM (VALUES (1), (1), (2)) v(x) ORDER BY x, f, l""").collect().toSeq.map(_.toSeq) ===
+      Seq(Seq(1, 1, 1), Seq(1, 1, 1), Seq(2, null, 1)))
   }
 
   test("AVG / FILTER / FIRST_VALUE / LAST_VALUE exclusion — DuckDB-pinned") {
